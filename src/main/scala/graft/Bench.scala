@@ -164,6 +164,9 @@ object Bench {
     // for a non-query metric); BENCH_ONLY selects it by name prefix
     // like any query.
     val PqBuildName = "bench_pq_index_build"
+    if (changedMode)
+      System.err.println(s"[bench] changed-mode: $PqBuildName skipped " +
+        "(no plan fingerprint for a build metric)")
     def pqBuildPass(): Option[(String, Double)] =
       if (changedMode ||
           !benchOnly.forall(_.exists(PqBuildName.startsWith))) None

@@ -36,6 +36,26 @@ import graft.stream.AggregateStore
  * written `<command>.<ticks>.json` files sees the same field names.
  * Times stay epoch-seconds/UTC timestamps (this library's time axis)
  * rather than .NET ticks; `DurationSeconds` replaces the TimeSpan.
+ *
+ * Spark jobs per command (the reference answers each with one RocksDB
+ * seek, RocksDBStore.cs:138-264; here the fixed cost of a job, not the
+ * data, sets a command's latency). [[AggregateStore.read]] resolves
+ * the store schema on the driver, so no command runs a schema job:
+ *   - `getsummary`, `getcounts`, `gettop*string`: exactly one job
+ *     when the scan that date pruning keeps fits one Spark read split
+ *     ([[AggregateStore.oneSplit]]). The store is then read through
+ *     `coalesce(1)`, so the global sort and the summary aggregate plan
+ *     with no exchange and no range-sampling job. One partition costs
+ *     no memory the driver does not already spend: [[writeResult]]
+ *     collects the whole result. Its one task reads at most one split,
+ *     as any scan task does; a larger scan keeps Spark's parallel plan.
+ *   - `getrecent* N`: one job per date probe plus the final top-N
+ *     ([[AggregateStore.readRecent]]), so two when the newest date
+ *     holds >= N rows and fits one split.
+ * Spark's file listing adds one job per read once a directory level
+ * holds more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+ * (32) entries: a long-running uncompacted store has one `batch=` dir
+ * per micro-batch, which [[AggregateStore.compact]] folds into one.
  */
 object Repl {
 
@@ -50,7 +70,8 @@ object Repl {
 
   /** TopMentions/TopHashTags shape (AggregatePayloads.cs:29-42); stores
     * written with `includeExamples=false` just omit TopTweets. */
-  private def refEntityShape(df: DataFrame, entityField: String): DataFrame =
+  private[graft] def refEntityShape(df: DataFrame,
+      entityField: String): DataFrame =
     df.select(Seq(col("window_end").as("WindowTime"),
       col("follower_sum").as("FollowerCountSum"),
       col("tweet_count").as("TweetCount"),
@@ -60,7 +81,7 @@ object Repl {
        else Nil): _*)
 
   /** TopRetweets shape (AggregatePayloads.cs:44-49). */
-  private def refRetweetsShape(df: DataFrame): DataFrame =
+  private[graft] def refRetweetsShape(df: DataFrame): DataFrame =
     df.select(Seq(col("window_end").as("WindowTime"),
       col("follower_sum").as("FollowerCountSum"),
       col("tweet_count").as("TweetCount"),
@@ -69,11 +90,11 @@ object Repl {
       (if (df.columns.contains("top_users"))
          Seq(col("top_users").as("TopUsers")) else Nil): _*)
 
-  private def refCountsShape(df: DataFrame): DataFrame =
+  private[graft] def refCountsShape(df: DataFrame): DataFrame =
     df.select(col("window_end").as("WindowTime"), col("cnt").as("Count"))
 
   /** DbSummary shape (RocksDBStore.DbSummary.cs:9-31). */
-  private def refSummaryShape(df: DataFrame): DataFrame =
+  private[graft] def refSummaryShape(df: DataFrame): DataFrame =
     df.select(timestamp_seconds(col("min_window_end")).as("MinDate"),
       timestamp_seconds(col("max_window_end")).as("MaxDate"),
       col("duration_seconds").as("DurationSeconds"),
@@ -90,13 +111,24 @@ object Repl {
             s"bad time '$s' — use epoch seconds or yyyy-MM-ddTHH:mm:ss")
       }
 
+  /** `N` of a `getrecent*` command: a non-negative integer. */
+  private def parseCount(s: String): Int =
+    s.toIntOption.filter(_ >= 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"bad count '$s' — use a non-negative integer"))
+
   def dispatch(spark: SparkSession, storeRoot: String,
       line: String): Option[DataFrame] = {
-    def store(kind: String) = AggregateStore.read(spark, s"$storeRoot/$kind")
-    // range commands read through the partition-pruned path
+    // summary and range commands read through one partition when
+    // their scan fits one split (see the header: one job each); range
+    // commands through the partition-pruned path
+    def store(kind: String) = AggregateStore.oneSplit(
+      AggregateStore.read(spark, s"$storeRoot/$kind"))
     def ranged(kind: String, s: String, e: String) =
-      AggregateStore.readRange(spark, s"$storeRoot/$kind", parseTime(s),
-        parseTime(e))
+      AggregateStore.oneSplit(AggregateStore.readRange(spark,
+        s"$storeRoot/$kind", parseTime(s), parseTime(e)))
+    def recent(kind: String, n: String) =
+      AggregateStore.readRecent(spark, s"$storeRoot/$kind", parseCount(n))
     val parts = line.trim.split("\\s+").toList
     parts match {
       case "getsummary" :: Nil =>
@@ -120,17 +152,13 @@ object Repl {
       // trailing window_date partitions are scanned, same rows as
       // Serve.recent over the full store (StreamingSpec law).
       case "getrecenttopmentionsstring" :: n :: Nil =>
-        Some(refEntityShape(AggregateStore.readRecent(spark,
-          s"$storeRoot/mentions", n.toInt), "ScreenName"))
+        Some(refEntityShape(recent("mentions", n), "ScreenName"))
       case "getrecenttophashtagsstring" :: n :: Nil =>
-        Some(refEntityShape(AggregateStore.readRecent(spark,
-          s"$storeRoot/hashtags", n.toInt), "HashTag"))
+        Some(refEntityShape(recent("hashtags", n), "HashTag"))
       case "getrecenttopretweetsstring" :: n :: Nil =>
-        Some(refRetweetsShape(AggregateStore.readRecent(spark,
-          s"$storeRoot/retweets", n.toInt)))
+        Some(refRetweetsShape(recent("retweets", n)))
       case "getrecentcounts" :: n :: Nil =>
-        Some(refCountsShape(AggregateStore.readRecent(spark,
-          s"$storeRoot/counts", n.toInt)))
+        Some(refCountsShape(recent("counts", n)))
       // Beyond the reference's 8 commands: run any named engine query
       // (the whole SparkEntry surface — dedup, similarity, text ops...)
       // against a testdata-layout dir, so a REPL user reaches every

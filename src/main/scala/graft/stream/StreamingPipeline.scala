@@ -1,12 +1,19 @@
 package graft.stream
 
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFooterReader, ParquetReadSupport}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.agg.Windows
 import graft.ingest.Tables
+import graft.serve.Serve
 
 /** Input row of [[StreamingPipeline.shardSequencerStream]]: a doc with
   * its hash draw and shard already projected (the stateless half of
@@ -2152,8 +2159,77 @@ object AggregateStore {
       .parquet(s"$path/batch=$batchId")
   }
 
+  /** The store as one relation, with its schema resolved on the DRIVER.
+    * `spark.read.parquet` infers the schema in a Spark job that reads
+    * one footer (`mergeSchema` off). Spark's writer records the row
+    * schema in each part file's footer under
+    * `ParquetReadSupport.SPARK_METADATA_KEY`, so the same one-footer
+    * rule runs here without a job: walk the store to the first
+    * non-empty `part-*.parquet` (an empty first batch holds only
+    * `_SUCCESS`), read that footer, and pass its schema to the reader.
+    * Partition columns (`batch`, `window_date`) are still discovered
+    * from the directory names, so the relation's schema and plans are
+    * the inferred ones. A path with no such file (missing, empty, or a
+    * [[compact]]'s aside instant) falls back to `spark.read.parquet`
+    * and fails exactly as that does. A racing [[compact]] can delete
+    * the chosen file before its footer is read; that surfaces as a
+    * driver-side FileNotFoundException, which [[Serve.retryingServe]]
+    * treats as the swap race and retries. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    footerSchema(spark, path).fold(spark.read.parquet(path))(
+      spark.read.schema(_).parquet(path))
+
+  /** `df` through ONE partition when its pruned scan fits one Spark
+    * read split, else `df` as is. The scan's selected files are priced
+    * as Spark's file packing prices them (length plus
+    * `spark.sql.files.openCostInBytes` each); one split holds at most
+    * `spark.sql.files.maxPartitionBytes`. On one partition a global
+    * sort or aggregate plans with no exchange and no range-sampling
+    * job, and one task reads no more than Spark gives any scan task.
+    * A scan past that (a long-lived uncompacted store holds one small
+    * file per batch × date) keeps Spark's parallel split. Pricing plans
+    * the scan but runs no job: the relation's file index already holds
+    * the listing. */
+  def oneSplit(df: DataFrame): DataFrame = {
+    val conf = df.sparkSession.sessionState.conf
+    val bytes = df.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec =>
+        s.selectedPartitions.calculateTotalPartitionBytes
+    }.sum
+    if (bytes <= conf.filesMaxPartitionBytes) df.coalesce(1) else df
+  }
+
+  private def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    // Spark's file index skips `_`/`.`-prefixed names (_SUCCESS, .crc)
+    def listed(dir: Path): Seq[FileStatus] =
+      try fs.listStatus(dir).toSeq
+        .filterNot(s => s.getPath.getName.startsWith("_") ||
+          s.getPath.getName.startsWith("."))
+        .sortBy(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    def firstPart(dir: Path): Option[FileStatus] = {
+      val (dirs, files) = listed(dir).partition(_.isDirectory)
+      files.find { f =>
+        val name = f.getPath.getName
+        f.getLen > 0 && name.startsWith("part-") && name.endsWith(".parquet")
+      }.orElse(
+        dirs.iterator.flatMap(d => firstPart(d.getPath)).nextOption())
+    }
+    firstPart(root).flatMap { part =>
+      compactProbe.foreach(_("listed"))
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(part, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      Option(footer.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .map(DataType.fromJson).collect { case st: StructType => st }
+    }
+  }
 
   /** Range read with PARTITION PRUNING: derive `window_date` bounds from
     * the epoch range so the scan touches only the covered date
@@ -2184,9 +2260,13 @@ object AggregateStore {
     * letting TakeOrderedAndProject merge, list the `window_date`
     * partition values (driver-side filesystem metadata, no data read)
     * and widen a newest-first date suffix until it covers >= n rows;
-    * the returned plan reads only those partitions. Widening doubles,
-    * so a pathological store (all rows on the oldest date) costs
-    * O(log #dates) probe jobs, each itself pruned. */
+    * the returned plan ([[Serve.recent]] over that suffix)
+    * reads only those partitions. The store is resolved ONCE: the
+    * probes and the final plan share one relation and its file
+    * listing. Each probe is a pruned count, one job with no exchange
+    * when its scan fits one split ([[oneSplit]]); widening doubles, so
+    * a store whose newest date holds >= n rows costs one probe and a
+    * pathological one (all rows on the oldest date) O(log #dates). */
   def readRecent(spark: SparkSession, path: String, n: Int): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2197,19 +2277,13 @@ object AggregateStore {
       .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
       .map(_.getPath.getName.stripPrefix("window_date="))
       .distinct.sorted.reverse
-    val order = {
-      val cols = read(spark, path).columns
-      if (cols.contains("entity"))
-        Seq(col("window_end").desc, col("entity").desc)
-      else Seq(col("window_end").desc)
-    }
-    if (dates.isEmpty) return read(spark, path).orderBy(order: _*).limit(n)
-    def pruned(d: Int): DataFrame =
-      read(spark, path).filter(
-        col("window_date") >= lit(dates(math.min(d, dates.length) - 1)))
+    val store = read(spark, path)
+    if (dates.isEmpty) return Serve.recent(store, n)
+    def pruned(d: Int): DataFrame = store.filter(
+      col("window_date") >= lit(dates(math.min(d, dates.length) - 1)))
     var d = 1
-    while (d < dates.length && pruned(d).count() < n) d = d * 2
-    pruned(d).orderBy(order: _*).limit(n)
+    while (d < dates.length && oneSplit(pruned(d)).count() < n) d = d * 2
+    Serve.recent(pruned(d), n)
   }
 
   /** Partition value the compacted data lands under: keeping the
@@ -2245,7 +2319,9 @@ object AggregateStore {
     * invoked at the swap's two in-between states — "aside" (live dir
     * renamed to `_precompact`, nothing at the store path yet) and
     * "promoted" (compacted dir in place, `_precompact` not yet
-    * deleted) — so the reader-vs-compaction consistency contract is
+    * deleted) — and at the reader's "listed" state ([[read]] has
+    * chosen the part file whose footer gives the schema, and not yet
+    * read it), so the reader-vs-compaction consistency contract is
     * testable DETERMINISTICALLY instead of by racing threads.
     * Production pays one volatile read per state. */
   @volatile var compactProbe: Option[String => Unit] = None
