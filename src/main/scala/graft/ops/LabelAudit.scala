@@ -169,8 +169,8 @@ object LabelAudit {
   /** Per-batch ALGEBRAIC partial of the [[labelDispersion]] card
     * against a prebuilt [[labelCentroids]] artifact: per label
     * (n, Σdist, max dist) — commutative and associative, so the
-    * streaming fold ([[dispersionFromCounts]], via
-    * `StreamingPipeline.dispersionPartialsSink`) reproduces the batch
+    * streaming fold ([[dispersionFromCounts]] over
+    * `StreamingPipeline.partials`) reproduces the batch
     * card at ANY batching; every derived column (the integer-DIV mean)
     * is computed after duplicate label keys are summed. */
   def dispersionPartials(emb: DataFrame, cents: DataFrame,

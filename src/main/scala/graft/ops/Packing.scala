@@ -129,7 +129,7 @@ object Packing {
   /** The per-ctx COMMUTATIVE partials of [[packEfficiency]] (doc and
     * token counts, padded-chunk sum) — one tiny relation per
     * micro-batch in the streaming twin
-    * ([[graft.stream.StreamingPipeline.packPartialsSink]]). */
+    * ([[graft.stream.StreamingPipeline.partialsSink]]). */
   def packPartials(df: DataFrame, tokens: Column,
       budgets: Seq[Long]): DataFrame = {
     require(budgets.nonEmpty && budgets.forall(_ > 0),

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.DataType
  * Every monotone search in [[Sampling]]/[[Sketches]] evaluates, per
  * round, a batch of conditional token/count sums over ONE pinned
  * partials relation. The r17 implementation built a fresh DataFrame
- * aggregate per round; measured on sf0.1 local[32] (ProbeBench,
+ * aggregate per round; measured on sf0.1 local[32] (OPTIMIZATION_r18.md,
  * 500 k rows × 31 probes × 15 rounds) that costs ~360-550 ms per
  * round — almost entirely DRIVER work: Catalyst analysis +
  * optimization of a fresh 31-column aggregate, codegen compilation

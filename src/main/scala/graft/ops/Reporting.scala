@@ -127,7 +127,7 @@ object Reporting {
 
   /** The share/delta math over a (strata..., docs_a, docs_b) counts
     * relation. The counts are COMMUTATIVE partials — the streaming
-    * twin ([[graft.stream.StreamingPipeline.driftPartialsSink]])
+    * twin ([[graft.stream.StreamingPipeline.partialsSink]])
     * accumulates them per micro-batch and folds here; duplicate
     * stratum keys across batches are summed before the share math,
     * so the fold is exact at any batching. Materialized once

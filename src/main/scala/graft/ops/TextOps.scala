@@ -367,7 +367,7 @@ object TextOps {
   /** Per-stratum COMMUTATIVE partials of the Gopher pass-rate table
     * (ext84): doc count + per-rule pass sums — one tiny relation per
     * micro-batch in the streaming twin
-    * ([[graft.stream.StreamingPipeline.gopherPassPartialsSink]]). */
+    * ([[graft.stream.StreamingPipeline.partialsSink]]). */
   def gopherPassPartials(doc: DataFrame,
       strata: Seq[String] = Seq("source"),
       text: String = "text"): DataFrame =

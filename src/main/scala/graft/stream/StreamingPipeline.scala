@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFooterReader, ParquetReadSupport}
@@ -58,8 +58,8 @@ object StreamingPipeline {
     * OP-30's byte-rate telemetry as `observe()` metrics: the reference
     * logs KB read per 5-min window (TwitterStream.cs:50-64); here every
     * micro-batch reports rows/chars ingested via
-    * `StreamingQueryProgress.observedMetrics("ingest")`. */
-  /** `maxFilesPerTrigger` bounds a backlog replay to per-file batches —
+    * `StreamingQueryProgress.observedMetrics("ingest")`.
+    * `maxFilesPerTrigger` bounds a backlog replay to per-file batches —
     * a production stream never admits an unbounded backlog into one
     * micro-batch (trigger admission is the memory bound on the batch
     * aggregate; cf. the 500k single-batch OOM note in unifiedSink). */
@@ -86,12 +86,12 @@ object StreamingPipeline {
    * or the offline coursier cache, and dependency resolution has zero
    * egress — so config+projection assertion (SinksAndReplSpec) is the
    * strongest offline check available.
+   *
+   * This is the producer configuration [[kafkaForwardSink]] applies
+   * (size buffer → batch.size, time buffer → linger.ms, gzip →
+   * compression.type, retry loop → retries), exposed for the writer-
+   * config spec: the sink itself cannot start offline (no broker).
    */
-  /** The producer configuration [[kafkaForwardSink]] applies — the Spark
-    * mapping of the reference's hand-rolled buffering/gzip/retry loop
-    * (size buffer → batch.size, time buffer → linger.ms, gzip →
-    * compression.type, retry loop → retries). Exposed for the writer-
-    * config spec: the sink itself cannot start offline (no broker). */
   def kafkaForwardOptions(bootstrapServers: String,
       topic: String): Map[String, String] = Map(
     "kafka.bootstrap.servers" -> bootstrapServers,
@@ -108,7 +108,7 @@ object StreamingPipeline {
     lines.selectExpr("CAST(null AS STRING) AS key", "value")
 
   def kafkaForwardSink(lines: DataFrame, bootstrapServers: String,
-      topic: String): DataStreamWriter[org.apache.spark.sql.Row] =
+      topic: String): DataStreamWriter[Row] =
     kafkaForwardOptions(bootstrapServers, topic).foldLeft(
       kafkaForwardProjection(lines).writeStream.format("kafka")) {
       case (w, (k, v)) => w.option(k, v)
@@ -245,7 +245,7 @@ object StreamingPipeline {
    * have live materializations).
    */
   def incrementalDedupSink(docs: DataFrame, bandsPath: String,
-      keptPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
+      keptPath: String): DataStreamWriter[Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         processIncrement(batch, batchId, bandsPath, keptPath)
@@ -334,6 +334,46 @@ object StreamingPipeline {
     graft.ops.LabelAudit.centroidDistances(emb, centroids)
 
   /**
+   * The one writer of the batch-keyed twin stores: each micro-batch
+   * writes `perBatch(batch)` to `<outPath>/batch=<id>` in OVERWRITE
+   * mode, so a batch replayed after a crash rewrites its own directory
+   * instead of appending a second copy — the idempotent-sink half of
+   * Structured Streaming's exactly-once contract (the reference's
+   * idempotent `Put`, RocksDBStore.cs:82-87). A twin of a batch
+   * operator `Op` is this writer over `Op`'s per-batch form, read back
+   * through [[partials]] (or [[versions]]), into `Op`'s fold where `Op`
+   * is algebraic: `Reporting.driftFromCounts(partials(spark, out))`
+   * over a store written by `partialsSink(docs,
+   * Reporting.driftPartials(_, a, s), out)`. The folds sum duplicate
+   * keys BEFORE deriving any column, so the fold equals the batch
+   * operator at any batching. A twin gated on a static artifact pins
+   * the artifact once and closes over it in `perBatch`.
+   */
+  def partialsSink(docs: DataFrame, perBatch: DataFrame => DataFrame,
+      outPath: String): DataStreamWriter[Row] =
+    docs.writeStream.outputMode("append").foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        perBatch(batch)
+          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+    }
+
+  /** A [[partialsSink]] store as one relation. `batch` is dropped: it
+    * is replay keying, not a stratum, and the `…FromCounts` folds infer
+    * their keys from the columns present. The schema comes from one
+    * part-file footer on the driver ([[AggregateStore.read]]). */
+  def partials(spark: SparkSession, path: String): DataFrame =
+    AggregateStore.read(spark, path).drop("batch")
+
+  /** A [[partialsSink]] store with the `batch=N` replay key as the
+    * row's version `_ver`, the input of the `…FromVersioned` keep-latest
+    * folds: a doc re-ingested in a later micro-batch (a re-crawl, or a
+    * langid re-run moving it to another stratum) counts only through
+    * its newest row, with zero extra sink columns. */
+  def versions(spark: SparkSession, path: String): DataFrame =
+    AggregateStore.read(spark, path)
+      .withColumn("_ver", col("batch").cast("long")).drop("batch")
+
+  /**
    * Streaming twin of `Dedup.benchmarkOverlap` (ext32): benchmark
    * decontamination as a broadcast-probe foreachBatch sink. The eval
    * suite is static and small, so its shingle membership set is computed
@@ -346,16 +386,13 @@ object StreamingPipeline {
    * [[incrementalDedupSink]].
    */
   def decontaminationSink(docs: DataFrame, benchShingles: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      outPath: String): DataStreamWriter[Row] = {
     // Materialized once for the sink's lifetime (NOT Reuse-pinned: an
     // unrelated freeAll must not drop a live stream's broadcast side);
     // every micro-batch probes the checkpoint blocks, never the plan.
     val benchH = benchShingles.localCheckpoint(true)
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.ops.Dedup.benchmarkOverlapAgainst(batch, benchH)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
+    partialsSink(docs,
+      graft.ops.Dedup.benchmarkOverlapAgainst(_, benchH), outPath)
   }
 
   /**
@@ -369,14 +406,10 @@ object StreamingPipeline {
    * [[decontaminationSink]].
    */
   def boilerplateSink(docs: DataFrame, hotSpans: DataFrame,
-      outPath: String, chunkTokens: Int = 16)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      outPath: String, chunkTokens: Int = 16): DataStreamWriter[Row] = {
     val hot = hotSpans.localCheckpoint(true)
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.ops.TextOps.boilerplateRemovalAgainst(batch, hot, chunkTokens)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
+    partialsSink(docs, graft.ops.TextOps.boilerplateRemovalAgainst(
+      _, hot, chunkTokens), outPath)
   }
 
   /**
@@ -394,13 +427,9 @@ object StreamingPipeline {
    * batch-keyed layout like [[boilerplateSink]].
    */
   def noveltySink(docs: DataFrame, shingleDf: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      outPath: String): DataStreamWriter[Row] = {
     val df = shingleDf.localCheckpoint(true)
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.ops.Dedup.noveltyScoresAgainst(batch, df)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
+    partialsSink(docs, graft.ops.Dedup.noveltyScoresAgainst(_, df), outPath)
   }
 
   /**
@@ -416,13 +445,9 @@ object StreamingPipeline {
    * broadcast. Stateless foreachBatch, idempotent batch-keyed layout.
    */
   def oovSink(docs: DataFrame, rareTokens: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      outPath: String): DataStreamWriter[Row] = {
     val rare = rareTokens.localCheckpoint(true)
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.ops.TextOps.oovRateAgainst(batch, rare)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
+    partialsSink(docs, graft.ops.TextOps.oovRateAgainst(_, rare), outPath)
   }
 
   /**
@@ -437,14 +462,11 @@ object StreamingPipeline {
    * Stateless foreachBatch, idempotent batch-keyed layout.
    */
   def bloomProbeSink(docs: DataFrame, benchShingles: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      outPath: String): DataStreamWriter[Row] = {
     val benchH = benchShingles.localCheckpoint(true)
     val bits = graft.ops.Sketches.bloomBits(benchH).localCheckpoint(true)
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.ops.Sketches.bloomPerDoc(batch, benchH, bits)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
+    partialsSink(docs,
+      graft.ops.Sketches.bloomPerDoc(_, benchH, bits), outPath)
   }
 
   /**
@@ -459,13 +481,9 @@ object StreamingPipeline {
    * only M small ints per vector persist.
    */
   def pqEncodeSink(vecs: DataFrame, codebooks: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      outPath: String): DataStreamWriter[Row] = {
     val cb = codebooks.localCheckpoint(true)
-    vecs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.ops.Similarity.pqCodes(batch, cb)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
+    partialsSink(vecs, graft.ops.Similarity.pqCodes(_, cb), outPath)
   }
 
   /**
@@ -477,30 +495,10 @@ object StreamingPipeline {
    * `Dedup.dupSpans` batch rows for the same docs at any batching.
    */
   def dupSpansSink(docs: DataFrame, shared: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      outPath: String): DataStreamWriter[Row] = {
     val sh = shared.localCheckpoint(true)
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.ops.Dedup.dupSpansAgainst(batch, sh)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
+    partialsSink(docs, graft.ops.Dedup.dupSpansAgainst(_, sh), outPath)
   }
-
-  /**
-   * Streaming within-doc repetition surgery (ext123): the operator is
-   * doc-local everywhere (first occurrences, cuts, reassembly all key
-   * on the document), so the streaming form IS the batch operator per
-   * micro-batch — no corpus artifact at all, unlike ext96's keeper
-   * relation. Streamed rows equal the batch operator's at any
-   * batching by construction.
-   */
-  def repetitionSurgerySink(docs: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.ops.Dedup.repetitionSurgery(batch)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
 
   /**
    * Streaming semantic decontamination (ext122's ingest side): every
@@ -511,14 +509,12 @@ object StreamingPipeline {
    * at any batching.
    */
   def semanticDecontaminateSink(vecs: DataFrame, bench: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      outPath: String): DataStreamWriter[Row] = {
     val pinned = new PinnedArtifacts(() => ("static", Seq(bench)))
-    vecs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val Seq(b) = pinned.resolve(batch.sparkSession)
-        graft.ops.Similarity.semanticDecontaminate(batch, b)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
+    partialsSink(vecs, batch => {
+      val Seq(b) = pinned.resolve(batch.sparkSession)
+      graft.ops.Similarity.semanticDecontaminate(batch, b)
+    }, outPath)
   }
 
   /**
@@ -533,14 +529,12 @@ object StreamingPipeline {
    */
   def prototypeGateSink(vecs: DataFrame, cents: DataFrame,
       thresholds: DataFrame, keep: String,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      outPath: String): DataStreamWriter[Row] = {
     val pinned = new PinnedArtifacts(() => ("static", Seq(cents, thresholds)))
-    vecs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val Seq(c, t) = pinned.resolve(batch.sparkSession)
-        graft.ops.Similarity.prototypeGate(batch, c, t, keep)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
+    partialsSink(vecs, batch => {
+      val Seq(c, t) = pinned.resolve(batch.sparkSession)
+      graft.ops.Similarity.prototypeGate(batch, c, t, keep)
+    }, outPath)
   }
 
   /**
@@ -559,7 +553,7 @@ object StreamingPipeline {
   def ivfPqSearchSink(queries: DataFrame, cents: DataFrame,
       codebooks: DataFrame, coded: DataFrame, corpus: DataFrame,
       k: Int, probes: Int = 2, candidates: Int = 20,
-      outPath: String = ""): DataStreamWriter[org.apache.spark.sql.Row] =
+      outPath: String = ""): DataStreamWriter[Row] =
     ivfPqSearchSinkVersioned(queries,
       () => ("static", IvfPqIndex(cents, codebooks, coded, corpus)),
       k, probes, candidates, outPath)
@@ -585,8 +579,7 @@ object StreamingPipeline {
    */
   def ivfPqSearchSinkVersioned(queries: DataFrame,
       index: () => (String, IvfPqIndex), k: Int, probes: Int = 2,
-      candidates: Int = 20, outPath: String = "")
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      candidates: Int = 20, outPath: String = ""): DataStreamWriter[Row] = {
     // resolve() invokes this provider once per batch; the closure var
     // carries the same version's corpus to the rerank join (driver-side,
     // batches sequential).
@@ -596,13 +589,11 @@ object StreamingPipeline {
       corpus = ix.corpus
       (v, Seq(ix.cents, ix.codebooks, ix.coded))
     })
-    queries.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val Seq(ce, cb, cd) = pinned.resolve(batch.sparkSession)
-        graft.ops.Similarity.ivfPqSearch(batch, ce, cb, cd, corpus,
-          k, probes, candidates)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
+    partialsSink(queries, batch => {
+      val Seq(ce, cb, cd) = pinned.resolve(batch.sparkSession)
+      graft.ops.Similarity.ivfPqSearch(batch, ce, cb, cd, corpus,
+        k, probes, candidates)
+    }, outPath)
   }
 
   /**
@@ -617,14 +608,12 @@ object StreamingPipeline {
    * batch-keyed layout.
    */
   def bpeEncodeSink(docs: DataFrame, merges: DataFrame, nMerges: Int,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      outPath: String): DataStreamWriter[Row] = {
     val pinned = new PinnedArtifacts(() => ("static", Seq(merges)))
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val Seq(table) = pinned.resolve(batch.sparkSession)
-        graft.ops.TextOps.bpeApplyCounts(batch, table, nMerges)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
+    partialsSink(docs, batch => {
+      val Seq(table) = pinned.resolve(batch.sparkSession)
+      graft.ops.TextOps.bpeApplyCounts(batch, table, nMerges)
+    }, outPath)
   }
 
   /**
@@ -680,7 +669,7 @@ object StreamingPipeline {
    */
   def funnelStateSink(events: DataFrame, steps: Seq[String],
       statePath: String, horizonUs: Long = 7L * 86400000000L)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     events.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         processFunnelBatch(batch, batchId, steps, statePath, horizonUs)
@@ -765,69 +754,13 @@ object StreamingPipeline {
           expr("timestamp_micros(ts_us)").as("ts")),
       col("user_id"), steps, horizonUs)
 
-  /** Shared shape of the r7 algebraic-partials twins (ext78/82/84):
-    * each micro-batch writes its own tiny COMMUTATIVE partial relation
-    * batch-keyed (idempotent replay, the [[cardPartialsSink]]
-    * lifecycle); the matching `...FromState` fold reads the
-    * accumulated directory and reproduces the batch operator exactly
-    * at any batching, because every derived column is computed AFTER
-    * duplicate keys are summed. */
-  private def partialsSink(docs: DataFrame,
-      partials: DataFrame => DataFrame, outPath: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        partials(batch)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
-
-  /** Streaming twin of the packing-efficiency curve (ext78). */
-  def packPartialsSink(docs: DataFrame, tokens: Column,
-      budgets: Seq[Long], outPath: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(docs,
-      graft.ops.Packing.packPartials(_, tokens, budgets), outPath)
-
-  /** Reads drop the batch=N partition column — it is replay keying,
-    * not a stratum, and the FromCounts folds infer their keys from the
-    * columns present. */
-  def packEfficiencyFromState(spark: SparkSession,
-      outPath: String): DataFrame =
-    graft.ops.Packing.packEfficiencyFromCounts(
-      spark.read.parquet(outPath).drop("batch"))
-
-  /** Streaming twin of the signal-correlation audit (ext115): each
-    * micro-batch writes its 1-row exact moment sums; the fold sums
-    * duplicates and finishes the correlations — streamed card ==
-    * batch card at any batching, signals correlate ON ARRIVAL. */
-  def signalMomentsPartialsSink(docs: DataFrame,
-      signals: Seq[(String, org.apache.spark.sql.Column)],
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(docs,
-      graft.ops.Reporting.signalMoments(_, signals), outPath)
-
-  def signalCorrelationsFromState(spark: SparkSession,
-      outPath: String): DataFrame =
-    graft.ops.Reporting.correlationsFromMoments(
-      spark.read.parquet(outPath).drop("batch"))
-
-  /** Streaming twin of the composition-drift audit (ext82). */
-  def driftPartialsSink(docs: DataFrame, sideA: Column,
-      strata: Seq[String], outPath: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(docs,
-      graft.ops.Reporting.driftPartials(_, sideA, strata), outPath)
-
-  def driftFromState(spark: SparkSession, outPath: String): DataFrame =
-    graft.ops.Reporting.driftFromCounts(
-      spark.read.parquet(outPath).drop("batch"))
-
   /** Streaming twin of the octave-PSI drift card (ext150): per-batch
     * (bucket, n_a, n_b) histogram counts are pure-addition partials
-    * (the [[driftPartialsSink]] state shape — ≤ 64 rows per batch);
-    * the share/octave math belongs to the derivation, after the merge. */
+    * (the `Reporting.driftPartials` state shape — ≤ 64 rows per batch);
+    * the share/octave math belongs to the derivation, after the merge
+    * (`Reporting.psiFromCounts` over [[partials]]). */
   def psiPartialsSink(docs: DataFrame, sideA: Column, value: Column,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
+      outPath: String): DataStreamWriter[Row] =
     partialsSink(docs, b => b.select(
         (length(bin(greatest(value.cast("long"), lit(1L)))) - lit(1))
           .cast("long").as("bucket"),
@@ -836,320 +769,42 @@ object StreamingPipeline {
       .groupBy("bucket")
       .agg(sum("n_a").as("n_a"), sum("n_b").as("n_b")), outPath)
 
-  def psiFromState(spark: SparkSession, outPath: String): DataFrame =
-    graft.ops.Reporting.psiFromCounts(
-      spark.read.parquet(outPath).drop("batch"))
-
   /** Streaming twin of the OLS trend-slope card (ext152): the
     * per-batch (entity, period, count) matrix is a pure-addition
     * partial; the min-shift and the five sufficient statistics belong
     * to the derivation, AFTER the merge (the x-shift depends on the
-    * global min period, which only the merged matrix knows). */
+    * global min period, which only the merged matrix knows). The one
+    * stored matrix, read through [[partials]], serves the direction
+    * (`Windows.trendSlopesFromCounts`), pointwise
+    * (`anomalyDaysFromCounts`, ext158) and texture
+    * (`burstinessFromCounts`, ext166) derivations; their rank
+    * statistics belong after the merge too (a median is a snapshot
+    * property, not per-row decomposable). */
   def trendSlopePartialsSink(events: DataFrame, entity: Column,
-      outPath: String, periodUs: Long = 86400000000L)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
+      outPath: String, periodUs: Long = 86400000000L): DataStreamWriter[Row] =
     partialsSink(events, b => b.select(entity.as("entity"),
         expr(s"unix_micros(ts) DIV $periodUs").as("x"))
       .groupBy("entity", "x").agg(count(lit(1)).as("y")), outPath)
 
-  def trendSlopesFromState(spark: SparkSession,
-      outPath: String): DataFrame =
-    graft.agg.Windows.trendSlopesFromCounts(
-      spark.read.parquet(outPath).drop("batch"))
-
-  /** Streaming twin of the median/MAD anomaly card (ext158): reads the
-    * SAME per-batch (entity, period, count) partials as
-    * [[trendSlopePartialsSink]] — one stored matrix serves both the
-    * direction (slope) and pointwise (anomaly) derivations; the rank
-    * statistics belong after the merge (a median is a snapshot
-    * property, not per-row decomposable). */
-  def anomalyDaysFromState(spark: SparkSession, outPath: String,
-      k: Long = 7L): DataFrame =
-    graft.agg.Windows.anomalyDaysFromCounts(
-      spark.read.parquet(outPath).drop("batch"), k)
-
-  /** Incremental inverted index (ext165's serving store): each
-    * micro-batch appends its postings (disjoint rows under whole-doc
-    * arrival — an append partial, not even a sum); [[graft.ops.TextOps
-    * .bm25FromIndex]] serves top-k from the stored fold without ever
-    * rescanning text. */
-  def bm25IndexSink(docs: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(docs, graft.ops.TextOps.bm25IndexPartials(_), outPath)
-
-  def bm25FromState(spark: SparkSession, outPath: String,
-      queryTerms: Seq[String], k: Int = 10): DataFrame =
-    graft.ops.TextOps.bm25FromIndex(
-      spark.read.parquet(outPath).drop("batch"), queryTerms, k)
-
-  /** Streaming twin of the label-association audit (ext167): one
-    * tagged partials relation per micro-batch (presence cells + per-
-    * label doc counts — pure addition under whole-doc arrival), the
-    * card derived at read time from the fold. */
-  def labelAssocPartialsSink(docs: DataFrame, label: Column,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(docs,
-      graft.ops.TextOps.labelAssocPartials(_, label), outPath)
-
-  def labelAssociationFromState(spark: SparkSession, outPath: String,
-      k: Int = 50, minCount: Long = 5L): DataFrame =
-    graft.ops.TextOps.labelAssociationFromCounts(
-      spark.read.parquet(outPath).drop("batch"), k, minCount)
-
-  /** Streaming twin of the burstiness card (ext166): reads the SAME
-    * per-batch (entity, period, count) partials as
-    * [[trendSlopePartialsSink]] — the one stored matrix now serves
-    * direction (slope), pointwise (anomaly) and texture (dispersion)
-    * derivations. */
-  def burstinessFromState(spark: SparkSession,
-      outPath: String): DataFrame =
-    graft.agg.Windows.burstinessFromCounts(
-      spark.read.parquet(outPath).drop("batch"))
-
-  /** Streaming twin of the exact selection quantiles (ext151 — r13
-    * verdict item 6): the batch bisection's probe mids depend on the
-    * whole corpus (its rounds don't decompose over batches), but the
-    * per-stratum VALUE-COUNT table it bisects against is a pure
-    * addition partial — each micro-batch writes its own (strata…, _v,
-    * cnt) rows, bounded by |strata| × |distinct values| (the
-    * vocab-bounded sink discipline), and the exact quantile falls out
-    * of one cumulative-count rank over the fold, zero corpus
-    * rescans. */
-  def selectionQuantilePartialsSink(docs: DataFrame,
-      strata: Seq[String], value: Column, outPath: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(docs,
-      graft.ops.Sketches.selectionValueCounts(_, strata, value), outPath)
-
-  def selectionQuantilesFromState(spark: SparkSession, outPath: String,
-      strata: Seq[String], qs: Seq[Int] = Seq(50, 90)): DataFrame =
-    graft.ops.Sketches.selectionQuantilesFromCounts(
-      spark.read.parquet(outPath).drop("batch"), strata, qs)
-
-  /** Streaming twin of the temporal train/gap/test split (ext170 —
-    * r14 verdict item 6): each micro-batch appends its per-(user, µs)
-    * event-count partial (pure addition — events arrive whole), and
-    * [[temporalSplitFromState]] folds ONE stored relation into both
-    * halves of the batch card: the summed value counts fix the exact
-    * selection-quantile cutoff (the bisection's tie rule, as a rank
-    * over the fold), the per-user weighted fold gives the segment
-    * masses. No event rescan at serve time. */
-  def temporalSplitPartialsSink(events: DataFrame, user: Column,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(events,
-      graft.ops.Splits.temporalEventCounts(_, user), outPath)
-
-  def temporalSplitFromState(spark: SparkSession, outPath: String,
-      testPct: Int = 20, gapUs: Long = 86400000000L): DataFrame =
-    graft.ops.Splits.temporalSplitFromCounts(
-      spark.read.parquet(outPath).drop("batch"), testPct, gapUs)
-
-  /** Streaming twin of the token-budget curation cut (ext172): each
-    * micro-batch appends its per-doc (id, score, toks) projection
-    * (docs arrive whole — a pure append; the score expression is
-    * stateless), and [[budgetSelectCardFromState]] runs the identical
-    * zero-shuffle bisections over the stored fold — text never
-    * rescanned at serve time, and the budget is a SERVE-time knob
-    * (one stored projection answers any budget). */
-  def budgetSelectPartialsSink(scoredDocs: DataFrame,
-      score: org.apache.spark.sql.Column, outPath: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(scoredDocs,
-      graft.ops.Sampling.budgetSelectPartials(_, score), outPath)
-
-  def budgetSelectCardFromState(spark: SparkSession, outPath: String,
-      budgetTokens: Long): DataFrame =
-    graft.ops.Sampling.budgetSelectCardFromCounts(
-      spark.read.parquet(outPath).drop("batch"), budgetTokens)
-
-  /** Streaming twin of the STRATIFIED budget cut (ext173): the sink
-    * appends the (stratum, id, score, toks) projection — ONE stored
-    * relation that serves the per-stratum cards at any budget/plan
-    * AND (with `_s` dropped) the global ext172 card: one sink, every
-    * card. */
-  def budgetSelectStratumPartialsSink(scoredDocs: DataFrame,
-      stratum: org.apache.spark.sql.Column,
-      score: org.apache.spark.sql.Column, outPath: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(scoredDocs,
-      graft.ops.Sampling.budgetSelectStratumPartials(_, stratum, score),
-      outPath)
-
-  def budgetSelectCardsByStratumFromState(spark: SparkSession,
-      outPath: String, stratum: String, budgetTokens: Long,
-      budgets: Map[String, Long] = Map.empty): DataFrame =
-    graft.ops.Sampling.budgetSelectCardsByStratumFromCounts(
-      spark.read.parquet(outPath).drop("batch"), stratum,
-      budgetTokens, budgets)
-
-  /** Keep-latest serve of the STRATIFIED twin — the rule the
-    * cross-stratum re-crawl guard demands (r16 verdict item 1),
-    * with zero new sink columns: the `batch=N` replay key is the
-    * version, so a doc re-ingested later — even under a DIFFERENT
-    * stratum, the langid-re-run case — counts only in its newest
-    * stratum's card, exactly the batch operator over newest-crawl
-    * rows. */
-  def budgetSelectCardsByStratumFromStateKeepLatest(
-      spark: SparkSession, outPath: String, stratum: String,
-      budgetTokens: Long,
-      budgets: Map[String, Long] = Map.empty): DataFrame =
-    graft.ops.Sampling.budgetSelectCardsByStratumFromVersioned(
-      spark.read.parquet(outPath)
-        .withColumn("_ver", col("batch").cast("long")).drop("batch"),
-      stratum, budgetTokens, budgets)
-
-  /** Two-level allocation served from the SAME stratified sink as
-    * the per-stratum cards (one sink, every card — r16 verdict
-    * item 4): the cap, global budget and per-stratum overrides are
-    * all serve-time knobs over one stored projection. */
-  def twoLevelBudgetCardFromState(spark: SparkSession,
-      outPath: String, stratumCap: Long, globalBudget: Long,
-      budgets: Map[String, Long] = Map.empty): DataFrame =
-    graft.ops.Sampling.twoLevelBudgetCardFromCounts(
-      spark.read.parquet(outPath).drop("batch"), stratumCap,
-      globalBudget, budgets)
-
-  /** Per-stratum fill curves served from the SAME stratified sink —
-    * the budget LADDER is a serve-time knob too (ext176): one stored
-    * projection prices any candidate allocation plan. */
-  def budgetFillCurveByStratumFromState(spark: SparkSession,
-      outPath: String, stratum: String,
-      budgets: Seq[Long]): DataFrame =
-    graft.ops.Sampling.budgetFillCurveByStratumFromCounts(
-      spark.read.parquet(outPath).drop("batch"), stratum, budgets)
-
-  /** Two-level cap sweep served from the same stratified sink — the
-    * caps ladder AND the global budget are serve-time knobs (ext177):
-    * the cap policy is priced off the stored projection before any
-    * enforcement pass moves data. */
-  def twoLevelCapSweepFromState(spark: SparkSession, outPath: String,
-      caps: Seq[Long], globalBudget: Long): DataFrame =
-    graft.ops.Sampling.twoLevelCapSweepFromCounts(
-      spark.read.parquet(outPath).drop("batch"), caps, globalBudget)
-
-  /** Keep-latest fill-curve serve (r17 verdict item 1) — the
-    * versioned fold under the per-stratum planning curves, for sinks
-    * that legitimately re-ingest docs: a reclassified doc prices
-    * only its newest stratum's curve, and the cross-stratum refusal
-    * of the unversioned serve now has a live remedy for THIS caller
-    * too (previously the diagnostic named a path that only existed
-    * for the card operators). */
-  def budgetFillCurveByStratumFromStateKeepLatest(spark: SparkSession,
-      outPath: String, stratum: String,
-      budgets: Seq[Long]): DataFrame =
-    graft.ops.Sampling.budgetFillCurveByStratumFromVersioned(
-      spark.read.parquet(outPath)
-        .withColumn("_ver", col("batch").cast("long")).drop("batch"),
-      stratum, budgets)
-
-  /** Keep-latest cap-sweep serve (r17 verdict item 1) — the
-    * versioned fold under the two-level cap sweep; the caps ladder
-    * and global budget stay serve-time knobs. */
-  def twoLevelCapSweepFromStateKeepLatest(spark: SparkSession,
-      outPath: String, caps: Seq[Long], globalBudget: Long): DataFrame =
-    graft.ops.Sampling.twoLevelCapSweepFromVersioned(
-      spark.read.parquet(outPath)
-        .withColumn("_ver", col("batch").cast("long")).drop("batch"),
-      caps, globalBudget)
-
-  /** Corpus lineage diff served from the SAME stratified sink
-    * (r17 verdict item 2): the `batch=N` replay key is the version,
-    * so any two ingest points name two keep-latest snapshots and
-    * [[graft.ops.Sampling.corpusDiffFromVersioned]] diffs them —
-    * added/removed/changed/moved/unchanged per stratum as a
-    * serve-time query, no snapshot materialization. "Changed" means
-    * the stored (score, toks) payload changed — the sink persists no
-    * text, by design. */
-  def corpusDiffFromState(spark: SparkSession, outPath: String,
-      verOld: Long, verNew: Long, stratum: String): DataFrame =
-    graft.ops.Sampling.corpusDiffFromVersioned(
-      spark.read.parquet(outPath)
-        .withColumn("_ver", col("batch").cast("long")).drop("batch"),
-      verOld, verNew, stratum)
-
-  /** Keep-latest two-level serve — the versioned fold under the
-    * two-level cut, for sinks that legitimately re-ingest docs. */
-  def twoLevelBudgetCardFromStateKeepLatest(spark: SparkSession,
-      outPath: String, stratumCap: Long, globalBudget: Long,
-      budgets: Map[String, Long] = Map.empty): DataFrame =
-    graft.ops.Sampling.twoLevelBudgetCardFromVersioned(
-      spark.read.parquet(outPath)
-        .withColumn("_ver", col("batch").cast("long")).drop("batch"),
-      stratumCap, globalBudget, budgets)
-
-  /** Keep-latest serve of the ext172 twin — the policy the re-crawl
-    * guard demands, shipped with ZERO new sink columns: the
-    * `batch=N` replay key IS the version, so a doc re-ingested in a
-    * later micro-batch replaces its older projection row before the
-    * bisections run ([[graft.ops.Sampling.budgetSelectCardFromVersioned]]).
-    * Exact replays still fold away (identical rows under any
-    * arbitration); only a genuinely re-crawled doc changes the card
-    * — to the one the batch operator would compute over each doc's
-    * newest crawl. */
-  def budgetSelectCardFromStateKeepLatest(spark: SparkSession,
-      outPath: String, budgetTokens: Long): DataFrame =
-    graft.ops.Sampling.budgetSelectCardFromVersioned(
-      spark.read.parquet(outPath)
-        .withColumn("_ver", col("batch").cast("long")).drop("batch"),
-      budgetTokens)
-
-  /** Streaming twin of the per-source Gopher pass rates (ext84). */
-  def gopherPassPartialsSink(docs: DataFrame, strata: Seq[String],
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(docs,
-      graft.ops.TextOps.gopherPassPartials(_, strata), outPath)
-
-  /** Streaming twin of the PII audit card (ext92): every column of the
-    * card is a count/sum, so the card itself is the partial — each
-    * micro-batch scrubs/counts its own docs (one stateless codegen
-    * scan, text is never stored) and writes a |strata|-row partial;
-    * [[piiAuditFromState]] folds duplicates by summing. The scrub is
-    * where PII streaming MATTERS: redaction happens on arrival, before
-    * any sink persists raw text. */
-  def piiPartialsSink(docs: DataFrame, strata: Seq[String],
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(docs,
-      graft.ops.TextOps.piiAudit(_, strata), outPath)
-
-  def piiAuditFromState(spark: SparkSession,
-      outPath: String): DataFrame =
-    graft.ops.TextOps.piiAuditFromCounts(
-      spark.read.parquet(outPath).drop("batch"))
-
-  /** Streaming twin of the Count-Min sketch (ext98): counters are pure
-    * sums, so each micro-batch writes its own ≤ depth×width-row
-    * counter table and the fold is the cell-wise merge — the textbook
-    * mergeable-sketch property, same lifecycle as the ext78/82/84
-    * partials. Estimates ([[graft.ops.Sketches.countMinEstimates]])
-    * read the folded table on demand. */
-  /** Streaming twin of decayed trending (ext141, the aligned-grid
-    * form): each micro-batch writes its absolute-grid decay histogram
-    * — buckets on the epoch grid need NO reference-clock agreement, so
-    * partials merge by pure addition ([[graft.ops.Decay
-    * .alignedHistogram]]'s design property; the tref-anchored ext133
-    * form is deliberately NOT streamable this way). State per entity ≤
-    * one int64 per touched half-life bucket. */
-  def trendingPartialsSink(events: DataFrame, part: Column,
-      entity: Column, ts: Column, halfLifeUs: Long,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(events,
-      graft.ops.Decay.alignedHistogram(_, Seq(part, entity), ts,
-        halfLifeUs), outPath)
-
-  /** The derivation side of [[trendingPartialsSink]]: re-sum the
-    * partial histograms (duplicate (g, bucket) keys across batches sum
-    * BEFORE any scoring) and rank; the reference clock derives from
-    * the merged state's max bucket. */
+  /** The derivation side of the decayed-trending twin (ext141, the
+    * aligned-grid form), over a [[partialsSink]] store of
+    * `Decay.alignedHistogram(_, Seq(part, entity), ts, halfLifeUs)`:
+    * buckets on the epoch grid need NO reference-clock agreement, so
+    * partials merge by pure addition (the tref-anchored ext133 form is
+    * deliberately NOT streamable this way). Re-sum the partial
+    * histograms (duplicate (g, bucket) keys across batches sum BEFORE
+    * any scoring) and rank; the reference clock derives from the
+    * merged state's max bucket. */
   def trendingFromState(spark: SparkSession, outPath: String,
       k: Int): DataFrame =
     graft.ops.Decay.trendingFromAligned(
-      spark.read.parquet(outPath).drop("batch")
+      partials(spark, outPath)
         .groupBy("g0", "g1", "abs_bucket")
         .agg(sum("cnt").as("cnt")), k)
 
   /** Streaming twin of TextRank (ext145): the word-adjacency graph is
     * a COUNT relation, so per-batch partial edge counts merge by pure
-    * addition — exactly the [[trendingPartialsSink]] state shape. Each
+    * addition — exactly the trending histogram's state shape. Each
     * micro-batch writes its doc-local bigram counts (symmetrized,
     * self-loops dropped); the derivation re-sums duplicate edges
     * across batches BEFORE the vertex floor and the power iteration,
@@ -1157,7 +812,7 @@ object StreamingPipeline {
     * batching (iteration cost is vocab²-bounded, independent of
     * stream length). */
   def textrankPartialsSink(docs: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
+      outPath: String): DataStreamWriter[Row] =
     partialsSink(docs, b => {
       val pairs = graft.ops.TextOps.bigramRows(b.select(col("text")))
         .filter(col("t1") =!= col("t2"))
@@ -1174,7 +829,7 @@ object StreamingPipeline {
       iters: Int = 3, minWout: Int = 5, topK: Int = 20,
       dampPct: Int = 85): DataFrame =
     graft.ops.TextOps.textRankFromEdges(
-      spark.read.parquet(outPath).drop("batch")
+      partials(spark, outPath)
         .groupBy("src", "dst").agg(sum("w").as("w")),
       iters, minWout, topK, dampPct)
 
@@ -1186,7 +841,7 @@ object StreamingPipeline {
     * three batches is count 3, kept — pruning per batch would
     * over-prune, which is why the sink stores raw counts). */
   def lmPartialsSink(docs: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
+      outPath: String): DataStreamWriter[Row] =
     partialsSink(docs, b => {
       val bi = graft.ops.TextOps.bigramRows(b.select(col("text")))
         .groupBy("t1", "t2").agg(count(lit(1)).as("c"))
@@ -1205,7 +860,7 @@ object StreamingPipeline {
     * counted the whole corpus. */
   def lmBackoffFromState(spark: SparkSession, outPath: String,
       docs: DataFrame, minCount: Long = 2L): DataFrame = {
-    val merged = spark.read.parquet(outPath).drop("batch")
+    val merged = partials(spark, outPath)
       .groupBy("t1", "t2").agg(sum("c").as("c"))
     graft.ops.TextOps.stupidBackoffScoresFrom(docs,
       merged.filter(col("t2").isNotNull)
@@ -1222,7 +877,7 @@ object StreamingPipeline {
     * dom = 1 rows, the general LM the dom-summed relation, so ONE
     * stored table serves both models. */
   def mooreLewisPartialsSink(docs: DataFrame, inDomain: Column,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
+      outPath: String): DataStreamWriter[Row] =
     partialsSink(docs, b => {
       val flagged = b.select(col("text"),
         inDomain.cast("long").as("dom"))
@@ -1245,7 +900,7 @@ object StreamingPipeline {
   def mooreLewisFromState(spark: SparkSession, outPath: String,
       docs: DataFrame, minCount: Long = 2L): DataFrame = {
     val merged = graft.ops.Reuse.shared(
-      spark.read.parquet(outPath).drop("batch")
+      partials(spark, outPath)
         .groupBy("dom", "t1", "t2").agg(sum("c").as("c")))
     val gen = graft.ops.Reuse.shared(
       merged.groupBy("t1", "t2").agg(sum("c").as("c")))
@@ -1258,47 +913,6 @@ object StreamingPipeline {
       biOf(ind), uniOf(ind), biOf(gen), uniOf(gen), minCount)
   }
 
-  def countMinPartialsSink(docs: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(docs, graft.ops.Sketches.countMinCounters(_), outPath)
-
-  def countMinFromState(spark: SparkSession,
-      outPath: String): DataFrame =
-    graft.ops.Sketches.countMinMerge(
-      spark.read.parquet(outPath).drop("batch"))
-
-  /** Streaming twin of the JSON key profile (ext99): the per-key
-    * type-count card is all sums, so the card is its own partial
-    * (the ext92 shape) — profile the wire schema AS IT ARRIVES, which
-    * is when a schema drift (a key appearing, a type flipping) is
-    * cheapest to catch. */
-  def jsonProfilePartialsSink(rows: DataFrame, json: Column,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(rows,
-      graft.ops.Reporting.jsonKeyProfile(_, json), outPath)
-
-  def jsonProfileFromState(spark: SparkSession,
-      outPath: String): DataFrame =
-    graft.ops.Reporting.jsonKeyProfileFromCounts(
-      spark.read.parquet(outPath).drop("batch"))
-
-  /** Streaming twin of the embedding norm sanity card (ext95): the
-    * per-label count/zero/min/max/decimal-sum state is commutative-
-    * mergeable, so each micro-batch writes one |labels|-row partial
-    * and the fold reproduces the batch card exactly (the batch
-    * operator routes through the same partial+fold tail). Zero-norm
-    * vectors are caught ON ARRIVAL — before they reach an ANN index
-    * and poison cosine rankings silently. */
-  def normAuditPartialsSink(vecs: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(vecs,
-      graft.ops.Similarity.normAuditPartials(_), outPath)
-
-  def normAuditFromState(spark: SparkSession,
-      outPath: String): DataFrame =
-    graft.ops.Similarity.normAuditFromCounts(
-      spark.read.parquet(outPath).drop("batch"))
-
   /** Streaming twin of the duplicated-span mass score (ext91): the
     * shared-shingle-hash set is a per-SNAPSHOT artifact
     * ([[graft.ops.Dedup.dupSharedHashes]], stored once per corpus
@@ -1309,13 +923,9 @@ object StreamingPipeline {
     * rows equal the batch operator's for any batching. The shared set
     * is corpus-proportional — a keyed join, never a broadcast. */
   def dupSpanSink(docs: DataFrame, sharedHashes: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      outPath: String): DataStreamWriter[Row] = {
     val shared = sharedHashes.localCheckpoint(true)
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.ops.Dedup.dupSpanMassAgainst(batch, shared)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
+    partialsSink(docs, graft.ops.Dedup.dupSpanMassAgainst(_, shared), outPath)
   }
 
   /** Streaming twin of span-level dedup surgery (ext96): arriving docs
@@ -1326,13 +936,10 @@ object StreamingPipeline {
     * corpus-independent, so streamed rows equal the batch operator's
     * at any batching. */
   def dupSpanSurgerySink(docs: DataFrame, keeperSpans: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      outPath: String): DataStreamWriter[Row] = {
     val keepers = keeperSpans.localCheckpoint(true)
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.ops.Dedup.dupSpanSurgeryAgainst(batch, keepers)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    }
+    partialsSink(docs,
+      graft.ops.Dedup.dupSpanSurgeryAgainst(_, keepers), outPath)
   }
 
   /**
@@ -1380,8 +987,7 @@ object StreamingPipeline {
   def curationSink(docs: DataFrame, embs: DataFrame,
       keeperSpans: DataFrame, benchVecs: DataFrame,
       benchShingles: DataFrame, bloomBits: DataFrame,
-      outPath: String, redactPii: Boolean = false)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
+      outPath: String, redactPii: Boolean = false): DataStreamWriter[Row] =
     curationSinkVersioned(docs, embs,
       () => ("static", CurationArtifacts(
         keeperSpans, benchVecs, benchShingles, bloomBits)),
@@ -1464,8 +1070,7 @@ object StreamingPipeline {
    */
   def curationSinkVersioned(docs: DataFrame, embs: DataFrame,
       artifacts: () => (String, CurationArtifacts),
-      outPath: String, redactPii: Boolean = false)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      outPath: String, redactPii: Boolean = false): DataStreamWriter[Row] = {
     val pinned = new PinnedArtifacts(() => {
       val (v, a) = artifacts()
       (v, Seq(a.keeperSpans, a.benchVecs, a.benchShingles, a.bloomBits))
@@ -1528,100 +1133,29 @@ object StreamingPipeline {
   def curationMixPackFromState(spark: SparkSession, outPath: String,
       tokenBudget: Long, ctx: Long = 512L): DataFrame =
     graft.ops.Curation.mixPackRows(
-      spark.read.parquet(outPath).select("doc_id", "text", "source"),
+      partials(spark, outPath).select("doc_id", "text", "source"),
       tokenBudget, ctx)
 
-  def gopherPassRatesFromState(spark: SparkSession,
-      outPath: String): DataFrame =
-    graft.ops.TextOps.gopherPassRatesFromCounts(
-      spark.read.parquet(outPath).drop("batch"))
-
-  /** Streaming twin of the label-dispersion card (ext83): arriving
-    * vectors score against the stored per-snapshot centroid artifact
-    * (broadcast, stateless — the same boundary as the ext77 distance
-    * twin), and the card's per-label count/Σdist/max state is algebraic,
-    * so each micro-batch contributes one tiny |labels|-row partial. */
-  def dispersionPartialsSink(vecs: DataFrame, cents: DataFrame,
-      outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    partialsSink(vecs,
-      graft.ops.LabelAudit.dispersionPartials(_, cents), outPath)
-
-  /** ext83's card off the accumulated [[dispersionPartialsSink]] state
-    * + the same centroid artifact — identical to the batch card on
-    * everything that has arrived, at any batching. */
-  def dispersionFromState(spark: SparkSession, outPath: String,
-      cents: DataFrame): DataFrame =
-    graft.ops.LabelAudit.dispersionFromCounts(
-      spark.read.parquet(outPath).drop("batch"), cents)
-
-  /**
-   * Streaming twin of the data card / dup-stats reports (ext66/ext64):
-   * the card's corpus scan is the ALGEBRAIC per-(lang, source) partial
-   * (`Reporting.cardPartials` — commutative + associative), so the
-   * stream's only state is one tiny partial per micro-batch, written
-   * batch-keyed (idempotent on replay like [[boilerplateSink]]); corpus
-   * text is scanned exactly once, on arrival. [[dataCardFromState]] /
-   * [[dupStatsFromState]] fold the accumulated partials into the same
-   * one-row reports the batch queries produce — the redundancy term
-   * reads the build-once cluster map (a corpus-snapshot artifact,
-   * offline by construction, same boundary as ext69's df table).
-   */
-  def cardPartialsSink(docs: DataFrame,
-      partialsPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.ops.Reporting.cardPartials(batch)
-          .write.mode("overwrite").parquet(s"$partialsPath/batch=$batchId")
-    }
-
-  /** ext66's one-row card off the accumulated [[cardPartialsSink]]
-    * state + the snapshot cluster summary (`Reporting.clusterStats` of
-    * the stored map). Duplicate (lang, source) keys across batches are
-    * fine — every card field is duplicate-key-insensitive. */
-  def dataCardFromState(spark: SparkSession, partialsPath: String,
-      clusterStats: DataFrame): DataFrame =
-    graft.ops.Reporting.dataCard(
-      spark.read.parquet(partialsPath), clusterStats)
-
-  /** ext64's impact report off the same state: `n_total` folds from the
-    * per-batch partial counts, the family terms from the snapshot map. */
+  /** ext64's impact report off a [[partialsSink]] store of
+    * `Reporting.cardPartials` (the ext66 data card's state too):
+    * `n_total` folds from the per-batch partial counts, the family
+    * terms from the snapshot cluster summary (`Reporting.clusterStats`
+    * of the build-once map, a corpus-snapshot artifact). */
   def dupStatsFromState(spark: SparkSession, partialsPath: String,
       clusterStats: DataFrame): DataFrame =
     graft.ops.Reporting.dupStats(clusterStats,
-      spark.read.parquet(partialsPath)
-        .agg(sum(col("c")).as("n_total")))
+      partials(spark, partialsPath).agg(sum(col("c")).as("n_total")))
 
-  /**
-   * Streaming twin of `Dedup.keyOverlap` (ext68): the matrix's state is
-   * the distinct (source, shingle-hash) membership relation
-   * (`Dedup.keyShinglePairs`) — set union is the only cross-batch
-   * merge, so each micro-batch appends its own pairs batch-keyed
-   * (idempotent replay) and [[sourceOverlapFromState]] derives the
-   * matrix from the distinct accumulated table. The key-df cap is
-   * applied at DERIVATION time, never per batch: a shingle's key count
-   * grows with the corpus, and capping early would freeze a
-   * boilerplate judgment made on partial evidence.
-   */
-  def sourceOverlapSink(docs: DataFrame, pairsPath: String,
-      key: String = "source"): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.ops.Dedup.keyShinglePairs(batch, key)
-          .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-    }
-
-  /** ext68's matrix off the accumulated [[sourceOverlapSink]] pair
-    * state — distinct first (batches may re-contribute a pair), then
-    * the capped h-join, identical to the batch operator on the union
-    * of everything that has arrived. */
+  /** ext68's matrix off a [[partialsSink]] store of
+    * `Dedup.keyShinglePairs`: `keyOverlapFromPairs` collects each
+    * shingle's key SET, so a pair two batches both contributed counts
+    * once, and its key-df cap applies at derivation time over
+    * everything that has arrived — identical to the batch operator on
+    * the union. The derivation scans the store once, so the store is
+    * read as is, not materialized. */
   def sourceOverlapFromState(spark: SparkSession, pairsPath: String,
       key: String = "source"): DataFrame =
-    graft.ops.Dedup.keyOverlapFromPairs(
-      graft.ops.Reuse.shared(
-        // Project away the batch=<id> partition column BEFORE distinct,
-        // or a pair two batches both contributed would survive twice.
-        spark.read.parquet(pairsPath).select(col(key), col("h"))
-          .distinct()), key)
+    graft.ops.Dedup.keyOverlapFromPairs(partials(spark, pairsPath), key)
 
   /**
    * Streaming twin of `Splits.shardAssign` (ext52): a continuous
@@ -1804,7 +1338,7 @@ object StreamingPipeline {
   def adjustDisorderStream(events: DataFrame, ts: String = "ts",
       boundUs: Long = 5000000L,
       key: Column = lit(0L)): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.Encoders
     val withUs = events
       .withColumn("_adj_us", unix_micros(col(ts)))
       .withColumn("_adj_key", key.cast("long"))
@@ -2089,16 +1623,16 @@ object StreamingPipeline {
    * partitions instead of seeking an LSM iterator.
    */
   def rankedSink(agg: DataFrame, storePath: String,
-      n: Int = Windows.TopN): DataStreamWriter[org.apache.spark.sql.Row] =
+      n: Int = Windows.TopN): DataStreamWriter[Row] =
     agg.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         AggregateStore.writeRanked(batch, storePath, n, batchId)
       }
 
-  /** End-to-end assembly: source dir → ranked parquet store. */
-  /** The reference's live pipeline end to end. `adjust = true` runs
-    * ingress under [[adjustDisorderStream]] — Trill's
+  /** The reference's live pipeline end to end: source dir → ranked
+    * parquet store. `adjust = true` runs ingress under
+    * [[adjustDisorderStream]] — Trill's
     * `DisorderPolicy.Adjust(5 s)`, the policy the reference actually
     * ingests with (Query.cs:27-31) — so an out-of-bound late tweet is
     * LIFTED into the trailing window instead of silently dropped;

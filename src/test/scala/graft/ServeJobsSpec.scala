@@ -102,6 +102,38 @@ class ServeJobsSpec extends TestBase {
     AggregateStore.compact(spark, compacted)
     assert(new java.io.File(compacted).list().toSeq == Seq("batch=-1"))
     same(compacted)
+    // batch-keyed twin stores: a drift store, the LM store (its unigram
+    // rows hold an all-null t2) and a stratified budget store, whose
+    // keep-latest read turns `batch` into the `_ver` version column
+    def twin(sink: (DataFrame, String) =>
+        org.apache.spark.sql.streaming.DataStreamWriter[
+          org.apache.spark.sql.Row]): String = {
+      val out = Files.createTempDirectory("graft-serve-twin").toString
+      val q = sink(StreamingPipeline.parquetStream(spark,
+          sf("sf0.001") + "/documents.parquet"), out)
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft-serve-twin-ckpt").toString)
+        .start()
+      q.processAllAvailable()
+      q.stop()
+      out
+    }
+    val drift = twin((s, o) => StreamingPipeline.partialsSink(s,
+      graft.ops.Reporting.driftPartials(_, col("doc_id") % 2 === 0,
+        Seq("lang")), o))
+    val lm = twin(StreamingPipeline.lmPartialsSink)
+    assert(spark.read.parquet(lm).filter(col("t2").isNull).count() > 0)
+    val budget = twin((s, o) => StreamingPipeline.partialsSink(s,
+      graft.ops.Sampling.budgetSelectStratumPartials(_, col("lang"),
+        length(col("text"))), o))
+    for (path <- Seq(drift, lm, budget)) {
+      same(path)
+      assert(StreamingPipeline.partials(spark, path).schema ==
+        spark.read.parquet(path).drop("batch").schema, path)
+    }
+    assert(StreamingPipeline.versions(spark, budget).schema ==
+      spark.read.parquet(budget)
+        .withColumn("_ver", col("batch").cast("long")).drop("batch").schema)
 
     def failure(read: => DataFrame): Option[(Class[_], String)] =
       try { read; None }

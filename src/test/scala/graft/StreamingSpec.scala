@@ -41,6 +41,23 @@ class StreamingSpec extends TestBase {
       "not json at all")
   }
 
+  /** Drains a replay of the parquet files in `srcDir`
+    * (`filesPerTrigger` per micro-batch) through the sink `mk` builds
+    * for an output dir, and returns that dir. */
+  private def runSink(srcDir: String, filesPerTrigger: Int = 1)(
+      mk: (org.apache.spark.sql.DataFrame, String)
+        => org.apache.spark.sql.streaming.DataStreamWriter[
+          org.apache.spark.sql.Row]): String = {
+    val out = Files.createTempDirectory("graft-sink-out").toString
+    val ckpt = Files.createTempDirectory("graft-sink-ckpt").toString
+    val q = mk(StreamingPipeline.parquetStream(spark, srcDir,
+      maxFilesPerTrigger = Some(filesPerTrigger)), out)
+      .option("checkpointLocation", ckpt).start()
+    q.processAllAvailable()
+    q.stop()
+    out
+  }
+
   test("streaming hashtag aggregate == batch equivalent on replay fixture") {
     val dir = Files.createTempDirectory("graft-replay").toFile
     val store = Files.createTempDirectory("graft-store").toString
@@ -889,14 +906,8 @@ class StreamingSpec extends TestBase {
     val corpusDir =
       Files.createTempDirectory("graft-decon-src").toString + "/docs"
     corpus.select("doc_id", "text").write.parquet(corpusDir)
-    val out = Files.createTempDirectory("graft-decon-out").toString
-    val ckpt = Files.createTempDirectory("graft-decon-ckpt").toString
-    val q = StreamingPipeline.decontaminationSink(
-      StreamingPipeline.parquetStream(spark, corpusDir,
-        maxFilesPerTrigger = Some(1)), benchH, out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val out = runSink(corpusDir)((s, o) =>
+      StreamingPipeline.decontaminationSink(s, benchH, o))
     val streamed = spark.read.parquet(out)
       .select("doc_id", "n_sh", "n_shared", "overlap_frac", "contaminated")
     val batch = graft.ops.Dedup.benchmarkOverlap(
@@ -918,14 +929,8 @@ class StreamingSpec extends TestBase {
     val bits = graft.ops.Sketches.bloomBits(benchH).localCheckpoint(true)
     val srcDir = Files.createTempDirectory("graft-bloom-src").toString + "/d"
     corpus.select("doc_id", "text").write.parquet(srcDir)
-    val out = Files.createTempDirectory("graft-bloom-out").toString
-    val ckpt = Files.createTempDirectory("graft-bloom-ckpt").toString
-    val q = StreamingPipeline.bloomProbeSink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), benchH, out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val out = runSink(srcDir)((s, o) =>
+      StreamingPipeline.bloomProbeSink(s, benchH, o))
     val streamed = spark.read.parquet(out)
       .select("doc_id", "n_sh", "n_exact", "n_bloom")
     val batch = graft.ops.Sketches.bloomPerDoc(
@@ -963,15 +968,9 @@ class StreamingSpec extends TestBase {
       .select("doc_id", "text")
     val srcDir = Files.createTempDirectory("graft-rs-src").toString + "/d"
     docs.repartition(3).write.parquet(srcDir)
-    val out = Files.createTempDirectory("graft-rs-out").toString
-    val ckpt = Files.createTempDirectory("graft-rs-ckpt").toString
-    val q = StreamingPipeline.repetitionSurgerySink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.read.parquet(out)
+    val out = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.Dedup.repetitionSurgery(_), o))
+    val streamed = StreamingPipeline.partials(spark, out)
       .select("doc_id", "n_toks", "n_toks_cut", "clean_text")
     val batch = graft.ops.Dedup.repetitionSurgery(docs)
     assert(streamed.count() == batch.count() && batch.count() > 0)
@@ -990,14 +989,8 @@ class StreamingSpec extends TestBase {
       .localCheckpoint(true)
     val srcDir = Files.createTempDirectory("graft-ds-src").toString + "/d"
     docs.repartition(3).write.parquet(srcDir)
-    val out = Files.createTempDirectory("graft-ds-out").toString
-    val ckpt = Files.createTempDirectory("graft-ds-ckpt").toString
-    val q = StreamingPipeline.dupSpansSink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), shared, out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val out = runSink(srcDir)((s, o) =>
+      StreamingPipeline.dupSpansSink(s, shared, o))
     val streamed = spark.read.parquet(out)
       .select("doc_id", "span_start", "span_len")
     val batch = graft.ops.Dedup.dupSpans(docs)
@@ -1014,14 +1007,8 @@ class StreamingSpec extends TestBase {
     val corpus = emb.filter(col("vec_id") >= 20)
     val srcDir = Files.createTempDirectory("graft-sd-src").toString + "/d"
     corpus.repartition(3).write.parquet(srcDir)
-    val out = Files.createTempDirectory("graft-sd-out").toString
-    val ckpt = Files.createTempDirectory("graft-sd-ckpt").toString
-    val q = StreamingPipeline.semanticDecontaminateSink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), bench, out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val out = runSink(srcDir)((s, o) =>
+      StreamingPipeline.semanticDecontaminateSink(s, bench, o))
     val streamed = spark.read.parquet(out)
       .select("vec_id", "bench_id", "max_cos", "contaminated")
     val batch = graft.ops.Similarity.semanticDecontaminate(corpus, bench)
@@ -1398,14 +1385,8 @@ class StreamingSpec extends TestBase {
     val th = S.prototypeThresholds(batchPruned, "easy")
     val srcDir = Files.createTempDirectory("graft-pg-src").toString + "/d"
     e.repartition(3).write.parquet(srcDir)
-    val out = Files.createTempDirectory("graft-pg-out").toString
-    val ckpt = Files.createTempDirectory("graft-pg-ckpt").toString
-    val q = StreamingPipeline.prototypeGateSink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), cents, th, "easy", out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val out = runSink(srcDir)((s, o) =>
+      StreamingPipeline.prototypeGateSink(s, cents, th, "easy", o))
     val streamed = spark.read.parquet(out)
       .select("vec_id", "bucket", "dist", "kept")
     val batch = batchPruned.select("vec_id", "bucket", "dist", "kept")
@@ -1430,16 +1411,10 @@ class StreamingSpec extends TestBase {
       "n_chars" -> length(col("text")).cast("long"))
     val srcDir = Files.createTempDirectory("graft-corr-src").toString + "/d"
     docs.write.parquet(srcDir)
-    val out = Files.createTempDirectory("graft-corr-out").toString
-    val ckpt = Files.createTempDirectory("graft-corr-ckpt").toString
-    val q = StreamingPipeline.signalMomentsPartialsSink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), signals, out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = StreamingPipeline
-      .signalCorrelationsFromState(spark, out)
+    val out = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.Reporting.signalMoments(_, signals), o))
+    val streamed = graft.ops.Reporting.correlationsFromMoments(
+      StreamingPipeline.partials(spark, out))
     val batch = graft.ops.Reporting.signalCorrelations(docs, signals)
     assert(streamed.count() == 1 && batch.count() == 1)
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty,
@@ -1483,14 +1458,8 @@ class StreamingSpec extends TestBase {
     val merges = graft.ops.TextOps.bpeMerges(docs, 3).localCheckpoint(true)
     val srcDir = Files.createTempDirectory("graft-bpe-src").toString + "/d"
     docs.write.parquet(srcDir)
-    val out = Files.createTempDirectory("graft-bpe-out").toString
-    val ckpt = Files.createTempDirectory("graft-bpe-ckpt").toString
-    val q = StreamingPipeline.bpeEncodeSink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), merges, 3, out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val out = runSink(srcDir)((s, o) =>
+      StreamingPipeline.bpeEncodeSink(s, merges, 3, o))
     // Per-word counts are per-batch; summed across batches they equal
     // the batch encoder's, and n_syms is batch-independent per word.
     val streamed = spark.read.parquet(out)
@@ -1513,14 +1482,8 @@ class StreamingSpec extends TestBase {
     val hot = graft.ops.TextOps.boilerplateSpans(docs)
     val srcDir = Files.createTempDirectory("graft-bp-src").toString + "/d"
     docs.write.parquet(srcDir)
-    val out = Files.createTempDirectory("graft-bp-out").toString
-    val ckpt = Files.createTempDirectory("graft-bp-ckpt").toString
-    val q = StreamingPipeline.boilerplateSink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), hot, out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val out = runSink(srcDir)((s, o) =>
+      StreamingPipeline.boilerplateSink(s, hot, o))
     val streamed = spark.read.parquet(out)
       .select("doc_id", "n_chunks", "n_dropped", "n_toks_dropped",
         "clean_text")
@@ -1540,14 +1503,8 @@ class StreamingSpec extends TestBase {
     val df = graft.ops.Dedup.noveltyShingleDf(docs)
     val srcDir = Files.createTempDirectory("graft-nov-src").toString + "/d"
     docs.write.parquet(srcDir)
-    val out = Files.createTempDirectory("graft-nov-out").toString
-    val ckpt = Files.createTempDirectory("graft-nov-ckpt").toString
-    val q = StreamingPipeline.noveltySink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), df, out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val out = runSink(srcDir)((s, o) =>
+      StreamingPipeline.noveltySink(s, df, o))
     val streamed = spark.read.parquet(out)
       .select("doc_id", "n_shingles", "n_unique", "novelty_q")
     val batch = graft.ops.Dedup.noveltyScores(docs)
@@ -1566,14 +1523,7 @@ class StreamingSpec extends TestBase {
     val rare = graft.ops.TextOps.rareTokens(docs)
     val srcDir = Files.createTempDirectory("graft-oov-src").toString + "/d"
     docs.write.parquet(srcDir)
-    val out = Files.createTempDirectory("graft-oov-out").toString
-    val ckpt = Files.createTempDirectory("graft-oov-ckpt").toString
-    val q = StreamingPipeline.oovSink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), rare, out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val out = runSink(srcDir)((s, o) => StreamingPipeline.oovSink(s, rare, o))
     val streamed = spark.read.parquet(out)
       .select("doc_id", "n_toks", "n_rare", "oov_ppm")
     val batch = graft.ops.TextOps.oovRate(docs)
@@ -1593,18 +1543,13 @@ class StreamingSpec extends TestBase {
       graft.ops.LabelAudit.labelCentroids(emb))
     val srcDir = Files.createTempDirectory("graft-disp-src").toString + "/d"
     emb.write.parquet(srcDir)
-    val out = Files.createTempDirectory("graft-disp-out").toString
-    val ckpt = Files.createTempDirectory("graft-disp-ckpt").toString
-    val q = StreamingPipeline.dispersionPartialsSink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), cents, out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val out = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.LabelAudit.dispersionPartials(_, cents), o))
     // the fold must really cross micro-batches, not see one big one
     assert(new java.io.File(out).listFiles()
       .count(_.getName.startsWith("batch=")) > 1)
-    val streamed = StreamingPipeline.dispersionFromState(spark, out, cents)
+    val streamed = graft.ops.LabelAudit.dispersionFromCounts(
+      StreamingPipeline.partials(spark, out), cents)
     val batch = graft.ops.LabelAudit.labelDispersion(emb)
     assert(streamed.count() == batch.count() && batch.count() > 0)
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty,
@@ -1618,51 +1563,35 @@ class StreamingSpec extends TestBase {
       .select("doc_id", "text", "lang", "source")
     val srcDir = Files.createTempDirectory("graft-part-src").toString + "/d"
     docs.write.parquet(srcDir)
-    def runSink(mk: (org.apache.spark.sql.DataFrame, String)
-        => org.apache.spark.sql.streaming.DataStreamWriter[
-          org.apache.spark.sql.Row]): String = {
-      val out = Files.createTempDirectory("graft-part-out").toString
-      val ckpt = Files.createTempDirectory("graft-part-ckpt").toString
-      val q = mk(StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), out)
-        .option("checkpointLocation", ckpt).start()
-      q.processAllAvailable()
-      q.stop()
-      out
-    }
     val budgets = Seq(128L, 512L)
-    val packOut = runSink((s, o) => StreamingPipeline.packPartialsSink(
-      s, size(split(col("text"), " ")), budgets, o))
-    val packStreamed =
-      StreamingPipeline.packEfficiencyFromState(spark, packOut)
+    val packOut = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.Packing.packPartials(_, size(split(col("text"), " ")),
+        budgets), o))
+    val packStreamed = graft.ops.Packing.packEfficiencyFromCounts(
+      StreamingPipeline.partials(spark, packOut))
     val packBatch = graft.ops.Packing.packEfficiency(docs,
       size(split(col("text"), " ")), budgets)
     assert(packStreamed.except(packBatch).isEmpty &&
       packBatch.except(packStreamed).isEmpty && packBatch.count() == 2,
       "streamed pack-efficiency fold differs from the batch operator")
-    val driftOut = runSink((s, o) => StreamingPipeline.driftPartialsSink(
-      s, col("doc_id") % 2 === 0, Seq("lang"), o))
-    val driftStreamed = StreamingPipeline.driftFromState(spark, driftOut)
+    val driftOut = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.Reporting.driftPartials(_, col("doc_id") % 2 === 0,
+        Seq("lang")), o))
+    val driftStreamed = graft.ops.Reporting.driftFromCounts(
+      StreamingPipeline.partials(spark, driftOut))
     val driftBatch = graft.ops.Reporting.compositionDriftBy(docs,
       col("doc_id") % 2 === 0, Seq("lang"))
     assert(driftStreamed.except(driftBatch).isEmpty &&
       driftBatch.except(driftStreamed).isEmpty && driftBatch.count() > 0,
       "streamed drift fold differs from the batch operator")
-    val trendOut = Files.createTempDirectory("graft-tsl-out").toString
-    val trendCkpt = Files.createTempDirectory("graft-tsl-ck").toString
     val evDir = Files.createTempDirectory("graft-tsl-src").toString + "/d"
     val evs = graft.ingest.Tables.events(spark, sf("sf0.001"))
       .select("event_id", "user_id", "event_type", "ts")
     evs.write.parquet(evDir)
-    val tq = StreamingPipeline.trendSlopePartialsSink(
-      StreamingPipeline.parquetStream(spark, evDir,
-        maxFilesPerTrigger = Some(1)),
-      col("event_type"), trendOut)
-      .option("checkpointLocation", trendCkpt).start()
-    tq.processAllAvailable()
-    tq.stop()
-    val trendStreamed =
-      StreamingPipeline.trendSlopesFromState(spark, trendOut)
+    val trendOut = runSink(evDir)((s, o) =>
+      StreamingPipeline.trendSlopePartialsSink(s, col("event_type"), o))
+    val trendStreamed = graft.agg.Windows.trendSlopesFromCounts(
+      StreamingPipeline.partials(spark, trendOut))
     val trendBatch = graft.agg.Windows.trendSlopes(evs,
       col("event_type"))
     assert(trendStreamed.except(trendBatch).isEmpty &&
@@ -1670,32 +1599,33 @@ class StreamingSpec extends TestBase {
       "streamed trend-slope fold differs from the batch operator")
     // ext158 twin rides the SAME stored matrix — one partials sink
     // serves both the slope and anomaly derivations
-    val anomStreamed =
-      StreamingPipeline.anomalyDaysFromState(spark, trendOut)
+    val anomStreamed = graft.agg.Windows.anomalyDaysFromCounts(
+      StreamingPipeline.partials(spark, trendOut))
     val anomBatch = graft.agg.Windows.anomalyDays(evs, col("event_type"))
     assert(anomStreamed.except(anomBatch).isEmpty &&
       anomBatch.except(anomStreamed).isEmpty && anomBatch.count() > 0,
       "streamed anomaly-day fold differs from the batch operator")
     // ext166 twin rides the SAME matrix too: direction, pointwise and
     // dispersion all derive from one stored partials sink
-    val fanoStreamed =
-      StreamingPipeline.burstinessFromState(spark, trendOut)
+    val fanoStreamed = graft.agg.Windows.burstinessFromCounts(
+      StreamingPipeline.partials(spark, trendOut))
     val fanoBatch = graft.agg.Windows.burstiness(evs, col("event_type"))
     assert(fanoStreamed.except(fanoBatch).isEmpty &&
       fanoBatch.except(fanoStreamed).isEmpty && fanoBatch.count() > 0,
       "streamed burstiness fold differs from the batch operator")
-    val psiOut = runSink((s, o) => StreamingPipeline.psiPartialsSink(
+    val psiOut = runSink(srcDir)((s, o) => StreamingPipeline.psiPartialsSink(
       s, col("doc_id") % 2 === 0, length(col("text")), o))
-    val psiStreamed = StreamingPipeline.psiFromState(spark, psiOut)
+    val psiStreamed = graft.ops.Reporting.psiFromCounts(
+      StreamingPipeline.partials(spark, psiOut))
     val psiBatch = graft.ops.Reporting.psiDrift(docs,
       col("doc_id") % 2 === 0, length(col("text")))
     assert(psiStreamed.except(psiBatch).isEmpty &&
       psiBatch.except(psiStreamed).isEmpty && psiBatch.count() > 1,
       "streamed psi fold differs from the batch operator")
-    val gopherOut = runSink((s, o) =>
-      StreamingPipeline.gopherPassPartialsSink(s, Seq("source"), o))
-    val gopherStreamed =
-      StreamingPipeline.gopherPassRatesFromState(spark, gopherOut)
+    val gopherOut = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.TextOps.gopherPassPartials(_, Seq("source")), o))
+    val gopherStreamed = graft.ops.TextOps.gopherPassRatesFromCounts(
+      StreamingPipeline.partials(spark, gopherOut))
     val gopherBatch = graft.ops.TextOps.gopherPassRatesFromCounts(
       graft.ops.TextOps.gopherPassPartials(docs))
     assert(gopherStreamed.except(gopherBatch).isEmpty &&
@@ -1703,9 +1633,10 @@ class StreamingSpec extends TestBase {
       "streamed pass-rate fold differs from the batch operator")
     // ext165 serving twin: the incrementally-appended inverted index
     // serves the identical BM25 top-k the batch text scan computes
-    val idxOut = runSink((s, o) =>
-      StreamingPipeline.bm25IndexSink(s, o))
-    val bmStreamed = StreamingPipeline.bm25FromState(spark, idxOut,
+    val idxOut = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.TextOps.bm25IndexPartials(_), o))
+    val bmStreamed = graft.ops.TextOps.bm25FromIndex(
+      StreamingPipeline.partials(spark, idxOut),
       Seq("spark", "window", "join"))
     val bmBatch = graft.ops.TextOps.bm25TopK(docs,
       Seq("spark", "window", "join"))
@@ -1714,10 +1645,10 @@ class StreamingSpec extends TestBase {
       "index-served bm25 differs from the batch text scan")
     // ext167 twin: tagged presence/doc-count partials fold to the
     // identical association card (whole-doc arrival contract)
-    val laOut = runSink((s, o) =>
-      StreamingPipeline.labelAssocPartialsSink(s, col("lang"), o))
-    val laStreamed = StreamingPipeline.labelAssociationFromState(
-      spark, laOut)
+    val laOut = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.TextOps.labelAssocPartials(_, col("lang")), o))
+    val laStreamed = graft.ops.TextOps.labelAssociationFromCounts(
+      StreamingPipeline.partials(spark, laOut))
     val laBatch = graft.ops.TextOps.labelAssociation(docs, col("lang"))
     assert(laStreamed.except(laBatch).isEmpty &&
       laBatch.except(laStreamed).isEmpty && laBatch.count() > 0,
@@ -1727,16 +1658,63 @@ class StreamingSpec extends TestBase {
     // the streamed fold's rank pass must equal the batch bisection
     // EXACTLY (same k = ceil(q*n/100), same smallest-reaching-value
     // ties rule)
-    val selOut = runSink((s, o) =>
-      StreamingPipeline.selectionQuantilePartialsSink(
-        s, Seq("lang"), length(col("text")), o))
-    val selStreamed = StreamingPipeline.selectionQuantilesFromState(
-      spark, selOut, Seq("lang"))
+    val selOut = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.Sketches.selectionValueCounts(_, Seq("lang"),
+        length(col("text"))), o))
+    val selStreamed = graft.ops.Sketches.selectionQuantilesFromCounts(
+      StreamingPipeline.partials(spark, selOut), Seq("lang"))
     val selBatch = graft.ops.Sketches.selectionQuantiles(docs,
       Seq("lang"), length(col("text")))
     assert(selStreamed.except(selBatch).isEmpty &&
       selBatch.except(selStreamed).isEmpty && selBatch.count() > 0,
       "streamed selection-quantile fold differs from the batch bisection")
+    graft.ops.Reuse.freeAll(spark)
+  }
+
+  test("partialsSink is idempotent under crash replay: a restart that " +
+      "re-runs the uncommitted micro-batch leaves the store's rows and " +
+      "row count unchanged") {
+    val docs = graft.ingest.Tables.documents(spark, sf("sf0.001"))
+      .select("doc_id", "text", "lang")
+    val srcDir = Files.createTempDirectory("graft-crash-src").toString + "/d"
+    docs.repartition(4).write.parquet(srcDir)
+    val out = Files.createTempDirectory("graft-crash-out").toString
+    val ckpt = Files.createTempDirectory("graft-crash-ckpt").toString
+    def drain(): Unit = {
+      val q = StreamingPipeline.partialsSink(
+          StreamingPipeline.parquetStream(spark, srcDir,
+            maxFilesPerTrigger = Some(1)),
+          graft.ops.Reporting.driftPartials(_, col("doc_id") % 2 === 0,
+            Seq("lang")), out)
+        .option("checkpointLocation", ckpt).start()
+      q.processAllAvailable()
+      q.stop()
+    }
+    def stored: Seq[String] =
+      StreamingPipeline.partials(spark, out).collect().map(_.toString)
+        .toSeq.sorted
+    drain()
+    val commits = new java.io.File(ckpt, "commits")
+    def committed: Seq[Long] = commits.listFiles().map(_.getName)
+      .filter(_.forall(_.isDigit)).map(_.toLong).toSeq.sorted
+    assert(committed.size >= 3, s"only ${committed.size} micro-batches ran")
+    val before = stored
+    // The crash: the newest batch wrote its store dir, then died before
+    // its commit. Its offsets stay logged, so the restarted query re-runs
+    // that batch id over the same input.
+    val newest = committed.last
+    assert(new java.io.File(commits, newest.toString).delete())
+    new java.io.File(commits, s".$newest.crc").delete()
+    drain()
+    assert(committed.last == newest,
+      s"the restart did not re-run batch $newest: commits $committed")
+    val after = stored
+    // count first: the twins' two-way except is a set comparison and
+    // cannot see a batch whose rows landed twice
+    assert(after.size == before.size,
+      s"replayed batch $newest changed the row count: " +
+        s"${before.size} -> ${after.size}")
+    assert(after == before, s"replayed batch $newest changed the rows")
     graft.ops.Reuse.freeAll(spark)
   }
 
@@ -1746,16 +1724,10 @@ class StreamingSpec extends TestBase {
     val events = graft.ingest.Tables.events(spark, sf("sf0.001"))
     val srcDir = Files.createTempDirectory("graft-tsp-src").toString + "/d"
     events.write.parquet(srcDir)
-    val state = Files.createTempDirectory("graft-tsp-state").toString
-    val ckpt = Files.createTempDirectory("graft-tsp-ckpt").toString
-    val q = StreamingPipeline.temporalSplitPartialsSink(
-        StreamingPipeline.parquetStream(spark, srcDir,
-          maxFilesPerTrigger = Some(1)),
-        col("user_id"), state)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = StreamingPipeline.temporalSplitFromState(spark, state)
+    val state = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.Splits.temporalEventCounts(_, col("user_id")), o))
+    val streamed = graft.ops.Splits.temporalSplitFromCounts(
+      StreamingPipeline.partials(spark, state))
     val batch = graft.ops.Splits.temporalSplit(events, col("user_id"))
     assert(batch.count() == 1, "batch card fixture is vacuous")
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty,
@@ -1765,7 +1737,7 @@ class StreamingSpec extends TestBase {
     // one-sink-many-cards discipline): its summed value counts rank to
     // the same selection quantile the bisection found
     val vcCut = graft.ops.Sketches.selectionQuantilesFromCounts(
-        spark.read.parquet(state).drop("batch")
+        StreamingPipeline.partials(spark, state)
           .select(lit(0).as("_s"), col("_us").as("_v"), col("cnt")),
         Seq("_s"), Seq(80))
       .collect().head.getAs[Long]("value")
@@ -1784,20 +1756,14 @@ class StreamingSpec extends TestBase {
           " + (n_stop * 1000000 DIV n_words) DIV 2"))
     val srcDir = Files.createTempDirectory("graft-bsel-src").toString + "/d"
     docs.select("doc_id", "text").write.parquet(srcDir)
-    val state = Files.createTempDirectory("graft-bsel-state").toString
-    val ckpt = Files.createTempDirectory("graft-bsel-ckpt").toString
-    val q = StreamingPipeline.budgetSelectPartialsSink(
-        scored(StreamingPipeline.parquetStream(spark, srcDir,
-          maxFilesPerTrigger = Some(1))),
-        col("score_ppm"), state)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val state = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      scored(s), graft.ops.Sampling.budgetSelectPartials(_, col("score_ppm")),
+      o))
     // one stored projection answers ANY budget — both must equal the
     // batch card bit for bit (threshold, boundary, masses, fill)
     Seq(10000L, 1000L).foreach { b =>
-      val streamed = StreamingPipeline
-        .budgetSelectCardFromState(spark, state, b)
+      val streamed = graft.ops.Sampling.budgetSelectCardFromCounts(
+        StreamingPipeline.partials(spark, state), b)
       val batch = graft.ops.Sampling.budgetSelectCard(
         scored(docs), col("score_ppm"), b)
       assert(batch.count() == 1)
@@ -1810,7 +1776,7 @@ class StreamingSpec extends TestBase {
     // An EXACT replay of a stored partial row (an at-least-once
     // redelivery arriving in a LATER micro-batch — a fresh batch=N
     // partition) folds away by distinct — the card is unchanged.
-    val one = spark.read.parquet(state).drop("batch").limit(1)
+    val one = StreamingPipeline.partials(spark, state).limit(1)
     val stateSchema = one.schema
     val oneRow = one.collect().toSeq
     def rowFrame(rows: Seq[org.apache.spark.sql.Row]) =
@@ -1819,8 +1785,8 @@ class StreamingSpec extends TestBase {
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
         stateSchema)
     rowFrame(oneRow).write.parquet(s"$state/batch=9998")
-    val afterReplay = StreamingPipeline
-      .budgetSelectCardFromState(spark, state, 10000L)
+    val afterReplay = graft.ops.Sampling.budgetSelectCardFromCounts(
+      StreamingPipeline.partials(spark, state), 10000L)
     val batch10k = graft.ops.Sampling.budgetSelectCard(
       scored(docs), col("score_ppm"), 10000L)
     assert(afterReplay.except(batch10k).isEmpty &&
@@ -1836,7 +1802,8 @@ class StreamingSpec extends TestBase {
     rowFrame(oneRow).withColumn("_toks", col("_toks") + 1L)
       .write.parquet(s"$state/batch=9999")
     val exDup = intercept[IllegalArgumentException] {
-      StreamingPipeline.budgetSelectCardFromState(spark, state, 10000L)
+      graft.ops.Sampling.budgetSelectCardFromCounts(
+        StreamingPipeline.partials(spark, state), 10000L)
     }
     assert(exDup.getMessage.contains("re-crawled"),
       s"re-crawl guard message drifted: ${exDup.getMessage}")
@@ -1846,8 +1813,8 @@ class StreamingSpec extends TestBase {
     // newest row, and the card equals budgetSelectCardFromCounts over
     // an INDEPENDENT latest-row arbitration (row_number over a
     // version-desc window — a different implementation of the rule).
-    val keepLatest = StreamingPipeline
-      .budgetSelectCardFromStateKeepLatest(spark, state, 10000L)
+    val keepLatest = graft.ops.Sampling.budgetSelectCardFromVersioned(
+      StreamingPipeline.versions(spark, state), 10000L)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("_id").orderBy(col("batch").cast("long").desc,
         col("_score").desc, col("_toks").desc)
@@ -1874,8 +1841,8 @@ class StreamingSpec extends TestBase {
     rowFrame(oneRow).withColumn("_toks", col("_toks") + 5L)
       .write.mode("append").parquet(s"$state/batch=9999")
     val exVer = intercept[IllegalArgumentException] {
-      StreamingPipeline
-        .budgetSelectCardFromStateKeepLatest(spark, state, 10000L)
+      graft.ops.Sampling.budgetSelectCardFromVersioned(
+        StreamingPipeline.versions(spark, state), 10000L)
     }
     assert(exVer.getMessage.contains("(_id, _ver)"),
       s"within-version conflict guard drifted: ${exVer.getMessage}")
@@ -1892,18 +1859,13 @@ class StreamingSpec extends TestBase {
           " + (n_stop * 1000000 DIV n_words) DIV 2"))
     val srcDir = Files.createTempDirectory("graft-bsels-src").toString + "/d"
     docs.select("doc_id", "lang", "text").write.parquet(srcDir)
-    val state = Files.createTempDirectory("graft-bsels-state").toString
-    val ckpt = Files.createTempDirectory("graft-bsels-ckpt").toString
-    val q = StreamingPipeline.budgetSelectStratumPartialsSink(
-        scored(StreamingPipeline.parquetStream(spark, srcDir,
-          maxFilesPerTrigger = Some(1))),
-        col("lang"), col("score_ppm"), state)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val state = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      scored(s), graft.ops.Sampling.budgetSelectStratumPartials(_,
+        col("lang"), col("score_ppm")), o))
+    def stored = StreamingPipeline.partials(spark, state)
     // per-stratum cards from state == the batch operator
-    val streamed = StreamingPipeline.budgetSelectCardsByStratumFromState(
-      spark, state, "lang", 3000L)
+    val streamed = graft.ops.Sampling.budgetSelectCardsByStratumFromCounts(
+      stored, "lang", 3000L)
     val batch = graft.ops.Sampling.budgetSelectCardsByStratum(
       scored(docs), "lang", col("score_ppm"), 3000L)
     assert(batch.count() > 1)
@@ -1913,8 +1875,8 @@ class StreamingSpec extends TestBase {
         s"(${streamed.collect().toSeq} vs ${batch.collect().toSeq})")
     graft.ops.Reuse.freeAll(spark)
     // the per-stratum PLAN is a serve-time knob over the same state
-    val plannedS = StreamingPipeline.budgetSelectCardsByStratumFromState(
-      spark, state, "lang", 3000L, budgets = Map("en" -> 500L))
+    val plannedS = graft.ops.Sampling.budgetSelectCardsByStratumFromCounts(
+      stored, "lang", 3000L, budgets = Map("en" -> 500L))
     val plannedB = graft.ops.Sampling.budgetSelectCardsByStratum(
       scored(docs), "lang", col("score_ppm"), 3000L,
       budgets = Map("en" -> 500L))
@@ -1925,7 +1887,7 @@ class StreamingSpec extends TestBase {
     // and the SAME stored relation serves the GLOBAL ext172 card —
     // one sink, every card
     val globalS = graft.ops.Sampling.budgetSelectCardFromCounts(
-      spark.read.parquet(state).drop("batch", "_s"), 3000L)
+      stored.drop("_s"), 3000L)
     val globalB = graft.ops.Sampling.budgetSelectCard(
       scored(docs), col("score_ppm"), 3000L)
     assert(globalS.except(globalB).isEmpty &&
@@ -1935,8 +1897,8 @@ class StreamingSpec extends TestBase {
     // ... and the TWO-LEVEL plan too (r16 verdict item 4): the same
     // stored projection serves the cap + global cut at serve-time
     // knobs, equal to the direct batch operator
-    val twoS = StreamingPipeline.twoLevelBudgetCardFromState(
-      spark, state, 1500L, 4000L)
+    val twoS = graft.ops.Sampling.twoLevelBudgetCardFromCounts(
+      stored, 1500L, 4000L)
     val twoB = graft.ops.Sampling.twoLevelBudgetCard(scored(docs),
       "lang", col("score_ppm"), 1500L, 4000L)
     assert(twoB.count() == 1)
@@ -1946,8 +1908,8 @@ class StreamingSpec extends TestBase {
     graft.ops.Reuse.freeAll(spark)
     // ... and the per-stratum fill CURVES (ext176): the budget ladder
     // is a serve-time knob over the same stored projection
-    val curveS = StreamingPipeline.budgetFillCurveByStratumFromState(
-      spark, state, "lang", Seq(800L, 3000L))
+    val curveS = graft.ops.Sampling.budgetFillCurveByStratumFromCounts(
+      stored, "lang", Seq(800L, 3000L))
     val curveB = graft.ops.Sampling.budgetFillCurveByStratum(
       scored(docs), "lang", col("score_ppm"), Seq(800L, 3000L))
     assert(curveS.except(curveB).isEmpty &&
@@ -1957,8 +1919,8 @@ class StreamingSpec extends TestBase {
     graft.ops.Reuse.freeAll(spark)
     // ... and the cap SWEEP (ext177): the caps ladder and global
     // budget are serve-time knobs over the same stored projection
-    val sweepS = StreamingPipeline.twoLevelCapSweepFromState(
-      spark, state, Seq(800L, 1500L), 4000L)
+    val sweepS = graft.ops.Sampling.twoLevelCapSweepFromCounts(
+      stored, Seq(800L, 1500L), 4000L)
     val sweepB = graft.ops.Sampling.twoLevelCapSweep(scored(docs),
       "lang", col("score_ppm"), Seq(800L, 1500L), 4000L)
     assert(sweepS.except(sweepB).isEmpty &&
@@ -1973,7 +1935,7 @@ class StreamingSpec extends TestBase {
     // serve counts it only in its newest stratum — equal to an
     // INDEPENDENT latest-row arbitration (row_number over a
     // version-desc window)
-    val one = spark.read.parquet(state).drop("batch").limit(1)
+    val one = stored.limit(1)
     val oneRow = one.collect().head
     val newLang = if (oneRow.getString(0) == "en") "de" else "en"
     spark.createDataFrame(
@@ -1982,8 +1944,8 @@ class StreamingSpec extends TestBase {
         oneRow.getLong(3))), one.schema)
       .write.parquet(s"$state/batch=9999")
     val exCross = intercept[IllegalArgumentException] {
-      StreamingPipeline.budgetSelectCardsByStratumFromState(
-        spark, state, "lang", 3000L)
+      graft.ops.Sampling.budgetSelectCardsByStratumFromCounts(
+        stored, "lang", 3000L)
     }
     assert(exCross.getMessage.contains("more than one stratum"),
       s"cross-stratum serve guard drifted: ${exCross.getMessage}")
@@ -1994,9 +1956,9 @@ class StreamingSpec extends TestBase {
       .withColumn("_rn", org.apache.spark.sql.functions.row_number()
         .over(w9))
       .filter(col("_rn") === 1).select("_s", "_id", "_score", "_toks")
-    val keepS = StreamingPipeline
-      .budgetSelectCardsByStratumFromStateKeepLatest(
-        spark, state, "lang", 3000L)
+    def versioned = StreamingPipeline.versions(spark, state)
+    val keepS = graft.ops.Sampling.budgetSelectCardsByStratumFromVersioned(
+      versioned, "lang", 3000L)
     val keepB = graft.ops.Sampling.budgetSelectCardsByStratumFromCounts(
       latestRows, "lang", 3000L)
     assert(keepS.except(keepB).isEmpty && keepB.except(keepS).isEmpty,
@@ -2013,8 +1975,8 @@ class StreamingSpec extends TestBase {
       "cross-stratum re-ingest did not change any stratum's card")
     graft.ops.Reuse.freeAll(spark)
     // keep-latest under the two-level cut, same arbitration law
-    val keep2S = StreamingPipeline.twoLevelBudgetCardFromStateKeepLatest(
-      spark, state, 1500L, 4000L)
+    val keep2S = graft.ops.Sampling.twoLevelBudgetCardFromVersioned(
+      versioned, 1500L, 4000L)
     val keep2B = graft.ops.Sampling.twoLevelBudgetCardFromCounts(
       latestRows, 1500L, 4000L)
     assert(keep2S.except(keep2B).isEmpty &&
@@ -2028,9 +1990,8 @@ class StreamingSpec extends TestBase {
     // path that did not exist for these two callers) — each equals
     // the batch operator over the independent latest-row arbitration,
     // and differs from the pre-reclassification plan (non-vacuous)
-    val keepCurve = StreamingPipeline
-      .budgetFillCurveByStratumFromStateKeepLatest(
-        spark, state, "lang", Seq(800L, 3000L))
+    val keepCurve = graft.ops.Sampling.budgetFillCurveByStratumFromVersioned(
+      versioned, "lang", Seq(800L, 3000L))
     val curveLat = graft.ops.Sampling.budgetFillCurveByStratumFromCounts(
       latestRows, "lang", Seq(800L, 3000L))
     assert(keepCurve.except(curveLat).isEmpty &&
@@ -2040,13 +2001,13 @@ class StreamingSpec extends TestBase {
         s"${curveLat.collect().toSeq})")
     val curvePre = graft.ops.Sampling.budgetFillCurveByStratum(
       scored(docs), "lang", col("score_ppm"), Seq(800L, 3000L))
-    assert(StreamingPipeline.budgetFillCurveByStratumFromStateKeepLatest(
-      spark, state, "lang", Seq(800L, 3000L))
+    assert(graft.ops.Sampling.budgetFillCurveByStratumFromVersioned(
+      versioned, "lang", Seq(800L, 3000L))
       .except(curvePre).count() > 0,
       "cross-stratum re-ingest did not change any curve row")
     graft.ops.Reuse.freeAll(spark)
-    val keepSweep = StreamingPipeline.twoLevelCapSweepFromStateKeepLatest(
-      spark, state, Seq(800L, 1500L), 4000L)
+    val keepSweep = graft.ops.Sampling.twoLevelCapSweepFromVersioned(
+      versioned, Seq(800L, 1500L), 4000L)
     val sweepLat = graft.ops.Sampling.twoLevelCapSweepFromCounts(
       latestRows, Seq(800L, 1500L), 4000L)
     assert(keepSweep.except(sweepLat).isEmpty &&
@@ -2067,8 +2028,8 @@ class StreamingSpec extends TestBase {
       .select(col("batch").cast("long")).distinct()
       .collect().map(_.getLong(0)).sorted
     val (v0, vN) = (batches.head, batches.last)
-    val sinkDiff = StreamingPipeline.corpusDiffFromState(
-      spark, state, v0, vN, "lang")
+    val sinkDiff = graft.ops.Sampling.corpusDiffFromVersioned(
+      versioned, v0, vN, "lang")
     def matSnap(v: Long) = {
       val wv = org.apache.spark.sql.expressions.Window
         .partitionBy("_id").orderBy(col("batch").cast("long").desc)
@@ -2100,8 +2061,8 @@ class StreamingSpec extends TestBase {
     // reclassification batch, the ONLY lineage event is the one
     // moved doc
     val vPrev = batches.filter(_ != vN).max
-    val movedRows = StreamingPipeline.corpusDiffFromState(
-      spark, state, vPrev, vN, "lang").collect()
+    val movedRows = graft.ops.Sampling.corpusDiffFromVersioned(
+      versioned, vPrev, vN, "lang").collect()
     assert(movedRows.map(_.getLong(4)).sum == 1 &&
       movedRows.map(_.getLong(5)).sum == 1 &&
       movedRows.map(_.getLong(1)).sum == 0 &&
@@ -2110,8 +2071,8 @@ class StreamingSpec extends TestBase {
         s"exactly one moved doc: ${movedRows.toSeq}")
     graft.ops.Reuse.freeAll(spark)
     // self-diff law at the newest version: everything unchanged
-    val selfDiff = StreamingPipeline.corpusDiffFromState(
-      spark, state, vN, vN, "lang").collect()
+    val selfDiff = graft.ops.Sampling.corpusDiffFromVersioned(
+      versioned, vN, vN, "lang").collect()
     assert(selfDiff.forall(r => r.getLong(1) == 0 && r.getLong(2) == 0
       && r.getLong(3) == 0 && r.getLong(4) == 0 && r.getLong(5) == 0
       && r.getLong(9) == 0) && selfDiff.map(_.getLong(6)).sum > 0,
@@ -2125,14 +2086,8 @@ class StreamingSpec extends TestBase {
       .select("doc_id", "source", "text")
     val srcDir = Files.createTempDirectory("graft-ovl-src").toString + "/d"
     docs.write.parquet(srcDir)
-    val pairs = Files.createTempDirectory("graft-ovl-state").toString
-    val ckpt = Files.createTempDirectory("graft-ovl-ckpt").toString
-    val q = StreamingPipeline.sourceOverlapSink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), pairs)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val pairs = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.Dedup.keyShinglePairs(_), o))
     val streamed = StreamingPipeline.sourceOverlapFromState(spark, pairs)
     val batch = graft.ops.Dedup.keyOverlap(docs)
     assert(streamed.count() == batch.count() && batch.count() > 0)
@@ -2153,19 +2108,14 @@ class StreamingSpec extends TestBase {
     val cl = graft.ops.Reporting.clusterStats(clusterMap)
     val srcDir = Files.createTempDirectory("graft-card-src").toString + "/d"
     docs.write.parquet(srcDir)
-    val state = Files.createTempDirectory("graft-card-state").toString
-    val ckpt = Files.createTempDirectory("graft-card-ckpt").toString
-    val q = StreamingPipeline.cardPartialsSink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), state)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    val state = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.Reporting.cardPartials(_), o))
     // More than one micro-batch actually ran, or the merge property was
     // never exercised (batch is the partition column of the state dir).
     assert(spark.read.parquet(state).select("batch")
       .distinct().count() > 1)
-    val card = StreamingPipeline.dataCardFromState(spark, state, cl)
+    val card = graft.ops.Reporting.dataCard(
+      StreamingPipeline.partials(spark, state), cl)
     val batchCard = graft.ops.Reporting.dataCard(
       graft.ops.Reporting.cardPartials(docs), cl)
     assert(card.except(batchCard).isEmpty &&
@@ -2534,22 +2484,10 @@ class StreamingSpec extends TestBase {
       .select("doc_id", "text", "source")
     val srcDir = Files.createTempDirectory("graft-span-src").toString + "/d"
     docs.write.parquet(srcDir)
-    def runSink(mk: (org.apache.spark.sql.DataFrame, String)
-        => org.apache.spark.sql.streaming.DataStreamWriter[
-          org.apache.spark.sql.Row]): String = {
-      val out = Files.createTempDirectory("graft-span-out").toString
-      val ckpt = Files.createTempDirectory("graft-span-ckpt").toString
-      val q = mk(StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), out)
-        .option("checkpointLocation", ckpt).start()
-      q.processAllAvailable()
-      q.stop()
-      out
-    }
     // ext91: the per-snapshot shared-hash artifact computed once
     // offline, each micro-batch scored against it (ext69's boundary).
     val shared = graft.ops.Dedup.dupSharedHashes(docs)
-    val spanOut = runSink((s, o) =>
+    val spanOut = runSink(srcDir)((s, o) =>
       StreamingPipeline.dupSpanSink(s, shared, o))
     val spanStreamed = spark.read.parquet(spanOut)
       .select("doc_id", "n_spans", "n_dup_spans", "n_covered_toks",
@@ -2562,7 +2500,7 @@ class StreamingSpec extends TestBase {
     // ext96: surgery against the stored keeper artifact — per-doc cut
     // and reassembly are corpus-independent, same boundary as ext91.
     val keepers = graft.ops.Dedup.dupKeeperSpans(docs)
-    val surgOut = runSink((s, o) =>
+    val surgOut = runSink(srcDir)((s, o) =>
       StreamingPipeline.dupSpanSurgerySink(s, keepers, o))
     val surgStreamed = spark.read.parquet(surgOut)
       .select("doc_id", "n_toks", "n_toks_cut", "clean_text")
@@ -2572,17 +2510,19 @@ class StreamingSpec extends TestBase {
       surgBatch.except(surgStreamed).isEmpty,
       "streamed span surgery differs from the batch operator")
     // ext92: the card is its own algebraic partial; the fold sums.
-    val piiOut = runSink((s, o) =>
-      StreamingPipeline.piiPartialsSink(s, Seq("source"), o))
-    val piiStreamed = StreamingPipeline.piiAuditFromState(spark, piiOut)
+    val piiOut = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.TextOps.piiAudit(_, Seq("source")), o))
+    val piiStreamed = graft.ops.TextOps.piiAuditFromCounts(
+      StreamingPipeline.partials(spark, piiOut))
     val piiBatch = graft.ops.TextOps.piiAudit(docs, Seq("source"))
     assert(piiStreamed.except(piiBatch).isEmpty &&
       piiBatch.except(piiStreamed).isEmpty && piiBatch.count() > 0,
       "streamed pii fold differs from the batch card")
     // ext98: the counter table is its own partial; cell-wise merge.
-    val cmsOut = runSink((s, o) =>
-      StreamingPipeline.countMinPartialsSink(s, o))
-    val cmsStreamed = StreamingPipeline.countMinFromState(spark, cmsOut)
+    val cmsOut = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.Sketches.countMinCounters(_), o))
+    val cmsStreamed = graft.ops.Sketches.countMinMerge(
+      StreamingPipeline.partials(spark, cmsOut))
     val cmsBatch = graft.ops.Sketches.countMinCounters(docs)
     assert(cmsStreamed.except(cmsBatch).isEmpty &&
       cmsBatch.except(cmsStreamed).isEmpty && cmsBatch.count() > 0,
@@ -2595,15 +2535,10 @@ class StreamingSpec extends TestBase {
       .select("event_id", "props")
     val srcDir = Files.createTempDirectory("graft-json-src").toString + "/d"
     ev.write.parquet(srcDir)
-    val out = Files.createTempDirectory("graft-json-out").toString
-    val ckpt = Files.createTempDirectory("graft-json-ckpt").toString
-    val q = StreamingPipeline.jsonProfilePartialsSink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), col("props"), out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = StreamingPipeline.jsonProfileFromState(spark, out)
+    val out = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.Reporting.jsonKeyProfile(_, col("props")), o))
+    val streamed = graft.ops.Reporting.jsonKeyProfileFromCounts(
+      StreamingPipeline.partials(spark, out))
     val batch = graft.ops.Reporting.jsonKeyProfile(ev, col("props"))
     assert(streamed.except(batch).isEmpty &&
       batch.except(streamed).isEmpty && batch.count() > 0,
@@ -2617,15 +2552,10 @@ class StreamingSpec extends TestBase {
       .select("vec_id", "embedding", "label")
     val srcDir = Files.createTempDirectory("graft-norm-src").toString + "/d"
     emb.write.parquet(srcDir)
-    val out = Files.createTempDirectory("graft-norm-out").toString
-    val ckpt = Files.createTempDirectory("graft-norm-ckpt").toString
-    val q = StreamingPipeline.normAuditPartialsSink(
-      StreamingPipeline.parquetStream(spark, srcDir,
-        maxFilesPerTrigger = Some(1)), out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = StreamingPipeline.normAuditFromState(spark, out)
+    val out = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.Similarity.normAuditPartials(_), o))
+    val streamed = graft.ops.Similarity.normAuditFromCounts(
+      StreamingPipeline.partials(spark, out))
     val batch = graft.ops.Similarity.normAudit(emb)
     assert(streamed.count() == batch.count() && batch.count() > 0)
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty,
@@ -2647,15 +2577,10 @@ class StreamingSpec extends TestBase {
       ev.withColumn("part", pmod(col("event_id"), lit(4)))
         .repartition(4, col("part")).drop("part")
         .write.parquet(srcDir)
-      val out = Files.createTempDirectory("graft-trend-out").toString
-      val ckpt = Files.createTempDirectory("graft-trend-ckpt").toString
-      val q = StreamingPipeline.trendingPartialsSink(
-        StreamingPipeline.parquetStream(spark, srcDir,
-          maxFilesPerTrigger = Some(filesPerTrigger)),
-        col("event_type"), col("user_id"), col("ts"), 86400000000L, out)
-        .option("checkpointLocation", ckpt).start()
-      q.processAllAvailable()
-      q.stop()
+      val out = runSink(srcDir, filesPerTrigger)((s, o) =>
+        StreamingPipeline.partialsSink(s, graft.ops.Decay.alignedHistogram(
+          _, Seq(col("event_type"), col("user_id")), col("ts"),
+          86400000000L), o))
       val streamed = StreamingPipeline.trendingFromState(spark, out, 10)
       assert(streamed.count() == batch.count() && batch.count() > 0)
       assert(streamed.except(batch).isEmpty &&
