@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Dev harness (not graded): the SHUFFLE-BUDGET gate. Every registry
  * query's physical plan is summarized as (shuffle exchanges, broadcast
@@ -14,11 +12,11 @@ import org.apache.spark.sql.SparkSession
  *   SPARK_GRAFT_PLAN_MODE=record \
  *     sbt "runMain graft.PlanBudget"        # (re)write the budget file
  *
- * Perf floors (PerfLab) catch *time* drift but inherit machine noise;
- * this catches *plan* drift exactly — a broadcast degrading to a
- * sort-merge join, a lost map-side combine, or an accidental
- * repartition shows up as a shuffle-count increase long before it costs
- * seconds at bench SF. Broadcast counts are recorded for context but
+ * Perf floors (PerfLab's floor gate, tools/floor_check.py) catch
+ * *time* drift but inherit machine noise; this catches *plan* drift
+ * exactly — a broadcast degrading to a sort-merge join, a lost
+ * map-side combine, or an accidental repartition shows up as a
+ * shuffle-count increase long before it costs seconds at bench SF. Broadcast counts are recorded for context but
  * not gated (an extra broadcast is usually the FIX for a shuffle).
  * Queries that read build-once artifacts ([[graft.ops.Reuse.index]])
  * are budgeted on their post-artifact plan — the artifact build's own
@@ -38,46 +36,31 @@ object PlanBudget {
     val mode = sys.env.getOrElse("SPARK_GRAFT_PLAN_MODE", "gate")
     val path = sys.env.getOrElse("SPARK_GRAFT_PLAN_BUDGETS",
       "tools/plan_budgets.json")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = QueryRun.session("8")
     def countOf(plan: String, marker: String): Int =
       marker.r.findAllMatchIn(plan).size
-    val counts = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
+    val counts = QueryRun.each(spark, sfDir, QueryRun.select(Nil)) {
+      (_, q) =>
         // ReusedExchange lines repeat the referenced exchange's
         // description — drop them so only real operators count.
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+        val plan = q().queryExecution.executedPlan.toString
           .linesIterator.filterNot(_.contains("ReusedExchange"))
           .mkString("\n")
-        val s = ShuffleMarkers.map(m => countOf(plan, m)).sum
-        val b = countOf(plan, "BroadcastExchange")
-        spark.catalog.clearCache()
-        graft.ops.Reuse.freeAll(spark)
-        name -> (s, b)
+        (ShuffleMarkers.map(m => countOf(plan, m)).sum,
+          countOf(plan, "BroadcastExchange"))
     }
+    spark.stop()
     mode match {
       case "record" =>
-        val body = counts
-          .map { case (n, (s, b)) => s"""  "$n": [$s, $b]""" }
-          .mkString("{\n", ",\n", "\n}")
-        val w = new java.io.PrintWriter(path)
-        try w.println(body) finally w.close()
+        QueryRun.writeFlat(path,
+          counts.map { case (n, (s, b)) => n -> s"[$s, $b]" }, "  ")
         println(s"PLANBUDGET recorded ${counts.size} queries to $path")
       case _ =>
-        val src = scala.io.Source.fromFile(path)
-        val recorded = try {
-          "\"([^\"]+)\"\\s*:\\s*\\[(\\d+),\\s*(\\d+)\\]".r
-            .findAllMatchIn(src.mkString)
-            .map(m => m.group(1) -> (m.group(2).toInt, m.group(3).toInt))
-            .toMap
-        } finally src.close()
-        val breaches = counts.flatMap { case (n, (s, b)) =>
+        val recorded = QueryRun.readFlat(path).map { case (n, v) =>
+          n -> "\\d+".r.findFirstIn(v).get.toInt }
+        val breaches = counts.flatMap { case (n, (s, _)) =>
           recorded.get(n) match {
-            case Some((rs, _)) if s > rs =>
+            case Some(rs) if s > rs =>
               Some(s"$n: $s shuffle exchanges > budget $rs")
             case None => Some(s"$n: NOT IN BUDGET FILE (record it)")
             case _ => None
@@ -86,9 +69,7 @@ object PlanBudget {
         breaches.foreach(x => println(s"PLANBUDGET BREACH $x"))
         println(s"PLANBUDGET gate: ${counts.size} queries checked, " +
           s"${breaches.size} breaches")
-        spark.stop()
         if (breaches.nonEmpty) sys.exit(2)
     }
-    spark.stop()
   }
 }

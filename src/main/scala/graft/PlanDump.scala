@@ -1,69 +1,52 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Scratch diagnostic (not part of the library surface): dump the
-  * raw executedPlan strings of named registry queries so two JVM
-  * sessions can be diffed to find session-varying plan tokens. */
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Dev harness (not graded): dump the plans of the registry queries
+  * whose names start with one of `namePrefixes` (all when none), so two
+  * JVM sessions or two commits compare with `diff -r`. Per query:
+  *  - `<name>.txt`: the composite text the changed-mode Bench hashes
+  *    ([[QueryRun.fingerprint]], the same step and stored baseline)
+  *  - `<name>.norm.txt`: that text after [[PlanFingerprint.normalize]],
+  *    what the hash sees — a diff localizes a flip to its exact token
+  *  - `<name>.formatted.txt`: `explain("formatted")` of the executed
+  *    plan after `collect()`, with AQE's final choices (the rendering
+  *    `plans/r18` and `plans/r19` archive)
+  * plus one `fingerprints.json` in Bench's format; copying it over
+  * `tools/bench_fingerprints.json` seeds the changed-mode baseline.
+  *
+  *   SPARK_GRAFT_PLANDUMP_WARM=1 SPARK_GRAFT_CPUS=32 sbt \
+  *     "runMain graft.PlanDump <sfDir> <outDir> [namePrefixes...]"
+  *
+  * `SPARK_GRAFT_PLANDUMP_WARM=1` replays Bench's warm-up first, so the
+  * hashes are the ones a changed-mode Bench records. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("/tmp/plandump")
-    val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_PLANDUMP_WARM=1 reproduces Bench's exact pre-
-    // fingerprint state (the sf0.001 warmup pass + bucketed-layout
-    // seeding) so a two-JVM diff sees the same plans the changed-mode
-    // fingerprints hash.
-    if (sys.env.get("SPARK_GRAFT_PLANDUMP_WARM").contains("1")) {
-      try {
-        val warmDir = {
-          val w = sfDir.replaceAll("sf[0-9.]+/*$", "sf0.001")
-          if (new java.io.File(w).isDirectory) w else sfDir
-        }
-        if (warmDir != sfDir)
-          SparkEntry.queries.values.foreach { fn =>
-            try { fn(spark, warmDir).count() }
-            catch { case _: Throwable => () }
-            graft.ops.Reuse.freeAll(spark)
-          }
-        graft.ingest.Tables.events(spark, sfDir)
-          .groupBy("event_type").count().count()
-        spark.read.parquet(s"$sfDir/documents.parquet").count()
-        spark.read.parquet(s"$sfDir/embeddings.parquet").count()
-        ExtEntry.ensureBucketed(spark, sfDir)
-        spark.catalog.clearCache()
-      } catch { case _: Throwable => () }
-    }
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    // Mirror Bench's fingerprint pass exactly: pre-checkpoint
-    // Reuse lineage is part of the fingerprint text (r18 — see
-    // Bench's changed-mode comment), so the dump carries the same
-    // composite main-plan + sub-plan text the bench hashes.
-    spark.conf.set("graft.reuse.planlog", "1")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => names.isEmpty || names.contains(n) }
-      .foreach { case (name, fn) =>
-        val s =
-          try {
-            graft.ops.Reuse.drainPlans(spark)
-            val main =
-              fn(spark, sfDir).queryExecution.executedPlan.toString
-            val subs = graft.ops.Reuse.drainPlans(spark)
-            (main +: subs).mkString("\n=== reuse ===\n")
-          }
+    val spark = QueryRun.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    if (sys.env.get("SPARK_GRAFT_PLANDUMP_WARM").contains("1"))
+      QueryRun.warm(spark, sfDir)
+    Files.createDirectories(Paths.get(out))
+    def write(file: String, s: String): Unit =
+      Files.writeString(Paths.get(out, file), s)
+    val stored = QueryRun.storedFingerprints()
+    val fps = QueryRun.each(spark, sfDir, QueryRun.select(args.drop(2))) {
+      (name, q) =>
+        val p = QueryRun.fingerprint(spark, q, stored.get(name))
+        write(s"$name.txt", p.text)
+        write(s"$name.norm.txt", PlanFingerprint.normalize(p.text))
+        // collect() THIS Dataset (count() would plan a separate
+        // aggregate) so AQE finalizes and shows its runtime choices.
+        write(s"$name.formatted.txt", p.df.fold(p.text) { df =>
+          try { df.collect(); df.queryExecution.explainString(FormattedMode) }
           catch { case t: Throwable => s"ERR: $t" }
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(out, s"$name.txt"),
-          s.getBytes("UTF-8"))
-        spark.catalog.clearCache()
-        graft.ops.Reuse.freeAll(spark)
-      }
+        })
+        "\"" + p.hash + "\""
+    }
+    QueryRun.writeFlat(s"$out/fingerprints.json", fps)
     spark.stop()
   }
 }

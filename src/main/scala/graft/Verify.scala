@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,30 +6,21 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // Driver contract is exactly (sfDir, outDir); a third arg is the
     // builder's local single-query filter (comma-separated name prefixes).
-    val (sfDir, outDir, only) = args match {
-      case Array(sf, out) => (sf, out, Nil)
-      case Array(sf, out, o) => (sf, out, o.split(",").toSeq)
+    if (args.length < 2 || args.length > 3) {
+      System.err.println(
+        "usage: graft.Verify <sfDir> <outDir> [namePrefixes]")
+      sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir) = args.take(2)
+    val spark = QueryRun.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) =>
-        only.isEmpty || only.exists(name.startsWith) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      spark.catalog.clearCache()
-      graft.ops.Reuse.freeAll(spark)
+    QueryRun.each(spark, sfDir,
+        QueryRun.select(args.drop(2).flatMap(_.split(",")).toSeq)) {
+      (name, q) =>
+        try q().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

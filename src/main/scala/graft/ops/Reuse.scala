@@ -116,8 +116,8 @@ object Reuse {
     * snapshot construction sits above the diff projections'
     * checkpoints). When enabled, the pre-checkpoint child's executed
     * plan is recorded here and [[drainPlans]] returns-and-clears the
-    * session's log so Bench/PlanDump can fold it into each query's
-    * fingerprint text. [[pin]] is NOT logged: its argument is
+    * session's log so [[graft.QueryRun.planText]] can fold it into each
+    * query's fingerprint text. [[pin]] is NOT logged: its argument is
     * already checkpointed by the caller (iterative ops), so there is
     * no pre-cut lineage left to capture at pin time. */
   private val ReusePlanLogKey = "graft.reuse.planlog"
@@ -283,8 +283,9 @@ object Reuse {
    * Free every materialization [[shared]]/[[pin]] produced on this
    * session since the last call: unpersists cached frames AND removes
    * localCheckpoint RDD blocks (which `spark.catalog.clearCache()` does
-   * not touch). Harnesses (Bench/Verify/PerfLab) call this after each
-   * query so one query's blocks never degrade the next.
+   * not touch). The registry harnesses call this after each query
+   * ([[graft.QueryRun.each]]) so one query's blocks never degrade the
+   * next.
    *
    * CONTRACT: call only BETWEEN queries. Checkpointed frames have no
    * lineage, so results produced since the last freeAll become

@@ -1876,7 +1876,8 @@ object Sampling {
     * the partials relation, so fewer-but-wider rounds win at every
     * scale: the per-row cost of F−1 conditional sums is trivially
     * codegen'd while the pass count falls as 1/log₂F. r18 measured
-    * (JobProfile, sf0.1 local[32]): fanout 8 → 32 cut the family's
+    * (sf0.1 local[32]; PerfLab's profile prints these job counts):
+    * fanout 8 → 32 cut the family's
     * sequential job counts ~40% (ext177 86 → ~52 jobs) with the
     * identical converged result (64 after the ProbeScan rewrite made probe cost flat) — the searches are exact for ANY
     * fanout ≥ 2, the ladder only changes how fast brackets narrow.

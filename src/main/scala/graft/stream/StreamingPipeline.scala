@@ -1827,6 +1827,17 @@ object AggregateStore {
     * consistent instead of rejecting a mixed layout. */
   val CompactedBatchId: Long = -1L
 
+  /** Spec-only probe seam (the GifFrameDecoder.decodeProbe discipline):
+    * invoked at the swap's two in-between states — "aside" (live dir
+    * renamed to `_precompact`, nothing at the store path yet) and
+    * "promoted" (compacted dir in place, `_precompact` not yet
+    * deleted) — and at the reader's "listed" state ([[read]] has
+    * chosen the part file whose footer gives the schema, and not yet
+    * read it), so the reader-vs-compaction consistency contract is
+    * testable DETERMINISTICALLY instead of by racing threads.
+    * Production pays one volatile read per state. */
+  @volatile var compactProbe: Option[String => Unit] = None
+
   /** Compact a store path: streaming writes produce one `batch=<id>` dir
     * with small files per micro-batch; OFFLINE compaction (stream stopped)
     * folds all batches into a single `batch=-1` partition and rewrites
@@ -1849,17 +1860,6 @@ object AggregateStore {
     * copy+delete); on an object store use a manifest-based table format
     * instead. The filesystem is resolved FROM the store path, so a
     * qualified non-default path (hdfs://other-cluster/...) works. */
-  /** Spec-only probe seam (the GifFrameDecoder.decodeProbe discipline):
-    * invoked at the swap's two in-between states — "aside" (live dir
-    * renamed to `_precompact`, nothing at the store path yet) and
-    * "promoted" (compacted dir in place, `_precompact` not yet
-    * deleted) — and at the reader's "listed" state ([[read]] has
-    * chosen the part file whose footer gives the schema, and not yet
-    * read it), so the reader-vs-compaction consistency contract is
-    * testable DETERMINISTICALLY instead of by racing threads.
-    * Production pays one volatile read per state. */
-  @volatile var compactProbe: Option[String => Unit] = None
-
   def compact(spark: SparkSession, path: String,
       filesPerPartition: Int = 1): Unit = {
     val base = path.stripSuffix("/")

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /**
  * Direction probes for the changed-only bench's plan canonicalizer
  * ([[PlanFingerprint]], extracted from Bench.main in r18 so these
- * probes are a spec, not ad-hoc two-JVM scripts — the two-JVM
- * PlanDump diff remains the end-to-end session-variance check).
+ * probes are a spec, not ad-hoc two-JVM scripts — `diff -r` of two
+ * PlanDump dumps from separate JVMs remains the end-to-end
+ * session-variance check).
  *
  * SAFE direction = session-varying noise (exprIds, codegen stage
  * ids, gid values, distinct-group order) must hash EQUAL, or
@@ -114,6 +115,26 @@ class PlanFingerprintSpec extends AnyFunSuite {
       "[lang#2, gid#3, lit#4, c#5L]"
     val b = "+- Expand [[null, 0, 6, c#1L]], " +
       "[lang#2, gid#3, lit#4, c#5L]"
+    assert(fp(a) != fp(b))
+  }
+
+  test("safe: the JVM-wide lambda-variable counter and the bucketed " +
+      "layout's path-derived table names are session noise") {
+    val a = "transform(ids#1, lambdafunction(struct(id_a, lambda x_51#7L, " +
+      "id_b, lambda x_53#9L), lambda x_51#7L, false)) " +
+      "FileScan parquet spark_catalog.default.graft_li_b__root_a_sf0_1[k#2]"
+    val b = "transform(ids#4, lambdafunction(struct(id_a, lambda x_63#3L, " +
+      "id_b, lambda x_65#5L), lambda x_63#3L, false)) " +
+      "FileScan parquet spark_catalog.default.graft_li_b__root_b_sf0_1[k#6]"
+    assert(fp(a) == fp(b))
+  }
+
+  test("unsafe: which lambda variable is used where still changes the " +
+      "hash (renumbered by first appearance, not erased)") {
+    val a = "lambdafunction(struct(id_a, lambda x_51#7L, id_b, " +
+      "lambda x_53#9L), lambda x_51#7L, false)"
+    val b = "lambdafunction(struct(id_a, lambda x_51#7L, id_b, " +
+      "lambda x_51#7L), lambda x_53#9L, false)"
     assert(fp(a) != fp(b))
   }
 }
