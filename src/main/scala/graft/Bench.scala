@@ -1,6 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
 object Bench {
+  /** Changed-mode's recorded fingerprints, under the working dir. */
+  val FingerprintFile = "tools/bench_fingerprints.json"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Iteration mode (r12 verdict item 8): the registry is 170+ queries
@@ -36,11 +39,14 @@ object Bench {
     // fingerprints file is only REWRITTEN after the timed passes
     // complete, so an interrupted run never marks its queries as
     // already-benched.)
-    val stored = QueryRun.storedFingerprints()
+    val stored =
+      if (Files.isRegularFile(Paths.get(FingerprintFile)))
+        QueryRun.readFlat(FingerprintFile)
+      else Map.empty[String, String]
     val currentFps =
       if (!changedMode) Nil
-      else QueryRun.each(spark, sfDir, QueryRun.select(Nil)) { (name, q) =>
-        QueryRun.fingerprint(spark, q, stored.get(name)).hash
+      else QueryRun.each(spark, sfDir, QueryRun.select(Nil)) { (_, q) =>
+        QueryRun.fingerprint(spark, q).hash
       }
     val changedFilter: Option[Set[String]] =
       if (!changedMode) None
@@ -122,8 +128,8 @@ object Bench {
     // in place and its queries are re-benched next time, never
     // silently skipped as already-recorded.
     if (currentFps.nonEmpty)
-      QueryRun.loudly(s"[bench] writing ${QueryRun.FingerprintFile}")(
-        QueryRun.writeFlat(QueryRun.FingerprintFile,
+      QueryRun.loudly(s"[bench] writing $FingerprintFile")(
+        QueryRun.writeFlat(FingerprintFile,
           currentFps.map { case (k, v) => k -> ("\"" + v + "\"") }))
     // What the session has accumulated in build-once artifacts
     // (Reuse.index) across both passes — measured from the block

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.FormattedMode
   * whose names start with one of `namePrefixes` (all when none), so two
   * JVM sessions or two commits compare with `diff -r`. Per query:
   *  - `<name>.txt`: the composite text the changed-mode Bench hashes
-  *    ([[QueryRun.fingerprint]], the same step and stored baseline)
+  *    ([[QueryRun.fingerprint]], the same step)
   *  - `<name>.norm.txt`: that text after [[PlanFingerprint.normalize]],
   *    what the hash sees — a diff localizes a flip to its exact token
   *  - `<name>.formatted.txt`: `explain("formatted")` of the executed
@@ -32,10 +32,9 @@ object PlanDump {
     Files.createDirectories(Paths.get(out))
     def write(file: String, s: String): Unit =
       Files.writeString(Paths.get(out, file), s)
-    val stored = QueryRun.storedFingerprints()
     val fps = QueryRun.each(spark, sfDir, QueryRun.select(args.drop(2))) {
       (name, q) =>
-        val p = QueryRun.fingerprint(spark, q, stored.get(name))
+        val p = QueryRun.fingerprint(spark, q)
         write(s"$name.txt", p.text)
         write(s"$name.norm.txt", PlanFingerprint.normalize(p.text))
         // collect() THIS Dataset (count() would plan a separate

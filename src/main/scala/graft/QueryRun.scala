@@ -95,41 +95,15 @@ object QueryRun {
   def hash(text: String): String =
     PlanFingerprint.md5hex(PlanFingerprint.normalize(text))
 
-  /** One construction: its frame (None if it threw), text and hash. */
   final case class Planned(df: Option[DataFrame], text: String, hash: String)
 
-  /** The fingerprint to compare with `stored`. A hash that differs is
-    * taken once more, with the artifacts the first construction built on
-    * disk (bucketed layout, seeded stores) present, and that one is
-    * compared and recorded: only mismatching queries pay for it. The
-    * Reuse.index artifacts the first construction built are dropped
-    * first, so the retry rebuilds them and their build plans stay in the
-    * hash; recording the post-index text would let a later edit to an
-    * index build hash unchanged (the unsafe direction). A failed
-    * construction hashes as `ERR-<nanos>` (always changed). */
-  def fingerprint(spark: SparkSession, build: Build, stored: Option[String])
-      : Planned = {
-    def indexes() = Reuse.indexFootprint(spark).map(_._1).toSet
-    def once() =
-      try { val (df, t) = planText(spark, build); Planned(Some(df), t, hash(t)) }
-      catch { case t: Throwable =>
-        Planned(None, s"ERR: $t", s"ERR-${System.nanoTime()}") }
-    val before = indexes()
-    val first = once()
-    if (stored.contains(first.hash)) first
-    else {
-      spark.catalog.clearCache()
-      Reuse.freeAll(spark)
-      (indexes() -- before).foreach(Reuse.dropIndex(spark, _))
-      once()
-    }
-  }
-
-  /** Changed-mode Bench's recorded fingerprints, under the working dir. */
-  val FingerprintFile = "tools/bench_fingerprints.json"
-  def storedFingerprints(): Map[String, String] =
-    if (new java.io.File(FingerprintFile).isFile) readFlat(FingerprintFile)
-    else Map.empty
+  /** One construction's fingerprint: its frame (None if it threw), its
+    * [[planText]] and that text's hash. A failed construction hashes as
+    * `ERR-<nanos>` (always changed). */
+  def fingerprint(spark: SparkSession, build: Build): Planned =
+    try { val (df, t) = planText(spark, build); Planned(Some(df), t, hash(t)) }
+    catch { case t: Throwable =>
+      Planned(None, s"ERR: $t", s"ERR-${System.nanoTime()}") }
 
   /** A flat `{"name": value}` file: each value is a JSON string's
     * contents, else the value's JSON text (`1.25`, `[3, 0]`). */

@@ -8,7 +8,7 @@ import graft.ops.Reuse
 
 /** The registry harness's shared pieces: the reader and writer of the
   * flat JSON maps under `tools/`, the name-prefix filter, and the
-  * plan-fingerprint retry. */
+  * plan-fingerprint step. */
 class QueryRunSpec extends TestBase {
 
   private def read(path: String) = Files.readString(Paths.get(path))
@@ -68,44 +68,30 @@ class QueryRunSpec extends TestBase {
       all.filter(n => n == "op38_store_payload" || n.startsWith("ext02")))
   }
 
-  test("fingerprint: a mismatching hash is taken once more with the " +
-      "on-disk artifact present; the Reuse.index build plan stays hashed") {
+  test("fingerprint: one construction; the Reuse.index build plan is " +
+      "hashed; a failed construction always reads as changed") {
     val key = s"queryrun-spec-${System.nanoTime()}"
-    val store = Files.createTempDirectory("graft-queryrun").resolve("a")
     var builds = 0
-    // Like a seeded store: the first construction writes the artifact
-    // and plans over what it just built; later ones read the artifact.
     val stub: QueryRun.Build = () => {
       builds += 1
-      val idx = Reuse.index(spark, key) {
+      Reuse.index(spark, key) {
         spark.range(200).groupBy((col("id") % 7).as("k")).count()
       }
-      if (Files.exists(store)) spark.read.parquet(store.toString)
-      else { idx.write.parquet(store.toString); idx }
     }
     try {
-      val cold = QueryRun.planText(spark, stub)._2
-      Reuse.dropIndex(spark, key)
-      // A warm run of a new JVM: the store exists, the index does not.
-      val warm = QueryRun.planText(spark, stub)._2
-      assert(cold.contains("=== reuse ===") && warm.contains("=== reuse ==="))
-      assert(QueryRun.hash(cold) != QueryRun.hash(warm))
-      org.apache.commons.io.FileUtils.deleteDirectory(store.toFile)
-      Reuse.dropIndex(spark, key)
-      builds = 0
-      // Cold: the first construction mismatches the recorded warm hash,
-      // the retry (index rebuilt, store present) matches it.
-      val first = QueryRun.fingerprint(spark, stub, Some(QueryRun.hash(warm)))
-      assert(builds == 2, "a mismatch must re-construct once")
-      assert(first.hash == QueryRun.hash(warm))
-      assert(first.text.contains("=== reuse ==="), "index build plan kept")
+      val first = QueryRun.fingerprint(spark, stub)
+      assert(builds == 1)
       assert(first.df.isDefined)
-      // Warm: a match costs one construction.
+      assert(first.text.contains("=== reuse ==="), "index build plan kept")
+      assert(first.hash == QueryRun.hash(first.text))
+      // A new JVM builds the index again: the same hash.
       Reuse.dropIndex(spark, key)
-      val again = QueryRun.fingerprint(spark, stub, Some(first.hash))
-      assert(builds == 3)
-      assert(again.hash == first.hash)
+      assert(QueryRun.fingerprint(spark, stub).hash == first.hash)
+      assert(builds == 2)
     } finally Reuse.dropIndex(spark, key)
+    val failed = QueryRun.fingerprint(spark, () => sys.error("boom"))
+    assert(failed.df.isEmpty && failed.hash.startsWith("ERR-"))
+    assert(failed.text.contains("boom"))
     assert(spark.conf.get("graft.reuse.planlog") == "0")
   }
 }
