@@ -6,16 +6,11 @@ import org.apache.spark.graftbridge.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /**
- * Dev harness: times a subset of SparkEntry.queries under a chosen
- * [[graft.ops.Reuse]] strategy and arbitrary session confs / JVM props.
- * Not part of the graded surface.
+ * Dev harness: times a subset of SparkEntry.queries, optionally under
+ * extra session confs. Not part of the graded surface.
  *
- *   SPARK_GRAFT_REUSE=eager_persist|checkpoint|recompute \
- *   SPARK_GRAFT_CONFS="graft.fanout=off;graft.qdot=composed" \
+ *   SPARK_GRAFT_CONFS="spark.sql.adaptive.enabled=false" \
  *   SPARK_GRAFT_ONLY=ext02,ext03 sbt "runMain graft.PerfLab"
- *
- * Keys starting with `graft.` that name JVM-prop knobs (graft.qdot) are
- * set as system properties; everything is also set as a session conf.
  *
  * PROFILE: after the timed rounds it prints each query's jobs, stages,
  * tasks, task CPU seconds and shuffle read+write MB from the last round
@@ -63,16 +58,13 @@ object PerfLab {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val strategy = sys.env.getOrElse("SPARK_GRAFT_REUSE", "checkpoint")
     val confs = sys.env.getOrElse("SPARK_GRAFT_CONFS", "").split(";")
       .filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
       }.toSeq
     val only = sys.env.getOrElse("SPARK_GRAFT_ONLY",
       "ext02,ext03,ext04,ext14,ext15,ext16").split(",").toSeq
-    confs.foreach { case (k, v) => sys.props(k) = v }
-    val spark = QueryRun.session(cpus,
-      (graft.ops.Reuse.ConfKey -> strategy) +: confs)
+    val spark = QueryRun.session(cpus, confs)
     spark.read.parquet(s"$sfDir/documents.parquet").count()
     spark.read.parquet(s"$sfDir/embeddings.parquet").count()
     val picked = QueryRun.select(only)
@@ -109,7 +101,7 @@ object PerfLab {
           steady(name) = math.min(steady.getOrElse(name, Double.MaxValue), dt)
         f"$name%s=$dt%.2f"
       }.map(_._2)
-      println(s"PERFLAB strategy=$strategy confs=${confs.mkString(",")} round=$round " + times.mkString(" "))
+      println(s"PERFLAB confs=${confs.mkString(",")} round=$round " + times.mkString(" "))
     }
     println(f"PERFLAB profile ${"query"}%-32s ${"jobs"}%5s ${"stages"}%6s " +
       f"${"tasks"}%6s ${"task_cpu_s"}%10s ${"shuffle_mb"}%10s")

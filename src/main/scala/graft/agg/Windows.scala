@@ -92,7 +92,9 @@ object Windows {
    * `weight` is summed as DECIMAL(18,6) and returned as double: decimal
    * addition is exact and order-independent, so Spark and any other
    * engine (the DuckDB oracle, a different cluster layout) agree
-   * bit-for-bit — float sums would drift with partitioning.
+   * bit-for-bit — float sums would drift with partitioning. `extra`
+   * aggregates need not compose across slices, so only their absence
+   * takes the slice-rollup form ([[entityWindowAggSliced]]).
    */
   def entityWindowAgg(
       events: DataFrame,
@@ -102,8 +104,7 @@ object Windows {
       extra: Seq[Column] = Nil,
       windowSize: String = WindowSize,
       hopSize: String = HopSize): DataFrame =
-    if (extra.isEmpty &&
-        events.sparkSession.conf.get("graft.hopagg", "sliced") == "sliced")
+    if (extra.isEmpty)
       entityWindowAggSliced(events, entity, weight, ts, windowSize, hopSize)
     else
       events.groupBy(window(col(ts), windowSize, hopSize), entity.as("entity"))

@@ -44,6 +44,36 @@ object SqlBridge {
       case _ => None
     }
 
+  /** Checkpoint `df` hash-partitioned by `key` (via `checkpoint`) and
+    * declare that partitioning on the checkpoint, so a later join on
+    * `key` reads it in place. Under AQE a checkpoint reads back as
+    * `UnknownPartitioning(0)`, and the planner re-shuffles the scan. An
+    * explicit-count repartition is never coalesced, so the rows sit in
+    * exactly `n` Spark-hash partitions; the declaration is made only
+    * when the partition count confirms it (a wrong one would mis-join).
+    * `n` is the count the planner gives the other side of a join. */
+  def hashPartitionedCheckpoint(df: org.apache.spark.sql.DataFrame,
+      key: String)(checkpoint: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val spark =
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val n = spark.sessionState.conf.defaultNumShufflePartitions
+    val cp = checkpoint(df.repartition(n, df.col(key)))
+    cp.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD
+          if l.rdd.getNumPartitions == n =>
+        val keyAttr = l.output.filter(_.name == key)
+        val pinned = org.apache.spark.sql.execution.LogicalRDD(
+          l.output, l.rdd,
+          org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
+            keyAttr, n),
+          l.outputOrdering, l.isStreaming, l.stream)(
+          spark, Some(l.computeStats()), Some(l.constraints))
+        org.apache.spark.sql.classic.Dataset.ofRows(spark, pinned)
+      case _ => cp
+    }
+  }
+
   /** sizeInBytes above which a checkpoint's inherited stats carry no
     * planning information: every broadcast/shuffle threshold is far
     * below it, so clamping here never changes a plan decision. */

@@ -41,7 +41,6 @@ object Tables {
    * wide.
    */
   private def fanOut(df: DataFrame): DataFrame = {
-    if (df.sparkSession.conf.get("graft.fanout", "on") == "off") return df
     val want = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < want) df.repartition(want) else df
   }

@@ -21,29 +21,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * accumulates executor-local blocks until the ContextCleaner happens to
  * run, and later queries pay the memory pressure. The fix is a lifecycle:
  * every materialization is registered here and the harness frees it
- * after the query ([[freeAll]]).
- *
- * Strategy is a session conf (`graft.reuse`):
- *  - `checkpoint` (default): `localCheckpoint(eager = true)` — cuts
- *    lineage so consumers plan against a materialized leaf. With the
- *    [[freeAll]] lifecycle this is both the fastest AND stable across
- *    rounds (PerfLab r3: ext02 2.4-2.9 s, ext03 1.5-2.1 s vs recompute's
- *    3.9-4.5/2.5-2.7 s). Storage is executor-local and NOT fault-tolerant
- *    to executor loss (acceptable: cheap to rebuild by re-running the
- *    query); blocks are freed only via [[freeAll]] (clearCache does not
- *    see them).
- *  - `eager_persist`: `persist(MEMORY_AND_DISK)` + a blocking `count()` —
- *    same race-free eager build, keeps lineage (survives executor loss by
- *    recompute), ~20-50% slower because each consumer re-plans the full
- *    subtree below the InMemoryRelation. Freed by [[freeAll]] or
- *    `spark.catalog.clearCache()`.
- *  - `recompute`: build the plan tree as-is. At 100 TB with a shared
- *    input too big to cache, write it to parquet once and re-read instead
- *    (see stream.AggregateStore for the pattern).
+ * after the query ([[freeAll]]). With that lifecycle the eager
+ * `localCheckpoint` beat both alternatives measured then: an eager
+ * `persist(MEMORY_AND_DISK)` + `count()` was ~20-50% slower (each
+ * consumer re-plans the full subtree below the InMemoryRelation), and
+ * recomputing the shared plan per consumer cost ext02 3.9-4.5 s and
+ * ext03 2.5-2.7 s against the checkpoint's 2.4-2.9/1.5-2.1 s. The
+ * checkpoint cuts lineage so consumers plan against a materialized leaf;
+ * its storage is executor-local and NOT fault-tolerant to executor loss
+ * (acceptable: cheap to rebuild by re-running the query).
  */
 object Reuse {
-  val ConfKey = "graft.reuse"
-
   /**
    * What [[freeAll]] needs, registered per session. Checkpoint blocks
    * are tracked by RDD ID — a plain int extracted eagerly — because the
@@ -54,36 +42,31 @@ object Reuse {
    * never free (strong refs → permanent leak). The ID ties up nothing:
    * non-harness callers that skip freeAll keep the normal GC +
    * ContextCleaner path, harness callers free deterministically by id.
-   * Persisted (cache) frames are additionally registered in Spark's own
-   * CacheManager, which holds them until clearCache — the weak Dataset
-   * ref here is just the accelerated unpersist for freeAll.
+   *
+   * Weak session keys: a caller that uses shared()/pin() but never calls
+   * freeAll (REPL, library embedding) must not have its stopped session
+   * retained forever by this registry — once nothing else references the
+   * session, the entry (plain ints) drops with it and block cleanup
+   * falls back to GC + ContextCleaner as documented below.
    */
-  private final case class Tracked(
-      cached: java.lang.ref.WeakReference[DataFrame],
-      checkpointRddId: Int)
-
-  // Weak session keys: a caller that uses shared()/pin() but never calls
-  // freeAll (REPL, library embedding) must not have its stopped session
-  // retained forever by this registry — once nothing else references the
-  // session, the entry (plain ints + cleared weak refs) drops with it and
-  // block cleanup falls back to GC + ContextCleaner as documented below.
   private val live = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentLinkedQueue[Tracked]]())
+      java.util.concurrent.ConcurrentLinkedQueue[Int]]())
 
-  private def register(spark: SparkSession, t: Tracked): Unit =
+  private def register(spark: SparkSession, rddId: Int): Unit =
     // The add must happen inside the same critical section as the map
     // lookup: adding to a queue a concurrent freeAll already detached
     // would orphan the entry (its blocks then never freed explicitly).
     live.synchronized {
       live.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentLinkedQueue[Tracked]())
-        .add(t)
+        _ => new java.util.concurrent.ConcurrentLinkedQueue[Int]())
+        .add(rddId)
     }
 
   private def trackCheckpoint(df: DataFrame): DataFrame = {
-    val id = org.apache.spark.sql.graftbridge.SqlBridge
-      .checkpointRddId(df).getOrElse {
+    org.apache.spark.sql.graftbridge.SqlBridge.checkpointRddId(df) match {
+      case Some(id) => register(df.sparkSession, id)
+      case None =>
         // A localCheckpoint'ed frame whose plan is not the LogicalRDD we
         // expect means freeAll silently stops freeing — exactly the
         // round-2 block-leak regression. Shout so a Spark upgrade that
@@ -93,15 +76,7 @@ object Reuse {
           "Reuse.trackCheckpoint: could not resolve checkpoint RDD id " +
             "for a localCheckpoint'ed frame; its blocks will NOT be " +
             "freed by freeAll (plan shape changed?)")
-        -1
-      }
-    register(df.sparkSession, Tracked(null, id))
-    df
-  }
-
-  private def trackCache(df: DataFrame): DataFrame = {
-    register(df.sparkSession,
-      Tracked(new java.lang.ref.WeakReference(df), -1))
+    }
     df
   }
 
@@ -125,8 +100,11 @@ object Reuse {
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentLinkedQueue[String]]())
 
-  private def logPlan(df: DataFrame): Unit =
-    try {
+  // A failure here or in a free must not stop the caller, nor pass
+  // silently: a lost plan log reads a changed query as unchanged, and a
+  // failed free leaks blocks. So each one goes to stderr.
+  private def logPlan(df: DataFrame, site: String): Unit =
+    graft.QueryRun.loudly(s"Reuse.logPlan($site)") {
       if (df.sparkSession.conf.get(ReusePlanLogKey, "0") == "1") {
         val s = df.queryExecution.executedPlan.toString
         planLog.synchronized {
@@ -134,7 +112,7 @@ object Reuse {
             _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
         }.add(s)
       }
-    } catch { case _: Throwable => () }
+    }
 
   /** Return and clear the session's pre-checkpoint plan log (empty
     * unless `graft.reuse.planlog` was enabled during construction). */
@@ -154,23 +132,17 @@ object Reuse {
     * blocks with everything else. */
   def pin(df: DataFrame): DataFrame = trackCheckpoint(df)
 
-  def shared(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get(ConfKey, "checkpoint") match {
-      case "recompute" => df
-      case "eager_persist" =>
-        logPlan(df)
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        trackCache(p)
-      case _ =>
-        logPlan(df)
-        trackCheckpoint(
-        // The stats a checkpoint inherits explode as a power tower
-        // across iterative rounds (BPE/components) — clamp them above
-        // the no-planning-information line; see the bridge's scaladoc.
-        org.apache.spark.sql.graftbridge.SqlBridge.clampCheckpointStats(
-          df.localCheckpoint(true)))
-    }
+  /** Materialize `df` once as an eager `localCheckpoint` (see the
+    * header), registered for [[freeAll]]. */
+  def shared(df: DataFrame): DataFrame = {
+    logPlan(df, "shared")
+    trackCheckpoint(
+      // The stats a checkpoint inherits explode as a power tower
+      // across iterative rounds (BPE/components) — clamp them above
+      // the no-planning-information line; see the bridge's scaladoc.
+      org.apache.spark.sql.graftbridge.SqlBridge.clampCheckpointStats(
+        df.localCheckpoint(true)))
+  }
 
   /**
    * Process-lifetime memo for INDEX-like artifacts: an IVF probe
@@ -206,7 +178,7 @@ object Reuse {
       (org.apache.spark.sql.graftbridge.SqlBridge.sessionUUID(spark), key),
       _ => new IndexHolder(() => {
         val b0 = build
-        logPlan(b0)
+        logPlan(b0, s"index $key")
         org.apache.spark.sql.graftbridge.SqlBridge.clampCheckpointStats(
           b0.localCheckpoint(true))
       })).df
@@ -237,8 +209,9 @@ object Reuse {
         it.remove()
         val df = e.getValue.built
         if (df != null)
-          try org.apache.spark.sql.graftbridge.SqlBridge.freeCheckpoint(df)
-          catch { case _: Throwable => () }
+          graft.QueryRun.loudly(s"Reuse.dropIndexes(${e.getKey._2})") {
+            org.apache.spark.sql.graftbridge.SqlBridge.freeCheckpoint(df)
+          }
       }
     }
   }
@@ -253,8 +226,9 @@ object Reuse {
     val uuid = org.apache.spark.sql.graftbridge.SqlBridge.sessionUUID(spark)
     val h = indexes.remove((uuid, key))
     if (h != null && h.built != null)
-      try org.apache.spark.sql.graftbridge.SqlBridge.freeCheckpoint(h.built)
-      catch { case _: Throwable => () }
+      graft.QueryRun.loudly(s"Reuse.dropIndex($key)") {
+        org.apache.spark.sql.graftbridge.SqlBridge.freeCheckpoint(h.built)
+      }
   }
 
   /**
@@ -281,9 +255,9 @@ object Reuse {
 
   /**
    * Free every materialization [[shared]]/[[pin]] produced on this
-   * session since the last call: unpersists cached frames AND removes
-   * localCheckpoint RDD blocks (which `spark.catalog.clearCache()` does
-   * not touch). The registry harnesses call this after each query
+   * session since the last call: removes their localCheckpoint RDD
+   * blocks (which `spark.catalog.clearCache()` does not touch). The
+   * registry harnesses call this after each query
    * ([[graft.QueryRun.each]]) so one query's blocks never degrade the
    * next.
    *
@@ -297,16 +271,11 @@ object Reuse {
    */
   def freeAll(spark: SparkSession): Unit = {
     val q = live.remove(spark)
-    if (q != null) q.forEach { t =>
-      try {
-        if (t.checkpointRddId >= 0)
-          org.apache.spark.graftbridge.SparkBridge
-            .unpersistRdd(spark.sparkContext, t.checkpointRddId)
-        else {
-          val df = if (t.cached == null) null else t.cached.get()
-          if (df != null) df.unpersist(blocking = false)
-        }
-      } catch { case _: Throwable => () }
+    if (q != null) q.forEach { id =>
+      graft.QueryRun.loudly(s"Reuse.freeAll(rdd $id)") {
+        org.apache.spark.graftbridge.SparkBridge
+          .unpersistRdd(spark.sparkContext, id)
+      }
     }
   }
 }

@@ -1880,10 +1880,8 @@ object Sampling {
     * fanout 8 → 32 cut the family's
     * sequential job counts ~40% (ext177 86 → ~52 jobs) with the
     * identical converged result (64 after the ProbeScan rewrite made probe cost flat) — the searches are exact for ANY
-    * fanout ≥ 2, the ladder only changes how fast brackets narrow.
-    * Overridable for A/B measurement via -Dgraft.bisect.fanout. */
-  private[graft] def BisectFanout: Int =
-    sys.props.get("graft.bisect.fanout").map(_.toInt).getOrElse(64)
+    * fanout ≥ 2, the ladder only changes how fast brackets narrow. */
+  private[graft] val BisectFanout = 64
 
   private def budgetBoundaryOf(e: DataFrame, budgetTokens: Long)
       : (DataFrame, Long, Long) = {

@@ -31,9 +31,7 @@ object Similarity {
     * whose interpreted per-element path is banned from scan hot paths,
     * see [[graft.functions.QuantizeVector]]). */
   def quantize(emb: Column): Column =
-    if (sys.props.get("graft.quantize").contains("composed"))
-      quantizeComposed(emb)
-    else graft.functions.QuantizeVector(emb, QuantScale)
+    graft.functions.QuantizeVector(emb, QuantScale)
 
   /** Built-in-composed equivalent of [[quantize]] — readable
     * specification, used in parity tests (QDotProductSpec). */
@@ -45,9 +43,7 @@ object Similarity {
     * whole-stage codegen). The composed-builtin specification it was
     * parity-tested against: `aggregate(zip_with(a, b, _*_), 0L, _+_)`
     * (kept below for readability and spec tests). */
-  def qdot(a: Column, b: Column): Column =
-    if (sys.props.get("graft.qdot").contains("composed")) qdotComposed(a, b)
-    else graft.functions.QDotProduct(a, b)
+  def qdot(a: Column, b: Column): Column = graft.functions.QDotProduct(a, b)
 
   /** Built-in-composed equivalent of [[qdot]] — readable specification,
     * used in parity tests (QDotProductSpec). */

@@ -31,16 +31,13 @@ object TextOps {
   val MaxChunksPerDoc = 64
 
   /** Membership count of tokens against a plan-time word set — the
-    * native one-loop kernel ([[graft.functions.CountInSet]]) unless
-    * `graft.textkernels=composed` picks the readable HOF specification
-    * (CodegenFallback — banned from scan hot paths since the r3 ext02
-    * spike; kept for parity tests). */
+    * native one-loop kernel ([[graft.functions.CountInSet]]). */
   private[graft] def countInSet(toks: Column, words: Seq[String]): Column =
-    if (sys.props.get("graft.textkernels").contains("composed"))
-      countInSetComposed(toks, words)
-    else graft.functions.CountInSet(toks, words)
+    graft.functions.CountInSet(toks, words)
 
-  /** Composed-builtin specification of [[countInSet]]. */
+  /** Composed-builtin specification of [[countInSet]] — the readable
+    * HOF form (CodegenFallback, banned from scan hot paths since the r3
+    * ext02 spike), kept for parity tests (TextKernelsSpec). */
   private[graft] def countInSetComposed(toks: Column,
       words: Seq[String]): Column =
     size(filter(toks, t => t.isInCollection(words))).cast("long")
@@ -191,10 +188,7 @@ object TextOps {
     doc
       .withColumn("toks", tokens(col(text)))
       .withColumn("n_ws_tokens", size(col("toks")).cast("long"))
-      .withColumn("n_bpe_est",
-        if (sys.props.get("graft.textkernels").contains("composed"))
-          bpeEstimateComposed(col("toks"))
-        else graft.functions.BpeEstimate(col("toks")))
+      .withColumn("n_bpe_est", graft.functions.BpeEstimate(col("toks")))
 
   /** Language-ID by marker-token scoring (n-gram-heuristic shape): counts
     * of per-language marker words; predicted = argmax with a fixed
@@ -679,7 +673,8 @@ object TextOps {
     * vocab-bounded) stop fitting driver/executor memory comfortably
     * (~50 B/token row ⇒ the 4M default is ~200 MB framed, far under
     * the 8 GB broadcast cap but already meaningful ×cores resident).
-    * Overridable via -Dgraft.textrank.bcastMaxVerts for A/B. */
+    * `-Dgraft.textrank.bcastMaxVerts` lowers it so a spec can reach the
+    * non-broadcast fallback on a small corpus. */
   private[graft] def TextRankBcastMaxVerts: Long =
     sys.props.get("graft.textrank.bcastMaxVerts").map(_.toLong)
       .getOrElse(4000000L)
@@ -694,10 +689,11 @@ object TextOps {
     * vertex count — measured once off the materialized floor filter —
     * is ≤ [[TextRankBcastMaxVerts]]; a 100 TB token vocabulary can
     * exceed any broadcast budget, so above the ceiling the edge table
-    * is instead hash-partitioned by src ONCE at checkpoint time
-    * (checkpoints preserve partitioning) and every iteration shuffles
-    * only the vocab-bounded rank relation — the same zero-edge-
-    * reshuffle effect with no driver ceiling (guide §3.1 / §2.4). */
+    * is instead hash-partitioned by src ONCE at checkpoint time (the
+    * bridge re-declares that partitioning, which AQE hides on a
+    * checkpoint) and every iteration shuffles only the vocab-bounded
+    * rank relation — the same zero-edge-reshuffle effect with no driver
+    * ceiling (guide §3.1 / §2.4). */
   def textRankFromEdges(all: DataFrame, iters: Int = 3, minWout: Int = 5,
       topK: Int = 20, dampPct: Int = 85): DataFrame = {
     // keep is consumed by BOTH endpoint filters — materialized once;
@@ -715,8 +711,10 @@ object TextOps {
     // Non-broadcast fallback: pin the src partitioning into the
     // checkpoint so the per-iteration rank join re-shuffles ranks
     // (vocab-bounded), never the vocab²-bounded edge relation.
-    val ew = Reuse.shared(
-      if (bcastOk) ewBase else ewBase.repartition(col("src")))
+    val ew =
+      if (bcastOk) Reuse.shared(ewBase)
+      else org.apache.spark.sql.graftbridge.SqlBridge
+        .hashPartitionedCheckpoint(ewBase, "src")(Reuse.shared)
     var ranks = Reuse.pin(
       deg.select(col("src").as("v"), lit(1000000L).as("r"))
         .localCheckpoint(true))
@@ -1729,11 +1727,8 @@ object TextOps {
    */
   def oovRate(doc: DataFrame, denom: Long = 10,
       id: String = "doc_id", text: String = "text"): DataFrame = {
-    // `graft.oovshare=off` (PerfLab A/B knob): recompute the explode
-    // per consumer instead of checkpointing the token relation.
-    val instRaw = doc.select(col(id), explode(tokens(col(text))).as("tok"))
-    val inst = if (sys.props.get("graft.oovshare").contains("off")) instRaw
-      else Reuse.shared(instRaw)
+    val inst = Reuse.shared(
+      doc.select(col(id), explode(tokens(col(text))).as("tok")))
     val rare = rareFromCounts(Reuse.shared(
       inst.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))), denom)
     scoreRareInstances(inst, rare, id)

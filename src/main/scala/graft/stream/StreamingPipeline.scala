@@ -1399,20 +1399,6 @@ object StreamingPipeline {
       .agg(count("*").as("cnt"))
       .select(col("window.end").cast("long").as("window_end"), col("cnt"))
 
-  /** Per-hashtag hopping-window aggregate stream (OP-21/23/24). */
-  def hashtagAggStream(tweets: DataFrame): DataFrame =
-    tweets
-      .withWatermark("ts", Watermark)
-      .filter(size(col("hashtags")) > 0)           // OP-11
-      .select(col("ts"), explode(col("hashtags")).as("entity"), // OP-16
-        col("followerCount"))
-      .groupBy(window(col("ts"), Windows.WindowSize, Windows.HopSize),
-        col("entity"))
-      .agg(count("*").as("tweet_count"),
-        sum(col("followerCount")).as("follower_sum"))
-      .select(col("window.end").cast("long").as("window_end"),
-        col("entity"), col("tweet_count"), col("follower_sum"))
-
   /**
    * The full pipeline of the reference in ONE stateful aggregation
    * (OP-17/18's Multicast + the 4 subscriptions of
@@ -1529,9 +1515,9 @@ object StreamingPipeline {
       maxFilesPerTrigger: Option[Int] = Some(8),
       adjust: Boolean = false): StreamingQuery = {
     val src = tweetStream(spark, inputDir, maxFilesPerTrigger)
-    // `adjust` mirrors [[run]]: Trill Adjust(5 s) ingress for the
-    // unified 4-family pipeline (Query.cs:27-31 applies to the SAME
-    // multicast input both paths consume).
+    // `adjust`: Trill's Adjust(5 s) ingress (Query.cs:27-31) LIFTS an
+    // out-of-bound late tweet into the trailing window; `false` keeps
+    // plain watermark Drop semantics.
     unifiedSink(unifiedAggStream(
         if (adjust) adjustDisorderStreamAuto(src) else src), storeRoot)
       .option("checkpointLocation", checkpoint)
@@ -1606,48 +1592,6 @@ object StreamingPipeline {
         col("top_tweets")).as("top_entities"))
       .select(col("window.end").cast("long").as("rank_window_end"),
         col("top_entities"))
-  }
-
-  /** Hopping tweet-count stream (OP-22, the `counts` CF). */
-  def countStream(tweets: DataFrame): DataFrame =
-    tweets
-      .withWatermark("ts", Watermark)
-      .groupBy(window(col("ts"), Windows.WindowSize, Windows.HopSize))
-      .agg(count("*").as("cnt"))
-      .select(col("window.end").cast("long").as("window_end"), col("cnt"))
-
-  /**
-   * Sink (OP-32): rank top-N inside each micro-batch, then append to a
-   * parquet store partitioned by window_end date — the analog of the
-   * reference's per-window RocksDB keys: serving range scans prune
-   * partitions instead of seeking an LSM iterator.
-   */
-  def rankedSink(agg: DataFrame, storePath: String,
-      n: Int = Windows.TopN): DataStreamWriter[Row] =
-    agg.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        AggregateStore.writeRanked(batch, storePath, n, batchId)
-      }
-
-  /** The reference's live pipeline end to end: source dir → ranked
-    * parquet store. `adjust = true` runs ingress under
-    * [[adjustDisorderStream]] — Trill's
-    * `DisorderPolicy.Adjust(5 s)`, the policy the reference actually
-    * ingests with (Query.cs:27-31) — so an out-of-bound late tweet is
-    * LIFTED into the trailing window instead of silently dropped;
-    * `adjust = false` keeps plain watermark Drop semantics (the default
-    * of rounds 1-12, left as default so existing twins/oracles are
-    * unchanged; the in-bound replay fixture makes the two identical
-    * there). */
-  def run(spark: SparkSession, inputDir: String, storePath: String,
-      checkpoint: String, adjust: Boolean = false): StreamingQuery = {
-    val src = tweetStream(spark, inputDir)
-    rankedSink(hashtagAggStream(
-        if (adjust) adjustDisorderStreamAuto(src) else src), storePath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
   }
 }
 

@@ -376,6 +376,10 @@ class CorpusStatsSpec extends TestBase {
   test("textrank broadcast guard (r19): the non-broadcast fallback " +
       "path is bit-identical to the broadcast path") {
     import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{
+      SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
     val texts = Seq("a b a c", "b a b d", "c a", "d c a b e", "e a b")
     def run() = graft.ops.TextOps.textRank(
         texts.toDF("text"), iters = 3, minWout = 1, topK = 10)
@@ -383,19 +387,61 @@ class CorpusStatsSpec extends TestBase {
     val viaBroadcast = run()
     graft.ops.Reuse.freeAll(spark)
     // force the guard below any real vertex count: every iteration
-    // join must take the hash-partitioned edge-table path
+    // join must take the hash-partitioned edge-table path. Auto-
+    // broadcast goes off too, or the planner would broadcast the tiny
+    // rank side and the edge table's join shape would never show.
     val key = "graft.textrank.bcastMaxVerts"
+    val bcastConf = "spark.sql.autoBroadcastJoinThreshold"
     val prev = sys.props.get(key)
+    val prevBcast = spark.conf.getOption(bcastConf)
     sys.props(key) = "0"
+    spark.conf.set(bcastConf, "-1")
+    // every physical plan Spark records for the run's SQL executions,
+    // the initial one and each adaptive re-plan
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.add(u.sparkPlanInfo)
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
     try {
       val viaShuffle = run()
       assert(viaShuffle == viaBroadcast)
+      org.apache.spark.graftbridge.ListenerDrain(spark.sparkContext)
     } finally {
+      spark.sparkContext.removeSparkListener(listener)
       prev match {
         case Some(v) => sys.props(key) = v
         case None => sys.props.remove(key)
       }
+      prevBcast match {
+        case Some(v) => spark.conf.set(bcastConf, v)
+        case None => spark.conf.unset(bcastConf)
+      }
     }
+    // the edge checkpoint is the only scan carrying `wout`; codegen
+    // wrappers do not count as operators between it and an exchange
+    def isEdgeScan(p: SparkPlanInfo) =
+      p.nodeName == "Scan ExistingRDD" && p.simpleString.contains("wout#")
+    def unwrap(p: SparkPlanInfo): SparkPlanInfo =
+      if ((p.nodeName.startsWith("WholeStageCodegen") ||
+          p.nodeName == "InputAdapter") && p.children.size == 1)
+        unwrap(p.children.head)
+      else p
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] =
+      p +: p.children.flatMap(nodes)
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.toSeq.flatMap(nodes)
+    assert(all.count(isEdgeScan) >= 3,
+      "the fallback's iteration joins never read the edge checkpoint")
+    val reshuffled = all.filter(p => p.nodeName == "Exchange" &&
+      p.children.map(unwrap).exists(isEdgeScan)).map(_.simpleString)
+    assert(reshuffled.isEmpty,
+      "an iteration plan re-shuffles the edge checkpoint")
     graft.ops.Reuse.freeAll(spark)
   }
 }

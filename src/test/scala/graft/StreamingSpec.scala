@@ -58,23 +58,11 @@ class StreamingSpec extends TestBase {
     out
   }
 
-  test("streaming hashtag aggregate == batch equivalent on replay fixture") {
-    val dir = Files.createTempDirectory("graft-replay").toFile
-    val store = Files.createTempDirectory("graft-store").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    Files.write(new java.io.File(dir, "part-0.jsonl").toPath,
-      fixtureLines.mkString("\n").getBytes)
-
-    val q = StreamingPipeline.run(spark, dir.toString, store, ckpt)
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = AggregateStore.read(spark, store)
-      .select("window_end", "entity", "tweet_count", "follower_sum", "rank")
-
-    val batchTweets = graft.ingest.Tables.projectTweets(
-      Tables.tweetsFromFile(spark, dir.toString + "/part-0.jsonl"))
-    val batchAgg = batchTweets
+  /** The batch reference of the live pipeline's `hashtags` family: the
+    * per-hashtag hopping aggregate of the tweet lines at `path`, ranked
+    * top-N per window. */
+  private def batchRankedHashtags(path: String) = {
+    val batchAgg = Tables.projectTweets(Tables.tweetsFromFile(spark, path))
       .filter(size(col("hashtags")) > 0)
       .select(col("ts"), explode(col("hashtags")).as("entity"),
         col("followerCount"))
@@ -83,8 +71,24 @@ class StreamingSpec extends TestBase {
         sum("followerCount").as("follower_sum"))
       .select(col("window.end").cast("long").as("window_end"),
         col("entity"), col("tweet_count"), col("follower_sum"))
-    val batchRanked = graft.agg.Windows.rankTopEntities(batchAgg)
+    graft.agg.Windows.rankTopEntities(batchAgg)
       .select("window_end", "entity", "tweet_count", "follower_sum", "rank")
+  }
+
+  test("streaming hashtag aggregate == batch equivalent on replay fixture") {
+    val dir = Files.createTempDirectory("graft-replay").toFile
+    val store = Files.createTempDirectory("graft-store").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    Files.write(new java.io.File(dir, "part-0.jsonl").toPath,
+      fixtureLines.mkString("\n").getBytes)
+
+    val q = StreamingPipeline.runUnified(spark, dir.toString, store, ckpt)
+    q.processAllAvailable()
+    q.stop()
+
+    val streamed = AggregateStore.read(spark, s"$store/hashtags")
+      .select("window_end", "entity", "tweet_count", "follower_sum", "rank")
+    val batchRanked = batchRankedHashtags(dir.toString + "/part-0.jsonl")
 
     // Streaming append-mode only emits windows whose watermark has
     // expired; compare on the windows the stream emitted.
@@ -603,23 +607,19 @@ class StreamingSpec extends TestBase {
     Files.write(new java.io.File(dir, "b1.jsonl").toPath,
       first.mkString("\n").getBytes)
 
-    val q1 = StreamingPipeline.run(spark, dir.toString, store, ckpt)
+    val q1 = StreamingPipeline.runUnified(spark, dir.toString, store, ckpt)
     q1.processAllAvailable()
     q1.stop() // simulate shutdown
 
     Files.write(new java.io.File(dir, "b2.jsonl").toPath,
       second.mkString("\n").getBytes)
-    val q2 = StreamingPipeline.run(spark, dir.toString, store, ckpt)
+    val q2 = StreamingPipeline.runUnified(spark, dir.toString, store, ckpt)
     q2.processAllAvailable()
     q2.stop()
 
-    val streamed = AggregateStore.read(spark, store)
+    val streamed = AggregateStore.read(spark, s"$store/hashtags")
       .select("window_end", "entity", "tweet_count", "follower_sum", "rank")
-    // hashtagAggStream works on a batch frame too (watermark is a no-op)
-    val batchAgg = graft.agg.Windows.rankTopEntities(
-      StreamingPipeline.hashtagAggStream(graft.ingest.Tables.projectTweets(
-        Tables.tweetsFromFile(spark, dir.toString))))
-      .select("window_end", "entity", "tweet_count", "follower_sum", "rank")
+    val batchAgg = batchRankedHashtags(dir.toString)
     val emitted = streamed.select("window_end").distinct()
     val expect = batchAgg.join(emitted, "window_end")
     assert(streamed.count() > 0)
@@ -734,7 +734,7 @@ class StreamingSpec extends TestBase {
     Files.write(new java.io.File(dir, "b1.jsonl").toPath,
       (0 until 50).map(i => line(i, base + i * 60000L))
         .mkString("\n").getBytes)
-    val q = StreamingPipeline.run(spark, dir.toString, store, ckpt)
+    val q = StreamingPipeline.runUnified(spark, dir.toString, store, ckpt)
     q.processAllAvailable()
     Files.write(new java.io.File(dir, "b2.jsonl").toPath,
       Seq(line(999, base + 1000L)).mkString("\n").getBytes) // 30+ min late
@@ -744,7 +744,7 @@ class StreamingSpec extends TestBase {
     // Trill would ADJUST the late row into bounds; Spark DROPS it
     // (SURVEY.md §7.3 documented delta). The late tweet (id 999, weight 1
     // in window ending base+600s) must not appear in streamed output.
-    val streamed = graft.stream.AggregateStore.read(spark, store)
+    val streamed = graft.stream.AggregateStore.read(spark, s"$store/hashtags")
     val firstWindowEnd = base / 1000 + 600
     val streamedFirst = streamed
       .filter(col("window_end") === firstWindowEnd)
@@ -2991,8 +2991,8 @@ class StreamingSpec extends TestBase {
       val dir = Files.createTempDirectory("graft-adj-run").toFile
       val store = Files.createTempDirectory("graft-adj-store").toString
       val ckpt = Files.createTempDirectory("graft-adj-ckpt").toString
-      val q = StreamingPipeline.run(spark, dir.toString, store, ckpt,
-        adjust = adjust)
+      val q = StreamingPipeline.runUnified(spark, dir.toString, store,
+        ckpt, adjust = adjust)
       def feed(name: String, lines: Seq[String]): Unit = {
         Files.write(new java.io.File(dir, name).toPath,
           lines.mkString("\n").getBytes)
@@ -3007,7 +3007,7 @@ class StreamingSpec extends TestBase {
       feed("b3.jsonl", Seq(line(4, base + 2000000L)))
       q.stop()
       import spark.implicits._
-      AggregateStore.read(spark, store)
+      AggregateStore.read(spark, s"$store/hashtags")
         .filter(col("entity") === "x")
         .select("window_end", "tweet_count")
         .as[(Long, Long)].collect().toMap

@@ -50,20 +50,32 @@ class TextKernelsSpec extends TestBase {
   test("operators are value-identical under native vs composed kernels " +
       "over the real corpus") {
     val d = graft.ingest.Tables.documents(spark, sf("sf0.001"))
-    def all(): Seq[String] = {
-      val q = TextOps.quality(d).select("doc_id", "n_stop", "quality_score")
-      val l = TextOps.langScores(d)
-        .select("doc_id", "score_en", "score_es", "score_zh", "predicted")
-      val t = TextOps.tokenCounts(d).select("doc_id", "n_bpe_est")
-      (q.collect() ++ l.collect() ++ t.collect()).map(_.toString).toSeq
-    }
-    val native = all()
-    sys.props("graft.textkernels") = "composed"
-    try {
-      val composed = all()
-      assert(native == composed,
-        "native kernels changed an operator's output")
-    } finally sys.props.remove("graft.textkernels")
+    // every kernel-fed column the operators output, beside its composed
+    // specification over the same tokens and the operator's word list
+    val toks = TextOps.tokens(col("text"))
+    val langs = TextOps.LangMarkers.toSeq.sortBy(_._1)
+    val spec = d.select((col("doc_id") +:
+      TextOps.countInSetComposed(toks, TextOps.Stopwords).as("n_stop") +:
+      langs.map { case (lang, ms) =>
+        TextOps.countInSetComposed(toks, ms).as(s"score_$lang") } :+
+      TextOps.bpeEstimateComposed(toks).as("n_bpe_est")): _*)
+    val cols = spec.columns.toSeq.tail
+    val ops = TextOps.quality(d).select("doc_id", "n_stop")
+      .join(TextOps.langScores(d)
+        .select("doc_id", langs.map(l => s"score_${l._1}"): _*), "doc_id")
+      .join(TextOps.tokenCounts(d).select("doc_id", "n_bpe_est"), "doc_id")
+    val joined = ops.as("o").join(spec.as("s"), "doc_id")
+    assert(joined.count() == d.count() && d.count() > 0)
+    val diverged = joined.filter(cols.map(c =>
+      !(col(s"o.$c") <=> col(s"s.$c"))).reduce(_ || _))
+    assert(diverged.isEmpty,
+      "a native kernel diverged from its composed specification: " +
+        diverged.limit(5).collect().mkString("; "))
+    // non-vacuous: the corpus exercises every word list and the estimate
+    val sums = spec.agg(sum(cols.head), cols.tail.map(c => sum(c)): _*)
+      .collect().head
+    assert(cols.indices.forall(i => sums.getLong(i) > 0L),
+      s"a kernel-fed column is all zero on the corpus: $sums")
   }
 
   test("nulls propagate; the kernel runs inside whole-stage codegen") {
