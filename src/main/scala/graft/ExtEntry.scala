@@ -71,13 +71,13 @@ object ExtEntry {
   private val ProbeCurve = Seq(1, 2, 4)
 
   /** The one quality-score rule the whole budget-select family keys
-    * on (ext172-179 + the ScaleSmoke pricing gates): nine call sites
-    * must stay byte-identical for the cross-query consistency rungs
-    * (ext177's shared rung == ext175's card, etc.) to keep holding —
+    * on (ext172-179): its seven call sites must stay byte-identical
+    * for the cross-query consistency rungs (ext177's shared rung ==
+    * ext175's card, etc.) to keep holding —
     * one constant removes the drift surface (r18 review). The DuckDB
     * oracle strings keep their literal copies by design (an oracle
     * must not read the engine's definition).  */
-  private[graft] val ScorePpmExpr =
+  private val ScorePpmExpr =
     "least(n_words * 10000, 1000000) DIV 2" +
       " + (n_stop * 1000000 DIV n_words) DIV 2"
 
@@ -827,7 +827,8 @@ object ExtEntry {
 
     // Production-width simhash: 60-bit signature, 4x15-bit chunk
     // buckets (32768 per chunk vs ext04's 256) — the corpus-scale form
-    // whose candidate volume ScaleSmoke contrasts against ext04.
+    // whose candidate volume the r6 10x scale smoke put at 0.28 M pairs
+    // vs ext04's 8.10 M.
     "ext37_dedup_simhash_wide" -> ((s, dir) =>
       Dedup.simhashPairsWide(docs(s, dir)).orderBy("id_a", "id_b")),
 

@@ -28,7 +28,9 @@ import graft.stream.{AggregateStore, StreamingPipeline}
  */
 object Main {
 
-  private def session(): SparkSession = {
+  /** The product session (this CLI and [[Repl]]): `SPARK_MASTER`,
+    * and `SPARK_GRAFT_CPUS` shuffle partitions (default 8). */
+  private[graft] def session(): SparkSession = {
     val s = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
       .config("spark.sql.shuffle.partitions",
@@ -70,8 +72,8 @@ object Main {
       spark.stop()
 
     case "printDB" :: store :: rest if rest.size <= 1 =>
+      val n = rest.headOption.map(Repl.parseCount).getOrElse(10)
       val spark = session()
-      val n = rest.headOption.map(_.toInt).getOrElse(10)
       Seq("counts", "hashtags", "mentions", "retweets").foreach { kind =>
         println(s"== $kind (most recent $n records)")
         try Serve.recent(AggregateStore.read(spark, s"$store/$kind"), n)

@@ -101,18 +101,17 @@ object Repl {
       col("window_count").as("WindowCount"),
       col("total_tweets").as("NumberOfTweets"))
 
-  private def parseTime(s: String): Long =
-    if (s.forall(_.isDigit)) s.toLong
+  private def parseTime(s: String): Long = {
+    def bad = new IllegalArgumentException(
+      s"bad time '$s' — use epoch seconds or yyyy-MM-ddTHH:mm:ss")
+    if (s.forall(_.isDigit)) s.toLongOption.getOrElse(throw bad)
     else
       try LocalDateTime.parse(s).toInstant(ZoneOffset.UTC).getEpochSecond
-      catch {
-        case _: java.time.format.DateTimeParseException =>
-          throw new IllegalArgumentException(
-            s"bad time '$s' — use epoch seconds or yyyy-MM-ddTHH:mm:ss")
-      }
+      catch { case _: java.time.format.DateTimeParseException => throw bad }
+  }
 
-  /** `N` of a `getrecent*` command: a non-negative integer. */
-  private def parseCount(s: String): Int =
+  /** `N` of a `getrecent*` command or `printDB`: a non-negative integer. */
+  private[graft] def parseCount(s: String): Int =
     s.toIntOption.filter(_ >= 0).getOrElse(
       throw new IllegalArgumentException(
         s"bad count '$s' — use a non-negative integer"))
@@ -164,7 +163,10 @@ object Repl {
       // against a testdata-layout dir, so a REPL user reaches every
       // operator the library ships, not just the aggregate store.
       case "run" :: name :: dir :: Nil =>
-        SparkEntry.queries.get(name).map(fn => fn(spark, dir))
+        val fn = SparkEntry.queries.getOrElse(name,
+          throw new IllegalArgumentException(
+            s"unknown query '$name' — `list` shows the query names"))
+        Some(fn(spark, dir))
       case "list" :: Nil =>
         import spark.implicits._
         Some(SparkEntry.queries.keys.toSeq.sorted.toDF("query"))
@@ -217,13 +219,7 @@ object Repl {
     val storeRoot = args.headOption.getOrElse(
       sys.error("usage: Repl <storeRoot> [outDir]"))
     val outDir = args.lift(1).getOrElse(".")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Main.session()
     println("graft repl — commands: getsummary | getcounts s e | " +
       "gettop{mentions,hashtags,retweets}string s e [entity] | " +
       "getrecent<kind> N | list | run <query> <sfDir> | exit")

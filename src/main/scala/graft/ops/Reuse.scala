@@ -53,15 +53,22 @@ object Reuse {
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentLinkedQueue[Int]]())
 
+  /** The registrations of the innermost [[scoped]] block running on
+    * this thread; null outside one. */
+  private val scope =
+    new ThreadLocal[scala.collection.mutable.ArrayBuffer[Int]]
+
   private def register(spark: SparkSession, rddId: Int): Unit =
-    // The add must happen inside the same critical section as the map
-    // lookup: adding to a queue a concurrent freeAll already detached
-    // would orphan the entry (its blocks then never freed explicitly).
-    live.synchronized {
-      live.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentLinkedQueue[Int]())
-        .add(rddId)
-    }
+    if (scope.get != null) scope.get += rddId
+    else
+      // The add must happen inside the same critical section as the map
+      // lookup: adding to a queue a concurrent freeAll already detached
+      // would orphan the entry (its blocks then never freed explicitly).
+      live.synchronized {
+        live.computeIfAbsent(spark,
+          _ => new java.util.concurrent.ConcurrentLinkedQueue[Int]())
+          .add(rddId)
+      }
 
   private def trackCheckpoint(df: DataFrame): DataFrame = {
     org.apache.spark.sql.graftbridge.SqlBridge.checkpointRddId(df) match {
@@ -271,11 +278,32 @@ object Reuse {
    */
   def freeAll(spark: SparkSession): Unit = {
     val q = live.remove(spark)
-    if (q != null) q.forEach { id =>
-      graft.QueryRun.loudly(s"Reuse.freeAll(rdd $id)") {
-        org.apache.spark.graftbridge.SparkBridge
-          .unpersistRdd(spark.sparkContext, id)
-      }
+    if (q != null) q.forEach(id => free(spark, "freeAll", id))
+  }
+
+  /**
+   * Run `body`, then free every [[shared]]/[[pin]] materialization it
+   * made on this thread: [[freeAll]]'s lifecycle for work that never
+   * reaches a point between queries, such as one micro-batch of a
+   * long-running sink. Those materializations skip the session registry,
+   * so a later [[freeAll]] neither sees nor double-frees them. The same
+   * CONTRACT holds: frames built inside `body` are unusable after it
+   * returns.
+   */
+  def scoped[A](spark: SparkSession)(body: => A): A = {
+    val outer = scope.get
+    val mine = scala.collection.mutable.ArrayBuffer[Int]()
+    scope.set(mine)
+    try body
+    finally {
+      scope.set(outer)
+      mine.foreach(id => free(spark, "scoped", id))
     }
   }
+
+  private def free(spark: SparkSession, site: String, id: Int): Unit =
+    graft.QueryRun.loudly(s"Reuse.$site(rdd $id)") {
+      org.apache.spark.graftbridge.SparkBridge
+        .unpersistRdd(spark.sparkContext, id)
+    }
 }

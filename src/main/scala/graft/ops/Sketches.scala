@@ -521,10 +521,10 @@ object Sketches {
     * Spark's own BloomFilterAggregate). The driver receives m/64-long
     * arrays, never per-bit rows — at 2M keys this replaced a 5.2M-row
     * collect that cost more than the join it was meant to save
-    * (measured in ScaleSmoke; the RDD aggregate is the one genuinely
-    * imperative per-partition kernel here). Position arithmetic is
-    * byte-identical to [[bloomPos]] — parity is spec-asserted against
-    * the relational [[bloomBits]]. */
+    * (measured in the r14 scale smoke; the RDD aggregate is the one
+    * genuinely imperative per-partition kernel here). Position
+    * arithmetic is byte-identical to [[bloomPos]] — parity is
+    * spec-asserted against the relational [[bloomBits]]. */
   private[graft] def dimBitWords(dim: DataFrame, dimKey: Column,
       m: Long, k: Int): (Array[Long], Long) = {
     require(m % 64 == 0, s"bloom bits must fill whole words, got $m")

@@ -85,7 +85,7 @@ object Serve {
    * part-file lived under. Without `storePath` the plan-time
    * signature stays conservative (retry) — the caller gave nothing
    * to distinguish by. Every retry logs to stderr (and `onRetry`,
-   * when given — the ScaleSmoke measurement hook), so repeated
+   * when given — StreamingSpec counts retries through it), so repeated
    * non-race FileNotFound failures are visible, never silent.
    */
   def retryingServe[T](attempts: Int = 4, backoffMs: Long = 25,

@@ -672,33 +672,28 @@ object StreamingPipeline {
       : DataStreamWriter[Row] =
     events.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        processFunnelBatch(batch, batchId, steps, statePath, horizonUs)
+        val spark = batch.sparkSession
+        val fresh = batch.filter(col("event_type").isin(steps: _*))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            unix_micros(col("ts")).as("ts_us"))
+        // the predecessor read excludes this batch's own output, so a
+        // replayed batchId writes a byte-identical snapshot
+        val merged =
+          latestFunnelSnap(spark, statePath, before = Some(batchId))
+            .map(_.unionByName(fresh)).getOrElse(fresh)
+            .dropDuplicates("event_id")
+        val t1 = merged.filter(col("event_type") === steps.head)
+          .groupBy("user_id").agg(min("ts_us").as("t1"))
+        // t1 is O(|users|) — corpus-proportional, so no forced broadcast
+        // (the [[graft.agg.Windows.funnel]] boundary); AQE downgrades the
+        // uid-keyed join to broadcast only when t1 is actually small.
+        merged.join(t1, Seq("user_id"), "left")
+          .filter(col("t1").isNull ||
+            col("ts_us") <= col("t1") + lit(horizonUs))
+          .select("event_id", "user_id", "event_type", "ts_us")
+          .write.mode("overwrite").parquet(f"$statePath/snap=$batchId%09d")
+        gcFunnelSnaps(spark, statePath, batchId)
     }
-
-  /** One micro-batch of [[funnelStateSink]] — exposed for the replay
-    * contract (same batchId ⇒ byte-identical snapshot, because the
-    * predecessor read excludes the batch's own output). */
-  def processFunnelBatch(batch: DataFrame, batchId: Long,
-      steps: Seq[String], statePath: String, horizonUs: Long): Unit = {
-    val spark = batch.sparkSession
-    val fresh = batch.filter(col("event_type").isin(steps: _*))
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("ts_us"))
-    val merged = latestFunnelSnap(spark, statePath, before = Some(batchId))
-      .map(_.unionByName(fresh)).getOrElse(fresh)
-      .dropDuplicates("event_id")
-    val t1 = merged.filter(col("event_type") === steps.head)
-      .groupBy("user_id").agg(min("ts_us").as("t1"))
-    // t1 is O(|users|) — corpus-proportional, so no forced broadcast
-    // (the [[graft.agg.Windows.funnel]] boundary); AQE downgrades the
-    // uid-keyed join to broadcast only when t1 is actually small.
-    merged.join(t1, Seq("user_id"), "left")
-      .filter(col("t1").isNull ||
-        col("ts_us") <= col("t1") + lit(horizonUs))
-      .select("event_id", "user_id", "event_type", "ts_us")
-      .write.mode("overwrite").parquet(f"$statePath/snap=$batchId%09d")
-    gcFunnelSnaps(spark, statePath, batchId)
-  }
 
   /** Snapshot GC: each batch's snapshot fully subsumes its
     * predecessors, so only the newest and one fallback are ever needed
@@ -978,7 +973,9 @@ object StreamingPipeline {
    *
    * Each intermediate stage is materialized eagerly per batch
    * (the pipelineCard sum-of-prefixes lesson: two-plus consumers per
-   * stage) and its blocks are freed before the batch returns.
+   * stage) and its blocks are freed before the batch returns, with
+   * those its operators make through `Reuse.shared`
+   * ([[graft.ops.Reuse.scoped]]).
    *
    * This fixed-artifact overload pins ONE snapshot for the stream's
    * whole life; a production stream that must pick up a refreshed
@@ -1034,9 +1031,10 @@ object StreamingPipeline {
       val (v, raw) = provider()
       if (v != version) {
         ids.foreach { id =>
-          try org.apache.spark.graftbridge.SparkBridge
-            .unpersistRdd(spark.sparkContext, id)
-          catch { case _: Throwable => () }
+          graft.QueryRun.loudly(s"PinnedArtifacts.resolve(rdd $id)") {
+            org.apache.spark.graftbridge.SparkBridge
+              .unpersistRdd(spark.sparkContext, id)
+          }
         }
         val buf = scala.collection.mutable.ArrayBuffer[Int]()
         frames = raw.map { df =>
@@ -1079,14 +1077,11 @@ object StreamingPipeline {
       (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val Seq(keepers, bv, bh, bits) = pinned.resolve(spark)
-        val tracked = scala.collection.mutable.ArrayBuffer[Int]()
-        def mat(df: DataFrame): DataFrame = {
-          val m = df.localCheckpoint(true)
-          org.apache.spark.sql.graftbridge.SqlBridge
-            .checkpointRddId(m).foreach(tracked += _)
-          m
-        }
-        try {
+        // frees this batch's stage checkpoints and the ones its operators
+        // make through Reuse.shared (repetitionSurgery's shingles)
+        graft.ops.Reuse.scoped(spark) {
+          def mat(df: DataFrame): DataFrame =
+            graft.ops.Reuse.pin(df.localCheckpoint(true))
           def resurface(surg: DataFrame, prev: DataFrame): DataFrame =
             mat(surg.join(prev.select("doc_id", "source"), "doc_id")
               .select(col("doc_id"), col("clean_text").as("text"),
@@ -1117,10 +1112,6 @@ object StreamingPipeline {
                   col("source"), col("n_redactions"))
             else c5
           out.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        } finally tracked.foreach { id =>
-          try org.apache.spark.graftbridge.SparkBridge
-            .unpersistRdd(spark.sparkContext, id)
-          catch { case _: Throwable => () }
         }
     }
   }

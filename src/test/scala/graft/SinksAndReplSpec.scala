@@ -88,9 +88,35 @@ class SinksAndReplSpec extends TestBase {
     val ran = Repl.dispatch(spark, "/nonexistent",
       s"run ext01_dedup_exact ${sf("sf0.001")}")
     assert(ran.isDefined && ran.get.count() > 0)
-    assert(Repl.dispatch(spark, "/nonexistent",
-      s"run no_such_query ${sf("sf0.001")}").isEmpty)
     graft.ops.Reuse.freeAll(spark)
+  }
+
+  test("repl run with an unknown query name names it and points at list") {
+    val e = intercept[IllegalArgumentException] {
+      Repl.dispatch(spark, "/nonexistent",
+        s"run no_such_query ${sf("sf0.001")}")
+    }
+    assert(e.getMessage.contains("'no_such_query'") &&
+      e.getMessage.contains("list"), e.getMessage)
+  }
+
+  test("repl time past Long range gives the bad-time message") {
+    // all digits, so it takes the epoch-seconds path, and overflows Long
+    val e = intercept[IllegalArgumentException] {
+      Repl.dispatch(spark, "/nonexistent",
+        "getcounts 99999999999999999999 1")
+    }
+    assert(e.getMessage ==
+      "bad time '99999999999999999999' — use epoch seconds or " +
+        "yyyy-MM-ddTHH:mm:ss")
+  }
+
+  test("printDB rejects a count that is not a non-negative integer") {
+    // parsed before any session is built or stopped
+    val e = intercept[IllegalArgumentException] {
+      Main.main(Array("printDB", "/nonexistent", "ten"))
+    }
+    assert(e.getMessage == "bad count 'ten' — use a non-negative integer")
   }
 
   test("duration-bounded saveTweets captures valid lines then stops " +

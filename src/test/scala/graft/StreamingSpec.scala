@@ -1156,6 +1156,70 @@ class StreamingSpec extends TestBase {
     graft.ops.Reuse.freeAll(spark)
   }
 
+  test("curation sink frees each batch's checkpoints: persisted RDDs " +
+      "grow by the four pinned artifacts only, over 5 batches") {
+    val docs = Tables.documents(spark, sf("sf0.001"))
+      .select("doc_id", "text", "source")
+    val emb = Tables.embeddings(spark, sf("sf0.001"))
+    val benchMax = 20L
+    val snap = graft.ops.Curation.snapshot(docs, emb, benchMax)
+    val keepers = snap.keeperSpans.localCheckpoint(true)
+    val bv = snap.benchVecs.localCheckpoint(true)
+    val bh = snap.benchShingles.localCheckpoint(true)
+    val bits = snap.bloomBits.localCheckpoint(true)
+    val embSnap = emb.localCheckpoint(true)
+    graft.ops.Reuse.freeAll(spark)
+    val nBatches = 5
+    val srcDir =
+      Files.createTempDirectory("graft-curfree-src").toString + "/d"
+    docs.filter(col("doc_id") >= benchMax).repartition(nBatches)
+      .write.parquet(srcDir)
+    val out = Files.createTempDirectory("graft-curfree-out").toString
+    val ckpt = Files.createTempDirectory("graft-curfree-ckpt").toString
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted()
+    // Hold every RDD persisted during the stream, so the ContextCleaner
+    // (which unpersists an RDD once a GC finds it unreachable) cannot
+    // free a block the sink left behind before the check below.
+    val held = new java.util.concurrent.ConcurrentHashMap[Int, AnyRef]()
+    val polling = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val poller = new Thread(() => while (polling.get) {
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
+        held.putIfAbsent(id, r) }
+      Thread.sleep(5)
+    })
+    poller.setDaemon(true)
+    poller.start()
+    val q = StreamingPipeline.curationSink(
+        StreamingPipeline.parquetStream(spark, srcDir,
+          maxFilesPerTrigger = Some(1)),
+        embSnap, keepers, bv, bh, bits, out)
+      .option("checkpointLocation", ckpt).start()
+    q.processAllAvailable()
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    q.stop()
+    polling.set(false)
+    poller.join()
+    assert(batches == nBatches, s"expected $nBatches one-file batches")
+    // what stays is the sink's one pinned copy of each artifact; every
+    // stage checkpoint of every batch is gone
+    val grown = persisted() -- before
+    val rdds = spark.sparkContext.getPersistentRDDs
+    assert(grown.toSeq.map(rdds(_).count()).sorted ==
+      Seq(keepers, bv, bh, bits).map(_.count()).sorted,
+      s"persisted RDDs grew by ${grown.size} over $batches batches, " +
+        "not by the 4 pinned artifacts")
+    // and the pins are released with the stream's other Reuse blocks
+    graft.ops.Reuse.freeAll(spark)
+    assert((persisted() intersect grown).isEmpty,
+      "pinned artifacts outlived Reuse.freeAll")
+    // non-vacuous: the poller saw each batch's four stage checkpoints
+    import scala.jdk.CollectionConverters._
+    val seen = held.keySet.asScala.toSet -- before
+    assert(seen.size >= 4 + 4 * nBatches,
+      s"saw ${seen.size} RDDs persisted during the stream")
+  }
+
   test("curation sink artifact rotation: a bench-set swap between " +
       "batches takes effect at the NEXT batch, each batch pinned to " +
       "one snapshot (r11 item 5)") {
