@@ -65,8 +65,8 @@ object PerfLab {
     val only = sys.env.getOrElse("SPARK_GRAFT_ONLY",
       "ext02,ext03,ext04,ext14,ext15,ext16").split(",").toSeq
     val spark = QueryRun.session(cpus, confs)
-    spark.read.parquet(s"$sfDir/documents.parquet").count()
-    spark.read.parquet(s"$sfDir/embeddings.parquet").count()
+    Seq("documents", "embeddings").foreach(
+      graft.ingest.Tables.table(spark, sfDir, _).count())
     val picked = QueryRun.select(only)
     // jobs, stages, tasks, task CPU ns, shuffle read+write bytes
     val counters = Array.fill(5)(new AtomicLong)

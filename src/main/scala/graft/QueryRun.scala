@@ -49,7 +49,7 @@ object QueryRun {
     loudly("[warm-up] events")(graft.ingest.Tables.events(spark, sfDir)
       .groupBy("event_type").count().count())
     Seq("documents", "embeddings").foreach { t =>
-      loudly(s"[warm-up] $t")(spark.read.parquet(s"$sfDir/$t.parquet").count())
+      loudly(s"[warm-up] $t")(graft.ingest.Tables.table(spark, sfDir, t).count())
     }
     loudly("[warm-up] bucketed layout")(ExtEntry.ensureBucketed(spark, sfDir))
     spark.catalog.clearCache()

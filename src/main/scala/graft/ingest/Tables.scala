@@ -1,6 +1,15 @@
 package graft.ingest
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import graft.model.TweetSchema
 
@@ -16,19 +25,66 @@ import graft.model.TweetSchema
  */
 object Tables {
 
-  /** Test tables carry parquet TIMESTAMP(NANOS), which Spark 4 refuses by
-    * default. Read them as long nanos and convert to µs timestamps — the
-    * conversion must be integer division (ns epoch values exceed 2^53, a
-    * double round-trip would corrupt them). DuckDB truncates the same way
-    * when it reads ns into its µs TIMESTAMP, so both engines see identical
-    * values. */
-  private def reader(spark: SparkSession) = {
+  /** Every parquet relation opens here, its schema resolved on the
+    * DRIVER. `spark.read.parquet` infers the schema in a Spark job that
+    * reads one footer, the first data file's (`mergeSchema` off). The
+    * same rule runs here without a job: walk `path` in name order to the
+    * first non-empty data file, skipping `_`/`.` names as Spark's file
+    * index does (a store's empty first batch holds only `_SUCCESS`),
+    * read its footer without row groups, and take Spark's reading of it
+    * (`readSchemaFromFooter`): the schema Spark's writer stored under its
+    * metadata key, else the parquet schema converted under the session
+    * conf (the pyarrow- and DuckDB-written tables). Partition columns are
+    * still discovered from directory names, so the relation's schema and
+    * plans are the inferred ones.
+    *
+    * `nanosAsLong` is set before the converter reads the conf: test
+    * tables may carry TIMESTAMP(NANOS), which Spark 4 refuses by default.
+    * [[normalizeEventTs]] turns the long nanos into µs timestamps by
+    * integer division (ns epochs exceed 2^53, a double round-trip would
+    * corrupt them; DuckDB truncates ns to µs the same way).
+    *
+    * A path with no data file (missing, empty, or a compact's aside
+    * instant) falls back to `spark.read.parquet` and fails exactly as
+    * that does. A racing [[graft.stream.AggregateStore.compact]] can
+    * delete the chosen file before its footer is read: a driver-side
+    * FileNotFoundException, which [[graft.serve.Serve.retryingServe]]
+    * retries as the swap race. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read
+    val conf = spark.sparkContext.hadoopConfiguration
+    firstDataFile(path, conf).fold(spark.read.parquet(path)) { file =>
+      graft.stream.AggregateStore.compactProbe.foreach(_("listed"))
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(file, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(file.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+        .parquet(path)
+    }
+  }
+
+  private def firstDataFile(path: String,
+      conf: Configuration): Option[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def first(s: FileStatus): Option[FileStatus] =
+      if (!s.isDirectory) Some(s).filter(_.getLen > 0)
+      else
+        (try fs.listStatus(s.getPath).toSeq
+         catch { case _: FileNotFoundException => Nil })
+          .filterNot { c =>
+            val name = c.getPath.getName
+            name.startsWith("_") || name.startsWith(".")
+          }
+          .sortBy(_.getPath.getName).iterator.flatMap(first).nextOption()
+    (try Some(fs.getFileStatus(root))
+     catch { case _: FileNotFoundException => None }).flatMap(first)
   }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    reader(spark).parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
   /**
    * Scale-safe scan fan-out. Parquet scans parallelize by file/row-group;

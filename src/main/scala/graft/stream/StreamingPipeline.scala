@@ -1,15 +1,10 @@
 package graft.stream
 
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetFooterReader, ParquetReadSupport}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.agg.Windows
 import graft.ingest.Tables
@@ -128,16 +123,15 @@ object StreamingPipeline {
    */
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
     // The physical ts type varies by testdata generation (int64 nanos
-    // under nanosAsLong vs timestamp[us]/NTZ) — take the schema from a
-    // batch read of the same files and reuse Tables' type dispatch so
-    // batch and stream see byte-identical event times. When the source
-    // directory has no files YET — the drop-files-here layout starts the
-    // stream first — the batch read can't infer, so fall back to the
-    // static int64-nanos events schema (TESTDATA.md) instead of failing
-    // stream definition; normalizeEventTs dispatches on either type.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // vs timestamp[us]/NTZ) — take the schema the batch read of the same
+    // files resolves and reuse Tables' type dispatch so batch and stream
+    // see byte-identical event times. When the source directory has no
+    // files YET — the drop-files-here layout starts the stream first —
+    // there is no schema to resolve, so fall back to the static
+    // int64-nanos events schema (TESTDATA.md) instead of failing stream
+    // definition; normalizeEventTs dispatches on either type.
     val schema =
-      try spark.read.parquet(dir).schema
+      try Tables.parquet(spark, dir).schema
       catch { case _: org.apache.spark.sql.AnalysisException =>
         import org.apache.spark.sql.types._
         StructType(Seq(
@@ -169,14 +163,13 @@ object StreamingPipeline {
 
   /**
    * Generic parquet replay source: stream any of the batch-verified
-   * tables (documents, embeddings, …) with the schema taken from a batch
-   * read of the same path. Accepts a directory or a single file (same
-   * basePath normalization as [[eventStream]]).
+   * tables (documents, embeddings, …) with the schema the batch read of
+   * the same path resolves ([[Tables.parquet]]). Accepts a directory or
+   * a single file (same basePath normalization as [[eventStream]]).
    */
   def parquetStream(spark: SparkSession, path: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(path).schema
+    val schema = Tables.parquet(spark, path).schema
     val reader = spark.readStream.schema(schema)
     // One file per micro-batch models an increment-at-a-time replay
     // (each crawl drop arrives as its own file).
@@ -263,7 +256,7 @@ object StreamingPipeline {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val corpusBands =
       if (fs.exists(new org.apache.hadoop.fs.Path(bandsPath)))
-        spark.read.parquet(bandsPath)
+        Tables.parquet(spark, bandsPath)
           .filter(col("batch") =!= batchId)
           .select("doc_id", "band_id", "band_sig")
       else
@@ -273,7 +266,7 @@ object StreamingPipeline {
           graft.ops.Dedup.minhashSignatures(batch.limit(0)))
     graft.ops.Dedup.dedupeIncrement(corpusBands, batch)
       .write.mode("overwrite").parquet(s"$keptPath/batch=$batchId")
-    val kept = spark.read.parquet(s"$keptPath/batch=$batchId")
+    val kept = Tables.parquet(spark, s"$keptPath/batch=$batchId")
     graft.ops.Dedup.bandedSignatures(
       graft.ops.Dedup.minhashSignatures(kept))
       .write.mode("overwrite").parquet(s"$bandsPath/batch=$batchId")
@@ -353,8 +346,10 @@ object StreamingPipeline {
       outPath: String): DataStreamWriter[Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        perBatch(batch)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+        graft.ops.Reuse.scoped(batch.sparkSession) {
+          perBatch(batch)
+            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+        }
     }
 
   /** A [[partialsSink]] store as one relation. `batch` is dropped: it
@@ -732,8 +727,7 @@ object StreamingPipeline {
         n.stripPrefix("snap=").toLong }
       .filter(id => before.forall(id < _))
     if (snaps.isEmpty) None
-    else Some(spark.read.parquet(
-      f"$statePath/snap=${snaps.max}%09d"))
+    else Some(Tables.parquet(spark, f"$statePath/snap=${snaps.max}%09d"))
   }
 
   /** The derivation side of [[funnelStateSink]]: the batch funnel over
@@ -1037,8 +1031,10 @@ object StreamingPipeline {
           }
         }
         val buf = scala.collection.mutable.ArrayBuffer[Int]()
+        // held across batches: a sink's per-batch scope must not free it
         frames = raw.map { df =>
-          val m = graft.ops.Reuse.pin(df.localCheckpoint(true))
+          val m = graft.ops.Reuse.unscoped(
+            graft.ops.Reuse.pin(df.localCheckpoint(true)))
           org.apache.spark.sql.graftbridge.SqlBridge
             .checkpointRddId(m).foreach(buf += _)
           m
@@ -1628,25 +1624,10 @@ object AggregateStore {
       .parquet(s"$path/batch=$batchId")
   }
 
-  /** The store as one relation, with its schema resolved on the DRIVER.
-    * `spark.read.parquet` infers the schema in a Spark job that reads
-    * one footer (`mergeSchema` off). Spark's writer records the row
-    * schema in each part file's footer under
-    * `ParquetReadSupport.SPARK_METADATA_KEY`, so the same one-footer
-    * rule runs here without a job: walk the store to the first
-    * non-empty `part-*.parquet` (an empty first batch holds only
-    * `_SUCCESS`), read that footer, and pass its schema to the reader.
-    * Partition columns (`batch`, `window_date`) are still discovered
-    * from the directory names, so the relation's schema and plans are
-    * the inferred ones. A path with no such file (missing, empty, or a
-    * [[compact]]'s aside instant) falls back to `spark.read.parquet`
-    * and fails exactly as that does. A racing [[compact]] can delete
-    * the chosen file before its footer is read; that surfaces as a
-    * driver-side FileNotFoundException, which [[Serve.retryingServe]]
-    * treats as the swap race and retries. */
+  /** The store as one relation, its schema resolved on the driver
+    * from one data-file footer ([[Tables.parquet]]). */
   def read(spark: SparkSession, path: String): DataFrame =
-    footerSchema(spark, path).fold(spark.read.parquet(path))(
-      spark.read.schema(_).parquet(path))
+    Tables.parquet(spark, path)
 
   /** `df` through ONE partition when its pruned scan fits one Spark
     * read split, else `df` as is. The scan's selected files are priced
@@ -1666,38 +1647,6 @@ object AggregateStore {
         s.selectedPartitions.calculateTotalPartitionBytes
     }.sum
     if (bytes <= conf.filesMaxPartitionBytes) df.coalesce(1) else df
-  }
-
-  private def footerSchema(spark: SparkSession,
-      path: String): Option[StructType] = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    // Spark's file index skips `_`/`.`-prefixed names (_SUCCESS, .crc)
-    def listed(dir: Path): Seq[FileStatus] =
-      try fs.listStatus(dir).toSeq
-        .filterNot(s => s.getPath.getName.startsWith("_") ||
-          s.getPath.getName.startsWith("."))
-        .sortBy(_.getPath.getName)
-      catch { case _: java.io.FileNotFoundException => Nil }
-    def firstPart(dir: Path): Option[FileStatus] = {
-      val (dirs, files) = listed(dir).partition(_.isDirectory)
-      files.find { f =>
-        val name = f.getPath.getName
-        f.getLen > 0 && name.startsWith("part-") && name.endsWith(".parquet")
-      }.orElse(
-        dirs.iterator.flatMap(d => firstPart(d.getPath)).nextOption())
-    }
-    firstPart(root).flatMap { part =>
-      compactProbe.foreach(_("listed"))
-      val footer = ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(part, conf),
-        ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      Option(footer.getFileMetaData.getKeyValueMetaData
-          .get(ParquetReadSupport.SPARK_METADATA_KEY))
-        .map(DataType.fromJson).collect { case st: StructType => st }
-    }
   }
 
   /** Range read with PARTITION PRUNING: derive `window_date` bounds from
@@ -1766,10 +1715,11 @@ object AggregateStore {
     * invoked at the swap's two in-between states — "aside" (live dir
     * renamed to `_precompact`, nothing at the store path yet) and
     * "promoted" (compacted dir in place, `_precompact` not yet
-    * deleted) — and at the reader's "listed" state ([[read]] has
-    * chosen the part file whose footer gives the schema, and not yet
-    * read it), so the reader-vs-compaction consistency contract is
-    * testable DETERMINISTICALLY instead of by racing threads.
+    * deleted) — and at the reader's "listed" state ([[Tables.parquet]],
+    * under [[read]], has chosen the data file whose footer gives the
+    * schema, and not yet read it), so the reader-vs-compaction
+    * consistency contract is testable DETERMINISTICALLY instead of by
+    * racing threads.
     * Production pays one volatile read per state. */
   @volatile var compactProbe: Option[String => Unit] = None
 

@@ -1,9 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The settable surface of `src/main`: every environment variable and
@@ -28,12 +24,7 @@ class SettableSurfaceSpec extends AnyFunSuite {
     "graft.reuse.planlog",
     "graft.textrank.bcastMaxVerts")
 
-  private lazy val sources: Seq[(Path, String)] = {
-    val s = Files.walk(Paths.get("src/main/scala"))
-    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
-      .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
-    finally s.close()
-  }
+  private def sources = MainSources.all
 
   test("src/main reads exactly the listed environment variables, each " +
       "by a literal key") {

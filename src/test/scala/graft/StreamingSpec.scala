@@ -58,6 +58,26 @@ class StreamingSpec extends TestBase {
     out
   }
 
+  /** Runs `body` while a 5 ms poller holds every RDD persisted in the
+    * meantime, so the ContextCleaner (which unpersists an RDD once a GC
+    * finds it unreachable) cannot free a block a sink left behind before
+    * the caller checks. Returns `body`'s result and the held RDDs by id;
+    * keep the map referenced until the checks are done. */
+  private def holdingPersisted[A](body: => A)
+      : (A, java.util.concurrent.ConcurrentHashMap[Int, AnyRef]) = {
+    val held = new java.util.concurrent.ConcurrentHashMap[Int, AnyRef]()
+    val polling = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val poller = new Thread(() => while (polling.get) {
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
+        held.putIfAbsent(id, r) }
+      Thread.sleep(5)
+    })
+    poller.setDaemon(true)
+    poller.start()
+    val a = try body finally { polling.set(false); poller.join() }
+    (a, held)
+  }
+
   /** The batch reference of the live pipeline's `hashtags` family: the
     * per-hashtag hopping aggregate of the tweet lines at `path`, ranked
     * top-N per window. */
@@ -1178,28 +1198,15 @@ class StreamingSpec extends TestBase {
     val ckpt = Files.createTempDirectory("graft-curfree-ckpt").toString
     def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val before = persisted()
-    // Hold every RDD persisted during the stream, so the ContextCleaner
-    // (which unpersists an RDD once a GC finds it unreachable) cannot
-    // free a block the sink left behind before the check below.
-    val held = new java.util.concurrent.ConcurrentHashMap[Int, AnyRef]()
-    val polling = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val poller = new Thread(() => while (polling.get) {
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
-        held.putIfAbsent(id, r) }
-      Thread.sleep(5)
-    })
-    poller.setDaemon(true)
-    poller.start()
-    val q = StreamingPipeline.curationSink(
-        StreamingPipeline.parquetStream(spark, srcDir,
-          maxFilesPerTrigger = Some(1)),
-        embSnap, keepers, bv, bh, bits, out)
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    q.stop()
-    polling.set(false)
-    poller.join()
+    val (batches, held) = holdingPersisted {
+      val q = StreamingPipeline.curationSink(
+          StreamingPipeline.parquetStream(spark, srcDir,
+            maxFilesPerTrigger = Some(1)),
+          embSnap, keepers, bv, bh, bits, out)
+        .option("checkpointLocation", ckpt).start()
+      q.processAllAvailable()
+      try q.recentProgress.count(_.numInputRows > 0) finally q.stop()
+    }
     assert(batches == nBatches, s"expected $nBatches one-file batches")
     // what stays is the sink's one pinned copy of each artifact; every
     // stage checkpoint of every batch is gone
@@ -1217,6 +1224,32 @@ class StreamingSpec extends TestBase {
     import scala.jdk.CollectionConverters._
     val seen = held.keySet.asScala.toSet -- before
     assert(seen.size >= 4 + 4 * nBatches,
+      s"saw ${seen.size} RDDs persisted during the stream")
+  }
+
+  test("partialsSink frees each batch's checkpoints: persisted RDDs do " +
+      "not grow per batch, over 5 one-file batches") {
+    val docs = Tables.documents(spark, sf("sf0.001")).select("doc_id", "text")
+    graft.ops.Reuse.freeAll(spark)
+    val nBatches = 5
+    val srcDir =
+      Files.createTempDirectory("graft-partfree-src").toString + "/d"
+    docs.repartition(nBatches).write.parquet(srcDir)
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted()
+    // repetitionSurgery materializes its shingles with Reuse.shared
+    val (out, held) = holdingPersisted(runSink(srcDir)((s, o) =>
+      StreamingPipeline.partialsSink(s,
+        graft.ops.Dedup.repetitionSurgery(_), o)))
+    assert(new java.io.File(out).list().count(_.startsWith("batch=")) ==
+      nBatches, s"expected $nBatches one-file batches")
+    val grown = persisted() -- before
+    assert(grown.isEmpty,
+      s"persisted RDDs grew by ${grown.size} over $nBatches batches")
+    // non-vacuous: the poller saw a checkpoint of every batch
+    import scala.jdk.CollectionConverters._
+    val seen = held.keySet.asScala.toSet -- before
+    assert(seen.size >= nBatches,
       s"saw ${seen.size} RDDs persisted during the stream")
   }
 
