@@ -235,7 +235,7 @@ object Windows {
    * equi-joined on `uid` against the (user, t1, t_prev) survivor
    * relation. The survivor side is O(|users|) — corpus-proportional,
    * NOT constant-bounded — so it is deliberately NOT broadcast-hinted
-   * (the same boundary `dedupWeights`/`noveltySink` document): both
+   * (the same boundary `dedupWeights`/`noveltyScoresAgainst` document): both
    * sides hash-partition on `uid` and AQE downgrades to a broadcast
    * join at runtime only when the survivor side is actually small.
    * Events are scanned once per step with the event-type predicate

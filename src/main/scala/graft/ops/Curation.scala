@@ -180,7 +180,7 @@ object Curation {
    * these two stages are corpus-level REPORTS over whatever has
    * survived — in batch that is `snapshot(...).c5`; for the streaming
    * ingest sink it is the ACCUMULATED survivor store, read back by
-   * [[graft.stream.StreamingPipeline.curationMixPackFromState]] (both
+   * [[graft.stream.StreamingPipeline.partials]] (both
    * aggregates are algebraic over the survivor relation, so the fold
    * equals the batch rows over everything that has arrived, at any
    * batching — the partials-family contract).

@@ -284,7 +284,8 @@ object Dedup {
   /** The benchmark/eval suite's distinct shingle-hash membership set —
     * the small broadcast side of every decontamination probe. Computed
     * ONCE per eval-suite snapshot (offline in the streaming twin,
-    * [[graft.stream.StreamingPipeline.decontaminationSink]]) under the
+    * [[benchmarkOverlapAgainst]] under
+    * [[graft.stream.StreamingPipeline.partialsSink]]) under the
     * same cap and hashing as [[docShingleHashes]]. */
   def benchmarkShingles(bench: DataFrame, id: String = "doc_id",
       text: String = "text", n: Int = 3): DataFrame =
@@ -361,7 +362,10 @@ object Dedup {
 
   /** [[benchmarkOverlap]] against a precomputed [[benchmarkShingles]]
     * set — the reusable probe: the corpus scan never shuffles for the
-    * membership check (broadcast), only the two per-doc counts do. */
+    * membership check (broadcast), only the two per-doc counts do. The
+    * streaming twin (ext32) runs it per micro-batch: the eval suite is
+    * static and small, and a doc arrives whole in one row, so per-doc
+    * counts need no cross-batch state. */
   def benchmarkOverlapAgainst(corpus: DataFrame, benchH: DataFrame,
       id: String = "doc_id", text: String = "text", n: Int = 3,
       threshold: Double = 0.8): DataFrame = {
@@ -487,7 +491,10 @@ object Dedup {
     * shingle pass is per-doc (position-capped, corpus-independent), so
     * scoring any subset of the snapshot against the stored table equals
     * the batch operator's rows for that subset — the property the
-    * streaming twin rides. */
+    * streaming twin (ext69) rides. Unlike ext67's per-stratum
+    * thresholds the df side scales with the corpus, so it stays an
+    * h-keyed join (a stored parquet table at production scale), never a
+    * broadcast. */
   def noveltyScoresAgainst(doc: DataFrame, shingleDf: DataFrame,
       id: String = "doc_id", text: String = "text",
       n: Int = 3): DataFrame =
@@ -577,7 +584,10 @@ object Dedup {
     * ([[dupSharedHashes]] of the snapshot the docs belong to). The
     * positional shingle pass is per-doc, so scoring any subset of the
     * snapshot against the stored set equals the batch operator's rows
-    * for that subset — the stream-static property (ext69's pattern). */
+    * for that subset — the stream-static property (ext69's pattern).
+    * Sharing judged inside a stream would drift with arrival order, and
+    * the shared set is corpus-proportional: a keyed join, never a
+    * broadcast. */
   def dupSpanMassAgainst(doc: DataFrame, shared: DataFrame,
       id: String = "doc_id", text: String = "text",
       n: Int = 3): DataFrame =
@@ -719,7 +729,9 @@ object Dedup {
   /** [[dupSpanSurgery]] against a PRECOMPUTED keeper relation
     * ([[dupKeeperSpans]] of the snapshot the docs belong to) — the
     * per-doc scan is corpus-independent, so operating on any subset of
-    * the snapshot equals the batch operator's rows for that subset. */
+    * the snapshot equals the batch operator's rows for that subset (the
+    * ext96 streaming twin; a keeper judged inside a stream would depend
+    * on arrival order). */
   def dupSpanSurgeryAgainst(doc: DataFrame, keeperSpans: DataFrame,
       id: String = "doc_id", text: String = "text",
       n: Int = 3): DataFrame =
@@ -967,7 +979,11 @@ object Dedup {
     * pair-combos discipline: per-h fan-out is cap-bounded at
     * maxKeyFreq², so the explode is safe where LSH's unbounded
     * buckets would not be). Input is scanned once; the grouped
-    * relation (the two-consumer side) is what gets materialized. */
+    * relation (the two-consumer side) is what gets materialized. Over
+    * a [[graft.stream.StreamingPipeline.partials]] store of
+    * [[keyShinglePairs]] this is the ext68 twin: a pair two batches
+    * both contributed counts once, and the cap applies over everything
+    * that has arrived — identical to the batch operator on the union. */
   def keyOverlapFromPairs(sh: DataFrame, key: String = "source",
       maxKeyFreq: Int = 50): DataFrame = {
     val g = Reuse.shared(

@@ -128,8 +128,15 @@ object LabelAudit {
 
   /** Exact integer distance of every vector to its OWN label's centroid
     * from a prebuilt [[labelCentroids]] artifact — a stateless
-    * broadcast-join projection (the streaming twin applies it unchanged
-    * to arriving micro-batches). */
+    * broadcast-join projection, so a stream applies it unchanged to
+    * arriving labeled vectors (ext77's twin): the centroids are a
+    * corpus-snapshot artifact (updating them in-stream would rescore
+    * already-emitted vectors), and streamed distances equal the batch
+    * rows for any arrival order. The snapshot-level OUTLIER RANK
+    * (ext77's top-N per label) stays offline: a per-label rank over the
+    * corpus is not per-row decomposable, so a stream-side consumer
+    * thresholds the emitted distance instead (a stored per-label
+    * cutoff, the ext67 pattern). */
   def centroidDistances(emb: DataFrame, cents: DataFrame,
       id: String = "vec_id", vec: String = "embedding",
       label: String = "label"): DataFrame =

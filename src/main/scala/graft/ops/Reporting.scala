@@ -46,7 +46,11 @@ object Reporting {
 
   /**
    * ext64's dedup impact report from its two artifacts: the cluster
-   * summary ([[clusterStats]]) and a 1-row `n_total` doc count.
+   * summary ([[clusterStats]]) and a 1-row `n_total` doc count. The
+   * streaming twin folds `n_total` from the per-batch counts of a
+   * [[graft.stream.StreamingPipeline.partials]] store of
+   * [[cardPartials]]; the cluster summary is the build-once map's, a
+   * corpus-snapshot artifact.
    * `dup_mass_q` is the corpus ppm a min-per-cluster keeper removes.
    */
   def dupStats(cluster: DataFrame, total: DataFrame): DataFrame =

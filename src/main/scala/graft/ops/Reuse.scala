@@ -301,17 +301,6 @@ object Reuse {
     }
   }
 
-  /** Run `body` outside any [[scoped]] block: its [[shared]]/[[pin]]
-    * registrations go to the session registry, for materializations
-    * that outlive the block, such as the artifact versions a stream's
-    * [[graft.stream.StreamingPipeline.PinnedArtifacts]] holds across
-    * micro-batches. */
-  def unscoped[A](body: => A): A = {
-    val outer = scope.get
-    scope.remove()
-    try body finally scope.set(outer)
-  }
-
   private def free(spark: SparkSession, site: String, id: Int): Unit =
     graft.QueryRun.loudly(s"Reuse.$site(rdd $id)") {
       org.apache.spark.graftbridge.SparkBridge

@@ -300,8 +300,8 @@ object Sampling {
   /** The per-stratum acceptance-rate table of [[temperatureResample]] —
     * computed OFFLINE per corpus snapshot in production (recomputing
     * weights inside a stream would drift the rates with arrival order);
-    * `stream.StreamingPipeline.temperatureResampleStream` applies it to
-    * a live stream unchanged. */
+    * [[temperatureResampleAgainst]] applies it to a live stream
+    * unchanged. */
   def temperatureRates(df: DataFrame, targetDocs: Long,
       strata: Seq[String] = Seq("source")): DataFrame =
     mixtureWeights(df, strata)
@@ -323,9 +323,19 @@ object Sampling {
   def temperatureResample(df: DataFrame, id: Column, targetDocs: Long,
       strata: Seq[String] = Seq("source"),
       salt: String = "mix"): DataFrame =
-    acceptByRate(
-      df.join(broadcast(temperatureRates(df, targetDocs, strata)), strata),
-      id, salt)
+    temperatureResampleAgainst(df,
+      temperatureRates(df, targetDocs, strata), id, strata, salt)
+
+  /** [[temperatureResample]] against a precomputed [[temperatureRates]]
+    * table — the streaming twin (ext45): the rates are broadcast against
+    * the live stream and the portable-hash draw admits exactly the docs
+    * the batch operator would. Stateless, append-mode, no shuffle, so
+    * the streamed mix converges to the batch selection no matter how
+    * rows arrive. */
+  def temperatureResampleAgainst(df: DataFrame, rates: DataFrame,
+      id: Column, strata: Seq[String] = Seq("source"),
+      salt: String = "mix"): DataFrame =
+    acceptByRate(df.join(broadcast(rates), strata), id, salt)
 
   // ---- DSIR: data selection via importance resampling ------------------
 

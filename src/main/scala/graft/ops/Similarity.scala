@@ -884,7 +884,10 @@ object Similarity {
    * tiny); ONE corpus scan computes all |bench| cosines per vector and
    * the argmax folds map-side (min over (−cos, bench id) struct — no
    * window, no shuffle of the corpus beyond the aggregate). Exact
-   * int64 dots; the argmax tie-breaks (cos DESC, bench id ASC).
+   * int64 dots; the argmax tie-breaks (cos DESC, bench id ASC). Each
+   * row depends only on its vector and the fixed bench set, so the
+   * streaming twin (ext122's ingest side) flags each micro-batch with
+   * no cross-batch state.
    */
   def semanticDecontaminate(emb: DataFrame, bench: DataFrame,
       threshold: Double = NearDupThreshold, id: String = "vec_id",
@@ -1272,7 +1275,13 @@ object Similarity {
 
   /** PQ encoding: per (vector, subspace) the nearest codeword id —
     * the compressed corpus representation (M small ints per vector).
-    * Broadcast M×K codebook join + m-keyed argmin; one corpus scan. */
+    * Broadcast M×K codebook join + m-keyed argmin; one corpus scan.
+    * Per-vector and stateless given the codebooks, so it is also the
+    * ingest path of a PQ vector store (ext107's streaming twin): the
+    * codebooks are a per-snapshot build artifact (re-learning them
+    * in-stream would re-code already-emitted vectors), arriving vectors
+    * encode against them per micro-batch, and only M small ints per
+    * vector persist. */
   def pqCodes(emb: DataFrame, codebooks: DataFrame,
       id: String = "vec_id", vec: String = "embedding"): DataFrame =
     pqSub(emb, id, vec).join(broadcast(codebooks), "m")

@@ -448,10 +448,12 @@ object Sketches {
   /** The per-doc bloom-vs-exact probe: (id, distinct shingles, exact
     * member count, bloom-hit count) against a PRECOMPUTED membership
     * set + bit set — the relation the audit card aggregates, and what
-    * the streaming twin ([[graft.stream.StreamingPipeline
-    * .bloomProbeSink]]) scores per micro-batch (each doc arrives whole;
-    * both probe sides are static artifacts, so streamed rows equal the
-    * batch operator's at any batching). */
+    * the streaming twin (ext102, under
+    * [[graft.stream.StreamingPipeline.partialsSink]]) scores per
+    * micro-batch (each doc arrives whole; both probe sides are static
+    * artifacts, so streamed rows equal the batch operator's at any
+    * batching). At a stream's scale the bit set is the point: O(m) bits
+    * however many keys the suite grows to. */
   def bloomPerDoc(corpus: DataFrame, benchH: DataFrame, bits: DataFrame,
       id: String = "doc_id", text: String = "text", n: Int = 3,
       m: Long = BloomM, k: Int = BloomK): DataFrame = {

@@ -135,7 +135,8 @@ object TextOps {
   /** The corpus's hot-span hash set (df > maxDocFreq distinct docs) —
     * the small broadcast side of every boilerplate probe; computed ONCE
     * per corpus snapshot (offline in the streaming twin,
-    * [[graft.stream.StreamingPipeline.boilerplateSink]]). */
+    * [[boilerplateRemovalAgainst]] under
+    * [[graft.stream.StreamingPipeline.partialsSink]]). */
   def boilerplateSpans(doc: DataFrame, chunkTokens: Int = 16,
       maxDocFreq: Int = 1, id: String = "doc_id",
       text: String = "text"): DataFrame =
@@ -148,7 +149,11 @@ object TextOps {
       .select(col("h"))
 
   /** [[boilerplateRemoval]] against a precomputed [[boilerplateSpans]]
-    * set — the reusable probe (chunkTokens must match the set's). */
+    * set — the reusable probe (chunkTokens must match the set's). This
+    * is the streaming twin's per-batch form (ext59): boilerplate is a
+    * corpus-level property, so the set is computed offline per snapshot
+    * (recomputing df inside a stream would drift with arrival order),
+    * and each batch of docs is cleaned independently against it. */
   def boilerplateRemovalAgainst(doc: DataFrame, hotSpans: DataFrame,
       chunkTokens: Int = 16, id: String = "doc_id",
       text: String = "text"): DataFrame = {
@@ -1673,9 +1678,11 @@ object TextOps {
    * count, map-side combined, + a broadcast 1-row total; the tail is
    * corpus-proportional (Heaps' law: most of the vocab), so consumers
    * join it token-keyed — it is NEVER broadcast. Stored once per
-   * corpus snapshot; the streaming twin
-   * ([[graft.stream.StreamingPipeline.oovSink]]) reads it as its
-   * static side, exactly like ext69's shingle-df table.
+   * corpus snapshot; the streaming twin ([[oovRateAgainst]] under
+   * [[graft.stream.StreamingPipeline.partialsSink]]) reads it as its
+   * static side, exactly like ext69's shingle-df table — rarity judged
+   * inside a stream would drift with arrival order (every token is rare
+   * when it first appears).
    */
   def rareTokens(doc: DataFrame, denom: Long = 10,
       text: String = "text"): DataFrame =
@@ -1712,7 +1719,10 @@ object TextOps {
    * Scale shape: explode → ONE token-keyed left join against the rare
    * set → one doc-keyed aggregate. All int64. Docs whose every token
    * is unique corpus-wide score 1e6; `tokens` never yields an empty
-   * array for non-empty text, so n_toks ≥ 1 (no zero division).
+   * array for non-empty text, so n_toks ≥ 1 (no zero division). A
+   * doc's row depends only on its own tokens and the static set, so
+   * the streaming twin (ext80) scores each micro-batch against the
+   * stored set with no cross-batch state.
    */
   def oovRateAgainst(doc: DataFrame, rare: DataFrame,
       id: String = "doc_id", text: String = "text"): DataFrame =
@@ -2128,7 +2138,10 @@ object TextOps {
    * second spec law against [[bpeApplyCountsRelational]]). `nMerges`
    * bounds the replay (ranks beyond the table apply nothing). This is
    * what a stream runs per micro-batch against the broadcast table
-   * ([[graft.stream.StreamingPipeline.bpeEncodeSink]]).
+   * ([[graft.stream.StreamingPipeline.partialsSink]]; learning merges
+   * in-stream would pick them by arrival order, the ext111 boundary),
+   * so streamed per-word counts equal the batch encoder's at any
+   * batching.
    *
    * ONE distributed pass, regardless of table depth (r13 verdict: the
    * relational replay chained one Spark stage per merge rank — ~32k

@@ -1,6 +1,6 @@
 package graft.serve
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -36,26 +36,29 @@ object Serve {
       count("*").as("window_count"),
       sum(col("cnt")).as("total_tweets"))
 
+  /** The [start, end) predicate on `window_end` — the one range
+    * predicate of every serving read, here and in
+    * [[graft.stream.AggregateStore.readRange]]. */
+  def inRange(startEpoch: Long, endEpoch: Long): Column =
+    col("window_end") >= startEpoch && col("window_end") < endEpoch
+
   /** OP-37 `getcounts start end`: [start, end) time-range scan. */
   def rangeScan(store: DataFrame, startEpoch: Long, endEpoch: Long): DataFrame =
-    store
-      .filter(col("window_end") >= startEpoch && col("window_end") < endEpoch)
-      .orderBy(col("window_end"))
+    store.filter(inRange(startEpoch, endEpoch)).orderBy(col("window_end"))
 
   /** OP-38/39 `gettop{mentions,hashtags}string start end [entity]`:
     * range scan with optional entity restriction (the documented-intent
     * semantics). */
   def rangeScanEntity(
       store: DataFrame, startEpoch: Long, endEpoch: Long,
-      entity: Option[String]): DataFrame = {
-    val ranged = store
-      .filter(col("window_end") >= startEpoch && col("window_end") < endEpoch)
-    entity.fold(ranged)(e => ranged.filter(col("entity") === e))
+      entity: Option[String]): DataFrame =
+    entityFilter(store.filter(inRange(startEpoch, endEpoch)), entity)
       .orderBy(col("window_end"), col("entity"))
-  }
 
-  /** Optional entity restriction applied to an already-ranged frame
-    * (used by the REPL's partition-pruned read path). */
+  /** The optional entity restriction of OP-38/39, applied to an
+    * already-ranged frame: the one entity predicate of every serving
+    * read, here, in the REPL and in
+    * [[graft.stream.AggregateStore.readRangeEntity]]. */
   def entityFilter(ranged: DataFrame, entity: Option[String]): DataFrame =
     entity.fold(ranged)(e => ranged.filter(col("entity") === e))
 

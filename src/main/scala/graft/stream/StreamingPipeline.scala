@@ -232,10 +232,11 @@ object StreamingPipeline {
    *
    * Materialization note: survivors are written FIRST and their band
    * rows computed from the written files, so the signature pass reads a
-   * stable store, not a recomputation of the dedup plan. Shared-relation
-   * checkpoint blocks created inside the batch are freed by GC +
-   * ContextCleaner (no freeAll here: other queries on the session may
-   * have live materializations).
+   * stable store, not a recomputation of the dedup plan. Each batch runs
+   * inside [[graft.ops.Reuse.scoped]], so the checkpoints its operators
+   * make through `Reuse.shared` (the increment's band rows) are freed
+   * when the batch returns, not left for a `freeAll` the running stream
+   * never reaches.
    */
   def incrementalDedupSink(docs: DataFrame, bandsPath: String,
       keptPath: String): DataStreamWriter[Row] =
@@ -254,39 +255,25 @@ object StreamingPipeline {
     val spark = batch.sparkSession
     val fs = new org.apache.hadoop.fs.Path(bandsPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val corpusBands =
-      if (fs.exists(new org.apache.hadoop.fs.Path(bandsPath)))
-        Tables.parquet(spark, bandsPath)
-          .filter(col("batch") =!= batchId)
-          .select("doc_id", "band_id", "band_sig")
-      else
-        // Plan-only empty relation with bandedSignatures' exact
-        // schema (no data flows through the limit-0 aggregates).
-        graft.ops.Dedup.bandedSignatures(
-          graft.ops.Dedup.minhashSignatures(batch.limit(0)))
-    graft.ops.Dedup.dedupeIncrement(corpusBands, batch)
-      .write.mode("overwrite").parquet(s"$keptPath/batch=$batchId")
-    val kept = Tables.parquet(spark, s"$keptPath/batch=$batchId")
-    graft.ops.Dedup.bandedSignatures(
-      graft.ops.Dedup.minhashSignatures(kept))
-      .write.mode("overwrite").parquet(s"$bandsPath/batch=$batchId")
+    graft.ops.Reuse.scoped(spark) {
+      val corpusBands =
+        if (fs.exists(new org.apache.hadoop.fs.Path(bandsPath)))
+          versions(spark, bandsPath)
+            .filter(col("_ver") =!= batchId)
+            .select("doc_id", "band_id", "band_sig")
+        else
+          // Plan-only empty relation with bandedSignatures' exact
+          // schema (no data flows through the limit-0 aggregates).
+          graft.ops.Dedup.bandedSignatures(
+            graft.ops.Dedup.minhashSignatures(batch.limit(0)))
+      graft.ops.Dedup.dedupeIncrement(corpusBands, batch)
+        .write.mode("overwrite").parquet(s"$keptPath/batch=$batchId")
+      val kept = Tables.parquet(spark, s"$keptPath/batch=$batchId")
+      graft.ops.Dedup.bandedSignatures(
+        graft.ops.Dedup.minhashSignatures(kept))
+        .write.mode("overwrite").parquet(s"$bandsPath/batch=$batchId")
+    }
   }
-
-  /**
-   * Streaming twin of `Sampling.temperatureResample` (ext45): mixture
-   * rates are computed OFFLINE per corpus snapshot
-   * (`Sampling.temperatureRates` over the batch table — recomputing
-   * weights inside the stream would drift acceptance with arrival
-   * order), broadcast against the live stream, and the portable-hash
-   * draw admits exactly the docs the batch operator would — stateless,
-   * append-mode, no shuffle, so the streamed corpus mix converges to
-   * the batch selection no matter how rows arrive.
-   */
-  def temperatureResampleStream(docs: DataFrame, rates: DataFrame,
-      id: Column, strata: Seq[String],
-      salt: String = "mix"): DataFrame =
-    graft.ops.Sampling.acceptByRate(
-      docs.join(broadcast(rates), strata), id, salt)
 
   /**
    * Streaming twin of the quantile-threshold curation (ext67): per-lang
@@ -309,24 +296,6 @@ object StreamingPipeline {
       .filter(col("quality_score") >= col("p50"))
 
   /**
-   * Streaming twin of the label-centroid scoring behind ext77: the
-   * per-label centroid table is the offline artifact
-   * (`LabelAudit.labelCentroids`, a corpus-snapshot property like
-   * ext67's thresholds — updating centroids inside the stream would
-   * rescore already-emitted vectors), broadcast against arriving
-   * labeled vectors; each is scored with the same exact-integer
-   * distance projection. Stateless, append-mode, no shuffle — streamed
-   * distances equal the batch operator's for any arrival order. The
-   * snapshot-level OUTLIER RANK (ext77's top-N per label) stays
-   * offline by construction: a per-label rank over the full corpus is
-   * not per-row decomposable; the stream-side consumer thresholds the
-   * emitted distance instead (e.g. against a stored per-label cutoff,
-   * the ext67 pattern).
-   */
-  def centroidScoreStream(emb: DataFrame, centroids: DataFrame): DataFrame =
-    graft.ops.LabelAudit.centroidDistances(emb, centroids)
-
-  /**
    * The one writer of the batch-keyed twin stores: each micro-batch
    * writes `perBatch(batch)` to `<outPath>/batch=<id>` in OVERWRITE
    * mode, so a batch replayed after a crash rewrites its own directory
@@ -339,18 +308,98 @@ object StreamingPipeline {
    * over a store written by `partialsSink(docs,
    * Reporting.driftPartials(_, a, s), out)`. The folds sum duplicate
    * keys BEFORE deriving any column, so the fold equals the batch
-   * operator at any batching. A twin gated on a static artifact pins
-   * the artifact once and closes over it in `perBatch`.
+   * operator at any batching. Each batch is built inside
+   * [[graft.ops.Reuse.scoped]], so the checkpoints `perBatch` makes
+   * through `Reuse.shared` are freed with the batch.
+   *
+   * A twin gated on offline snapshot artifacts (a benchmark shingle
+   * set, a codebook, a merge table, an index) is the overload below over
+   * the operator's `…Against` form, e.g. `partialsSink(docs,
+   * () => ("static", Seq(benchH)),
+   * (b, a) => Dedup.benchmarkOverlapAgainst(b, a.head), out)`.
    */
   def partialsSink(docs: DataFrame, perBatch: DataFrame => DataFrame,
       outPath: String): DataStreamWriter[Row] =
+    partialsSink(docs, () => ("none", Nil),
+      (batch, _) => perBatch(batch), outPath)
+
+  /**
+   * [[partialsSink]] with the artifact version seam every long-running
+   * serving or ingest stream needs: eval suites rotate, ANN indexes
+   * rebuild and BPE vocabularies refresh, and none of that should need a
+   * restart. `artifacts` returns `(version, frames)`; it is consulted
+   * once per micro-batch on the driver, BEFORE the batch's
+   * `Reuse.scoped` block, and `perBatch(batch, frames)` runs against the
+   * frames [[PinnedArtifacts]] holds for that version. Consistency
+   * model: one batch is processed end-to-end against exactly the
+   * snapshot current at its start; a rotation takes effect at the next
+   * batch boundary, never mid-batch. A fixed snapshot is a provider
+   * with one constant version.
+   */
+  def partialsSink(docs: DataFrame,
+      artifacts: () => (String, Seq[DataFrame]),
+      perBatch: (DataFrame, Seq[DataFrame]) => DataFrame,
+      outPath: String): DataStreamWriter[Row] = {
+    val pinned = new PinnedArtifacts(artifacts)
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.ops.Reuse.scoped(batch.sparkSession) {
-          perBatch(batch)
+        val spark = batch.sparkSession
+        val frames = pinned.resolve(spark)
+        graft.ops.Reuse.scoped(spark) {
+          perBatch(batch, frames)
             .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
         }
     }
+  }
+
+  /**
+   * The artifact pin of [[partialsSink]]. `resolve` runs once per
+   * micro-batch on the driver (batches of one query are sequential, so
+   * plain vars are safe): an unchanged version returns the frames it
+   * already materialized, at no cost; a changed version frees the
+   * superseded checkpoint blocks at once, then `localCheckpoint`s the
+   * new set, so every batch probes blocks, never the artifact's plan.
+   *
+   * Pin policy: each version is registered with
+   * [[graft.ops.Reuse.pin]] for `Reuse.freeAll`, whose contract is to
+   * run only BETWEEN queries. A live stream is a query, so the
+   * `freeAll` after its `stop()` releases the final version too. The
+   * pin is taken outside the batch's `Reuse.scoped` block, which would
+   * otherwise free it with the first batch.
+   *
+   * Restart interaction: after a checkpoint recovery, a REPLAYED batch
+   * is re-processed against the snapshot current at replay time, not
+   * the (unrecorded) one it originally saw — and because the writer is
+   * batch-keyed and idempotent, the replay OVERWRITES the old batch's
+   * judgments with the current snapshot's. That is the consistency a
+   * rotation wants (newest eval suite wins); a pipeline needing bitwise
+   * replay stability would persist the version alongside each batch dir
+   * and re-resolve it — not offered here because no reference or
+   * extension consumer needs it.
+   */
+  private final class PinnedArtifacts(
+      provider: () => (String, Seq[DataFrame])) {
+    private var version: String = null
+    private var frames: Seq[DataFrame] = Nil
+    private var ids: Seq[Int] = Nil
+
+    def resolve(spark: SparkSession): Seq[DataFrame] = {
+      val (v, raw) = provider()
+      if (v != version) {
+        ids.foreach { id =>
+          graft.QueryRun.loudly(s"PinnedArtifacts.resolve(rdd $id)") {
+            org.apache.spark.graftbridge.SparkBridge
+              .unpersistRdd(spark.sparkContext, id)
+          }
+        }
+        frames = raw.map(df => graft.ops.Reuse.pin(df.localCheckpoint(true)))
+        ids = frames.flatMap(
+          org.apache.spark.sql.graftbridge.SqlBridge.checkpointRddId)
+        version = v
+      }
+      frames
+    }
+  }
 
   /** A [[partialsSink]] store as one relation. `batch` is dropped: it
     * is replay keying, not a stratum, and the `…FromCounts` folds infer
@@ -368,247 +417,46 @@ object StreamingPipeline {
     AggregateStore.read(spark, path)
       .withColumn("_ver", col("batch").cast("long")).drop("batch")
 
-  /**
-   * Streaming twin of `Dedup.benchmarkOverlap` (ext32): benchmark
-   * decontamination as a broadcast-probe foreachBatch sink. The eval
-   * suite is static and small, so its shingle membership set is computed
-   * ONCE offline (`Dedup.benchmarkShingles`) and broadcast into every
-   * micro-batch's probe; each batch of crawled docs scores independently
-   * (a doc arrives whole in one row, so per-doc counts need no
-   * cross-batch state) — the corpus never shuffles for the membership
-   * check, exactly the batch operator's scale shape. foreachBatch with
-   * the batch-keyed overwrite layout for crash-replay idempotency, like
-   * [[incrementalDedupSink]].
-   */
-  def decontaminationSink(docs: DataFrame, benchShingles: DataFrame,
-      outPath: String): DataStreamWriter[Row] = {
-    // Materialized once for the sink's lifetime (NOT Reuse-pinned: an
-    // unrelated freeAll must not drop a live stream's broadcast side);
-    // every micro-batch probes the checkpoint blocks, never the plan.
-    val benchH = benchShingles.localCheckpoint(true)
-    partialsSink(docs,
-      graft.ops.Dedup.benchmarkOverlapAgainst(_, benchH), outPath)
-  }
-
-  /**
-   * Streaming twin of `TextOps.boilerplateRemoval` (ext59): the hot-span
-   * set is computed ONCE offline from the corpus snapshot
-   * (`TextOps.boilerplateSpans` — boilerplate is a corpus-level
-   * property; recomputing df inside the stream would drift with arrival
-   * order) and broadcast into every micro-batch's probe; each batch of
-   * docs is cleaned independently. Stateless foreachBatch, idempotent
-   * batch-keyed layout — the same offline-set/online-probe split as
-   * [[decontaminationSink]].
-   */
-  def boilerplateSink(docs: DataFrame, hotSpans: DataFrame,
-      outPath: String, chunkTokens: Int = 16): DataStreamWriter[Row] = {
-    val hot = hotSpans.localCheckpoint(true)
-    partialsSink(docs, graft.ops.TextOps.boilerplateRemovalAgainst(
-      _, hot, chunkTokens), outPath)
-  }
-
-  /**
-   * Streaming twin of `Dedup.noveltyScores` (ext69): per-doc novelty is
-   * a corpus-SNAPSHOT property, so the shingle document-frequency table
-   * is the offline artifact (`Dedup.noveltyShingleDf`, stored once per
-   * corpus generation) and each arriving micro-batch scores its docs
-   * against it — one stream-static equi-join on the shingle hash plus
-   * one doc-keyed aggregate, no cross-batch state (a doc arrives whole,
-   * so its score depends only on the static table; streamed rows equal
-   * the batch operator's for any arrival order or batching). Unlike
-   * ext67's per-stratum thresholds the df side scales with the corpus —
-   * it stays an h-keyed join (at production scale a stored parquet
-   * table), never a broadcast. Stateless foreachBatch, idempotent
-   * batch-keyed layout like [[boilerplateSink]].
-   */
-  def noveltySink(docs: DataFrame, shingleDf: DataFrame,
-      outPath: String): DataStreamWriter[Row] = {
-    val df = shingleDf.localCheckpoint(true)
-    partialsSink(docs, graft.ops.Dedup.noveltyScoresAgainst(_, df), outPath)
-  }
-
-  /**
-   * Streaming twin of `TextOps.oovRate` (ext80): the rare-token set is
-   * a corpus-SNAPSHOT artifact (`TextOps.rareTokens`, stored once per
-   * generation — rarity judged inside a stream would drift with
-   * arrival order: every token is rare when it first appears), and
-   * each micro-batch scores its docs against it — one stream-static
-   * token-keyed join + one doc-keyed aggregate, no cross-batch state,
-   * so streamed rows equal the batch operator's for any batching.
-   * Like ext69's df table (and unlike ext67's tiny thresholds) the
-   * rare set is corpus-proportional — it stays a keyed join, never a
-   * broadcast. Stateless foreachBatch, idempotent batch-keyed layout.
-   */
-  def oovSink(docs: DataFrame, rareTokens: DataFrame,
-      outPath: String): DataStreamWriter[Row] = {
-    val rare = rareTokens.localCheckpoint(true)
-    partialsSink(docs, graft.ops.TextOps.oovRateAgainst(_, rare), outPath)
-  }
-
-  /**
-   * Streaming twin of the Bloom decontamination probe (ext102): the
-   * benchmark membership set AND its Bloom bit set are offline
-   * artifacts (the eval suite is static — [[decontaminationSink]]'s
-   * boundary), broadcast into every micro-batch's probe; each batch of
-   * docs scores independently (a doc arrives whole, both probe sides
-   * are static), so streamed per-doc rows equal the batch operator's
-   * at any batching — and at a stream's scale the bits artifact is the
-   * point: O(m) bits regardless of how many keys the suite grows to.
-   * Stateless foreachBatch, idempotent batch-keyed layout.
-   */
-  def bloomProbeSink(docs: DataFrame, benchShingles: DataFrame,
-      outPath: String): DataStreamWriter[Row] = {
-    val benchH = benchShingles.localCheckpoint(true)
-    val bits = graft.ops.Sketches.bloomBits(benchH).localCheckpoint(true)
-    partialsSink(docs,
-      graft.ops.Sketches.bloomPerDoc(_, benchH, bits), outPath)
-  }
-
-  /**
-   * Streaming PQ encoder (ext107): codebooks are a per-snapshot BUILD
-   * artifact (`Similarity.pqCodebooks`, stored once per corpus
-   * generation — re-learning them in-stream would re-code already-
-   * emitted vectors, the ext77 centroid boundary); arriving vectors
-   * encode against the broadcast M×K codebook — one stateless argmin
-   * per (vector, subspace), no cross-batch state, so streamed codes
-   * equal `Similarity.pqCodes` at any batching. This is the production
-   * ingest path of a PQ vector store: floats are read once on arrival,
-   * only M small ints per vector persist.
-   */
-  def pqEncodeSink(vecs: DataFrame, codebooks: DataFrame,
-      outPath: String): DataStreamWriter[Row] = {
-    val cb = codebooks.localCheckpoint(true)
-    partialsSink(vecs, graft.ops.Similarity.pqCodes(_, cb), outPath)
-  }
-
-  /**
-   * Streaming maximal-duplicated-span extraction (ext125's ingest
-   * side): arriving docs score against the STORED shared-hash
-   * artifact (`Dedup.dupSharedHashes` of the corpus snapshot — the
-   * dupSpanMassAgainst/bloomProbeSink static-side pattern); the
-   * islands computation is doc-local, so streamed spans equal
-   * `Dedup.dupSpans` batch rows for the same docs at any batching.
-   */
-  def dupSpansSink(docs: DataFrame, shared: DataFrame,
-      outPath: String): DataStreamWriter[Row] = {
-    val sh = shared.localCheckpoint(true)
-    partialsSink(docs, graft.ops.Dedup.dupSpansAgainst(_, sh), outPath)
-  }
-
-  /**
-   * Streaming semantic decontamination (ext122's ingest side): every
-   * arriving vector is scored against the broadcast benchmark set —
-   * the embedding sibling of [[bloomProbeSink]]'s membership probe.
-   * Stateless per batch (the bench set is a fixed offline artifact),
-   * so the streamed flags equal `Similarity.semanticDecontaminate`
-   * at any batching.
-   */
-  def semanticDecontaminateSink(vecs: DataFrame, bench: DataFrame,
-      outPath: String): DataStreamWriter[Row] = {
-    val pinned = new PinnedArtifacts(() => ("static", Seq(bench)))
-    partialsSink(vecs, batch => {
-      val Seq(b) = pinned.resolve(batch.sparkSession)
-      graft.ops.Similarity.semanticDecontaminate(batch, b)
-    }, outPath)
-  }
-
-  /**
-   * Streaming prototype GATE (ext119's ingest side): arriving vectors
-   * are assigned to their nearest STORED bucket centroid and gated
-   * against the bucket's STORED keep boundary
-   * (`Similarity.prototypeGate` — both artifacts learned offline per
-   * corpus snapshot; re-ranking in-stream would shift every percentile
-   * with arrival order, ext116's rationale). Stateless per batch,
-   * broadcast artifacts, idempotent batch-keyed layout — the ext67
-   * stored-threshold pattern applied in embedding space.
-   */
-  def prototypeGateSink(vecs: DataFrame, cents: DataFrame,
-      thresholds: DataFrame, keep: String,
-      outPath: String): DataStreamWriter[Row] = {
-    val pinned = new PinnedArtifacts(() => ("static", Seq(cents, thresholds)))
-    partialsSink(vecs, batch => {
-      val Seq(c, t) = pinned.resolve(batch.sparkSession)
-      graft.ops.Similarity.prototypeGate(batch, c, t, keep)
-    }, outPath)
-  }
-
-  /**
-   * Streaming ANN retrieval over the STORED IVF-PQ index (r9 verdict
-   * item 2) — the serving path production actually runs: the index
-   * artifacts (coarse centroids, PQ codebooks, bucket-tagged codes)
-   * are built ONCE per corpus snapshot and every arriving QUERY
-   * searches them (`Similarity.ivfPqSearch`): probe-assign against
-   * the broadcast centroids, ADC over the probed buckets' codes,
-   * exact rerank of the bounded candidate pool against the corpus
-   * floats via a keyed join. Stateless per batch — no artifact is
-   * touched by a query, so streamed top-k equals the batch search at
-   * any batching, and for corpus-member queries equals `ivfPqTopK` on
-   * the same snapshot bit-for-bit. Idempotent batch-keyed layout.
-   */
-  def ivfPqSearchSink(queries: DataFrame, cents: DataFrame,
-      codebooks: DataFrame, coded: DataFrame, corpus: DataFrame,
-      k: Int, probes: Int = 2, candidates: Int = 20,
-      outPath: String = ""): DataStreamWriter[Row] =
-    ivfPqSearchSinkVersioned(queries,
-      () => ("static", IvfPqIndex(cents, codebooks, coded, corpus)),
-      k, probes, candidates, outPath)
-
-  /** One version of the stored IVF-PQ index [[ivfPqSearchSinkVersioned]]
+  /** One version of the stored IVF-PQ index [[ivfPqSearchSink]]
     * serves: the three broadcast-sized artifacts plus the corpus floats
     * the exact-rerank join scans. */
   final case class IvfPqIndex(cents: DataFrame, codebooks: DataFrame,
       coded: DataFrame, corpus: DataFrame)
 
   /**
-   * [[ivfPqSearchSink]] with the [[PinnedArtifacts]] version seam: a
-   * production retrieval stream serves for weeks while the index is
-   * rebuilt offline as the corpus grows — it must pick up the new
-   * snapshot without a restart. `index` is consulted once per
-   * micro-batch; per-batch pinning means every query of one batch
-   * searches ONE coherent index version (centroids, codebooks and
-   * codes can never mix across rebuilds mid-batch — mixed versions
-   * would silently mis-decode every ADC distance). The corpus floats
-   * are deliberately NOT pinned: the rerank side is a stored table the
-   * keyed join scans per batch (at index scale it has no business in
-   * the block manager); only the broadcast-sized artifacts pin.
+   * Streaming ANN retrieval over the STORED IVF-PQ index — the serving
+   * path production actually runs: the index artifacts (coarse
+   * centroids, PQ codebooks, bucket-tagged codes) are built ONCE per
+   * corpus snapshot and every arriving QUERY searches them
+   * (`Similarity.ivfPqSearch`). No artifact is touched by a query, so
+   * streamed top-k equals the batch search at any batching, and for
+   * corpus-member queries equals `ivfPqTopK` on the same snapshot
+   * bit-for-bit. `index` is [[partialsSink]]'s version seam: an index
+   * rebuilt offline as the corpus grows is picked up at the next batch
+   * boundary, and every query of one batch searches ONE coherent
+   * version (centroids, codebooks and codes can never mix across
+   * rebuilds mid-batch — mixed versions would silently mis-decode every
+   * ADC distance). The corpus floats are deliberately NOT pinned: the
+   * rerank side is a stored table the keyed join scans per batch (at
+   * index scale it has no business in the block manager); only the
+   * broadcast-sized artifacts pin.
    */
-  def ivfPqSearchSinkVersioned(queries: DataFrame,
+  def ivfPqSearchSink(queries: DataFrame,
       index: () => (String, IvfPqIndex), k: Int, probes: Int = 2,
-      candidates: Int = 20, outPath: String = ""): DataStreamWriter[Row] = {
-    // resolve() invokes this provider once per batch; the closure var
+      candidates: Int = 20, outPath: String): DataStreamWriter[Row] = {
+    // partialsSink invokes the provider once per batch; the closure var
     // carries the same version's corpus to the rerank join (driver-side,
     // batches sequential).
     var corpus: DataFrame = null
-    val pinned = new PinnedArtifacts(() => {
-      val (v, ix) = index()
-      corpus = ix.corpus
-      (v, Seq(ix.cents, ix.codebooks, ix.coded))
-    })
-    partialsSink(queries, batch => {
-      val Seq(ce, cb, cd) = pinned.resolve(batch.sparkSession)
-      graft.ops.Similarity.ivfPqSearch(batch, ce, cb, cd, corpus,
-        k, probes, candidates)
-    }, outPath)
-  }
-
-  /**
-   * Streaming BPE encoder (ext111/ext112's serving path): the merge
-   * table is a per-snapshot LEARN artifact (`TextOps.bpeMerges` —
-   * learning in-stream would pick merges by arrival order, the ext111
-   * boundary); arriving docs tokenize against the broadcast table by
-   * replaying the merges in rank order over each batch's word states
-   * (`TextOps.bpeApplyCounts` — no counting, no argmax, per-batch
-   * stateless). Streamed per-word segment counts equal the batch
-   * encoder's on the same docs at any batching. Idempotent
-   * batch-keyed layout.
-   */
-  def bpeEncodeSink(docs: DataFrame, merges: DataFrame, nMerges: Int,
-      outPath: String): DataStreamWriter[Row] = {
-    val pinned = new PinnedArtifacts(() => ("static", Seq(merges)))
-    partialsSink(docs, batch => {
-      val Seq(table) = pinned.resolve(batch.sparkSession)
-      graft.ops.TextOps.bpeApplyCounts(batch, table, nMerges)
-    }, outPath)
+    partialsSink(queries, () => {
+        val (v, ix) = index()
+        corpus = ix.corpus
+        (v, Seq(ix.cents, ix.codebooks, ix.coded))
+      }, (batch, frames) => {
+        val Seq(ce, cb, cd) = frames
+        graft.ops.Similarity.ivfPqSearch(batch, ce, cb, cd, corpus,
+          k, probes, candidates)
+      }, outPath)
   }
 
   /**
@@ -902,39 +750,10 @@ object StreamingPipeline {
       biOf(ind), uniOf(ind), biOf(gen), uniOf(gen), minCount)
   }
 
-  /** Streaming twin of the duplicated-span mass score (ext91): the
-    * shared-shingle-hash set is a per-SNAPSHOT artifact
-    * ([[graft.ops.Dedup.dupSharedHashes]], stored once per corpus
-    * generation — sharing judged inside a stream would drift with
-    * arrival order, ext69/ext80's rationale), and each micro-batch
-    * scores its docs against it: a stream-static h-keyed join + a
-    * doc-keyed coverage aggregate, no cross-batch state, so streamed
-    * rows equal the batch operator's for any batching. The shared set
-    * is corpus-proportional — a keyed join, never a broadcast. */
-  def dupSpanSink(docs: DataFrame, sharedHashes: DataFrame,
-      outPath: String): DataStreamWriter[Row] = {
-    val shared = sharedHashes.localCheckpoint(true)
-    partialsSink(docs, graft.ops.Dedup.dupSpanMassAgainst(_, shared), outPath)
-  }
-
-  /** Streaming twin of span-level dedup surgery (ext96): arriving docs
-    * are cut against the stored per-snapshot `(h, keeper_id)` artifact
-    * ([[graft.ops.Dedup.dupKeeperSpans]] — same snapshot boundary as
-    * [[dupSpanSink]]'s shared set; keeper judged inside a stream would
-    * depend on arrival order). Per-doc cut + reassembly is
-    * corpus-independent, so streamed rows equal the batch operator's
-    * at any batching. */
-  def dupSpanSurgerySink(docs: DataFrame, keeperSpans: DataFrame,
-      outPath: String): DataStreamWriter[Row] = {
-    val keepers = keeperSpans.localCheckpoint(true)
-    partialsSink(docs,
-      graft.ops.Dedup.dupSpanSurgeryAgainst(_, keepers), outPath)
-  }
-
   /**
-   * Composed streaming CURATION sink (r10 verdict item 2 — ext126's
-   * ingest twin, the production path for a continuously-crawled
-   * corpus): ONE foreachBatch chains every pipeline stage's stateless
+   * Composed streaming CURATION sink (ext126's ingest twin, the
+   * production path for a continuously-crawled corpus): ONE
+   * [[partialsSink]] batch chains every pipeline stage's stateless
    * streaming form over each arriving micro-batch of
    * `(doc_id, text, source)` docs —
    *
@@ -962,187 +781,62 @@ object StreamingPipeline {
    * pipeline's bloom-stage survivors (`Curation.snapshot(...).c5`) on
    * the same snapshot at ANY batching (StreamingSpec twin). The
    * mixture/pack stages are corpus-level REPORTS, not per-doc
-   * filters — they fold from the accumulated survivors exactly like
-   * the partials family (ext78/82/84), not per batch here.
+   * filters — they fold from the accumulated survivors
+   * ([[graft.ops.Curation.mixPackRows]] over [[partials]]), not per
+   * batch here.
    *
-   * Each intermediate stage is materialized eagerly per batch
-   * (the pipelineCard sum-of-prefixes lesson: two-plus consumers per
-   * stage) and its blocks are freed before the batch returns, with
-   * those its operators make through `Reuse.shared`
-   * ([[graft.ops.Reuse.scoped]]).
-   *
-   * This fixed-artifact overload pins ONE snapshot for the stream's
-   * whole life; a production stream that must pick up a refreshed
-   * eval suite without restart uses [[curationSinkVersioned]].
+   * `artifacts` is [[partialsSink]]'s version seam: a refreshed eval
+   * suite is picked up at the next batch boundary, so the five stages
+   * of one batch can never gate against two different eval suites.
+   * Each intermediate stage is materialized eagerly per batch (the
+   * pipelineCard sum-of-prefixes lesson: two-plus consumers per stage)
+   * and its blocks are freed before the batch returns, with those its
+   * operators make through `Reuse.shared` ([[graft.ops.Reuse.scoped]]).
    */
   def curationSink(docs: DataFrame, embs: DataFrame,
-      keeperSpans: DataFrame, benchVecs: DataFrame,
-      benchShingles: DataFrame, bloomBits: DataFrame,
+      artifacts: () => (String, CurationArtifacts),
       outPath: String, redactPii: Boolean = false): DataStreamWriter[Row] =
-    curationSinkVersioned(docs, embs,
-      () => ("static", CurationArtifacts(
-        keeperSpans, benchVecs, benchShingles, bloomBits)),
-      outPath, redactPii)
+    partialsSink(docs, () => {
+        val (v, a) = artifacts()
+        (v, Seq(a.keeperSpans, a.benchVecs, a.benchShingles, a.bloomBits))
+      }, (batch, frames) => {
+        val Seq(keepers, bv, bh, bits) = frames
+        def mat(df: DataFrame): DataFrame =
+          graft.ops.Reuse.pin(df.localCheckpoint(true))
+        def resurface(surg: DataFrame, prev: DataFrame): DataFrame =
+          mat(surg.join(prev.select("doc_id", "source"), "doc_id")
+            .select(col("doc_id"), col("clean_text").as("text"),
+              col("source")))
+        val c1 = mat(graft.ops.TextOps.gopherRules(batch)
+          .filter(col("keep") === 1)
+          .select("doc_id", "text", "source"))
+        val c2 = resurface(graft.ops.Dedup.repetitionSurgery(c1), c1)
+        val c3 = resurface(
+          graft.ops.Dedup.dupSpanSurgeryAgainst(c2, keepers), c2)
+        val semFlagged = graft.ops.Similarity.semanticDecontaminate(
+            embs.join(c3.select(col("doc_id").as("vec_id")), "vec_id"),
+            bv)
+          .filter(col("contaminated") === 1L)
+          .select(col("vec_id").as("doc_id"))
+        val c4 = mat(c3.join(semFlagged, Seq("doc_id"), "left_anti"))
+        val bloomFlagged = graft.ops.Sketches.bloomPerDoc(c4, bh, bits)
+          .filter(col("n_bloom").cast("double") /
+            col("n_sh").cast("double") >=
+            graft.ops.Curation.BloomFlagThreshold)
+          .select("doc_id")
+        val c5 = c4.join(bloomFlagged, Seq("doc_id"), "left_anti")
+        if (redactPii)
+          graft.ops.TextOps.redactPii(c5)
+            .join(c5.select("doc_id", "source"), "doc_id")
+            .select(col("doc_id"), col("clean_text").as("text"),
+              col("source"), col("n_redactions"))
+        else c5
+      }, outPath)
 
-  /** The four offline snapshot artifacts [[curationSinkVersioned]]
-    * gates on (see [[curationSink]]'s boundary rationale). */
+  /** The four offline snapshot artifacts [[curationSink]] gates on. */
   final case class CurationArtifacts(
       keeperSpans: DataFrame, benchVecs: DataFrame,
       benchShingles: DataFrame, bloomBits: DataFrame)
-
-  /**
-   * Per-batch snapshot pinning for artifact-gated streaming sinks —
-   * the version seam every long-running serving/ingest stream needs
-   * (curation eval suites rotate, ANN indexes rebuild, BPE vocabs
-   * refresh — none should require a stream restart). `resolve` is
-   * called once per micro-batch, driver-side (batches of one query are
-   * sequential, so plain vars are safe): an unchanged version returns
-   * the already-materialized frames at zero cost; a changed version
-   * frees the superseded checkpoint blocks immediately, then
-   * `localCheckpoint`s and [[graft.ops.Reuse.pin]]s the new set (so an
-   * end-of-stream `Reuse.freeAll` — between queries, per its contract —
-   * releases the final version too). Consistency model: one batch is
-   * processed end-to-end against exactly the snapshot current at its
-   * start; a rotation takes effect at the next batch boundary, never
-   * mid-chain.
-   *
-   * Restart interaction: after a checkpoint recovery, a REPLAYED batch
-   * is re-processed against the snapshot current at replay time, not
-   * the (unrecorded) one it originally saw — and because every sink
-   * using this helper writes batch-keyed idempotent output, the replay
-   * OVERWRITES the old batch's judgments with the current snapshot's.
-   * That is the consistency a rotation wants (newest eval suite wins);
-   * a pipeline needing bitwise replay stability would persist the
-   * version alongside each batch dir and re-resolve it — not offered
-   * here because no reference or extension consumer needs it.
-   */
-  final class PinnedArtifacts(provider: () => (String, Seq[DataFrame])) {
-    private var version: String = null
-    private var frames: Seq[DataFrame] = Nil
-    private var ids: Seq[Int] = Nil
-
-    def resolve(spark: SparkSession): Seq[DataFrame] = {
-      val (v, raw) = provider()
-      if (v != version) {
-        ids.foreach { id =>
-          graft.QueryRun.loudly(s"PinnedArtifacts.resolve(rdd $id)") {
-            org.apache.spark.graftbridge.SparkBridge
-              .unpersistRdd(spark.sparkContext, id)
-          }
-        }
-        val buf = scala.collection.mutable.ArrayBuffer[Int]()
-        // held across batches: a sink's per-batch scope must not free it
-        frames = raw.map { df =>
-          val m = graft.ops.Reuse.unscoped(
-            graft.ops.Reuse.pin(df.localCheckpoint(true)))
-          org.apache.spark.sql.graftbridge.SqlBridge
-            .checkpointRddId(m).foreach(buf += _)
-          m
-        }
-        ids = buf.toSeq
-        version = v
-      }
-      frames
-    }
-  }
-
-  /**
-   * [[curationSink]] with an ARTIFACT-VERSION SEAM (r11 verdict item
-   * 5): `artifacts` is consulted once per micro-batch, BEFORE any
-   * stage runs, and returns `(version, frames)`. Consistency model is
-   * per-batch snapshot pinning — a batch is processed end-to-end
-   * against exactly the snapshot whose version was current at its
-   * start; a bench-set rotation between batches takes effect at the
-   * next batch boundary, never mid-chain (so the five stages of one
-   * batch can never gate against two different eval suites).
-   *
-   * Artifact checkpoint lifecycle is owned by [[PinnedArtifacts]]
-   * (r11 advice: the old construction-time checkpoints were never
-   * released) — superseded versions freed on rotation, the final
-   * version released by an end-of-stream `Reuse.freeAll`, unchanged
-   * versions at zero re-materialization per batch.
-   */
-  def curationSinkVersioned(docs: DataFrame, embs: DataFrame,
-      artifacts: () => (String, CurationArtifacts),
-      outPath: String, redactPii: Boolean = false): DataStreamWriter[Row] = {
-    val pinned = new PinnedArtifacts(() => {
-      val (v, a) = artifacts()
-      (v, Seq(a.keeperSpans, a.benchVecs, a.benchShingles, a.bloomBits))
-    })
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val Seq(keepers, bv, bh, bits) = pinned.resolve(spark)
-        // frees this batch's stage checkpoints and the ones its operators
-        // make through Reuse.shared (repetitionSurgery's shingles)
-        graft.ops.Reuse.scoped(spark) {
-          def mat(df: DataFrame): DataFrame =
-            graft.ops.Reuse.pin(df.localCheckpoint(true))
-          def resurface(surg: DataFrame, prev: DataFrame): DataFrame =
-            mat(surg.join(prev.select("doc_id", "source"), "doc_id")
-              .select(col("doc_id"), col("clean_text").as("text"),
-                col("source")))
-          val c1 = mat(graft.ops.TextOps.gopherRules(batch)
-            .filter(col("keep") === 1)
-            .select("doc_id", "text", "source"))
-          val c2 = resurface(graft.ops.Dedup.repetitionSurgery(c1), c1)
-          val c3 = resurface(
-            graft.ops.Dedup.dupSpanSurgeryAgainst(c2, keepers), c2)
-          val semFlagged = graft.ops.Similarity.semanticDecontaminate(
-              embs.join(c3.select(col("doc_id").as("vec_id")), "vec_id"),
-              bv)
-            .filter(col("contaminated") === 1L)
-            .select(col("vec_id").as("doc_id"))
-          val c4 = mat(c3.join(semFlagged, Seq("doc_id"), "left_anti"))
-          val bloomFlagged = graft.ops.Sketches.bloomPerDoc(c4, bh, bits)
-            .filter(col("n_bloom").cast("double") /
-              col("n_sh").cast("double") >=
-              graft.ops.Curation.BloomFlagThreshold)
-            .select("doc_id")
-          val c5 = c4.join(bloomFlagged, Seq("doc_id"), "left_anti")
-          val out =
-            if (redactPii)
-              graft.ops.TextOps.redactPii(c5)
-                .join(c5.select("doc_id", "source"), "doc_id")
-                .select(col("doc_id"), col("clean_text").as("text"),
-                  col("source"), col("n_redactions"))
-            else c5
-          out.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        }
-    }
-  }
-
-  /** ext126's mixture/pack rows folded from the ACCUMULATED
-    * [[curationSink]] survivor store — the serving read of the ingest
-    * state: equals the batch card's stage_ord 6/7 rows over everything
-    * that has arrived, at any batching (both aggregates are algebraic
-    * over the survivor relation — the partials-family contract). */
-  def curationMixPackFromState(spark: SparkSession, outPath: String,
-      tokenBudget: Long, ctx: Long = 512L): DataFrame =
-    graft.ops.Curation.mixPackRows(
-      partials(spark, outPath).select("doc_id", "text", "source"),
-      tokenBudget, ctx)
-
-  /** ext64's impact report off a [[partialsSink]] store of
-    * `Reporting.cardPartials` (the ext66 data card's state too):
-    * `n_total` folds from the per-batch partial counts, the family
-    * terms from the snapshot cluster summary (`Reporting.clusterStats`
-    * of the build-once map, a corpus-snapshot artifact). */
-  def dupStatsFromState(spark: SparkSession, partialsPath: String,
-      clusterStats: DataFrame): DataFrame =
-    graft.ops.Reporting.dupStats(clusterStats,
-      partials(spark, partialsPath).agg(sum(col("c")).as("n_total")))
-
-  /** ext68's matrix off a [[partialsSink]] store of
-    * `Dedup.keyShinglePairs`: `keyOverlapFromPairs` collects each
-    * shingle's key SET, so a pair two batches both contributed counts
-    * once, and its key-df cap applies at derivation time over
-    * everything that has arrived — identical to the batch operator on
-    * the union. The derivation scans the store once, so the store is
-    * read as is, not materialized. */
-  def sourceOverlapFromState(spark: SparkSession, pairsPath: String,
-      key: String = "source"): DataFrame =
-    graft.ops.Dedup.keyOverlapFromPairs(partials(spark, pairsPath), key)
 
   /**
    * Streaming twin of `Splits.shardAssign` (ext52): a continuous
@@ -1660,7 +1354,7 @@ object AggregateStore {
       .filter(col("window_date") >=
         to_date(timestamp_seconds(lit(startEpoch))) &&
         col("window_date") <= to_date(timestamp_seconds(lit(endEpoch))))
-      .filter(col("window_end") >= startEpoch && col("window_end") < endEpoch)
+      .filter(Serve.inRange(startEpoch, endEpoch))
 
   /** OP-38/39 over the stored entity layout: partition-pruned range read
     * plus an entity equality that parquet row-group min/max stats can
@@ -1668,10 +1362,8 @@ object AggregateStore {
     * reference's `ticks+entity` key seek, RocksDBStore.cs:241-245, as
     * partition + row-group pruning). */
   def readRangeEntity(spark: SparkSession, path: String, startEpoch: Long,
-      endEpoch: Long, entity: Option[String]): DataFrame = {
-    val ranged = readRange(spark, path, startEpoch, endEpoch)
-    entity.fold(ranged)(e => ranged.filter(col("entity") === e))
-  }
+      endEpoch: Long, entity: Option[String]): DataFrame =
+    Serve.entityFilter(readRange(spark, path, startEpoch, endEpoch), entity)
 
   /** OP-40/41 over the stored layout — the `SeekToLast+Prev` analog
     * (RocksDBStore.cs:174-196). Instead of scanning the whole store and

@@ -58,6 +58,36 @@ class StreamingSpec extends TestBase {
     out
   }
 
+  /** Writes each increment to `srcDir` as ONE parquet file, with
+    * mtimes in increment order, so a `maxFilesPerTrigger = 1` stream
+    * reads one increment per micro-batch, in order. */
+  private def oneFileIncrements(srcDir: java.io.File,
+      incs: Seq[org.apache.spark.sql.DataFrame]): Unit =
+    incs.zipWithIndex.foreach { case (rows, i) =>
+      val tmp = s"$srcDir/_stage$i"
+      rows.coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(srcDir, f"inc$i%02d.parquet")
+      Files.move(part.toPath, dst.toPath)
+      dst.setLastModified(1704067200000L + i * 60000L)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    }
+
+  /** A fixed snapshot for [[StreamingPipeline.partialsSink]]'s artifact
+    * seam: one constant version of `frames`. */
+  private def fixed(frames: org.apache.spark.sql.DataFrame*)
+      : () => (String, Seq[org.apache.spark.sql.DataFrame]) =
+    () => ("static", frames)
+
+  /** [[fixed]] for [[StreamingPipeline.curationSink]]'s four artifacts. */
+  private def curationArtifacts(keepers: org.apache.spark.sql.DataFrame,
+      bv: org.apache.spark.sql.DataFrame, bh: org.apache.spark.sql.DataFrame,
+      bits: org.apache.spark.sql.DataFrame)
+      : () => (String, StreamingPipeline.CurationArtifacts) =
+    () => ("static",
+      StreamingPipeline.CurationArtifacts(keepers, bv, bh, bits))
+
   /** Runs `body` while a 5 ms poller holds every RDD persisted in the
     * meantime, so the ContextCleaner (which unpersists an RDD once a GC
     * finds it unreachable) cannot free a block a sink left behind before
@@ -713,7 +743,7 @@ class StreamingSpec extends TestBase {
     def sink() = StreamingPipeline.curationSink(
         StreamingPipeline.parquetStream(spark, srcDir,
           maxFilesPerTrigger = Some(1)),
-        embSnap, keepers, bv, bh, bits, out)
+        embSnap, curationArtifacts(keepers, bv, bh, bits), out)
       .option("checkpointLocation", ckpt)
     // phase 1: half the corpus, then a simulated shutdown
     corpus.filter(col("doc_id") % 2 === 0).repartition(2)
@@ -851,7 +881,7 @@ class StreamingSpec extends TestBase {
       .temperatureRates(batchDocs, 250L, Seq("lang"))
     val src = StreamingPipeline.parquetStream(spark,
       sf("sf0.001") + "/documents.parquet")
-    val q = StreamingPipeline.temperatureResampleStream(
+    val q = graft.ops.Sampling.temperatureResampleAgainst(
       src.select("doc_id", "lang", "source"), rates,
       col("doc_id"), Seq("lang"))
       .writeStream.outputMode("append").format("memory")
@@ -899,7 +929,7 @@ class StreamingSpec extends TestBase {
     val cents = graft.ops.LabelAudit.labelCentroids(batchEmb)
     val src = StreamingPipeline.parquetStream(spark,
       sf("sf0.001") + "/embeddings.parquet")
-    val q = StreamingPipeline.centroidScoreStream(src, cents)
+    val q = graft.ops.LabelAudit.centroidDistances(src, cents)
       .writeStream.outputMode("append").format("memory")
       .queryName("cent_stream").start()
     q.processAllAvailable()
@@ -927,7 +957,8 @@ class StreamingSpec extends TestBase {
       Files.createTempDirectory("graft-decon-src").toString + "/docs"
     corpus.select("doc_id", "text").write.parquet(corpusDir)
     val out = runSink(corpusDir)((s, o) =>
-      StreamingPipeline.decontaminationSink(s, benchH, o))
+      StreamingPipeline.partialsSink(s, fixed(benchH),
+        (b, a) => graft.ops.Dedup.benchmarkOverlapAgainst(b, a.head), o))
     val streamed = spark.read.parquet(out)
       .select("doc_id", "n_sh", "n_shared", "overlap_frac", "contaminated")
     val batch = graft.ops.Dedup.benchmarkOverlap(
@@ -950,7 +981,8 @@ class StreamingSpec extends TestBase {
     val srcDir = Files.createTempDirectory("graft-bloom-src").toString + "/d"
     corpus.select("doc_id", "text").write.parquet(srcDir)
     val out = runSink(srcDir)((s, o) =>
-      StreamingPipeline.bloomProbeSink(s, benchH, o))
+      StreamingPipeline.partialsSink(s, fixed(benchH, bits),
+        (b, a) => graft.ops.Sketches.bloomPerDoc(b, a(0), a(1)), o))
     val streamed = spark.read.parquet(out)
       .select("doc_id", "n_sh", "n_exact", "n_bloom")
     val batch = graft.ops.Sketches.bloomPerDoc(
@@ -969,7 +1001,8 @@ class StreamingSpec extends TestBase {
       sf("sf0.001") + "/embeddings.parquet")
     val out = Files.createTempDirectory("graft-pq-out").toString
     val ckpt = Files.createTempDirectory("graft-pq-ckpt").toString
-    val q = StreamingPipeline.pqEncodeSink(src, cb, out)
+    val q = StreamingPipeline.partialsSink(src, fixed(cb),
+        (b, a) => graft.ops.Similarity.pqCodes(b, a.head), out)
       .option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
     q.stop()
@@ -1010,7 +1043,8 @@ class StreamingSpec extends TestBase {
     val srcDir = Files.createTempDirectory("graft-ds-src").toString + "/d"
     docs.repartition(3).write.parquet(srcDir)
     val out = runSink(srcDir)((s, o) =>
-      StreamingPipeline.dupSpansSink(s, shared, o))
+      StreamingPipeline.partialsSink(s, fixed(shared),
+        (b, a) => graft.ops.Dedup.dupSpansAgainst(b, a.head), o))
     val streamed = spark.read.parquet(out)
       .select("doc_id", "span_start", "span_len")
     val batch = graft.ops.Dedup.dupSpans(docs)
@@ -1028,7 +1062,8 @@ class StreamingSpec extends TestBase {
     val srcDir = Files.createTempDirectory("graft-sd-src").toString + "/d"
     corpus.repartition(3).write.parquet(srcDir)
     val out = runSink(srcDir)((s, o) =>
-      StreamingPipeline.semanticDecontaminateSink(s, bench, o))
+      StreamingPipeline.partialsSink(s, fixed(bench),
+        (b, a) => graft.ops.Similarity.semanticDecontaminate(b, a.head), o))
     val streamed = spark.read.parquet(out)
       .select("vec_id", "bench_id", "max_cos", "contaminated")
     val batch = graft.ops.Similarity.semanticDecontaminate(corpus, bench)
@@ -1064,7 +1099,7 @@ class StreamingSpec extends TestBase {
     val q = StreamingPipeline.curationSink(
         StreamingPipeline.parquetStream(spark, srcDir,
           maxFilesPerTrigger = Some(1)),
-        embSnap, keepers, bv, bh, bits, out)
+        embSnap, curationArtifacts(keepers, bv, bh, bits), out)
       .option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
     q.stop()
@@ -1082,8 +1117,9 @@ class StreamingSpec extends TestBase {
 
     // mix/pack card served from the accumulated ingest state == the
     // batch card's stage 6/7 rows over the same survivors
-    val stateCard = StreamingPipeline.curationMixPackFromState(
-      spark, out, tokenBudget = 1000000L)
+    val stateCard = graft.ops.Curation.mixPackRows(
+      StreamingPipeline.partials(spark, out)
+        .select("doc_id", "text", "source"), tokenBudget = 1000000L)
     val batchCard = graft.ops.Curation.mixPackRows(
       batchSurvivors, tokenBudget = 1000000L)
     assert(stateCard.count() == batchCard.count() && batchCard.count() > 0)
@@ -1098,7 +1134,8 @@ class StreamingSpec extends TestBase {
     val q2 = StreamingPipeline.curationSink(
         StreamingPipeline.parquetStream(spark, srcDir,
           maxFilesPerTrigger = Some(2)),
-        embSnap, keepers, bv, bh, bits, out2, redactPii = true)
+        embSnap, curationArtifacts(keepers, bv, bh, bits), out2,
+        redactPii = true)
       .option("checkpointLocation", ckpt2).start()
     q2.processAllAvailable()
     q2.stop()
@@ -1154,7 +1191,8 @@ class StreamingSpec extends TestBase {
     val q = StreamingPipeline.curationSink(
         StreamingPipeline.parquetStream(spark, srcDir,
           maxFilesPerTrigger = Some(2)),
-        embSnap, keepers, bv, bh, bits, out, redactPii = true)
+        embSnap, curationArtifacts(keepers, bv, bh, bits), out,
+        redactPii = true)
       .option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
     q.stop()
@@ -1202,7 +1240,7 @@ class StreamingSpec extends TestBase {
       val q = StreamingPipeline.curationSink(
           StreamingPipeline.parquetStream(spark, srcDir,
             maxFilesPerTrigger = Some(1)),
-          embSnap, keepers, bv, bh, bits, out)
+          embSnap, curationArtifacts(keepers, bv, bh, bits), out)
         .option("checkpointLocation", ckpt).start()
       q.processAllAvailable()
       try q.recentProgress.count(_.numInputRows > 0) finally q.stop()
@@ -1251,6 +1289,72 @@ class StreamingSpec extends TestBase {
     val seen = held.keySet.asScala.toSet -- before
     assert(seen.size >= nBatches,
       s"saw ${seen.size} RDDs persisted during the stream")
+  }
+
+  test("artifact-gated partialsSink pins the artifact once: persisted " +
+      "RDDs grow by the pinned artifact only, over 4 one-file batches, " +
+      "and Reuse.freeAll after stop releases it") {
+    val docs = Tables.documents(spark, sf("sf0.001")).select("doc_id", "text")
+    val benchH = graft.ops.Dedup.benchmarkShingles(
+      docs.filter(col("doc_id") < 20))
+    graft.ops.Reuse.freeAll(spark)
+    val nBatches = 4
+    val srcDir =
+      Files.createTempDirectory("graft-pinfree-src").toString + "/d"
+    docs.filter(col("doc_id") >= 20).repartition(nBatches)
+      .write.parquet(srcDir)
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted()
+    val (out, held) = holdingPersisted(runSink(srcDir)((s, o) =>
+      StreamingPipeline.partialsSink(s, fixed(benchH),
+        (b, a) => graft.ops.Dedup.benchmarkOverlapAgainst(b, a.head), o)))
+    assert(new java.io.File(out).list().count(_.startsWith("batch=")) ==
+      nBatches, s"expected $nBatches one-file batches")
+    // what stays is the one pinned copy of the artifact
+    val grown = persisted() -- before
+    val rdds = spark.sparkContext.getPersistentRDDs
+    assert(grown.toSeq.map(rdds(_).count()) == Seq(benchH.count()),
+      s"persisted RDDs grew by ${grown.size} over $nBatches batches, " +
+        "not by the 1 pinned artifact")
+    // the stream has stopped, so the pin goes with the session's blocks
+    graft.ops.Reuse.freeAll(spark)
+    assert((persisted() intersect grown).isEmpty,
+      "pinned artifact outlived Reuse.freeAll")
+    import scala.jdk.CollectionConverters._
+    assert(grown.subsetOf(held.keySet.asScala.toSet))
+  }
+
+  test("stream/ holds artifacts only through PinnedArtifacts: no " +
+      "localCheckpoint outside it and the curation chain's mat, and no " +
+      "Reuse.unscoped") {
+    val stream = MainSources.root.resolve("graft/stream")
+    val sources = MainSources.all.filter(_._1.startsWith(stream))
+    assert(sources.size >= 2, "src/main/scala/graft/stream not found")
+    val checkpoint = """\.localCheckpoint\(""".r
+    // the two bodies allowed to checkpoint, each exactly once
+    val allowed = Seq(
+      """(?s)\n  (?:private )?final class PinnedArtifacts\(.*?\n  }\n""".r,
+      ("""\n\s*def mat\(df: DataFrame\): DataFrame =\n\s*""" +
+        """graft\.ops\.Reuse\.pin\(df\.localCheckpoint\(true\)\)""").r)
+    val pipeline = stream.resolve("StreamingPipeline.scala")
+    val outside = sources.flatMap { case (p, src) =>
+      val rest = if (p != pipeline) src else allowed.foldLeft(src) {
+        (s, re) =>
+          val body = re.findAllIn(s).toSeq
+          assert(body.size == 1 &&
+            checkpoint.findAllIn(body.head).size == 1,
+            s"allowed body not found once: $re")
+          s.replace(body.head, "")
+      }
+      val n = checkpoint.findAllIn(rest).size
+      if (n > 0) Some(s"$p: $n localCheckpoint call(s)") else None
+    }
+    assert(outside.isEmpty, outside.mkString("; "))
+    val unscoped = MainSources.all.collect {
+      case (p, src) if """Reuse\.unscoped|def unscoped""".r
+          .findFirstIn(src).isDefined => p
+    }
+    assert(unscoped.isEmpty, s"Reuse.unscoped in ${unscoped.mkString(", ")}")
   }
 
   test("curation sink artifact rotation: a bench-set swap between " +
@@ -1327,7 +1431,7 @@ class StreamingSpec extends TestBase {
     phaseA.repartition(2).write.parquet(srcDir)
     val out = Files.createTempDirectory("graft-rot-out").toString
     val ckpt = Files.createTempDirectory("graft-rot-ckpt").toString
-    val q = StreamingPipeline.curationSinkVersioned(
+    val q = StreamingPipeline.curationSink(
         StreamingPipeline.parquetStream(spark, srcDir,
           maxFilesPerTrigger = Some(1)),
         embAll, provider, out)
@@ -1380,7 +1484,8 @@ class StreamingSpec extends TestBase {
     val q = StreamingPipeline.ivfPqSearchSink(
         StreamingPipeline.parquetStream(spark, srcDir,
           maxFilesPerTrigger = Some(1)),
-        cents, cb, coded, emb, k = 3, probes = 2, candidates = 20, out)
+        () => ("static", StreamingPipeline.IvfPqIndex(cents, cb, coded, emb)),
+        k = 3, probes = 2, candidates = 20, out)
       .option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
     q.stop()
@@ -1435,7 +1540,7 @@ class StreamingSpec extends TestBase {
     qA.repartition(2).write.parquet(srcDir)
     val out = Files.createTempDirectory("graft-ivfr-out").toString
     val ckpt = Files.createTempDirectory("graft-ivfr-ckpt").toString
-    val q = StreamingPipeline.ivfPqSearchSinkVersioned(
+    val q = StreamingPipeline.ivfPqSearchSink(
         StreamingPipeline.parquetStream(spark, srcDir,
           maxFilesPerTrigger = Some(1)),
         provider, k = 3, probes = 2, candidates = 20, out)
@@ -1483,7 +1588,8 @@ class StreamingSpec extends TestBase {
     val srcDir = Files.createTempDirectory("graft-pg-src").toString + "/d"
     e.repartition(3).write.parquet(srcDir)
     val out = runSink(srcDir)((s, o) =>
-      StreamingPipeline.prototypeGateSink(s, cents, th, "easy", o))
+      StreamingPipeline.partialsSink(s, fixed(cents, th),
+        (b, a) => S.prototypeGate(b, a(0), a(1), "easy"), o))
     val streamed = spark.read.parquet(out)
       .select("vec_id", "bucket", "dist", "kept")
     val batch = batchPruned.select("vec_id", "bucket", "dist", "kept")
@@ -1556,7 +1662,8 @@ class StreamingSpec extends TestBase {
     val srcDir = Files.createTempDirectory("graft-bpe-src").toString + "/d"
     docs.write.parquet(srcDir)
     val out = runSink(srcDir)((s, o) =>
-      StreamingPipeline.bpeEncodeSink(s, merges, 3, o))
+      StreamingPipeline.partialsSink(s, fixed(merges),
+        (b, a) => graft.ops.TextOps.bpeApplyCounts(b, a.head, 3), o))
     // Per-word counts are per-batch; summed across batches they equal
     // the batch encoder's, and n_syms is batch-independent per word.
     val streamed = spark.read.parquet(out)
@@ -1580,7 +1687,8 @@ class StreamingSpec extends TestBase {
     val srcDir = Files.createTempDirectory("graft-bp-src").toString + "/d"
     docs.write.parquet(srcDir)
     val out = runSink(srcDir)((s, o) =>
-      StreamingPipeline.boilerplateSink(s, hot, o))
+      StreamingPipeline.partialsSink(s, fixed(hot),
+        (b, a) => graft.ops.TextOps.boilerplateRemovalAgainst(b, a.head), o))
     val streamed = spark.read.parquet(out)
       .select("doc_id", "n_chunks", "n_dropped", "n_toks_dropped",
         "clean_text")
@@ -1601,7 +1709,8 @@ class StreamingSpec extends TestBase {
     val srcDir = Files.createTempDirectory("graft-nov-src").toString + "/d"
     docs.write.parquet(srcDir)
     val out = runSink(srcDir)((s, o) =>
-      StreamingPipeline.noveltySink(s, df, o))
+      StreamingPipeline.partialsSink(s, fixed(df),
+        (b, a) => graft.ops.Dedup.noveltyScoresAgainst(b, a.head), o))
     val streamed = spark.read.parquet(out)
       .select("doc_id", "n_shingles", "n_unique", "novelty_q")
     val batch = graft.ops.Dedup.noveltyScores(docs)
@@ -1620,7 +1729,8 @@ class StreamingSpec extends TestBase {
     val rare = graft.ops.TextOps.rareTokens(docs)
     val srcDir = Files.createTempDirectory("graft-oov-src").toString + "/d"
     docs.write.parquet(srcDir)
-    val out = runSink(srcDir)((s, o) => StreamingPipeline.oovSink(s, rare, o))
+    val out = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, fixed(rare), (b, a) => graft.ops.TextOps.oovRateAgainst(b, a.head), o))
     val streamed = spark.read.parquet(out)
       .select("doc_id", "n_toks", "n_rare", "oov_ppm")
     val batch = graft.ops.TextOps.oovRate(docs)
@@ -2185,7 +2295,8 @@ class StreamingSpec extends TestBase {
     docs.write.parquet(srcDir)
     val pairs = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
       s, graft.ops.Dedup.keyShinglePairs(_), o))
-    val streamed = StreamingPipeline.sourceOverlapFromState(spark, pairs)
+    val streamed = graft.ops.Dedup.keyOverlapFromPairs(
+      StreamingPipeline.partials(spark, pairs))
     val batch = graft.ops.Dedup.keyOverlap(docs)
     assert(streamed.count() == batch.count() && batch.count() > 0)
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty,
@@ -2218,7 +2329,8 @@ class StreamingSpec extends TestBase {
     assert(card.except(batchCard).isEmpty &&
       batchCard.except(card).isEmpty,
       "streamed data card differs from the batch card")
-    val stats = StreamingPipeline.dupStatsFromState(spark, state, cl)
+    val stats = graft.ops.Reporting.dupStats(cl,
+      StreamingPipeline.partials(spark, state).agg(sum(col("c")).as("n_total")))
     val batchStats = graft.ops.Reporting.dupStats(cl,
       docs.agg(count(lit(1)).as("n_total")))
     assert(stats.except(batchStats).isEmpty &&
@@ -2335,16 +2447,7 @@ class StreamingSpec extends TestBase {
       Seq(11L -> text(1), 12L -> text(6), 14L -> text(7), 15L -> text(7)),
       // 21 duplicates inc-2's KEPT doc 12; 22 duplicates inc-1's doc 2.
       Seq(21L -> text(6), 22L -> text(2), 23L -> text(10)))
-    incs.zipWithIndex.foreach { case (rows, i) =>
-      val tmp = s"$srcDir/_stage$i"
-      rows.toDF("doc_id", "text").coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(srcDir, f"inc$i%02d.parquet")
-      Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(1704067200000L + i * 60000L)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
+    oneFileIncrements(srcDir, incs.map(_.toDF("doc_id", "text")))
 
     val q = StreamingPipeline.incrementalDedupSink(
       StreamingPipeline.parquetStream(spark, srcDir.toString,
@@ -2379,6 +2482,44 @@ class StreamingSpec extends TestBase {
     assert(streamedKept == Set(1L, 2L, 3L, 12L, 14L, 23L))
     // The stored band table covers every kept doc: 4 bands each.
     assert(spark.read.parquet(bandsPath).count() == expected.size * 4L)
+  }
+
+  test("incremental dedup frees each batch's checkpoints: persisted " +
+      "RDDs do not grow per batch, over 4 one-file batches") {
+    import spark.implicits._
+    val nBatches = 4
+    val srcDir = Files.createTempDirectory("graft-incfree-src").toFile
+    val ckpt = Files.createTempDirectory("graft-incfree-ckpt").toString
+    val store = Files.createTempDirectory("graft-incfree-store").toString
+    oneFileIncrements(srcDir, (0 until nBatches).map { i =>
+      (0 until 3).map { j =>
+        val id = i * 10L + j
+        id -> (0 until 12).map(w => s"d${id}w$w").mkString(" ")
+      }.toDF("doc_id", "text")
+    })
+    graft.ops.Reuse.freeAll(spark)
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted()
+    // dedupeIncrement materializes the increment's bands with Reuse.shared
+    val (batches, held) = holdingPersisted {
+      val q = StreamingPipeline.incrementalDedupSink(
+          StreamingPipeline.parquetStream(spark, srcDir.toString,
+            maxFilesPerTrigger = Some(1)),
+          s"$store/bands", s"$store/kept")
+        .option("checkpointLocation", ckpt).start()
+      q.processAllAvailable()
+      try q.recentProgress.count(_.numInputRows > 0) finally q.stop()
+    }
+    assert(batches == nBatches, s"expected $nBatches one-file batches")
+    assert(spark.read.parquet(s"$store/kept").count() == 3L * nBatches)
+    val grown = persisted() -- before
+    assert(grown.isEmpty,
+      s"persisted RDDs grew by ${grown.size} over $nBatches batches")
+    // non-vacuous: the poller saw a checkpoint of every batch
+    import scala.jdk.CollectionConverters._
+    val seen = held.keySet.asScala.toSet -- before
+    assert(seen.size >= nBatches,
+      s"saw ${seen.size} RDDs persisted during the stream")
   }
 
   test("incremental dedup replay: same batchId reproduces identical state") {
@@ -2585,7 +2726,8 @@ class StreamingSpec extends TestBase {
     // offline, each micro-batch scored against it (ext69's boundary).
     val shared = graft.ops.Dedup.dupSharedHashes(docs)
     val spanOut = runSink(srcDir)((s, o) =>
-      StreamingPipeline.dupSpanSink(s, shared, o))
+      StreamingPipeline.partialsSink(s, fixed(shared),
+        (b, a) => graft.ops.Dedup.dupSpanMassAgainst(b, a.head), o))
     val spanStreamed = spark.read.parquet(spanOut)
       .select("doc_id", "n_spans", "n_dup_spans", "n_covered_toks",
         "dup_mass_ppm")
@@ -2598,7 +2740,8 @@ class StreamingSpec extends TestBase {
     // and reassembly are corpus-independent, same boundary as ext91.
     val keepers = graft.ops.Dedup.dupKeeperSpans(docs)
     val surgOut = runSink(srcDir)((s, o) =>
-      StreamingPipeline.dupSpanSurgerySink(s, keepers, o))
+      StreamingPipeline.partialsSink(s, fixed(keepers),
+        (b, a) => graft.ops.Dedup.dupSpanSurgeryAgainst(b, a.head), o))
     val surgStreamed = spark.read.parquet(surgOut)
       .select("doc_id", "n_toks", "n_toks_cut", "clean_text")
     val surgBatch = graft.ops.Dedup.dupSpanSurgery(docs)
