@@ -111,7 +111,7 @@ object Bench {
           !benchOnly.forall(_.exists(PqBuildName.startsWith))) None
       else {
         val t0 = System.nanoTime()
-        try ExtEntry.rebuildPqEncodeIndexes(spark, sfDir) catch {
+        try registry.Artifacts.rebuildPqEncodeIndexes(spark, sfDir) catch {
           case t: Throwable =>
             System.err.println(s"[bench] $PqBuildName FAILED: $t")
             failed += PqBuildName

@@ -30,17 +30,9 @@ object Main {
 
   /** The product session (this CLI and [[Repl]]): `SPARK_MASTER`,
     * and `SPARK_GRAFT_CPUS` shuffle partitions (default 8). */
-  private[graft] def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private[graft] def session(): SparkSession =
+    QueryRun.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"),
+      Seq("spark.master" -> sys.env.getOrElse("SPARK_MASTER", "local[8]")))
 
   def main(args: Array[String]): Unit = args.toList match {
     case "saveAggregates" :: in :: store :: ckpt :: Nil =>

@@ -14,6 +14,10 @@ object QueryRun {
   /** Constructs one registry query's DataFrame. */
   type Build = () => DataFrame
 
+  /** The one session builder, for these mains and the product CLI
+    * ([[Main.session]]): `local[cpus]` and `cpus` shuffle partitions,
+    * then `confs` in order (a `spark.master` entry replaces the
+    * master). */
   def session(cpus: String, confs: Seq[(String, String)] = Nil)
       : SparkSession = {
     val spark = confs.foldLeft(SparkSession.builder()
@@ -51,7 +55,7 @@ object QueryRun {
     Seq("documents", "embeddings").foreach { t =>
       loudly(s"[warm-up] $t")(graft.ingest.Tables.table(spark, sfDir, t).count())
     }
-    loudly("[warm-up] bucketed layout")(ExtEntry.ensureBucketed(spark, sfDir))
+    loudly("[warm-up] bucketed layout")(registry.Artifacts.ensureBucketed(spark, sfDir))
     spark.catalog.clearCache()
   }
 

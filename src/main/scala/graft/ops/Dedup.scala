@@ -1328,8 +1328,9 @@ object Dedup {
 
   /**
    * Duplication-aware sampling weights — SOFT dedup: instead of keeping
-   * one doc per near-dup family ([[graft.SparkEntry]] ext47's keeper),
-   * every doc stays but its sampling weight is 1e6 / |family| ppm, so a
+   * one doc per near-dup family (ext47's keeper in
+   * [[graft.registry.DedupQueries]]), every doc stays but its sampling
+   * weight is 1e6 / |family| ppm, so a
    * family's total draw mass equals one document's. The form the
    * mixture literature prefers when near-dups carry non-identical
    * content (hard dedup discards the variants; down-weighting keeps

@@ -1,0 +1,344 @@
+package graft.registry
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.agg.Windows
+import graft.ingest.Tables
+import graft.ops.{Components, Dedup, Similarity, TextOps}
+import graft.stream.AggregateStore
+
+/** The registry's inputs and its build-once artifacts: the table
+  * readers every family calls, the `Reuse.index` builds several
+  * queries read (one build per session and scale-factor directory),
+  * and the seed-once on-disk layouts (the bucketed join tables and
+  * the aggregate stores the `op3x_store_*` queries serve from). */
+private[graft] object Artifacts {
+
+  def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
+  def embs(s: SparkSession, dir: String) = Tables.embeddings(s, dir)
+  def events(s: SparkSession, dir: String) = Tables.events(s, dir)
+
+  /** Query-vector subset for similarity search examples. */
+  val NumQueryVecs = 20
+
+  /** Probe counts the ext58 recall curve prices (must stay <= the index's
+    * maxProbes below and <= k=8). */
+  val ProbeCurve = Seq(1, 2, 4)
+
+  /** The build-once IVF probe index shared by ext28/31/57/58 — one
+    * Lloyd's build per (session, sfdir), then every consumer reads the
+    * cached (vec_id, bucket, probe_rank) checkpoint
+    * ([[graft.ops.Similarity.kmeansProbeIndex]]). */
+  def ivfProbeIndex(s: SparkSession, dir: String): DataFrame =
+    Similarity.kmeansProbeIndex(embs(s, dir), cacheKey = dir,
+      maxProbes = ProbeCurve.max)
+
+  /** The plain argmin bucket assignment (== kmeansBuckets bit-exactly)
+    * read off the shared probe index. */
+  def ivfBuckets(s: SparkSession, dir: String): DataFrame =
+    ivfProbeIndex(s, dir).filter(col("probe_rank") === 1)
+      .select("vec_id", "bucket")
+
+  /** Build-once REBALANCED assignment (ext124's statistic: mean-size
+    * cap over the shared argmin buckets, one split level) — the stored
+    * layout artifact the ext124 card and the ext147 recall audit both
+    * read, exactly as production rebalances once per corpus snapshot
+    * and every same-bucket consumer takes the assignment unchanged. */
+  def rebBuckets(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Reuse.index(s, s"reb-buckets:$dir") {
+      val bk = ivfBuckets(s, dir)
+      val st = bk.groupBy("bucket").agg(count(lit(1)).as("cnt"))
+        .agg(count(lit(1)).as("nb"), sum("cnt").as("nv")).head()
+      Similarity.splitOversizedBuckets(embs(s, dir), bk,
+        st.getLong(1) / st.getLong(0))
+    }
+
+  /** Build-once maximal-span listing shared by ext125/ext127 — the
+    * stored curator artifact; the histogram is a derived view
+    * ([[graft.ops.Dedup.dupSpanHistogramFrom]]). */
+  def dupSpansIdx(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Reuse.index(s, s"dup-spans:$dir") {
+      Dedup.dupSpans(docs(s, dir))
+    }
+
+  /** Build-once PQ codebooks shared by ext107/108/117/118 — one
+    * m-keyed Lloyd's build per (session, sfdir), like [[ivfProbeIndex]]
+    * ([[graft.ops.Similarity.pqCodebooksIndex]]). */
+  def pqCb(s: SparkSession, dir: String): Option[DataFrame] =
+    Some(Similarity.pqCodebooksIndex(embs(s, dir), cacheKey = dir))
+
+  /** Build-once PQ codes / bucket-tagged coded corpus (r18) — the
+    * stored serving artifacts the PQ consumers scan instead of
+    * re-encoding the corpus per query. */
+  def pqCodesIdx(s: SparkSession, dir: String): Option[DataFrame] =
+    Some(Similarity.pqCodesIndex(embs(s, dir),
+      Similarity.pqCodebooksIndex(embs(s, dir), cacheKey = dir),
+      cacheKey = dir))
+  def pqCodedIdx(s: SparkSession, dir: String): Option[DataFrame] =
+    Some(Similarity.ivfPqCodedCorpusIndex(embs(s, dir),
+      Similarity.pqCodebooksIndex(embs(s, dir), cacheKey = dir),
+      ivfProbeIndex(s, dir), cacheKey = dir))
+
+  /** Rebuild the PQ ENCODE artifacts from cold — the bench's explicit
+    * index-build pricing (r18 verdict: with `pqCodesIndex`/
+    * `ivfPqCodedCorpusIndex` stored once per session, the corpus-encode
+    * cost landed inside whichever consumer ran first and min-of-two
+    * discarded it, so no number priced the encode). Drops the two
+    * encode artifacts, rebuilds them (codebooks / coarse quantizer stay
+    * memoized — they have their own precedented lifecycle), and forces
+    * materialization. Returns the coded-corpus row count. */
+  def rebuildPqEncodeIndexes(s: SparkSession,
+      dir: String): Long = {
+    graft.ops.Reuse.dropIndex(s, s"pq-coded:$dir")
+    graft.ops.Reuse.dropIndex(s, s"pq-codes:$dir")
+    pqCodesIdx(s, dir).get.count()
+    pqCodedIdx(s, dir).get.count()
+  }
+
+  /** Build-once BPE merge table shared by ext111/ext112 — THE stored
+    * tokenizer artifact: learned once per (session, sfdir), the audit
+    * replays it ([[graft.ops.TextOps.bpeEstimateAuditFrom]]) exactly
+    * as the serving/streaming side does. */
+  def bpeMergesIdx(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Reuse.index(s, s"bpe-merges:$dir") {
+      TextOps.bpeMerges(docs(s, dir), 3)
+    }
+
+  /** Build-once exact ANN ground truth for the fixed query set — the
+    * stored audit artifact both IVF recall audits (ext57/58) score
+    * against; brute-force over the corpus runs ONCE per (session, sf). */
+  def annTruth(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Reuse.index(s, s"ann-truth:$dir") {
+      val e = embs(s, dir)
+      Similarity.bruteTopK(e, e.filter(col("vec_id") < NumQueryVecs), 3)
+        .select(col("q_id").as("id_a"), col("t_id").as("id_b"))
+    }
+
+  /** Build-once near-dup cluster map (doc_id, cluster_id) — THE stored
+    * dedup artifact of a corpus snapshot: the LSH pair graph and the
+    * iterative connected components run ONCE per (session, sf); keeper
+    * selection (ext47), leakage-safe splitting (ext51), the cluster
+    * listing (ext27) and the dedup impact report (ext64) all read it. */
+  def dupClusters(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Reuse.index(s, s"dup-clusters:$dir") {
+      Components.connectedComponents(lshPairsIdx(s, dir))
+        .select(col("id").as("doc_id"), col("cluster_id"))
+    }
+
+  /** Build-once full-corpus LSH candidate pair set — the stored dedup
+    * pair relation (r18): the cluster map build and the cross-detector
+    * agreement audit (ext100) both read it instead of re-running the
+    * MinHash/banding pass per query. */
+  def lshPairsIdx(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Reuse.index(s, s"lsh-pairs:$dir") {
+      Dedup.minhashLsh(docs(s, dir)).select("id_a", "id_b")
+    }
+
+  /** Build-once capped shingle-group relation (h, bounded distinct doc
+    * list) — THE stored shingle pass of a corpus snapshot (r19): the
+    * containment audit (ext113), the band-plan card (ext149) and the
+    * audit-pair build below all read it instead of re-exploding and
+    * re-hashing the corpus per query. ext02 keeps building the same
+    * relation from scratch, so the shingle pass stays priced by one
+    * query every run (the ext03-prices-the-LSH-build discipline). */
+  def shingleGroupsIdx(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Reuse.index(s, s"shingle-groups:$dir") {
+      Dedup.shingleGroups(docs(s, dir), "doc_id", "text",
+        materialize = false)
+    }
+
+  /** Build-once banded signature table of the ESTABLISHED corpus (the
+    * doc_id % 10 >= 2 generation ext36 dedups increments against) —
+    * ext36's own scaladoc already states the semantics: "signatures are
+    * computed once per corpus generation and persisted; the corpus text
+    * is never re-shingled". The full-corpus MinHash build stays priced
+    * by ext03 every run. */
+  def corpusBandsIdx(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Reuse.index(s, s"corpus-bands:$dir") {
+      Dedup.bandedSignatures(Dedup.minhashSignatures(
+        docs(s, dir).filter(col("doc_id") % 10 >= 2)))
+    }
+
+  /** Build-once LSH audit artifact shared by the recall (ext54) and
+    * precision (ext61) summaries: ONE shingle pass feeds both the exact
+    * bounded-Jaccard truth and the banded MinHash candidates; the two
+    * pair sets are checkpointed as one tagged relation — production
+    * computes an audit run once and reads every metric off it. */
+  def lshAuditPairs(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Reuse.index(s, s"lsh-audit:$dir") {
+      val g = shingleGroupsIdx(s, dir)
+      val sig = graft.ops.Reuse.shared(Dedup.minhashSignaturesFromGroups(g))
+      Dedup.ngramJaccardFromGroups(g, threshold = 0.5)
+        .select("id_a", "id_b").withColumn("rel", lit("truth"))
+        .unionByName(Dedup.minhashLshFromSig(sig)
+          .select("id_a", "id_b").withColumn("rel", lit("cand")))
+    }
+
+  /**
+   * Seed the bucketed lineitem/orders layout for `dir` if absent (table
+   * names and paths are derived per scale-factor dir, so different SFs —
+   * or the Bench warmup at sf0.001 racing the timed sf0.1 run — never
+   * clobber each other's definitions). Returns (lineitemTable,
+   * ordersTable). Idempotent: re-invocations verify both the catalog
+   * entry and the on-disk files, then skip the write — the pay-once
+   * layout cost is NOT charged to every query over the table.
+   */
+  def ensureBucketed(s: SparkSession, dir: String): (String, String) =
+    synchronized {
+      val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val (li, ord) = (s"graft_li_b_$tag", s"graft_ord_b_$tag")
+      val base = s"/tmp/graft_bucketed/$tag"
+      // Cross-process exclusion: the object-level synchronized only
+      // covers this JVM; a Bench and a test JVM seeding the same tag
+      // concurrently would interleave the table rewrite and the stamp.
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
+      val lockCh = java.nio.channels.FileChannel.open(
+        java.nio.file.Paths.get(s"$base/.lock"),
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.WRITE)
+      val lock = lockCh.lock()
+      try ensureBucketedLocked(s, dir, li, ord, base)
+      finally { lock.release(); lockCh.close() }
+    }
+
+  private def ensureBucketedLocked(s: SparkSession, dir: String,
+      li: String, ord: String, base: String): (String, String) = {
+      // Freshness stamp: the source files' mtimes at write time. A layout
+      // built from since-regenerated source parquet is stale, not
+      // "present" — without this a long-lived session would keep serving
+      // the old copy after the data under `dir` changed.
+      val stamp = Seq(s"$dir/lineitem.parquet", s"$dir/orders.parquet")
+        .map(f => new java.io.File(f).lastModified()).mkString(",")
+      val stampFile = java.nio.file.Paths.get(s"$base/.source_stamp")
+      val present = s.catalog.tableExists(li) && s.catalog.tableExists(ord) &&
+        new java.io.File(s"$base/li/_SUCCESS").exists() &&
+        new java.io.File(s"$base/ord/_SUCCESS").exists() &&
+        java.nio.file.Files.exists(stampFile) &&
+        java.nio.file.Files.readString(stampFile) == stamp
+      if (!present) {
+        graft.sources.BucketedTables.writeBucketed(Tables.lineitem(s, dir),
+          li, s"$base/li", "l_orderkey", 8)
+        graft.sources.BucketedTables.writeBucketed(Tables.orders(s, dir),
+          ord, s"$base/ord", "o_orderkey", 8)
+        java.nio.file.Files.writeString(stampFile, stamp)
+      }
+      (li, ord)
+    }
+
+  /**
+   * Seed-once materialized counts STORE in the AggregateStore layout
+   * (SURVEY §1.6 mapping: the RocksDB `counts` CF → parquet partitioned
+   * by `window_date`; r8 verdict item 8). op37 recomputes the hopping
+   * aggregate from the raw events per call; this is the read path a
+   * DEPLOYED store serves — the aggregate written once (the pay-once
+   * layout cost, exactly like ext26's bucketed join layout), every
+   * range scan pruning date partitions instead of touching the corpus
+   * (the reference's D19-key seek, RocksDBStore.cs:241-245, as layout
+   * pruning). Idempotent, cross-process file-locked and source-stamped,
+   * mirroring [[ensureBucketed]]; the store lands under the
+   * compacted `batch=-1` layout [[AggregateStore]] reads.
+   */
+  def ensureCountsStore(s: SparkSession, dir: String): String =
+    ensureStore(s, dir, "counts")(Windows.hoppingCounts(events(s, dir)))
+
+  /**
+   * Seed-once ENTITY-payload store (SURVEY §1.6's mentions/hashtags/
+   * retweets CFs; r10 verdict next-step 1): the ranked per-entity
+   * aggregate WITH its payload (OP-25's Max(Text) representative and
+   * the OP-26/27 top-example ids) persisted partitioned by
+   * `window_date` and entity-SORTED within each partition, mirroring
+   * the reference's `D19(windowEnd)+entity` RocksDB key
+   * (RocksDBStore.cs:96-127). op38_store_entity / op41_store_recent
+   * serve from this layout; their oracles recompute from raw events,
+   * so the layout stays invisible in results (the op37_store
+   * discipline).
+   */
+  def ensureEntityStore(s: SparkSession, dir: String): String =
+    ensureStore(s, dir, "entity")(entityPayloadRelation(s, dir))
+
+  /** The stored entity relation: hopping per-entity multi-agg
+    * (count/sum/max_props), the FULL top-`Windows.ExamplesPerEntity`
+    * example payloads (value DESC, id ASC — the reference's
+    * `TweetDescription[]` per entity, AggregatePayloads.cs:5-13,29-42,
+    * with the events-domain field mapping value→followerCount,
+    * event_id→id, props→text, user_id→screenName and the OP-06 −1
+    * sentinel for the absent retweet link), ranked top-N per window.
+    * `top_ids` stays as the compact projection of the same examples.
+    * Streaming twin: [[graft.stream.StreamingPipeline.unifiedAggStream]]
+    * persists the same struct shape (and k) for the tweets domain. */
+  private def entityPayloadRelation(s: SparkSession, dir: String): DataFrame = {
+    val ev = events(s, dir)
+    val agg = Windows.entityWindowAgg(ev, col("event_type"), col("value"),
+      extra = Seq(max(col("props")).as("max_props")))
+    val rows = ev.select(
+        window(col("ts"), Windows.WindowSize, Windows.HopSize).as("w"),
+        col("event_type").as("entity"), col("value"), col("event_id"),
+        col("user_id"), col("props"))
+      .select(col("w.end").cast("long").as("window_end"), col("entity"),
+        col("value"), col("event_id"), col("user_id"), col("props"))
+    import org.apache.spark.sql.expressions.{Window => W}
+    val byWeight = W.partitionBy(col("window_end"), col("entity"))
+      .orderBy(col("value").desc, col("event_id").asc)
+    // row_number bounds the per-group state BEFORE collect_list — the
+    // collected array is at most k structs, never the group's rows.
+    val ex = rows.withColumn("rn", row_number().over(byWeight))
+      .filter(col("rn") <= Windows.ExamplesPerEntity)
+      .groupBy("window_end", "entity")
+      .agg(transform(array_sort(collect_list(struct(
+          (-col("value")).as("nv"), col("event_id").as("sid"),
+          struct(col("value").as("followerCount"),
+            col("event_id").as("id"), col("props").as("text"),
+            col("user_id").cast("string").as("screenName"),
+            lit(-1L).as("originalTweetId")).as("t")))),
+          x => x.getField("t")).as("examples"))
+    Windows.rankTopEntities(agg.join(ex, Seq("window_end", "entity")))
+      .select(col("window_end"), col("entity"), col("tweet_count"),
+        col("follower_sum"), col("rank").cast("long").as("rank"),
+        col("max_props"),
+        concat_ws(",", transform(col("examples"),
+          x => x.getField("id").cast("string"))).as("top_ids"),
+        col("examples"))
+  }
+
+  /** Shared seed-once store machinery (counts + entity stores):
+    * idempotent, cross-process file-locked, source-stamped per store
+    * name; lands under the compacted `batch=-1` layout
+    * [[AggregateStore]] reads, written by [[AggregateStore.write]]. */
+  private def ensureStore(s: SparkSession, dir: String, name: String)(
+      build: => DataFrame): String =
+    synchronized {
+      // The readable prefix alone can collide for distinct dirs
+      // ("/a/b" and "/a.b" both flatten to "_a_b" — r9 ADVICE), and
+      // two sessions sharing one store path would thrash the stamp;
+      // the hash suffix makes the mapping injective in practice.
+      val tag = dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
+        Integer.toHexString(dir.hashCode)
+      val base = s"/tmp/graft_store/$tag"
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
+      val lockCh = java.nio.channels.FileChannel.open(
+        java.nio.file.Paths.get(s"$base/.lock_$name"),
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.WRITE)
+      val lock = lockCh.lock()
+      try {
+        val path = s"$base/$name"
+        val batchDir = s"$path/batch=${AggregateStore.CompactedBatchId}"
+        // Source mtime + store FORMAT version: a schema change to the
+        // stored relation (e.g. r12's full example payloads) must
+        // invalidate stores cached by earlier builds of this library.
+        val stamp =
+          new java.io.File(s"$dir/events.parquet").lastModified().toString +
+            ":v2"
+        val stampFile = java.nio.file.Paths.get(s"$base/.source_stamp_$name")
+        val present = java.nio.file.Files.exists(stampFile) &&
+          java.nio.file.Files.readString(stampFile) == stamp &&
+          new java.io.File(s"$batchDir/_SUCCESS").exists()
+        if (!present) {
+          AggregateStore.write(build, path, AggregateStore.CompactedBatchId)
+          java.nio.file.Files.writeString(stampFile, stamp)
+        }
+        path
+      } finally { lock.release(); lockCh.close() }
+    }
+}

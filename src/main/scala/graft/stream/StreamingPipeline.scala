@@ -961,29 +961,6 @@ object StreamingPipeline {
       .dropDuplicates("content_h")
 
   /**
-   * Streaming twin of `IntervalJoin` (ext22): stream-stream inner join of
-   * purchases to the clicks of the same user in `[p_ts - interval, p_ts)`.
-   * The time bound is expressed as an interval condition on the two event-
-   * time columns so Spark derives state-eviction watermarks from it (a
-   * condition on `unix_micros(...)` would be correct but unevictable —
-   * state would grow forever). Each side keeps only `interval` + watermark
-   * worth of rows.
-   */
-  def recentClickJoinStream(events: DataFrame,
-      interval: String = "1 hour"): DataFrame = {
-    val p = events.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", Watermark)
-    val c = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", Watermark)
-    p.join(c, expr(
-      s"""p_user = c_user AND
-         |c_ts >= p_ts - INTERVAL $interval AND c_ts < p_ts""".stripMargin))
-  }
-
-  /**
    * Trill `DisorderPolicy.Adjust` twin (OP-19; Query.cs:27-31) — the
    * last reference semantics gap (r12 verdict item 6). Trill ingress
    * keeps a high watermark M = max event time seen so far and, under
@@ -1177,12 +1154,9 @@ object StreamingPipeline {
             AggregateStore.writeRanked(shaped, s"$storeRoot/$kind", n,
               batchId)
           }
-          b.filter(col("kind") === "counts")
-            .select(col("window_end"), col("tweet_count").as("cnt"))
-            .withColumn("window_date",
-              to_date(timestamp_seconds(col("window_end"))))
-            .write.mode("overwrite").partitionBy("window_date")
-            .parquet(s"$storeRoot/counts/batch=$batchId")
+          AggregateStore.write(b.filter(col("kind") === "counts")
+            .select(col("window_end"), col("tweet_count").as("cnt")),
+            s"$storeRoot/counts", batchId)
         } finally b.unpersist()
       }
 
@@ -1285,6 +1259,10 @@ object StreamingPipeline {
 object AggregateStore {
 
   /**
+   * The one writer of the store layout. `df` (with a `window_end` epoch
+   * column) lands in `<path>/batch=<batchId>`, partitioned by the
+   * `window_date` derived from `window_end`.
+   *
    * Idempotent micro-batch write: each batch lands in its own
    * `batch=<id>` directory with OVERWRITE semantics, so a batch replayed
    * after a failure/restart overwrites its own previous output instead of
@@ -1295,11 +1273,9 @@ object AggregateStore {
    * prunes like any other); `window_date` nests beneath it for range
    * pruning.
    */
-  def writeRanked(batch: DataFrame, path: String, n: Int,
-      batchId: Long = 0L): Unit = {
-    val ranked = Windows.rankTopEntities(batch, n)
-      .withColumn("window_date",
-        to_date(timestamp_seconds(col("window_end"))))
+  def write(df: DataFrame, path: String, batchId: Long): Unit = {
+    val dated = df.withColumn("window_date",
+      to_date(timestamp_seconds(col("window_end"))))
     // Entity-bearing stores (mentions/hashtags/retweets CFs, SURVEY
     // §1.6) lay rows out entity-sorted within each date partition —
     // `entity` joins the sort key the way it joins the reference's
@@ -1310,13 +1286,18 @@ object AggregateStore {
     // FileFormatWriter's required ordering, so no second sort is added
     // and the entity order survives into the files.
     val laid =
-      if (ranked.columns.contains("entity"))
-        ranked.sortWithinPartitions(
+      if (dated.columns.contains("entity"))
+        dated.sortWithinPartitions(
           col("window_date"), col("entity"), col("window_end"))
-      else ranked
+      else dated
     laid.write.mode("overwrite").partitionBy("window_date")
       .parquet(s"$path/batch=$batchId")
   }
+
+  /** Top-`n` entities per window of `batch`, written through [[write]]. */
+  def writeRanked(batch: DataFrame, path: String, n: Int,
+      batchId: Long = 0L): Unit =
+    write(Windows.rankTopEntities(batch, n), path, batchId)
 
   /** The store as one relation, its schema resolved on the driver
     * from one data-file footer ([[Tables.parquet]]). */
@@ -1441,10 +1422,11 @@ object AggregateStore {
       filesPerPartition: Int = 1): Unit = {
     val base = path.stripSuffix("/")
     val tmp = base + "_compacting"
-    val df = read(spark, path).drop("batch")
-    df.repartition(filesPerPartition, col("window_date"))
-      .write.mode("overwrite").partitionBy("window_date")
-      .parquet(s"$tmp/batch=$CompactedBatchId")
+    // hashed by date: each date's rows meet in one task, so one file,
+    // which `write` lays out entity-sorted like a micro-batch's
+    write(read(spark, path).drop("batch")
+      .repartition(filesPerPartition, col("window_date")),
+      tmp, CompactedBatchId)
     val dst = new org.apache.hadoop.fs.Path(base)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = new org.apache.hadoop.fs.Path(base + "_precompact")

@@ -177,7 +177,7 @@ class DedupSpec extends TestBase {
       "monotone in the radius, radius 3 == ext65's single point") {
     import spark.implicits._
     val dir = sf("sf0.001")
-    val curve = ExtEntry.queries("ext70_simhash_radius_curve")(spark, dir)
+    val curve = SparkEntry.queries("ext70_simhash_radius_curve")(spark, dir)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     assert(curve.map(_._1) == Seq(1L, 2L, 3L))
     // Widening the hamming radius can only ADD candidates: every column
@@ -188,7 +188,7 @@ class DedupSpec extends TestBase {
         val xs = curve.map(f)
         assert(xs == xs.sorted, s"curve not monotone: $xs")
       }
-    val point = ExtEntry.queries("ext65_simhash_recall")(spark, dir)
+    val point = SparkEntry.queries("ext65_simhash_recall")(spark, dir)
       .as[(Long, Long, Long)].collect().head
     assert((curve.last._2, curve.last._3, curve.last._4) == point,
       "radius-3 curve row diverges from the ext65 audit")

@@ -416,7 +416,7 @@ class EmptyInputSpec extends TestBase {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     try {
-      val rows = ExtEntry.queries("ext85_dedup_token_savings")(spark, dir)
+      val rows = SparkEntry.queries("ext85_dedup_token_savings")(spark, dir)
         .as[(Long, Long, Long, Long, Long)].collect().toSeq
       val toks = texts.map(_.split(" ").length.toLong).sum
       assert(rows == Seq((0L, 0L, 0L, toks, 0L)))

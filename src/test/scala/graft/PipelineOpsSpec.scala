@@ -1662,7 +1662,7 @@ class PipelineOpsSpec extends TestBase {
   test("quantile curation keeps each language's upper half (ext67)") {
     import spark.implicits._
     val d = graft.ingest.Tables.documents(spark, sf("sf0.001"))
-    val kept = ExtEntry.queries("ext67_quantile_filter")(
+    val kept = SparkEntry.queries("ext67_quantile_filter")(
         spark, sf("sf0.001"))
       .groupBy("lang").count().as[(String, Long)].collect().toMap
     val all = d.groupBy("lang").count().as[(String, Long)].collect().toMap
@@ -1679,7 +1679,7 @@ class PipelineOpsSpec extends TestBase {
   test("data card fields match independent computations (ext66)") {
     import spark.implicits._
     val d = graft.ingest.Tables.documents(spark, sf("sf0.001"))
-    val card = ExtEntry.queries("ext66_data_card")(spark, sf("sf0.001"))
+    val card = SparkEntry.queries("ext66_data_card")(spark, sf("sf0.001"))
       .as[(Long, Long, Long, Long, Long, Long)].collect().head
     val (nd, nt, nl, ns, topShare, dupMass) = card
     assert(nd == d.count())
@@ -1691,7 +1691,7 @@ class PipelineOpsSpec extends TestBase {
       .agg(max("count")).as[Long].head()
     assert(topShare == maxSrc * 1000000L / nd)
     // redundancy term agrees with the ext64 report (same artifact)
-    val stats = ExtEntry.queries("ext64_dup_stats")(spark, sf("sf0.001"))
+    val stats = SparkEntry.queries("ext64_dup_stats")(spark, sf("sf0.001"))
       .as[(Long, Long, Long, Long)].collect().head
     assert(dupMass == stats._4)
     graft.ops.Reuse.freeAll(spark)
@@ -1699,10 +1699,10 @@ class PipelineOpsSpec extends TestBase {
 
   test("dup stats report consistent with the cluster listing (ext64)") {
     import spark.implicits._
-    val clusters = ExtEntry.queries("ext27_dedup_clusters")(
+    val clusters = SparkEntry.queries("ext27_dedup_clusters")(
         spark, sf("sf0.001"))
       .as[(Long, Long)].collect().toSeq
-    val row = ExtEntry.queries("ext64_dup_stats")(spark, sf("sf0.001"))
+    val row = SparkEntry.queries("ext64_dup_stats")(spark, sf("sf0.001"))
       .as[(Long, Long, Long, Long)].collect().head
     val (nc, nd, mx, mass) = row
     assert(nc == clusters.map(_._2).distinct.size)
@@ -1838,11 +1838,11 @@ class PipelineOpsSpec extends TestBase {
     import spark.implicits._
     val dir = sf("sf0.001")
     val (nf, dr, tr, ct, ppm) =
-      ExtEntry.queries("ext85_dedup_token_savings")(spark, dir)
+      SparkEntry.queries("ext85_dedup_token_savings")(spark, dir)
         .as[(Long, Long, Long, Long, Long)].collect().head
-    val clusters = ExtEntry.queries("ext27_dedup_clusters")(spark, dir)
+    val clusters = SparkEntry.queries("ext27_dedup_clusters")(spark, dir)
       .as[(Long, Long)].collect().toSeq // (doc_id, cluster_id)
-    val keepers = ExtEntry.queries("ext47_quality_keeper")(spark, dir)
+    val keepers = SparkEntry.queries("ext47_quality_keeper")(spark, dir)
       .select("cluster_id", "keeper_id")
       .as[(Long, Long)].collect().toMap
     val toks = graft.ingest.Tables.documents(spark, dir)

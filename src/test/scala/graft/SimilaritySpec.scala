@@ -285,7 +285,7 @@ class SimilaritySpec extends TestBase {
   test("ext58 probe-recall curve: n_true constant, recall monotone in " +
       "probes; build-once index cached across calls with rank1 == argmin") {
     import spark.implicits._
-    val rows = ExtEntry.queries("ext58_ivf_multiprobe_recall")(
+    val rows = SparkEntry.queries("ext58_ivf_multiprobe_recall")(
         spark, sf("sf0.001"))
       .select("probes", "n_true", "n_detected", "recall_q")
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
@@ -312,7 +312,7 @@ class SimilaritySpec extends TestBase {
   test("ext60 bucket-balance audit: totals cover the corpus, imbalance " +
       "bounded below by perfectly-even (1e6)") {
     import spark.implicits._
-    val row = ExtEntry.queries("ext60_ivf_balance")(spark, sf("sf0.001"))
+    val row = SparkEntry.queries("ext60_ivf_balance")(spark, sf("sf0.001"))
       .select("n_buckets", "n_vectors", "max_bucket", "min_bucket",
         "imbalance_q")
       .as[(Long, Long, Long, Long, Long)].collect()

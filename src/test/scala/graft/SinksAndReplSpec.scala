@@ -146,7 +146,7 @@ class SinksAndReplSpec extends TestBase {
   }
 
   test("ensureBucketed seeds once and skips when present") {
-    val (li, ord) = ExtEntry.ensureBucketed(spark, sf("sf0.001"))
+    val (li, ord) = registry.Artifacts.ensureBucketed(spark, sf("sf0.001"))
     assert(spark.catalog.tableExists(li) && spark.catalog.tableExists(ord))
     // Behavioral skip check (not wall-clock, which flakes under load):
     // a re-seed rewrites the layout files, so unchanged mtimes across the
@@ -163,7 +163,7 @@ class SinksAndReplSpec extends TestBase {
       finally s.close()
     }
     val before = layoutMtimes()
-    val (li2, ord2) = ExtEntry.ensureBucketed(spark, sf("sf0.001"))
+    val (li2, ord2) = registry.Artifacts.ensureBucketed(spark, sf("sf0.001"))
     assert((li2, ord2) == (li, ord))
     assert(layoutMtimes() == before,
       "ensureBucketed re-wrote the bucketed layout on the skip path")
