@@ -54,9 +54,7 @@ object Payloads {
       .groupBy("window_end", "entity")
       .agg(count("*").as("tweet_count"),
         sum(col("followerCount")).as("follower_sum"),
-        topk(when(col("originalTweetId") === -1L, col("id"))
-            .otherwise(col("originalTweetId")),
-          col("followerCount"), col("id"), col("text"),
+        topk(TopK.exampleKey, col("followerCount"), col("id"), col("text"),
           col("screenName"), col("originalTweetId")).as("tt"))
     Windows.rankTopEntities(agg, topN)
       .select(col("window_end"), col("entity"),

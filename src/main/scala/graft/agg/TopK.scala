@@ -2,7 +2,7 @@ package graft.agg
 
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.functions.{col, udaf, when}
 import org.apache.spark.sql.{Column, Encoder}
 
 /** One candidate row for the TopK aggregate: ranked by weight DESC with id
@@ -12,7 +12,8 @@ case class TopKItem(weight: Double, id: Long)
 /**
  * OP-26: bounded top-k as a typed `Aggregator` — the Spark analog of
  * Trill's built-in TopK aggregate (used at reference
- * TweetGateCore/Query.cs:65,98,130,156).
+ * TweetGateCore/Query.cs:65,98,130,156). Subclasses supply the rank
+ * order `ord`, optionally a dedupe key, `finish` and the encoders.
  *
  * The buffer never exceeds k elements and is kept sorted, so partial
  * (map-side) aggregation ships at most k rows per group per partition into
@@ -21,35 +22,47 @@ case class TopKItem(weight: Double, id: Long)
  * (scalacheck-verified in TopKSpec), so the result is independent of
  * partitioning.
  *
- * For small k the composite built-in
- * `slice(sort_array(collect_list(struct(...)), false), 1, k)` is
- * equivalent (parity-tested); this aggregator is the scale path — it bounds
- * state where collect_list would buffer entire groups.
+ * With a dedupe key the buffer holds at most one row per key, the key's
+ * best: a row whose key is present replaces that row only when strictly
+ * better under `ord`, so exact re-delivery of a row is a no-op. This
+ * stays EXACT, not approximate (TopKSpec law vs the unbounded compute).
+ * Invariants: (1) a buffered key's value is its best row among ALL its
+ * arrived rows — re-entry after eviction requires beating the buffer
+ * min, which only grows and was >= the key's max at eviction, so any
+ * re-entering row is the key's new max; (2) an absent key's best is <=
+ * the buffer min — it was either never inserted (rejected rows are <=
+ * min) or evicted by k strictly-better distinct keys, so it cannot
+ * belong to the true top-k. Merge keeps each key's best of both buffers
+ * then the top k, exact by the same argument applied per partition.
  */
-class TopKIds(k: Int, distinct: Boolean = false)
-    extends Aggregator[TopKItem, Seq[TopKItem], Seq[Long]] {
+abstract class BoundedTopK[IN, OUT](k: Int)
+    extends Aggregator[IN, Seq[IN], OUT] {
   require(k > 0)
 
-  /** weight DESC, id ASC. */
-  private val ord: Ordering[TopKItem] =
-    Ordering.by((t: TopKItem) => (-t.weight, t.id))
+  /** Rank order: the buffer keeps the k least rows under it. */
+  protected val ord: Ordering[IN]
 
-  override def zero: Seq[TopKItem] = Vector.empty
+  /** The dedupe rule: `Some(same)` makes the buffer distinct over the
+    * key `same` compares; `None` keeps every row. */
+  protected val sameKey: Option[(IN, IN) => Boolean] = None
 
-  /** With `distinct = true` a (weight, id) value already in the buffer is
-    * a no-op, so "buffer size" counts DISTINCT inputs — the property the
-    * stop-shingle df cap needs when the input stream may repeat a
-    * (doc, shingle) pair (ord equality ⟺ value equality here, since the
-    * ordering is the injective map t → (-t.weight, t.id)). The duplicate
-    * check must run BEFORE the evict-last path: evicting `last` to
-    * re-insert an already-present value would silently drop an item. */
-  override def reduce(b: Seq[TopKItem], a: TopKItem): Seq[TopKItem] =
-    if (distinct && b.exists(x => ord.equiv(x, a))) b
-    else if (b.size < k) insertSorted(b, a)
+  override def zero: Seq[IN] = Vector.empty
+
+  /** The key check must run BEFORE the evict-last path: evicting `last`
+    * to re-insert an already-present key would silently drop a row. */
+  override def reduce(b: Seq[IN], a: IN): Seq[IN] = {
+    val i = sameKey match {
+      case Some(same) => b.indexWhere(same(_, a))
+      case None       => -1
+    }
+    if (i >= 0) {
+      if (ord.lt(a, b(i))) insertSorted(b.patch(i, Nil, 1), a) else b
+    } else if (b.size < k) insertSorted(b, a)
     else if (ord.lt(a, b.last)) insertSorted(b.init, a)
     else b
+  }
 
-  private def insertSorted(b: Seq[TopKItem], a: TopKItem): Seq[TopKItem] = {
+  private def insertSorted(b: Seq[IN], a: IN): Seq[IN] = {
     val i = b.indexWhere(x => ord.gt(x, a)) match {
       case -1 => b.size
       case n  => n
@@ -57,14 +70,28 @@ class TopKIds(k: Int, distinct: Boolean = false)
     (b.take(i) :+ a) ++ b.drop(i)
   }
 
-  override def merge(b1: Seq[TopKItem], b2: Seq[TopKItem]): Seq[TopKItem] = {
+  /** With a dedupe rule the first row of each key in rank order is the
+    * key's best, so it alone is kept. */
+  override def merge(b1: Seq[IN], b2: Seq[IN]): Seq[IN] = {
     val s = (b1 ++ b2).sorted(ord)
-    val d = if (!distinct || s.isEmpty) s
-      else s.head +: s.sliding(2).collect {
-        case Seq(p, c) if !ord.equiv(p, c) => c
-      }.toVector
-    d.take(k)
+    sameKey.fold(s)(same => s.foldLeft(Vector.empty[IN]) { (kept, x) =>
+      if (kept.exists(same(_, x))) kept else kept :+ x
+    }).take(k)
   }
+}
+
+/** Top-k ids by weight DESC, id ASC. With `distinct = true` a (weight,
+  * id) value already in the buffer is a no-op, so "buffer size" counts
+  * DISTINCT inputs — the property the stop-shingle df cap needs when
+  * the input stream may repeat a (doc, shingle) pair (`ord` ties ⟺
+  * value equality here, since the ordering is the injective map t →
+  * (-t.weight, t.id)). */
+class TopKIds(k: Int, distinct: Boolean = false)
+    extends BoundedTopK[TopKItem, Seq[Long]](k) {
+  protected val ord: Ordering[TopKItem] =
+    Ordering.by((t: TopKItem) => (-t.weight, t.id))
+  override protected val sameKey: Option[(TopKItem, TopKItem) => Boolean] =
+    if (distinct) Some(ord.equiv) else None
 
   override def finish(r: Seq[TopKItem]): Seq[Long] = r.map(_.id)
 
@@ -82,7 +109,7 @@ case class TweetExample(followerCount: Long, id: Long, text: String,
 
 /** [[TopKTweets]] input: a [[TweetExample]] plus the dedupe key the
   * buffer is distinct over. Mentions/hashtags pass the effective
-  * original-tweet id (OP-27, Query.cs:82-84: retweets of one tweet
+  * original-tweet id ([[TopK.exampleKey]]: retweets of one tweet
   * collapse to one example); retweets pass the row's own id (the group
   * key IS the original id there — deduping by it would collapse the
   * examples to one, and the reference applies no dedupe on that path,
@@ -105,56 +132,18 @@ case class KeyedExample(dedupeKey: Long, followerCount: Long, id: Long,
  * that makes full payloads (not just ids) affordable in the shuffle and
  * the state store at 100 TB.
  *
- * Despite the bound this is EXACT, not approximate (TopKSpec law vs the
- * unbounded compute). Invariants: (1) a buffered key's value is its best
- * row among ALL its arrived rows — re-entry after eviction requires
- * beating the buffer min, which only grows and was >= the key's max at
- * eviction, so any re-entering row is the key's new max; (2) an absent
- * key's best is <= the buffer min — it was either never inserted
- * (rejected rows are <= min) or evicted by k strictly-better distinct
- * keys, so it cannot belong to the true top-k. Merge takes the per-key
- * best of both buffers then the top k, exact by the same argument
- * applied per partition.
- *
  * Totality caveat: the order is total because a tweet id identifies one
  * tweet — distinct rows never collide on (followerCount, id). Exact
  * re-delivery of the same row (at-least-once sources) is a no-op in
  * `reduce` (key present, not strictly better).
  */
 class TopKTweets(k: Int)
-    extends Aggregator[KeyedExample, Seq[KeyedExample], Seq[TweetExample]] {
-  require(k > 0)
-
-  private val ord: Ordering[KeyedExample] =
+    extends BoundedTopK[KeyedExample, Seq[TweetExample]](k) {
+  protected val ord: Ordering[KeyedExample] =
     Ordering.by((t: KeyedExample) => (-t.followerCount, t.id))
-
-  override def zero: Seq[KeyedExample] = Vector.empty
-
-  override def reduce(b: Seq[KeyedExample],
-      a: KeyedExample): Seq[KeyedExample] = {
-    val i = b.indexWhere(_.dedupeKey == a.dedupeKey)
-    if (i >= 0) {
-      // key present: keep the better representative
-      if (ord.lt(a, b(i))) insertSorted(b.take(i) ++ b.drop(i + 1), a)
-      else b
-    } else if (b.size < k) insertSorted(b, a)
-    else if (ord.lt(a, b.last)) insertSorted(b.init, a)
-    else b
-  }
-
-  private def insertSorted(b: Seq[KeyedExample],
-      a: KeyedExample): Seq[KeyedExample] = {
-    val i = b.indexWhere(x => ord.gt(x, a)) match {
-      case -1 => b.size
-      case n  => n
-    }
-    (b.take(i) :+ a) ++ b.drop(i)
-  }
-
-  override def merge(b1: Seq[KeyedExample],
-      b2: Seq[KeyedExample]): Seq[KeyedExample] =
-    (b1 ++ b2).groupBy(_.dedupeKey).valuesIterator
-      .map(_.min(ord)).toVector.sorted(ord).take(k)
+  override protected val sameKey
+      : Option[(KeyedExample, KeyedExample) => Boolean] =
+    Some(_.dedupeKey == _.dedupeKey)
 
   override def finish(r: Seq[KeyedExample]): Seq[TweetExample] =
     r.map(e => TweetExample(e.followerCount, e.id, e.text, e.screenName,
@@ -166,55 +155,6 @@ class TopKTweets(k: Int)
     ExpressionEncoder[Seq[TweetExample]]()
 }
 
-/** A ranked entity carried through the second-level top-k (OP-28):
-  * the per-window output payload of `GetTopItems`
-  * (reference TweetGateCore/Query.cs:152-168). */
-case class TopKEntity(weight: Double, entity: String, tweetCount: Long)
-
-/**
- * OP-26/28 second level: bounded top-k over whole entity rows — same
- * bounded-buffer/merge strategy as [[TopKIds]], ranked by weight DESC with
- * entity ASC tie-break. Being an `Aggregator`, it is legal as the second
- * stateful operator of a chained streaming query, which lets the full
- * two-level pipeline (per-entity agg → per-window top-k) run incrementally
- * in ONE streaming query (Spark ≥3.4 multiple-stateful-operator support)
- * instead of ranking in foreachBatch.
- */
-class TopKEntities(k: Int)
-    extends Aggregator[TopKEntity, Seq[TopKEntity], Seq[TopKEntity]] {
-  require(k > 0)
-
-  private val ord: Ordering[TopKEntity] =
-    Ordering.by((t: TopKEntity) => (-t.weight, t.entity))
-
-  override def zero: Seq[TopKEntity] = Vector.empty
-
-  override def reduce(b: Seq[TopKEntity], a: TopKEntity): Seq[TopKEntity] =
-    if (b.size < k) insertSorted(b, a)
-    else if (ord.lt(a, b.last)) insertSorted(b.init, a)
-    else b
-
-  private def insertSorted(b: Seq[TopKEntity],
-      a: TopKEntity): Seq[TopKEntity] = {
-    val i = b.indexWhere(x => ord.gt(x, a)) match {
-      case -1 => b.size
-      case n  => n
-    }
-    (b.take(i) :+ a) ++ b.drop(i)
-  }
-
-  override def merge(b1: Seq[TopKEntity],
-      b2: Seq[TopKEntity]): Seq[TopKEntity] =
-    (b1 ++ b2).sorted(ord).take(k)
-
-  override def finish(r: Seq[TopKEntity]): Seq[TopKEntity] = r
-
-  override def bufferEncoder: Encoder[Seq[TopKEntity]] =
-    ExpressionEncoder[Seq[TopKEntity]]()
-  override def outputEncoder: Encoder[Seq[TopKEntity]] =
-    ExpressionEncoder[Seq[TopKEntity]]()
-}
-
 /** A ranked entity WITH its full example payloads, carried through the
   * second-level top-k — the complete per-window record the reference's
   * observables emit (`TopMentions`/`TopHashTags` with
@@ -224,40 +164,19 @@ case class TopKEntityPayload(weight: Double, entity: String,
     tweetCount: Long, topTweets: Seq[TweetExample])
 
 /**
- * [[TopKEntities]] carrying the payloads: bounded top-k over entity rows
- * that each hold their (already k-bounded) example structs — the second
- * stateful level of the FULL-payload chained streaming query. State per
- * rank window is k entities x k examples, so the complete reference
+ * OP-26/28 second level: bounded top-k over entity rows that each hold
+ * their (already k-bounded) example structs, ranked by weight DESC with
+ * entity ASC tie-break. Being an `Aggregator`, it is legal as the second
+ * stateful operator of a chained streaming query (Spark ≥3.4
+ * multiple-stateful-operator support), so the complete reference
  * emission (top-10 entities, each with 10 example tweets) runs
- * incrementally end-to-end with bounded state at both levels.
+ * incrementally end-to-end with state bounded at k entities x k
+ * examples per rank window, instead of ranking in foreachBatch.
  */
-class TopKEntitiesPayload(k: Int) extends Aggregator[TopKEntityPayload,
-    Seq[TopKEntityPayload], Seq[TopKEntityPayload]] {
-  require(k > 0)
-
-  private val ord: Ordering[TopKEntityPayload] =
+class TopKEntitiesPayload(k: Int)
+    extends BoundedTopK[TopKEntityPayload, Seq[TopKEntityPayload]](k) {
+  protected val ord: Ordering[TopKEntityPayload] =
     Ordering.by((t: TopKEntityPayload) => (-t.weight, t.entity))
-
-  override def zero: Seq[TopKEntityPayload] = Vector.empty
-
-  override def reduce(b: Seq[TopKEntityPayload],
-      a: TopKEntityPayload): Seq[TopKEntityPayload] =
-    if (b.size < k) insertSorted(b, a)
-    else if (ord.lt(a, b.last)) insertSorted(b.init, a)
-    else b
-
-  private def insertSorted(b: Seq[TopKEntityPayload],
-      a: TopKEntityPayload): Seq[TopKEntityPayload] = {
-    val i = b.indexWhere(x => ord.gt(x, a)) match {
-      case -1 => b.size
-      case n  => n
-    }
-    (b.take(i) :+ a) ++ b.drop(i)
-  }
-
-  override def merge(b1: Seq[TopKEntityPayload],
-      b2: Seq[TopKEntityPayload]): Seq[TopKEntityPayload] =
-    (b1 ++ b2).sorted(ord).take(k)
 
   override def finish(r: Seq[TopKEntityPayload]): Seq[TopKEntityPayload] = r
 
@@ -275,7 +194,7 @@ object TopK {
   }
 
   /** Distinct-input form: duplicate (weight, id) pairs collapse, so the
-    * buffer bound counts distinct inputs (see [[TopKIds.reduce]]). */
+    * buffer bound counts distinct inputs (see [[TopKIds]]). */
   def topKDistinctIds(k: Int): (Column, Column) => Column = {
     val fn = udaf(new TopKIds(k, distinct = true),
       ExpressionEncoder[TopKItem]())
@@ -291,12 +210,13 @@ object TopK {
     (key, fc, id, text, sn, oid) => fn(key, fc, id, text, sn, oid)
   }
 
-  /** Untyped form of [[TopKEntities]]:
-    * `topKEntities(10)(col("weight"), col("entity"), col("cnt"))`. */
-  def topKEntities(k: Int): (Column, Column, Column) => Column = {
-    val fn = udaf(new TopKEntities(k), ExpressionEncoder[TopKEntity]())
-    (weight, entity, cnt) => fn(weight, entity, cnt)
-  }
+  /** OP-27's example dedupe key over a projected tweet row (Query.cs:
+    * 82-84): a retweet keys on its original tweet's id, so retweets of
+    * one tweet collapse to one example; any other tweet keys on its own
+    * id. */
+  def exampleKey: Column =
+    when(col("originalTweetId") =!= -1L, col("originalTweetId"))
+      .otherwise(col("id"))
 
   /** Untyped form of [[TopKEntitiesPayload]]: the 4th column is the
     * entity's `array<struct>` example payloads. */

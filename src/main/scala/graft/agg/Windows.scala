@@ -208,22 +208,6 @@ object Windows {
         col("n_events"), col("weight_sum"))
 
   /**
-   * Cohort retention — the longitudinal member of the window family:
-   * group users by the period they FIRST appeared (their cohort), then
-   * for each (cohort, periods-since) cell count how many of them came
-   * back. Periods are whole `periodUs` slices of epoch time (integer
-   * DIV — engine-portable, no calendar arithmetic), retention is ppm
-   * of the cohort's size (integer DIV after the count, so cells are
-   * exact int64s).
-   *
-   * Scale shape: raw events collapse map-side into the distinct
-   * (user, period) activity matrix — the ONLY relation that ever
-   * shuffles, bounded by users × active periods, not event count; the
-   * first-seen min and the user-keyed join both run over that compact
-   * matrix, and cohort sizes (|cohorts| rows) broadcast back onto it.
-   * Raw events are touched exactly once.
-   */
-  /**
    * Ordered-step conversion funnel — the sequential companion of
    * [[cohortRetention]]: how many users progress through `steps` IN
    * ORDER, each step strictly after the previous one and inside a
@@ -308,16 +292,26 @@ object Windows {
    * period, count) matrix — the ONLY corpus-sized shuffle; the
    * sufficient statistics collapse that matrix map-side again; the
    * global min period is a broadcast 1-row envelope. The per-(entity,
-   * period) counts are pure-addition partials, so the streaming twin
-   * ([[graft.stream.StreamingPipeline.trendSlopePartialsSink]])
-   * accumulates exactly them per micro-batch and folds here.
+   * period) counts are pure-addition partials ([[periodCounts]]), so
+   * the streaming twin accumulates exactly them per micro-batch and
+   * folds here.
    */
   def trendSlopes(events: DataFrame, entity: Column, ts: String = "ts",
       periodUs: Long = 86400000000L): DataFrame =
-    trendSlopesFromCounts(
-      events.select(entity.as("entity"),
-          expr(s"unix_micros($ts) DIV $periodUs").as("x"))
-        .groupBy("entity", "x").agg(count(lit(1)).as("y")))
+    trendSlopesFromCounts(periodCounts(events, entity, ts, periodUs))
+
+  /** The (entity, x, y) period-count matrix [[trendSlopes]],
+    * [[anomalyDays]] and [[burstiness]] derive from: y events per
+    * entity and period x = `unix_micros(ts) DIV periodUs`. The counts
+    * are pure-addition partials, the per-micro-batch form the streaming
+    * twin writes through [[graft.stream.StreamingPipeline.partialsSink]];
+    * the min-shift and the rank statistics belong to the `…FromCounts`
+    * derivations, after the merge (they read the whole matrix). */
+  def periodCounts(events: DataFrame, entity: Column, ts: String,
+      periodUs: Long): DataFrame =
+    events.select(entity.as("entity"),
+        expr(s"unix_micros($ts) DIV $periodUs").as("x"))
+      .groupBy("entity", "x").agg(count(lit(1)).as("y"))
 
   /** [[trendSlopes]]' fit over a pre-counted (entity, x, y) period
     * matrix — duplicate (entity, x) keys are re-summed first, so
@@ -378,10 +372,7 @@ object Windows {
    */
   def anomalyDays(events: DataFrame, entity: Column, ts: String = "ts",
       periodUs: Long = 86400000000L, k: Long = 7L): DataFrame =
-    anomalyDaysFromCounts(
-      events.select(entity.as("entity"),
-          expr(s"unix_micros($ts) DIV $periodUs").as("x"))
-        .groupBy("entity", "x").agg(count(lit(1)).as("y")), k)
+    anomalyDaysFromCounts(periodCounts(events, entity, ts, periodUs), k)
 
   /** [[anomalyDays]]' rank pass over a pre-counted (entity, x, y)
     * matrix — duplicate keys re-summed first (partials fold exactly). */
@@ -427,15 +418,11 @@ object Windows {
    * Schwarz keeps the numerator ≥ 0, so trunc DIV == floor). `bursty`
    * flags fano > 10⁶. Same (entity, period, count) matrix as the
    * slope/anomaly cards — one corpus shuffle, pure-addition partials,
-   * and the streaming twin reads the SAME trendSlopePartialsSink
-   * store.
+   * and the streaming twin reads the SAME [[periodCounts]] store.
    */
   def burstiness(events: DataFrame, entity: Column, ts: String = "ts",
       periodUs: Long = 86400000000L): DataFrame =
-    burstinessFromCounts(
-      events.select(entity.as("entity"),
-          expr(s"unix_micros($ts) DIV $periodUs").as("x"))
-        .groupBy("entity", "x").agg(count(lit(1)).as("y")))
+    burstinessFromCounts(periodCounts(events, entity, ts, periodUs))
 
   /** [[burstiness]] over a pre-counted (entity, x, y) matrix —
     * duplicate (entity, x) keys re-sum first, so per-micro-batch
@@ -455,6 +442,22 @@ object Windows {
         (col("fano_ppm") > 1000000L).cast("long"))
   }
 
+  /**
+   * Cohort retention — the longitudinal member of the window family:
+   * group users by the period they FIRST appeared (their cohort), then
+   * for each (cohort, periods-since) cell count how many of them came
+   * back. Periods are whole `periodUs` slices of epoch time (integer
+   * DIV — engine-portable, no calendar arithmetic), retention is ppm
+   * of the cohort's size (integer DIV after the count, so cells are
+   * exact int64s).
+   *
+   * Scale shape: raw events collapse map-side into the distinct
+   * (user, period) activity matrix — the ONLY relation that ever
+   * shuffles, bounded by users × active periods, not event count; the
+   * first-seen min and the user-keyed join both run over that compact
+   * matrix, and cohort sizes (|cohorts| rows) broadcast back onto it.
+   * Raw events are touched exactly once.
+   */
   def cohortRetention(events: DataFrame, user: Column, ts: String = "ts",
       periodUs: Long = 7L * 86400000000L): DataFrame = {
     val periods = events

@@ -103,10 +103,12 @@ object Tables {
 
   /** `events` is the tweet-stream stand-in for batch-verifiable windowed
     * queries (TESTDATA.md): entity = event_type/user_id, weight = value,
-    * `props` is a raw-JSON column à la the tweet wire format. */
-  /** events is NOT fanned out: its operators are shuffle-agg-bound, not
-    * per-row-CPU-bound, and the extra repartition measured as a net loss. */
-  /** `ts` normalizes to a UTC-instant TIMESTAMP whatever the parquet
+    * `props` is a raw-JSON column à la the tweet wire format.
+    *
+    * events is NOT fanned out: its operators are shuffle-agg-bound, not
+    * per-row-CPU-bound, and the extra repartition measured as a net loss.
+    *
+    * `ts` normalizes to a UTC-instant TIMESTAMP whatever the parquet
     * wrote: int64 nanoseconds (timestamp[ns] files — Spark reads the
     * raw long) via `timestamp_micros`, or timestamp[us]
     * (isAdjustedToUTC=false → TIMESTAMP_NTZ in Spark) by interpreting
@@ -193,6 +195,13 @@ object Tables {
   def tweetsFromFile(spark: SparkSession, path: String): DataFrame =
     tweetsFromJsonLines(spark.read.text(path))
 
+  /** Typed view of the projected stream — compile-time field checks for
+    * user code (`Dataset[TweetEvent]` per SURVEY §1.3). */
+  def tweetEvents(tweets: DataFrame): org.apache.spark.sql.Dataset[graft.model.TweetEvent] = {
+    import tweets.sparkSession.implicits._
+    projectTweets(tweets).as[graft.model.TweetEvent]
+  }
+
   /**
    * OP-05/06: the flattening projection of reference Query.cs:32-41 —
    * nested RawTweet → 8 flat columns. Text coalesce (OP-05, Query.cs:171-184):
@@ -202,13 +211,6 @@ object Tables {
    * projection — no UDF. `originalTweetId` keeps the reference's -1
    * not-a-retweet sentinel (Query.cs:37).
    */
-  /** Typed view of the projected stream — compile-time field checks for
-    * user code (`Dataset[TweetEvent]` per SURVEY §1.3). */
-  def tweetEvents(tweets: DataFrame): org.apache.spark.sql.Dataset[graft.model.TweetEvent] = {
-    import tweets.sparkSession.implicits._
-    projectTweets(tweets).as[graft.model.TweetEvent]
-  }
-
   def projectTweets(tweets: DataFrame): DataFrame =
     tweets.select(Seq(
       col("id"),

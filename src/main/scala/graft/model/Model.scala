@@ -53,26 +53,3 @@ case class TweetEvent(
     followerCount: Long,
     ts: java.sql.Timestamp)
 
-/** Output payloads (reference: TweetGateCore/AggregatePayloads.cs:5-58). */
-case class TweetDescription(
-    id: Long,
-    followerCount: Long,
-    text: String,
-    screenName: String,
-    originalTweetId: Long)
-
-case class WindowCount(windowEnd: java.sql.Timestamp, count: Long)
-
-case class TopEntity(
-    windowEnd: java.sql.Timestamp,
-    entity: String,
-    tweetCount: Long,
-    followerCountSum: Long,
-    topTweets: Seq[TweetDescription])
-
-case class DbSummary(
-    minDate: java.sql.Timestamp,
-    maxDate: java.sql.Timestamp,
-    durationSeconds: Long,
-    windowCount: Long,
-    numberOfTweets: Long)

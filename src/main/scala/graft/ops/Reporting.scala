@@ -337,13 +337,19 @@ object Reporting {
    * bounded relation plus a broadcast 1-row total.
    */
   def psiDrift(df: DataFrame, sideA: Column, value: Column): DataFrame =
-    psiFromCounts(df.select(
+    psiFromCounts(psiPartials(df, sideA, value))
+
+  /** [[psiDrift]]'s (bucket, n_a, n_b) histogram counts — pure-addition
+    * partials, ≤ 64 rows, the per-micro-batch form its streaming twin
+    * writes through [[graft.stream.StreamingPipeline.partialsSink]]. */
+  def psiPartials(df: DataFrame, sideA: Column, value: Column): DataFrame =
+    df.select(
         (length(bin(greatest(value.cast("long"), lit(1L)))) - lit(1))
           .cast("long").as("bucket"),
         when(sideA, 1L).otherwise(0L).as("n_a"),
         when(sideA, 0L).otherwise(1L).as("n_b"))
       .groupBy("bucket")
-      .agg(sum("n_a").as("n_a"), sum("n_b").as("n_b")))
+      .agg(sum("n_a").as("n_a"), sum("n_b").as("n_b"))
 
   /** The PSI math over a (bucket, n_a, n_b) counts relation — counts
     * are COMMUTATIVE partials (the streaming twin accumulates them per

@@ -654,23 +654,31 @@ object TextOps {
    */
   def textRank(doc: DataFrame, iters: Int = 3, minWout: Int = 5,
       topK: Int = 20, dampPct: Int = 85,
-      text: String = "text"): DataFrame = {
+      text: String = "text"): DataFrame =
+    // The symmetrized table is materialized once — FromEdges reads it
+    // from two consumers.
+    textRankFromEdges(Reuse.shared(textRankEdges(doc, text)),
+      iters, minWout, topK, dampPct)
+
+  /** [[textRank]]'s word graph: the symmetrized adjacent-token
+    * co-occurrence counts (src, dst, w), self-loops dropped. A COUNT
+    * relation, so per-micro-batch edges merge by pure addition: the
+    * form the streaming twin writes through
+    * [[graft.stream.StreamingPipeline.partialsSink]]. */
+  def textRankEdges(doc: DataFrame, text: String): DataFrame = {
     // ONE corpus explode: aggregate the DIRECTED pair counts first
     // (vocab²-bounded), then symmetrize by unioning the aggregated
     // table with its swap and re-summing — count(union of raw pair
     // rows) == sum(count) over each direction, and the second union
     // branch now reads the tiny aggregated relation instead of
     // re-exploding the corpus (r18: the raw-pair union made the
-    // explode run twice inside one job). The symmetrized table is
-    // materialized once — FromEdges reads it from two consumers.
+    // explode run twice inside one job).
     val aw = bigramRows(doc.select(col(text)), text)
       .filter(col("t1") =!= col("t2"))
       .groupBy(col("t1").as("src"), col("t2").as("dst"))
       .agg(count(lit(1)).as("w"))
-    textRankFromEdges(Reuse.shared(
-      aw.union(aw.select(col("dst"), col("src"), col("w")))
-        .groupBy("src", "dst").agg(sum("w").as("w"))),
-      iters, minWout, topK, dampPct)
+    aw.union(aw.select(col("dst"), col("src"), col("w")))
+      .groupBy("src", "dst").agg(sum("w").as("w"))
   }
 
   /** Vertex-count ceiling for textRank's broadcast iteration joins —

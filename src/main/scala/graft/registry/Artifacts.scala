@@ -184,47 +184,27 @@ private[graft] object Artifacts {
    * entry and the on-disk files, then skip the write — the pay-once
    * layout cost is NOT charged to every query over the table.
    */
-  def ensureBucketed(s: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val (li, ord) = (s"graft_li_b_$tag", s"graft_ord_b_$tag")
-      val base = s"/tmp/graft_bucketed/$tag"
-      // Cross-process exclusion: the object-level synchronized only
-      // covers this JVM; a Bench and a test JVM seeding the same tag
-      // concurrently would interleave the table rewrite and the stamp.
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-      val lockCh = java.nio.channels.FileChannel.open(
-        java.nio.file.Paths.get(s"$base/.lock"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      val lock = lockCh.lock()
-      try ensureBucketedLocked(s, dir, li, ord, base)
-      finally { lock.release(); lockCh.close() }
-    }
-
-  private def ensureBucketedLocked(s: SparkSession, dir: String,
-      li: String, ord: String, base: String): (String, String) = {
-      // Freshness stamp: the source files' mtimes at write time. A layout
-      // built from since-regenerated source parquet is stale, not
-      // "present" — without this a long-lived session would keep serving
-      // the old copy after the data under `dir` changed.
-      val stamp = Seq(s"$dir/lineitem.parquet", s"$dir/orders.parquet")
-        .map(f => new java.io.File(f).lastModified()).mkString(",")
-      val stampFile = java.nio.file.Paths.get(s"$base/.source_stamp")
-      val present = s.catalog.tableExists(li) && s.catalog.tableExists(ord) &&
+  def ensureBucketed(s: SparkSession, dir: String): (String, String) = {
+    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
+    val (li, ord) = (s"graft_li_b_$tag", s"graft_ord_b_$tag")
+    val base = s"/tmp/graft_bucketed/$tag"
+    // Freshness stamp: the source files' mtimes at write time. A layout
+    // built from since-regenerated source parquet is stale, not
+    // "present" — without this a long-lived session would keep serving
+    // the old copy after the data under `dir` changed.
+    seedOnce(s"$base/.lock", s"$base/.source_stamp",
+      Seq(s"$dir/lineitem.parquet", s"$dir/orders.parquet")
+        .map(f => new java.io.File(f).lastModified()).mkString(","),
+      s.catalog.tableExists(li) && s.catalog.tableExists(ord) &&
         new java.io.File(s"$base/li/_SUCCESS").exists() &&
-        new java.io.File(s"$base/ord/_SUCCESS").exists() &&
-        java.nio.file.Files.exists(stampFile) &&
-        java.nio.file.Files.readString(stampFile) == stamp
-      if (!present) {
-        graft.sources.BucketedTables.writeBucketed(Tables.lineitem(s, dir),
-          li, s"$base/li", "l_orderkey", 8)
-        graft.sources.BucketedTables.writeBucketed(Tables.orders(s, dir),
-          ord, s"$base/ord", "o_orderkey", 8)
-        java.nio.file.Files.writeString(stampFile, stamp)
-      }
-      (li, ord)
+        new java.io.File(s"$base/ord/_SUCCESS").exists()) {
+      graft.sources.BucketedTables.writeBucketed(Tables.lineitem(s, dir),
+        li, s"$base/li", "l_orderkey", 8)
+      graft.sources.BucketedTables.writeBucketed(Tables.orders(s, dir),
+        ord, s"$base/ord", "o_orderkey", 8)
     }
+    (li, ord)
+  }
 
   /**
    * Seed-once materialized counts STORE in the AggregateStore layout
@@ -306,39 +286,54 @@ private[graft] object Artifacts {
     * name; lands under the compacted `batch=-1` layout
     * [[AggregateStore]] reads, written by [[AggregateStore.write]]. */
   private def ensureStore(s: SparkSession, dir: String, name: String)(
-      build: => DataFrame): String =
+      build: => DataFrame): String = {
+    // The readable prefix alone can collide for distinct dirs
+    // ("/a/b" and "/a.b" both flatten to "_a_b" — r9 ADVICE), and
+    // two sessions sharing one store path would thrash the stamp;
+    // the hash suffix makes the mapping injective in practice.
+    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
+      Integer.toHexString(dir.hashCode)
+    val base = s"/tmp/graft_store/$tag"
+    val path = s"$base/$name"
+    // Source mtime + store FORMAT version: a schema change to the
+    // stored relation (e.g. r12's full example payloads) must
+    // invalidate stores cached by earlier builds of this library.
+    seedOnce(s"$base/.lock_$name", s"$base/.source_stamp_$name",
+      new java.io.File(s"$dir/events.parquet").lastModified().toString +
+        ":v2",
+      new java.io.File(
+        s"$path/batch=${AggregateStore.CompactedBatchId}/_SUCCESS")
+        .exists()) {
+      AggregateStore.write(build, path, AggregateStore.CompactedBatchId)
+    }
+    path
+  }
+
+  /** The seed-once step under [[ensureBucketed]] and [[ensureStore]]:
+    * runs `write` unless `stampFile` holds `stamp` and `present` holds,
+    * then records `stamp`. Everything after the lock is evaluated under
+    * it: the object-level synchronized covers this JVM, the `lockFile`
+    * channel lock other processes (a Bench and a test JVM seeding the
+    * same layout concurrently would interleave the rewrite and the
+    * stamp). */
+  private def seedOnce(lockFile: String, stampFile: String,
+      stamp: => String, present: => Boolean)(write: => Unit): Unit =
     synchronized {
-      // The readable prefix alone can collide for distinct dirs
-      // ("/a/b" and "/a.b" both flatten to "_a_b" — r9 ADVICE), and
-      // two sessions sharing one store path would thrash the stamp;
-      // the hash suffix makes the mapping injective in practice.
-      val tag = dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-        Integer.toHexString(dir.hashCode)
-      val base = s"/tmp/graft_store/$tag"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-      val lockCh = java.nio.channels.FileChannel.open(
-        java.nio.file.Paths.get(s"$base/.lock_$name"),
+      val lockPath = java.nio.file.Paths.get(lockFile)
+      java.nio.file.Files.createDirectories(lockPath.getParent)
+      val lockCh = java.nio.channels.FileChannel.open(lockPath,
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.WRITE)
       val lock = lockCh.lock()
       try {
-        val path = s"$base/$name"
-        val batchDir = s"$path/batch=${AggregateStore.CompactedBatchId}"
-        // Source mtime + store FORMAT version: a schema change to the
-        // stored relation (e.g. r12's full example payloads) must
-        // invalidate stores cached by earlier builds of this library.
-        val stamp =
-          new java.io.File(s"$dir/events.parquet").lastModified().toString +
-            ":v2"
-        val stampFile = java.nio.file.Paths.get(s"$base/.source_stamp_$name")
-        val present = java.nio.file.Files.exists(stampFile) &&
-          java.nio.file.Files.readString(stampFile) == stamp &&
-          new java.io.File(s"$batchDir/_SUCCESS").exists()
-        if (!present) {
-          AggregateStore.write(build, path, AggregateStore.CompactedBatchId)
-          java.nio.file.Files.writeString(stampFile, stamp)
+        val want = stamp
+        val stampPath = java.nio.file.Paths.get(stampFile)
+        val fresh = java.nio.file.Files.exists(stampPath) &&
+          java.nio.file.Files.readString(stampPath) == want && present
+        if (!fresh) {
+          write
+          java.nio.file.Files.writeString(stampPath, want)
         }
-        path
       } finally { lock.release(); lockCh.close() }
     }
 }

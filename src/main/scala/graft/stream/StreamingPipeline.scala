@@ -547,35 +547,35 @@ object StreamingPipeline {
     * snapshot is bounded. */
   private def gcFunnelSnaps(spark: SparkSession, statePath: String,
       current: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val old = Option(fs.listStatus(root)).getOrElse(Array.empty)
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("snap=") =>
-        n.stripPrefix("snap=").toLong }
-      .filter(_ < current)
+    val fs = new org.apache.hadoop.fs.Path(statePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    funnelSnapIds(spark, statePath).filter(_ < current)
       .sorted.dropRight(1) // keep the immediate predecessor for replay
-    old.foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        f"$statePath/snap=$id%09d"), true)
-    }
+      .foreach { id =>
+        fs.delete(new org.apache.hadoop.fs.Path(
+          f"$statePath/snap=$id%09d"), true)
+      }
   }
 
   private def latestFunnelSnap(spark: SparkSession, statePath: String,
       before: Option[Long]): Option[DataFrame] = {
+    val snaps = funnelSnapIds(spark, statePath)
+      .filter(id => before.forall(id < _))
+    if (snaps.isEmpty) None
+    else Some(Tables.parquet(spark, f"$statePath/snap=${snaps.max}%09d"))
+  }
+
+  /** The batch ids of the `snap=<id>` dirs under `statePath`. */
+  private def funnelSnapIds(spark: SparkSession,
+      statePath: String): Seq[Long] = {
     val root = new org.apache.hadoop.fs.Path(statePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return None
-    val snaps = Option(fs.listStatus(root)).getOrElse(Array.empty)
+    if (!fs.exists(root)) Nil
+    else Option(fs.listStatus(root)).getOrElse(Array.empty).toSeq
       .filter(_.isDirectory)
       .map(_.getPath.getName)
       .collect { case n if n.startsWith("snap=") =>
         n.stripPrefix("snap=").toLong }
-      .filter(id => before.forall(id < _))
-    if (snaps.isEmpty) None
-    else Some(Tables.parquet(spark, f"$statePath/snap=${snaps.max}%09d"))
   }
 
   /** The derivation side of [[funnelStateSink]]: the batch funnel over
@@ -590,38 +590,6 @@ object StreamingPipeline {
         .select(col("user_id"), col("event_type"),
           expr("timestamp_micros(ts_us)").as("ts")),
       col("user_id"), steps, horizonUs)
-
-  /** Streaming twin of the octave-PSI drift card (ext150): per-batch
-    * (bucket, n_a, n_b) histogram counts are pure-addition partials
-    * (the `Reporting.driftPartials` state shape — ≤ 64 rows per batch);
-    * the share/octave math belongs to the derivation, after the merge
-    * (`Reporting.psiFromCounts` over [[partials]]). */
-  def psiPartialsSink(docs: DataFrame, sideA: Column, value: Column,
-      outPath: String): DataStreamWriter[Row] =
-    partialsSink(docs, b => b.select(
-        (length(bin(greatest(value.cast("long"), lit(1L)))) - lit(1))
-          .cast("long").as("bucket"),
-        when(sideA, 1L).otherwise(0L).as("n_a"),
-        when(sideA, 0L).otherwise(1L).as("n_b"))
-      .groupBy("bucket")
-      .agg(sum("n_a").as("n_a"), sum("n_b").as("n_b")), outPath)
-
-  /** Streaming twin of the OLS trend-slope card (ext152): the
-    * per-batch (entity, period, count) matrix is a pure-addition
-    * partial; the min-shift and the five sufficient statistics belong
-    * to the derivation, AFTER the merge (the x-shift depends on the
-    * global min period, which only the merged matrix knows). The one
-    * stored matrix, read through [[partials]], serves the direction
-    * (`Windows.trendSlopesFromCounts`), pointwise
-    * (`anomalyDaysFromCounts`, ext158) and texture
-    * (`burstinessFromCounts`, ext166) derivations; their rank
-    * statistics belong after the merge too (a median is a snapshot
-    * property, not per-row decomposable). */
-  def trendSlopePartialsSink(events: DataFrame, entity: Column,
-      outPath: String, periodUs: Long = 86400000000L): DataStreamWriter[Row] =
-    partialsSink(events, b => b.select(entity.as("entity"),
-        expr(s"unix_micros(ts) DIV $periodUs").as("x"))
-      .groupBy("entity", "x").agg(count(lit(1)).as("y")), outPath)
 
   /** The derivation side of the decayed-trending twin (ext141, the
     * aligned-grid form), over a [[partialsSink]] store of
@@ -639,29 +607,12 @@ object StreamingPipeline {
         .groupBy("g0", "g1", "abs_bucket")
         .agg(sum("cnt").as("cnt")), k)
 
-  /** Streaming twin of TextRank (ext145): the word-adjacency graph is
-    * a COUNT relation, so per-batch partial edge counts merge by pure
-    * addition — exactly the trending histogram's state shape. Each
-    * micro-batch writes its doc-local bigram counts (symmetrized,
-    * self-loops dropped); the derivation re-sums duplicate edges
-    * across batches BEFORE the vertex floor and the power iteration,
-    * so the streamed keywords equal the batch operator's at any
-    * batching (iteration cost is vocab²-bounded, independent of
-    * stream length). */
-  def textrankPartialsSink(docs: DataFrame,
-      outPath: String): DataStreamWriter[Row] =
-    partialsSink(docs, b => {
-      val pairs = graft.ops.TextOps.bigramRows(b.select(col("text")))
-        .filter(col("t1") =!= col("t2"))
-        .select(col("t1").as("src"), col("t2").as("dst"))
-      pairs.union(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-    }, outPath)
-
-  /** The derivation side of [[textrankPartialsSink]]: merge the edge
-    * partials by addition, then the batch operator's floor/iterate/rank
-    * tail over the merged graph. */
+  /** The derivation side of the TextRank twin (ext145), over a
+    * [[partialsSink]] store of `TextOps.textRankEdges`: the word graph
+    * is a COUNT relation, so duplicate edges across batches re-sum
+    * BEFORE the vertex floor and the power iteration, and the streamed
+    * keywords equal the batch operator's at any batching (iteration
+    * cost is vocab²-bounded, independent of stream length). */
   def textrankFromState(spark: SparkSession, outPath: String,
       iters: Int = 3, minWout: Int = 5, topK: Int = 20,
       dampPct: Int = 85): DataFrame =
@@ -672,11 +623,11 @@ object StreamingPipeline {
 
   /** Streaming twin of the stupid-backoff LM build (ext148): per batch,
     * the UNPRUNED bigram and unigram counts as ONE kind-tagged relation
-    * (uni rows carry t2 = null) — pure-addition partials, the
-    * [[textrankPartialsSink]] state shape. The `minCount` prune belongs
-    * to the DERIVATION, after the merge (a bigram seen once in each of
-    * three batches is count 3, kept — pruning per batch would
-    * over-prune, which is why the sink stores raw counts). */
+    * (uni rows carry t2 = null) — pure-addition partials, the TextRank
+    * edge-count state shape ([[textrankFromState]]). The `minCount`
+    * prune belongs to the DERIVATION, after the merge (a bigram seen
+    * once in each of three batches is count 3, kept — pruning per batch
+    * would over-prune, which is why the sink stores raw counts). */
   def lmPartialsSink(docs: DataFrame,
       outPath: String): DataStreamWriter[Row] =
     partialsSink(docs, b => {
@@ -1091,12 +1042,11 @@ object StreamingPipeline {
       .select(col("ts"), col("ke.kind").as("kind"),
         col("ke.entity").as("entity"), col("followerCount"), col("text"),
         col("id"), col("screenName"), col("originalTweetId"),
-        // OP-27's dedupe key: mentions/hashtags collapse retweets of one
-        // tweet to one example (effective original id); retweets group BY
+        // OP-27's dedupe key for mentions/hashtags; retweets group BY
         // the original id, so their examples stay per retweeting row and
         // the reference applies no dedupe there (Query.cs:130-137).
-        when(col("ke.kind").isin("mentions", "hashtags") &&
-            col("originalTweetId") =!= -1L, col("originalTweetId"))
+        when(col("ke.kind").isin("mentions", "hashtags"),
+            graft.agg.TopK.exampleKey)
           .otherwise(col("id")).as("dedupe_key"))
       .groupBy(window(col("ts"), Windows.WindowSize, Windows.HopSize),
         col("kind"), col("entity"))
@@ -1182,45 +1132,17 @@ object StreamingPipeline {
 
   /**
    * OP-28 as a CHAINED streaming query (Spark ≥3.4 multiple stateful
-   * operators): per-entity hopping aggregate → 1-min tumbling top-k over
-   * entities — the exact two-level shape of the reference's
-   * `GetTopItems` (Query.cs:152-168: re-window the aggregate stream,
-   * TopK(FollowerCountSum, 10)). The second level uses the bounded
-   * [[graft.agg.TopKEntities]] aggregate, so both levels run
-   * incrementally in one query — no foreachBatch ranking, state bounded
-   * at k entities per window. `window_time(window)` keeps event-time
+   * operators) with the FULL example payloads — the complete reference
+   * emission shape, end-to-end incremental: per hopping window the
+   * per-hashtag multi-agg carries its k example `TweetDescription`
+   * structs (bounded [[graft.agg.TopKTweets]], OP-26/27 fused), and the
+   * 1-min tumbling second level ranks whole entity+payload rows (bounded
+   * [[graft.agg.TopKEntitiesPayload]]) — exactly `GetTopItems` over
+   * `TopHashTags{..., TopTweets}` (Query.cs:152-168 over
+   * AggregatePayloads.cs:29-42), with state bounded at k entities x k
+   * examples per rank window and both levels in ONE streaming query (no
+   * foreachBatch ranking). `window_time(window)` keeps event-time
    * lineage so the watermark propagates through both stateful operators.
-   */
-  def topEntitiesStreamChained(tweets: DataFrame,
-      n: Int = Windows.TopN): DataFrame = {
-    val topk = graft.agg.TopK.topKEntities(n)
-    tweets
-      .withWatermark("ts", Watermark)
-      .filter(size(col("hashtags")) > 0)
-      .select(col("ts"), explode(col("hashtags")).as("entity"),
-        col("followerCount"))
-      .groupBy(window(col("ts"), Windows.WindowSize, Windows.HopSize),
-        col("entity"))
-      .agg(count("*").as("tweet_count"),
-        sum(col("followerCount")).cast("double").as("follower_sum"))
-      .groupBy(window(window_time(col("window")), Windows.HopSize))
-      .agg(topk(col("follower_sum"), col("entity"), col("tweet_count"))
-        .as("top_entities"))
-      .select(col("window.end").cast("long").as("rank_window_end"),
-        col("top_entities"))
-  }
-
-  /**
-   * [[topEntitiesStreamChained]] with the FULL example payloads — the
-   * complete reference emission shape, end-to-end incremental: per
-   * hopping window the per-hashtag multi-agg carries its k example
-   * `TweetDescription` structs (bounded [[graft.agg.TopKTweets]], OP-26/
-   * 27 fused), and the 1-min tumbling second level ranks whole
-   * entity+payload rows (bounded [[graft.agg.TopKEntitiesPayload]]) —
-   * exactly `GetTopItems` over `TopHashTags{..., TopTweets}`
-   * (Query.cs:152-168 over AggregatePayloads.cs:29-42), with state
-   * bounded at k entities x k examples per rank window and both levels
-   * in ONE streaming query (no foreachBatch ranking).
    */
   def topEntitiesPayloadStreamChained(tweets: DataFrame,
       n: Int = Windows.TopN): DataFrame = {
@@ -1232,9 +1154,7 @@ object StreamingPipeline {
       .select(col("ts"), explode(col("hashtags")).as("entity"),
         col("followerCount"), col("id"), col("text"), col("screenName"),
         col("originalTweetId"),
-        // OP-27 dedupe key (see unifiedAggStream)
-        when(col("originalTweetId") =!= -1L, col("originalTweetId"))
-          .otherwise(col("id")).as("dedupe_key"))
+        graft.agg.TopK.exampleKey.as("dedupe_key"))
       .groupBy(window(col("ts"), Windows.WindowSize, Windows.HopSize),
         col("entity"))
       .agg(count("*").as("tweet_count"),

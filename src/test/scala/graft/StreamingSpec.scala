@@ -608,7 +608,7 @@ class StreamingSpec extends TestBase {
     Files.write(new java.io.File(dir, "part-0.jsonl").toPath,
       fixtureLines.mkString("\n").getBytes)
 
-    val out = StreamingPipeline.topEntitiesStreamChained(
+    val out = StreamingPipeline.topEntitiesPayloadStreamChained(
       StreamingPipeline.tweetStream(spark, dir.toString), 2)
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName("chained").start()
@@ -1843,8 +1843,9 @@ class StreamingSpec extends TestBase {
     val evs = graft.ingest.Tables.events(spark, sf("sf0.001"))
       .select("event_id", "user_id", "event_type", "ts")
     evs.write.parquet(evDir)
-    val trendOut = runSink(evDir)((s, o) =>
-      StreamingPipeline.trendSlopePartialsSink(s, col("event_type"), o))
+    val trendOut = runSink(evDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.agg.Windows.periodCounts(_, col("event_type"), "ts",
+        86400000000L), o))
     val trendStreamed = graft.agg.Windows.trendSlopesFromCounts(
       StreamingPipeline.partials(spark, trendOut))
     val trendBatch = graft.agg.Windows.trendSlopes(evs,
@@ -1868,8 +1869,9 @@ class StreamingSpec extends TestBase {
     assert(fanoStreamed.except(fanoBatch).isEmpty &&
       fanoBatch.except(fanoStreamed).isEmpty && fanoBatch.count() > 0,
       "streamed burstiness fold differs from the batch operator")
-    val psiOut = runSink(srcDir)((s, o) => StreamingPipeline.psiPartialsSink(
-      s, col("doc_id") % 2 === 0, length(col("text")), o))
+    val psiOut = runSink(srcDir)((s, o) => StreamingPipeline.partialsSink(
+      s, graft.ops.Reporting.psiPartials(_, col("doc_id") % 2 === 0,
+        length(col("text"))), o))
     val psiStreamed = graft.ops.Reporting.psiFromCounts(
       StreamingPipeline.partials(spark, psiOut))
     val psiBatch = graft.ops.Reporting.psiDrift(docs,
@@ -2901,9 +2903,10 @@ class StreamingSpec extends TestBase {
         .write.parquet(srcDir)
       val out = Files.createTempDirectory("graft-tr-out").toString
       val ckpt = Files.createTempDirectory("graft-tr-ckpt").toString
-      val q = StreamingPipeline.textrankPartialsSink(
+      val q = StreamingPipeline.partialsSink(
         StreamingPipeline.parquetStream(spark, srcDir,
-          maxFilesPerTrigger = Some(filesPerTrigger)), out)
+          maxFilesPerTrigger = Some(filesPerTrigger)),
+        graft.ops.TextOps.textRankEdges(_, "text"), out)
         .option("checkpointLocation", ckpt).start()
       q.processAllAvailable()
       q.stop()

@@ -153,7 +153,7 @@ class TopKSpec extends TestBase {
       "TopKTweets result depends on partitioning")
   }
 
-  // ---- TopKEntities / TopKEntitiesPayload: second-level rank laws ----
+  // ---- TopKEntitiesPayload: second-level rank laws ----
 
   test("TopKEntitiesPayload: merge of any split equals whole; bounded; " +
       "payload arrays ride untouched") {
@@ -190,5 +190,21 @@ class TopKSpec extends TestBase {
     val diff = viaAgg.join(viaBuiltin, "event_type")
       .filter(viaAgg("ids") =!= viaBuiltin("ids"))
     assert(diff.count() == 0)
+  }
+
+  test("one bounded top-k buffer and no twin re-typing a batch kernel: " +
+      "def insertSorted once in src/main, the copies deleted") {
+    val insertSorted = """\bdef insertSorted\b""".r
+    val defs = MainSources.all.map { case (_, src) =>
+      insertSorted.findAllIn(src).size }.sum
+    assert(defs == 1, s"def insertSorted appears $defs times in src/main")
+    val gone = Seq("TopKEntities", "TopKEntity", "topKEntities",
+      "topEntitiesStreamChained", "psiPartialsSink",
+      "trendSlopePartialsSink", "textrankPartialsSink")
+    val found = for {
+      (p, src) <- MainSources.all
+      name <- gone if ("\\b" + name + "\\b").r.findFirstIn(src).isDefined
+    } yield s"$p: $name"
+    assert(found.isEmpty, found.mkString("; "))
   }
 }
