@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Tables
-import graft.serve.Serve
 import graft.stream.{AggregateStore, StreamingPipeline}
 
 /**
@@ -68,7 +67,7 @@ object Main {
       val spark = session()
       Seq("counts", "hashtags", "mentions", "retweets").foreach { kind =>
         println(s"== $kind (most recent $n records)")
-        try Serve.recent(AggregateStore.read(spark, s"$store/$kind"), n)
+        try AggregateStore.readRecent(spark, s"$store/$kind", n)
           .show(n, truncate = false)
         catch { case e: Exception => println(s"  (unavailable: ${e.getMessage})") }
       }

@@ -46,7 +46,7 @@ import graft.stream.AggregateStore
  *     ([[AggregateStore.oneSplit]]). The store is then read through
  *     `coalesce(1)`, so the global sort and the summary aggregate plan
  *     with no exchange and no range-sampling job. One partition costs
- *     no memory the driver does not already spend: [[writeResult]]
+ *     no memory the driver does not already spend: [[serveLine]]
  *     collects the whole result. Its one task reads at most one split,
  *     as any scan task does; a larger scan keeps Spark's parallel plan.
  *   - `getrecent* N`: one job per date probe plus the final top-N
@@ -68,8 +68,8 @@ object Repl {
     t.getField("screenName").as("ScreenName"),
     t.getField("originalTweetId").as("OriginalTweetId")))
 
-  /** TopMentions/TopHashTags shape (AggregatePayloads.cs:29-42); stores
-    * written with `includeExamples=false` just omit TopTweets. */
+  /** TopMentions/TopHashTags shape (AggregatePayloads.cs:29-42); a store
+    * whose rows carry no `top_tweets` just omits TopTweets. */
   private[graft] def refEntityShape(df: DataFrame,
       entityField: String): DataFrame =
     df.select(Seq(col("window_end").as("WindowTime"),
@@ -174,28 +174,28 @@ object Repl {
     }
   }
 
-  /**
-   * OP-35 file output (reference TweetGate/Program.Repl.cs:110-123): every
-   * command's result is also written to `<command>.<ticks>.json` in
-   * `outDir` as line-delimited JSON. `ticks` follows the reference's
-   * .NET convention (100 ns units since 0001-01-01) so file names sort
-   * the same way. The collect is bounded: these are serving results
-   * (ranged windows / top-k), small by construction.
-   */
   /** Sub-ms disambiguator: our clock is ms-resolution dressed as 100 ns
     * .NET ticks, so two commands inside one millisecond would collide
     * and silently overwrite — spread them across the 10000 sub-ms tick
     * slots the way the reference's real 100 ns clock does. */
   private val tickSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  def writeResult(df: DataFrame, command: String,
+  /**
+   * OP-35 file output (reference TweetGate/Program.Repl.cs:110-123): every
+   * command's result is also written to `<command>.<ticks>.json` in
+   * `outDir` as line-delimited JSON, one of `rows` (a result's
+   * `toJSON` rows) per line. `ticks` follows the reference's .NET
+   * convention (100 ns units since 0001-01-01) so file names sort the
+   * same way.
+   */
+  def writeResult(rows: Array[String], command: String,
       outDir: String): java.nio.file.Path = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val ticks = System.currentTimeMillis() * 10000L +
       621355968000000000L + (tickSeq.getAndIncrement() % 10000L)
     val p = java.nio.file.Paths.get(outDir, s"$command.$ticks.json")
     java.nio.file.Files.write(p,
-      (df.toJSON.collect().mkString("\n") + "\n").getBytes("UTF-8"))
+      (rows.mkString("\n") + "\n").getBytes("UTF-8"))
     p
   }
 
@@ -205,14 +205,19 @@ object Repl {
     * post-compact snapshot instead of dying on the swap (r14 verdict
     * item 4). The store root rides along so a TYPO'D store path
     * fails on the first attempt instead of burning the backoff
-    * ladder (r15 verdict item 3). Returns the written result path;
-    * None = unknown command. */
+    * ladder (r15 verdict item 3). The plan runs once: `show` prints
+    * the first 100 of the JSON rows collected for the result file, so
+    * showing a command starts no Spark job. The collect is bounded:
+    * these are serving results (ranged windows / top-k), small by
+    * construction. Returns the written result path; None = unknown
+    * command. */
   def serveLine(spark: SparkSession, storeRoot: String, outDir: String,
       line: String, show: Boolean = false): Option[java.nio.file.Path] =
     Serve.retryingServe(storePath = storeRoot)(
       dispatch(spark, storeRoot, line).map { df =>
-        if (show) df.show(100, truncate = false)
-        writeResult(df, line.trim.split("\\s+").head, outDir)
+        val rows = df.toJSON.collect()
+        if (show) rows.take(100).foreach(println)
+        writeResult(rows, line.trim.split("\\s+").head, outDir)
       })
 
   def main(args: Array[String]): Unit = {

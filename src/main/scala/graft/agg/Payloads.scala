@@ -84,8 +84,11 @@ object Payloads {
         sum(col("followerCount")).as("follower_sum"))
 
     // OP-27: one example per original tweet (retweets collapse to the
-    // max-follower instance) before collecting the top examples.
-    val dedupeKey = when(col("originalTweetId") === -1L, col("id"))
+    // max-follower instance) before collecting the top examples. A null
+    // original id (a `retweeted_status` without an `id`) is not a
+    // retweet, as in `TopK.exampleKey`: the tweet keeps its own example.
+    val dedupeKey = when(col("originalTweetId") === -1L ||
+        col("originalTweetId").isNull, col("id"))
       .otherwise(col("originalTweetId"))
     val dd = Window.partitionBy(col("window_end"), col("entity"), dedupeKey)
       .orderBy(col("followerCount").desc, col("id").asc)

@@ -209,7 +209,9 @@ object Tables {
    * ?? text. Array-of-struct → array-of-string is a nested-field access
    * (`entities.hashtags.text`), which Catalyst turns into a columnar
    * projection — no UDF. `originalTweetId` keeps the reference's -1
-   * not-a-retweet sentinel (Query.cs:37).
+   * not-a-retweet sentinel (Query.cs:37), also for a `retweeted_status`
+   * without an `id`: never null, which the typed example buffer
+   * ([[graft.agg.TopKTweets]]) would read as original id 0.
    */
   def projectTweets(tweets: DataFrame): DataFrame =
     tweets.select(Seq(
@@ -222,8 +224,7 @@ object Tables {
       coalesce(col("entities.hashtags.text"), array()).as("hashtags"),
       coalesce(col("entities.user_mentions.screen_name"), array())
         .as("mentions"),
-      when(col("retweeted_status").isNotNull, col("retweeted_status.id"))
-        .otherwise(lit(-1L)).as("originalTweetId"),
+      coalesce(col("retweeted_status.id"), lit(-1L)).as("originalTweetId"),
       coalesce(col("user.followers_count"), lit(0L)).as("followerCount"),
       col("ts")) ++
       // file-sharded ingress: the source shard rides the projection so

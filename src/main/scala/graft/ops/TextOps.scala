@@ -318,6 +318,17 @@ object TextOps {
         least(col("n_words").cast("double") / lit(100.0), lit(1.0)) *
           lit(0.5) + col("stop_ratio") * lit(0.5))
 
+  /** Quantile-threshold keep-pass (ext67): each scored doc (a
+    * [[quality]] relation) meets its `lang`'s threshold row, a
+    * |langs|-row (lang, p50) table broadcast to the scan, and is kept
+    * iff its `quality_score` clears that `p50`. No shuffle and no
+    * state, so the same kernel filters a live stream against
+    * thresholds computed offline per corpus snapshot (a running
+    * quantile would drift the cutoff with arrival order). */
+  def quantileKeep(scored: DataFrame, thresholds: DataFrame): DataFrame =
+    scored.join(broadcast(thresholds), "lang")
+      .filter(col("quality_score") >= col("p50"))
+
   /** Default Gopher-rule bounds (tokens, quantized mean word length
     * ‰, stopword hits) — interpolated into the ext71 oracle, so both
     * engines must read the same constants. */
@@ -603,20 +614,10 @@ object TextOps {
         col("bpe_tokens"),
         expr("(bpe_tokens * 1000000) DIV ws_tokens").as("fertility_q"))
 
-  /** Adjacent-token (t1, t2) pairs as a struct array; empty below 2
-    * tokens (same ANSI-slice guard as [[shingles]]). */
-  def bigramPairs(toks: Column): Column =
-    when(size(toks) >= 2,
-      zip_with(
-        slice(toks, lit(1), size(toks) - 1),
-        slice(toks, lit(2), size(toks) - 1),
-        (a, b) => struct(a.as("t1"), b.as("t2"))))
-      .otherwise(array().cast("array<struct<t1:string,t2:string>>"))
-
   /** One row per adjacent token pair (t1, t2), keeping every non-text
     * column: explode the pair positions, then read both tokens with
-    * `element_at` — a flat codegen projection, no array lambda
-    * ([[bigramPairs]]' `zip_with` is CodegenFallback; see the dedup
+    * `element_at` — a flat codegen projection, no array lambda (a
+    * `zip_with` of two slices is CodegenFallback; see the dedup
     * shingle note in [[Dedup]] for why interpreted per-element lambdas
     * are banned from corpus-scan hot paths). */
   def bigramRows(doc: DataFrame, text: String = "text"): DataFrame =

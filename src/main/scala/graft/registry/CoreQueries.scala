@@ -331,8 +331,8 @@ private[graft] object CoreQueries {
     // RocksDBStore.cs:241-245). Oracle recomputes from raw events.
     Query("op38_store_entity", (s, dir) => {
       val path = ensureEntityStore(s, dir)
-      graft.stream.AggregateStore.readRangeEntity(
-          s, path, RangeStart, RangeEnd, Some("purchase"))
+      Serve.entityFilter(graft.stream.AggregateStore.readRange(
+          s, path, RangeStart, RangeEnd), Some("purchase"))
         .select("window_end", "entity", "tweet_count", "follower_sum",
           "rank", "max_props", "top_ids")
         .orderBy("window_end")
@@ -377,8 +377,8 @@ private[graft] object CoreQueries {
     // (the op37_store discipline: layout invisible in results).
     Query("op38_store_payload", (s, dir) => {
       val path = ensureEntityStore(s, dir)
-      graft.stream.AggregateStore.readRangeEntity(
-          s, path, RangeStart, RangeEnd, Some("purchase"))
+      Serve.entityFilter(graft.stream.AggregateStore.readRange(
+          s, path, RangeStart, RangeEnd), Some("purchase"))
         .select(col("window_end"), col("entity"), col("rank"),
           array_join(transform(col("examples"), e =>
             concat_ws("|", e.getField("id").cast("string"),

@@ -393,8 +393,7 @@ private[graft] object TextQueries {
           .select(col("doc_id"), col("lang"), col("quality_score")))
       val thr = q.groupBy("lang")
         .agg(expr("percentile(quality_score, 0.5D)").as("p50"))
-      q.join(broadcast(thr), "lang")
-        .filter(col("quality_score") >= col("p50"))
+      TextOps.quantileKeep(q, thr)
         .select("doc_id", "lang")
         .orderBy("doc_id")
     },

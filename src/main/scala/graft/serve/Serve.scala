@@ -57,8 +57,8 @@ object Serve {
 
   /** The optional entity restriction of OP-38/39, applied to an
     * already-ranged frame: the one entity predicate of every serving
-    * read, here, in the REPL and in
-    * [[graft.stream.AggregateStore.readRangeEntity]]. */
+    * read, here, in the REPL and over the stored entity layout
+    * (op38_store_entity, op38_store_payload). */
   def entityFilter(ranged: DataFrame, entity: Option[String]): DataFrame =
     entity.fold(ranged)(e => ranged.filter(col("entity") === e))
 

@@ -70,29 +70,10 @@ object StreamSupervisor {
     sys.error("unreachable")
   }
 
-  /** Spark binding: supervise a `StreamingQuery` factory with the
-    * reference's defaults (1 min min-uptime, 5 s backoff, 5 flaps). */
-  def supervise(start: () => StreamingQuery,
-      minUptimeMs: Long = 60000L, backoffMs: Long = 5000L,
-      maxShortLived: Int = 5): Outcome =
-    superviseLoop[StreamingQuery](
-      start,
-      q =>
-        try { q.awaitTermination(); None }
-        catch {
-          // Same policy as the loop's own start() guard: the lambda is
-          // where the loop spends its time, so a Throwable catch here
-          // would launder interrupts/VM errors into restarts.
-          case e: InterruptedException =>
-            Thread.currentThread().interrupt(); throw e
-          case scala.util.control.NonFatal(e) => Some(e)
-        },
-      minUptimeMs, backoffMs, maxShortLived)
-
   /** Spark binding with the reference's duration cutoff
-    * (Program.SaveTweets.cs:14-51): keep the query running — restarting
-    * under the same flap policy — until `deadlineMs`, then stop it
-    * gracefully. */
+    * (Program.SaveTweets.cs:14-51) and defaults (1 min min-uptime, 5 s
+    * backoff, 5 flaps): keep the query running — restarting under the
+    * flap policy — until `deadlineMs`, then stop it gracefully. */
   def superviseUntil(start: () => StreamingQuery, deadlineMs: Long,
       minUptimeMs: Long = 60000L, backoffMs: Long = 5000L,
       maxShortLived: Int = 5): Outcome =
@@ -104,6 +85,9 @@ object StreamSupervisor {
           if (remaining > 0 && q.awaitTermination(remaining)) None
           else { q.stop(); None } // deadline reached: graceful cutoff
         } catch {
+          // Same policy as the loop's own start() guard: the lambda is
+          // where the loop spends its time, so a Throwable catch here
+          // would launder interrupts/VM errors into restarts.
           case e: InterruptedException =>
             Thread.currentThread().interrupt(); throw e
           case scala.util.control.NonFatal(e) => Some(e)

@@ -225,7 +225,7 @@ object StreamingPipeline {
    *
    * foreachBatch because the partner set is a growing external table —
    * the same sink-boundary pattern as OP-28's ranking. Idempotent via
-   * the `batch=<id>` overwrite layout ([[AggregateStore.writeRanked]]):
+   * the `batch=<id>` overwrite layout ([[AggregateStore.write]]):
    * a micro-batch replayed after a crash rewrites its own directories,
    * and the partner read EXCLUDES the replayed batch's own previous
    * output so the replay dedups against its first-run partner set.
@@ -274,26 +274,6 @@ object StreamingPipeline {
         .write.mode("overwrite").parquet(s"$bandsPath/batch=$batchId")
     }
   }
-
-  /**
-   * Streaming twin of the quantile-threshold curation (ext67): per-lang
-   * quality thresholds are computed OFFLINE per corpus snapshot (exact
-   * per-stratum quantiles are a corpus property — a running quantile
-   * would drift the cutoff with arrival order, admitting different docs
-   * on replay), broadcast against the live stream, and each arriving doc
-   * is scored with the same codegen'd quality expression and kept iff it
-   * clears its stratum's threshold. Stateless, append-mode, no shuffle —
-   * the streamed keep-set equals the batch operator's for any arrival
-   * order.
-   *
-   * `thresholds`: (strataCol, p50) as produced by the batch side
-   * (`TextOps.quality` + `percentile(quality_score, 0.5)` per stratum).
-   */
-  def qualityFilterStream(docs: DataFrame, thresholds: DataFrame,
-      strata: Seq[String] = Seq("lang")): DataFrame =
-    graft.ops.TextOps.quality(docs)
-      .join(broadcast(thresholds), strata)
-      .filter(col("quality_score") >= col("p50"))
 
   /**
    * The one writer of the batch-keyed twin stores: each micro-batch
@@ -995,19 +975,6 @@ object StreamingPipeline {
       adjustDisorderStream(events, ts, boundUs, col(shardCol))
     else adjustDisorderStream(events, ts, boundUs)
 
-  /** OP-19/20 with Adjust semantics end to end: the clamp above, then
-    * the reference's tumbling count under a watermark equal to the
-    * disorder bound — which, post-clamp, can never drop a row
-    * (flatMapGroupsWithState in Append mode composes with a downstream
-    * windowed aggregation). */
-  def adjustedTumblingCountsStream(tweets: DataFrame,
-      boundUs: Long = 5000000L): DataFrame =
-    adjustDisorderStream(tweets, "ts", boundUs)
-      .withWatermark("ts", s"${boundUs / 1000000L} seconds")
-      .groupBy(window(col("ts"), Windows.WindowSize))
-      .agg(count("*").as("cnt"))
-      .select(col("window.end").cast("long").as("window_end"), col("cnt"))
-
   /**
    * The full pipeline of the reference in ONE stateful aggregation
    * (OP-17/18's Multicast + the 4 subscriptions of
@@ -1020,8 +987,7 @@ object StreamingPipeline {
    * aggregate's representative text (Query.cs:127); it rides along as null
    * for the other kinds.
    */
-  def unifiedAggStream(tweets: DataFrame,
-      includeExamples: Boolean = true): DataFrame = {
+  def unifiedAggStream(tweets: DataFrame): DataFrame = {
     val t = tweets.withWatermark("ts", Watermark)
     // Single scan (the reference parses once and Multicasts): each tweet
     // expands to its kind-tagged (kind, entity) rows in ONE explode —
@@ -1051,25 +1017,19 @@ object StreamingPipeline {
       .groupBy(window(col("ts"), Windows.WindowSize, Windows.HopSize),
         col("kind"), col("entity"))
       .agg(count("*").as("tweet_count"),
-        (Seq(
-          sum(col("followerCount")).as("follower_sum"),
-          max(col("text")).as("max_text")) ++
-          // OP-26/27: per-entity example tweets as the reference's FULL
-          // TopTweets payload (TweetDescription structs,
-          // AggregatePayloads.cs:5-13,29-42) — bounded state (k structs
-          // per entity), ranked follower-count DESC id ASC, distinct per
-          // dedupe key. Optional: the typed buffer ser/des per state
-          // update is the priciest part of the pipeline; pipelines that
-          // don't need examples skip it.
-          (if (includeExamples)
-             Seq(topk(col("dedupe_key"), col("followerCount"), col("id"),
-               col("text"), col("screenName"), col("originalTweetId"))
-               .as("top_tweets"))
-           else Nil)): _*)
-      .select(Seq(col("window.end").cast("long").as("window_end"),
+        sum(col("followerCount")).as("follower_sum"),
+        max(col("text")).as("max_text"),
+        // OP-26/27: per-entity example tweets as the reference's FULL
+        // TopTweets payload (TweetDescription structs,
+        // AggregatePayloads.cs:5-13,29-42) — bounded state (k structs
+        // per entity), ranked follower-count DESC id ASC, distinct per
+        // dedupe key.
+        topk(col("dedupe_key"), col("followerCount"), col("id"),
+          col("text"), col("screenName"), col("originalTweetId"))
+          .as("top_tweets"))
+      .select(col("window.end").cast("long").as("window_end"),
         col("kind"), col("entity"), col("tweet_count"),
-        col("follower_sum"), col("max_text")) ++
-        (if (includeExamples) Seq(col("top_tweets")) else Nil): _*)
+        col("follower_sum"), col("max_text"), col("top_tweets"))
   }
 
   /** Sink for [[unifiedAggStream]]: per micro-batch, rank each entity kind
@@ -1078,9 +1038,11 @@ object StreamingPipeline {
     * tweets' screen names, the reference's `TopRetweets.TopUsers`
     * (AggregatePayloads.cs:44-49, `TopTweets.Select(t =>
     * t.Payload.ScreenName)` Query.cs:137) — a projection over the
-    * already-bounded structs, no extra state. */
-  def unifiedSink(agg: DataFrame, storeRoot: String,
-      n: Int = Windows.TopN): DataStreamWriter[org.apache.spark.sql.Row] =
+    * already-bounded structs, no extra state. An aggregate without
+    * `top_tweets` still sinks, without `top_users`: a store is input
+    * from outside the program, and the REPL serves one written so. */
+  def unifiedSink(agg: DataFrame,
+      storeRoot: String): DataStreamWriter[org.apache.spark.sql.Row] =
     agg.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -1101,8 +1063,8 @@ object StreamingPipeline {
                 fam.withColumn("top_users",
                   transform(col("top_tweets"), t => t.getField("screenName")))
               else fam
-            AggregateStore.writeRanked(shaped, s"$storeRoot/$kind", n,
-              batchId)
+            AggregateStore.write(Windows.rankTopEntities(shaped),
+              s"$storeRoot/$kind", batchId)
           }
           AggregateStore.write(b.filter(col("kind") === "counts")
             .select(col("window_end"), col("tweet_count").as("cnt")),
@@ -1110,25 +1072,22 @@ object StreamingPipeline {
         } finally b.unpersist()
       }
 
-  /** `maxFilesPerTrigger` default 8: starting against an existing
-    * backlog directory must not admit the whole history into one
-    * micro-batch (the 500k single-batch OOM lesson — see unifiedSink's
-    * persist note); live tailing is unaffected (per-trigger arrivals
-    * are few files). */
+  /** The live pipeline (`saveAggregates`) in its one configuration:
+    * plain watermark ingress (Trill's Drop; the reference's Adjust(5 s)
+    * is `adjustDisorderStreamAuto` ahead of [[unifiedAggStream]], one
+    * more stateful operator per micro-batch), full example payloads,
+    * top-[[Windows.TopN]] ranking. At most 8 files per trigger: starting
+    * against an existing backlog directory must not admit the whole
+    * history into one micro-batch (the 500k single-batch OOM lesson —
+    * see unifiedSink's persist note); live tailing is unaffected
+    * (per-trigger arrivals are few files). */
   def runUnified(spark: SparkSession, inputDir: String, storeRoot: String,
-      checkpoint: String,
-      maxFilesPerTrigger: Option[Int] = Some(8),
-      adjust: Boolean = false): StreamingQuery = {
-    val src = tweetStream(spark, inputDir, maxFilesPerTrigger)
-    // `adjust`: Trill's Adjust(5 s) ingress (Query.cs:27-31) LIFTS an
-    // out-of-bound late tweet into the trailing window; `false` keeps
-    // plain watermark Drop semantics.
-    unifiedSink(unifiedAggStream(
-        if (adjust) adjustDisorderStreamAuto(src) else src), storeRoot)
+      checkpoint: String): StreamingQuery =
+    unifiedSink(unifiedAggStream(tweetStream(spark, inputDir, Some(8))),
+        storeRoot)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("1 second"))
       .start()
-  }
 
   /**
    * OP-28 as a CHAINED streaming query (Spark ≥3.4 multiple stateful
@@ -1214,11 +1173,6 @@ object AggregateStore {
       .parquet(s"$path/batch=$batchId")
   }
 
-  /** Top-`n` entities per window of `batch`, written through [[write]]. */
-  def writeRanked(batch: DataFrame, path: String, n: Int,
-      batchId: Long = 0L): Unit =
-    write(Windows.rankTopEntities(batch, n), path, batchId)
-
   /** The store as one relation, its schema resolved on the driver
     * from one data-file footer ([[Tables.parquet]]). */
   def read(spark: SparkSession, path: String): DataFrame =
@@ -1256,15 +1210,6 @@ object AggregateStore {
         to_date(timestamp_seconds(lit(startEpoch))) &&
         col("window_date") <= to_date(timestamp_seconds(lit(endEpoch))))
       .filter(Serve.inRange(startEpoch, endEpoch))
-
-  /** OP-38/39 over the stored entity layout: partition-pruned range read
-    * plus an entity equality that parquet row-group min/max stats can
-    * prune because [[writeRanked]] laid rows out entity-sorted (the
-    * reference's `ticks+entity` key seek, RocksDBStore.cs:241-245, as
-    * partition + row-group pruning). */
-  def readRangeEntity(spark: SparkSession, path: String, startEpoch: Long,
-      endEpoch: Long, entity: Option[String]): DataFrame =
-    Serve.entityFilter(readRange(spark, path, startEpoch, endEpoch), entity)
 
   /** OP-40/41 over the stored layout — the `SeekToLast+Prev` analog
     * (RocksDBStore.cs:174-196). Instead of scanning the whole store and
@@ -1319,7 +1264,7 @@ object AggregateStore {
   /** Compact a store path: streaming writes produce one `batch=<id>` dir
     * with small files per micro-batch; OFFLINE compaction (stream stopped)
     * folds all batches into a single `batch=-1` partition and rewrites
-    * each date partition into few large files so serving scans stay
+    * each date partition into one file so serving scans stay
     * footer-bound, not file-count-bound (the LSM compaction analog).
     *
     * Promotion is crash-safe: the live store is renamed ASIDE first and
@@ -1338,14 +1283,13 @@ object AggregateStore {
     * copy+delete); on an object store use a manifest-based table format
     * instead. The filesystem is resolved FROM the store path, so a
     * qualified non-default path (hdfs://other-cluster/...) works. */
-  def compact(spark: SparkSession, path: String,
-      filesPerPartition: Int = 1): Unit = {
+  def compact(spark: SparkSession, path: String): Unit = {
     val base = path.stripSuffix("/")
     val tmp = base + "_compacting"
-    // hashed by date: each date's rows meet in one task, so one file,
-    // which `write` lays out entity-sorted like a micro-batch's
+    // one task, so each date's rows land in one file, which `write`
+    // lays out entity-sorted like a micro-batch's
     write(read(spark, path).drop("batch")
-      .repartition(filesPerPartition, col("window_date")),
+      .repartition(1, col("window_date")),
       tmp, CompactedBatchId)
     val dst = new org.apache.hadoop.fs.Path(base)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -52,8 +52,16 @@ class PayloadsSpec extends TestBase {
         else "null"
       s"""{"id":${3000 + i},"text":"t $i","timestamp_ms":"${1704067200000L + i * 7000L}","entities":{"hashtags":[{"text":"h${i % 8}"}],"user_mentions":[]},"user":{"followers_count":${(i * 13) % 40},"screen_name":"u${i % 6}"},"retweeted_status":$rt}"""
     }
+    // and three tweets whose retweeted_status has no id: not retweets,
+    // so three examples, not one, the top followers of one
+    // hashtag-window
+    val noOriginal = (0 until 3).map { i =>
+      s"""{"id":${9000 + i},"text":"n $i","timestamp_ms":"${1704067200000L + i * 1000L}","entities":{"hashtags":[{"text":"hn"}],"user_mentions":[]},"user":{"followers_count":${1000 + i},"screen_name":"n$i"},"retweeted_status":{"extended_tweet":null}}"""
+    }
     val tweets = Tables.projectTweets(
-      Tables.tweetsFromJsonLines(lines.toDF("value")))
+      Tables.tweetsFromJsonLines((lines ++ noOriginal).toDF("value")))
+    assert(tweets.filter(col("id") >= 9000 &&
+      col("originalTweetId") === -1L).count() == 3)
     val viaAgg = Payloads.topEntityPayloads(tweets, col("hashtags"),
       topN = 3, examplesPerEntity = 4)
     val viaComposite = Payloads.topEntityPayloadsComposite(tweets,

@@ -51,13 +51,13 @@ class ServeJobsSpec extends TestBase {
     root
   }
 
-  /** The same pipeline with `includeExamples = false`. */
+  /** The same pipeline with the examples dropped before the sink. */
   private lazy val noExamples: String = {
     val root = Files.createTempDirectory("graft-serve-noex").toString
     val q = StreamingPipeline.unifiedSink(
         StreamingPipeline.unifiedAggStream(
-          StreamingPipeline.tweetStream(spark, replayDir),
-          includeExamples = false), root)
+          StreamingPipeline.tweetStream(spark, replayDir))
+          .drop("top_tweets"), root)
       .option("checkpointLocation",
         Files.createTempDirectory("graft-serve-noex-ckpt").toString)
       .start()
@@ -220,6 +220,19 @@ class ServeJobsSpec extends TestBase {
   private def check(root: String, cmds: Seq[(String, DataFrame)],
       jobsOk: Int => Boolean): Unit = {
     val outDir = Files.createTempDirectory("graft-serve-out").toString
+    for ((line, plan) <- cmds) {
+      val (out, ran) =
+        countingJobs(line)(Repl.serveLine(spark, root, outDir, line).get)
+      val rows = Files.readAllLines(out).asScala.toSeq
+      val want = plan.toJSON.collect().toSeq
+      assert(want.nonEmpty, s"$line: vacuous")
+      assert(rows == want, s"$line: rows or order differ")
+      assert(jobsOk(ran), s"$line ran $ran jobs")
+    }
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def countingJobs[T](label: String)(body: => T): (T, Int) = {
     val group = "serve-jobs-spec"
     val jobs = new AtomicInteger(0)
     val listener = new SparkListener {
@@ -231,24 +244,36 @@ class ServeJobsSpec extends TestBase {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      def serve(line: String): (Seq[String], Int) = {
-        ListenerDrain(sc)
-        jobs.set(0)
-        sc.setJobGroup(group, line)
-        val out =
-          try Repl.serveLine(spark, root, outDir, line).get
-          finally sc.clearJobGroup()
-        ListenerDrain(sc)
-        (Files.readAllLines(out).asScala.toSeq, jobs.get)
-      }
-      for ((line, plan) <- cmds) {
-        val (rows, ran) = serve(line)
-        val want = plan.toJSON.collect().toSeq
-        assert(want.nonEmpty, s"$line: vacuous")
-        assert(rows == want, s"$line: rows or order differ")
-        assert(jobsOk(ran), s"$line ran $ran jobs")
-      }
+      ListenerDrain(sc)
+      sc.setJobGroup(group, label)
+      val out = try body finally sc.clearJobGroup()
+      ListenerDrain(sc)
+      (out, jobs.get)
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("a shown REPL command runs its plan once: as many jobs as " +
+      "unshown, and it prints the rows it writes") {
+    val root = unified
+    val outDir = Files.createTempDirectory("graft-serve-show").toString
+    val (lo, hi) = (Base + Day / 2, Base + 2 * Day + Day / 4)
+    for (line <- Seq("getsummary", s"getcounts $lo $hi",
+        s"gettophashtagsstring $lo $hi spark",
+        s"gettopretweetsstring $lo $hi", "getrecenttopmentionsstring 3",
+        "getrecentcounts 3")) {
+      val (quiet, quietJobs) =
+        countingJobs(line)(Repl.serveLine(spark, root, outDir, line).get)
+      val printed = new java.io.ByteArrayOutputStream
+      val (shown, shownJobs) = countingJobs(line)(Console.withOut(printed)(
+        Repl.serveLine(spark, root, outDir, line, show = true).get))
+      assert(shownJobs == quietJobs,
+        s"$line: $shownJobs jobs shown, $quietJobs unshown")
+      val rows = Files.readAllLines(shown).asScala.toSeq
+      assert(rows.nonEmpty && rows == Files.readAllLines(quiet).asScala.toSeq,
+        s"$line: shown and unshown results differ")
+      assert(printed.toString("UTF-8").split("\n").toSeq == rows.take(100),
+        s"$line: printed rows differ from the written ones")
+    }
   }
 
   test("a compact deleting the part file whose footer read() chose: " +

@@ -43,7 +43,7 @@ class SinksAndReplSpec extends TestBase {
     import spark.implicits._
     val outDir = Files.createTempDirectory("graft-repl-out").toString
     val df = Seq((1L, "x"), (2L, "y")).toDF("window_end", "entity")
-    val p = Repl.writeResult(df, "getcounts", outDir)
+    val p = Repl.writeResult(df.toJSON.collect(), "getcounts", outDir)
     assert(p.getFileName.toString.matches("getcounts\\.\\d+\\.json"))
     val lines = java.nio.file.Files.readAllLines(p)
     assert(lines.size == 2)
@@ -64,8 +64,8 @@ class SinksAndReplSpec extends TestBase {
         (1704067200000L + i * 6000L).toString)).mkString("\n").getBytes)
     val q = StreamingPipeline.unifiedSink(
         StreamingPipeline.unifiedAggStream(
-          StreamingPipeline.tweetStream(spark, dir.toString),
-          includeExamples = false), store)
+          StreamingPipeline.tweetStream(spark, dir.toString))
+          .drop("top_tweets"), store)
       .option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
     q.stop()

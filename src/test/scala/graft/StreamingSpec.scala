@@ -260,8 +260,8 @@ class StreamingSpec extends TestBase {
       Seq("WindowTime", "FollowerCountSum", "TweetCount", "ScreenName",
         "TopTweets"))
     val replOut = Files.createTempDirectory("graft-repl-out").toString
-    val jsPath = Repl.writeResult(mentionsRanged, "gettopmentionsstring",
-      replOut)
+    val jsPath = Repl.writeResult(mentionsRanged.toJSON.collect(),
+      "gettopmentionsstring", replOut)
     val js = new String(java.nio.file.Files.readAllBytes(jsPath), "UTF-8")
     assert(js.contains("\"TopTweets\"") && js.contains("\"ScreenName\"") &&
       js.contains("\"FollowerCount\"") && js.contains("\"Text\"") &&
@@ -283,9 +283,9 @@ class StreamingSpec extends TestBase {
     // served from the stored layout equals full-scan + filter, the date
     // range reaches the scan as a partition filter, and the entity
     // equality is pushed into the parquet scan (prunable row groups —
-    // writeRanked lays files out entity-sorted).
-    val entityRead = AggregateStore.readRangeEntity(
-      spark, s"$store/hashtags", we.head, we.last + 1, Some("spark"))
+    // the store's writer lays files out entity-sorted).
+    val entityRead = graft.serve.Serve.entityFilter(AggregateStore.readRange(
+      spark, s"$store/hashtags", we.head, we.last + 1), Some("spark"))
     val eplan = entityRead.queryExecution.executedPlan.toString
     assert(eplan.contains("PartitionFilters: [") &&
       eplan.contains("window_date"), s"no partition pruning in:\n$eplan")
@@ -320,8 +320,8 @@ class StreamingSpec extends TestBase {
     val replayRows = AggregateStore.read(spark, s"$store/hashtags")
       .filter(col("batch") === lastBatch)
       .drop("batch", "rank", "window_date")
-    graft.stream.AggregateStore.writeRanked(
-      replayRows, s"$store/hashtags", 10, lastBatch.toLong)
+    AggregateStore.write(graft.agg.Windows.rankTopEntities(replayRows, 10),
+      s"$store/hashtags", lastBatch.toLong)
     assert(AggregateStore.read(spark, s"$store/hashtags").count()
       == preReplay, "batch replay duplicated rows")
 
@@ -350,7 +350,8 @@ class StreamingSpec extends TestBase {
     AggregateStore.compact(spark, s"$store/hashtags")
     val resumed = AggregateStore.read(spark, s"$store/hashtags")
       .drop("batch", "rank", "window_date")
-    AggregateStore.writeRanked(resumed, s"$store/hashtags", 10, 99L)
+    AggregateStore.write(graft.agg.Windows.rankTopEntities(resumed, 10),
+      s"$store/hashtags", 99L)
     val mixed = AggregateStore.read(spark, s"$store/hashtags")
     assert(mixed.filter(col("batch") === AggregateStore.CompactedBatchId)
       .count() == hashtagRows)
@@ -369,7 +370,8 @@ class StreamingSpec extends TestBase {
       ((i + 1) * 3600L + b * 1800L, e, (10 * b + i).toLong)
     }.toDF("window_end", "entity", "follower_sum")
     (0 until 2).foreach(b =>
-      AggregateStore.writeRanked(batchDf(b), store, 10, b.toLong))
+      AggregateStore.write(graft.agg.Windows.rankTopEntities(batchDf(b), 10),
+        store, b.toLong))
     AggregateStore.compact(spark, store)
     import scala.jdk.CollectionConverters._
     val parts = Files.walk(java.nio.file.Paths.get(store)).iterator.asScala
@@ -405,6 +407,23 @@ class StreamingSpec extends TestBase {
       store.findFirstIn(src).isDefined }, "AggregateStore not found")
   }
 
+  test("one configuration for the live pipeline: runUnified takes four " +
+      "parameters, and the options no product caller set and the " +
+      "store's one-line wrappers are gone from src/main") {
+    val gone = Seq("includeExamples", "filesPerPartition", "def writeRanked",
+      "def readRangeEntity", "def adjustedTumblingCountsStream",
+      "def qualityFilterStream", "def bigramPairs", "def supervise(")
+    val found = for {
+      (p, src) <- MainSources.all
+      name <- gone if src.contains(name)
+    } yield s"$p: $name"
+    assert(found.isEmpty, found.mkString("; "))
+    val runUnified = """(?s)def runUnified\((.*?)\)\s*:""".r
+    val params = MainSources.all.flatMap { case (_, src) =>
+      runUnified.findAllMatchIn(src).map(_.group(1).split(",").length) }
+    assert(params == Seq(4), s"runUnified parameter lists: $params")
+  }
+
   test("compaction vs concurrent readers: every read is a full snapshot " +
       "or a loud failure, never silent partial data (r13 verdict item 4)") {
     import spark.implicits._
@@ -415,7 +434,8 @@ class StreamingSpec extends TestBase {
       (day * 86400L + (i + 1) * 3600L, s"e${i % 3}",
         (10 * day + i).toLong)).toDF("window_end", "entity", "follower_sum")
     (0 until 3).foreach(b =>
-      AggregateStore.writeRanked(batchDf(b), store, 10, b.toLong))
+      AggregateStore.write(graft.agg.Windows.rankTopEntities(batchDf(b), 10),
+        store, b.toLong))
     def snap() = AggregateStore.read(spark, store)
       .select("window_end", "entity", "follower_sum")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -494,7 +514,8 @@ class StreamingSpec extends TestBase {
         (10 * day + i).toLong, (i + 1).toLong))
       .toDF("window_end", "entity", "follower_sum", "tweet_count")
     (0 until 3).foreach(b =>
-      AggregateStore.writeRanked(batchDf(b), store, 10, b.toLong))
+      AggregateStore.write(graft.agg.Windows.rankTopEntities(batchDf(b), 10),
+        store, b.toLong))
     def snap() = AggregateStore.read(spark, store)
       .select("window_end", "entity", "follower_sum")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -954,8 +975,8 @@ class StreamingSpec extends TestBase {
       .agg(expr("percentile(quality_score, 0.5D)").as("p50"))
     val src = StreamingPipeline.parquetStream(spark,
       sf("sf0.001") + "/documents.parquet")
-    val q = StreamingPipeline.qualityFilterStream(
-        src.select("doc_id", "lang", "text"), thr)
+    val q = graft.ops.TextOps.quantileKeep(
+        graft.ops.TextOps.quality(src.select("doc_id", "lang", "text")), thr)
       .select("doc_id")
       .writeStream.outputMode("append").format("memory")
       .queryName("qual_stream").start()
@@ -3121,13 +3142,9 @@ class StreamingSpec extends TestBase {
       val out = Files.createTempDirectory("graft-adjust-out").toString
       val src = StreamingPipeline.parquetStream(spark, srcDir.toString,
         maxFilesPerTrigger = Some(1))
-      val counts =
-        if (adjust) StreamingPipeline.adjustedTumblingCountsStream(src)
-        else src.withWatermark("ts", StreamingPipeline.Watermark)
-          .groupBy(window(col("ts"), graft.agg.Windows.WindowSize))
-          .agg(count("*").as("cnt"))
-          .select(col("window.end").cast("long").as("window_end"),
-            col("cnt"))
+      val counts = graft.agg.Windows.tumblingCounts(
+        (if (adjust) StreamingPipeline.adjustDisorderStream(src) else src)
+          .withWatermark("ts", StreamingPipeline.Watermark))
       val q = counts.writeStream.outputMode("append")
         .format("parquet").option("path", out)
         .option("checkpointLocation", ckpt).start()
@@ -3286,8 +3303,16 @@ class StreamingSpec extends TestBase {
       val dir = Files.createTempDirectory("graft-adj-run").toFile
       val store = Files.createTempDirectory("graft-adj-store").toString
       val ckpt = Files.createTempDirectory("graft-adj-ckpt").toString
-      val q = StreamingPipeline.runUnified(spark, dir.toString, store,
-        ckpt, adjust = adjust)
+      // runUnified's stages, with the Adjust clamp ahead of the
+      // aggregate for Adjust and without it for Drop
+      val src = StreamingPipeline.tweetStream(spark, dir.toString, Some(8))
+      val agg = StreamingPipeline.unifiedAggStream(
+        if (adjust) StreamingPipeline.adjustDisorderStreamAuto(src) else src)
+      val q = StreamingPipeline.unifiedSink(agg, store)
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(
+          "1 second"))
+        .start()
       def feed(name: String, lines: Seq[String]): Unit = {
         Files.write(new java.io.File(dir, name).toPath,
           lines.mkString("\n").getBytes)
