@@ -116,6 +116,13 @@ private[graft] final class ProbeScan(e: DataFrame,
 
   def groupIndex(key: Seq[Any]): Int = groupOf(toInternalKey(key))
 
+  /** [[sums]] keyed by spec: each distinct spec is summed once, in ONE
+    * single-stage pass (none for no specs). */
+  def sumsBySpec(specs: Seq[Spec]): Map[Spec, Long] = {
+    val distinct = specs.distinct
+    distinct.zip(sums(distinct)).toMap
+  }
+
   /** Evaluate every spec's conditional sum in ONE single-stage pass. */
   def sums(specs: Seq[Spec]): Array[Long] = {
     if (specs.isEmpty) return Array.empty

@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField,
+  StructType}
 
 /**
  * Deterministic sampling for corpus construction.
@@ -440,14 +444,14 @@ object Sampling {
    *
    * Scale shape — NO GLOBAL SORT, zero data shuffles (the
    * ext151/ext170 bisection discipline), because the running total in
-   * (score DESC, id ASC) order is monotone:
+   * (score DESC, id ASC) order is monotone. [[budgetCut]] finds
    *  1. threshold: the smallest integer t with
-   *     tokens(score > t) ≤ budget (~⌈log₂ score-span⌉ counting
-   *     rounds, each ONE map-side-combined conditional sum over the
-   *     materialized (id, score, toks) projection);
+   *     tokens(score > t) ≤ budget (~log₆₄ score-span rounds, each one
+   *     single-stage [[ProbeScan]] pass over the materialized
+   *     (id, score, toks) projection);
    *  2. boundary id INSIDE the t class: the largest id* with
    *     tokens(score > t) + tokens(score = t, id ≤ id*) ≤ budget
-   *     (~⌈log₂ id-span⌉ more rounds — handles an arbitrarily large
+   *     (~log₆₄ id-span more rounds — handles an arbitrarily large
    *     tie class without ever ranking it).
    * selected ⟺ score > t ∨ (score = t ∧ id ≤ id*) — a pure scan
    * predicate ([[budgetSelectDocs]] returns the per-doc relation for
@@ -457,9 +461,9 @@ object Sampling {
    */
   def budgetSelectCard(doc: DataFrame, score: Column, budgetTokens: Long,
       id: String = "doc_id", text: String = "text"): DataFrame = {
-    val (e, t, idStar) = budgetBoundary(doc, score, budgetTokens, id, text)
-    if (e == null) return emptyLongs(doc.sparkSession, CardCols)
-    cardOf(e, t, idStar, budgetTokens)
+    require(budgetTokens > 0, "token budget must be positive")
+    globalCard(Reuse.shared(budgetSelectPartials(doc, score, id, text)),
+      budgetTokens)
   }
 
   /** The card's column list — single source for [[cardOf]] and the
@@ -469,13 +473,23 @@ object Sampling {
     "n_selected", "tokens_selected", "n_docs", "tokens_total",
     "budget_tokens", "fill_ppm")
 
-  private def emptyLongs(spark: org.apache.spark.sql.SparkSession,
-      cols: Seq[String]): DataFrame =
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(cols.map(
-        org.apache.spark.sql.types.StructField(_,
-          org.apache.spark.sql.types.LongType))))
+  /** The `lead` fields, then one LongType field per name in `longs`. */
+  private def longSchema(lead: Seq[StructField],
+      longs: Seq[String]): StructType =
+    StructType(lead ++ longs.map(StructField(_, LongType)))
+
+  /** A frame of `schema` with no rows: the result of every card over an
+    * empty corpus. */
+  private def emptyFrame(spark: SparkSession,
+      schema: StructType): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+
+  /** A card's fill computed on the driver: tokens selected per million
+    * budget tokens, in BigInt (the product leaves int64 near 10¹³
+    * tokens). [[cardOf]] and [[cardsByStratumOf]] compute the same
+    * number in SQL, inside their plans. */
+  private def fillPpm(tokSel: Long, budget: Long): Long =
+    (BigInt(tokSel) * 1000000 / BigInt(budget)).toLong
 
   private def cardOf(e: DataFrame, t: Long, idStar: Long,
       budgetTokens: Long): DataFrame = {
@@ -495,18 +509,30 @@ object Sampling {
           .as("fill_ppm"))
   }
 
+  /** [[budgetSelectCard]] over a one-row-per-doc (_id, _score, _toks)
+    * relation: the direct path's projection or a guarded stored fold. */
+  private def globalCard(e: DataFrame, budgetTokens: Long): DataFrame =
+    globalCut(e, budgetTokens) match {
+      case None => emptyFrame(e.sparkSession, longSchema(Nil, CardCols))
+      case Some((t, idStar)) => cardOf(e, t, idStar, budgetTokens)
+    }
+
   /** The per-doc relation of [[budgetSelectCard]]'s selection:
     * (id, score, n_toks, selected). */
   def budgetSelectDocs(doc: DataFrame, score: Column, budgetTokens: Long,
       id: String = "doc_id", text: String = "text"): DataFrame = {
-    val (e, t, idStar) = budgetBoundary(doc, score, budgetTokens, id, text)
-    if (e == null)
-      return emptyLongs(doc.sparkSession,
-        Seq(id, "score", "n_toks", "selected"))
-    e.select(col("_id").as(id), col("_score").as("score"),
-      col("_toks").as("n_toks"),
-      (col("_score") > t || (col("_score") === t && col("_id") <= idStar))
-        .cast("long").as("selected"))
+    require(budgetTokens > 0, "token budget must be positive")
+    val e = Reuse.shared(budgetSelectPartials(doc, score, id, text))
+    globalCut(e, budgetTokens) match {
+      case None => emptyFrame(doc.sparkSession,
+        longSchema(Nil, Seq(id, "score", "n_toks", "selected")))
+      case Some((t, idStar)) =>
+        e.select(col("_id").as(id), col("_score").as("score"),
+          col("_toks").as("n_toks"),
+          (col("_score") > t ||
+            (col("_score") === t && col("_id") <= idStar))
+            .cast("long").as("selected"))
+    }
   }
 
   /** The per-doc (id, score, toks) projection — also the STORED
@@ -543,61 +569,14 @@ object Sampling {
     * changed text or score) would survive as two rows and silently
     * inflate n_docs/tokens_total while the boundary bisection sees
     * a multi-valued id — the one-row-per-doc class the ext167 label
-    * guard closed; rejected loudly here (r15 verdict item 2). A
-    * keep-latest fold is the CALLER's policy (partials carry no
-    * version column to arbitrate by), so the guard demands one
-    * rather than inventing an order. */
+    * guard closed; [[foldPartials]] rejects it loudly (r15 verdict
+    * item 2). A keep-latest fold is the CALLER's policy (partials
+    * carry no version column to arbitrate by), so the guard demands
+    * one rather than inventing an order. */
   def budgetSelectCardFromCounts(counts: DataFrame,
-      budgetTokens: Long): DataFrame = {
-    val e = Reuse.shared(
-      counts.select("_id", "_score", "_toks").distinct())
-    // countDistinct skips null keys while count(1) counts them, so a
-    // null _id from externally-produced partials would otherwise be
-    // misdiagnosed as a duplicate — name the real problem instead.
-    // Null _score/_toks are checked in the SAME aggregate (r17
-    // ADVICE): such a row counts in n_docs/tokens_total yet can never
-    // be selected — the silent-divergence class the projection guards
-    // close on the direct path, which externally-written partials
-    // bypass — and an all-null-score stratum would NPE the envelope's
-    // min/max read.
-    val chk = e.agg(count(lit(1)).as("_n"),
-      countDistinct(col("_id")).as("_nid"),
-      coalesce(sum(when(col("_id").isNull, 1L).otherwise(0L)), lit(0L))
-        .as("_nulls"),
-      coalesce(sum(when(col("_score").isNull || col("_toks").isNull,
-        1L).otherwise(0L)), lit(0L)).as("_nullv")).first()
-    if (chk.getLong(2) > 0)
-      throw new IllegalArgumentException(
-        s"budgetSelectCardFromCounts: ${chk.getLong(2)} partial rows" +
-          " carry a null _id — every stored partial must name its doc")
-    if (chk.getLong(3) > 0)
-      throw new IllegalArgumentException(
-        s"budgetSelectCardFromCounts: ${chk.getLong(3)} partial rows" +
-          " carry a null _score or _toks — such rows would count in" +
-          " n_docs/tokens_total yet never be selectable; fix the" +
-          " producing projection (the library's own sink guards" +
-          " these at write time)")
-    if (chk.getLong(0) != chk.getLong(1))
-      throw new IllegalArgumentException(
-        s"budgetSelectCardFromCounts: ${chk.getLong(0) - chk.getLong(1)}" +
-          " conflicting partial rows share an _id (a re-crawled doc" +
-          " with changed score/toks) — the fold would double-count" +
-          " its tokens; apply a keep-latest rule to one row per doc" +
-          " before serving")
-    cardFromFolded(e, budgetTokens)
-  }
-
-  /** The bisections + card over an already-guarded one-row-per-doc
-    * fold — shared by the checked serve path and the keep-latest
-    * path (whose groupBy makes ids unique BY CONSTRUCTION; re-running
-    * the distinct + conflict aggregate there would be two provably
-    * redundant jobs on the serve hot path). */
-  private def cardFromFolded(e: DataFrame,
-      budgetTokens: Long): DataFrame = {
-    val (e2, t, idStar) = budgetBoundaryOf(e, budgetTokens)
-    if (e2 == null) return emptyLongs(e.sparkSession, CardCols)
-    cardOf(e2, t, idStar, budgetTokens)
-  }
+      budgetTokens: Long): DataFrame =
+    globalCard(foldPartials(counts, "budgetSelectCardFromCounts",
+      strata = false, versioned = false), budgetTokens)
 
   /** The keep-latest fold the re-crawl guard above DEMANDS, shipped:
     * [[budgetSelectCardFromCounts]] over versioned partials — each
@@ -613,48 +592,9 @@ object Sampling {
     * the same refusal class as the unversioned path. Exact replays
     * still fold away by distinct before the check. */
   def budgetSelectCardFromVersioned(counts: DataFrame,
-      budgetTokens: Long): DataFrame = {
-    Guards.requireIntegral(counts, col("_ver"),
-      "budgetSelectCardFromVersioned", "version")
-    val d = Reuse.shared(
-      counts.select("_ver", "_id", "_score", "_toks").distinct())
-    // null-key and within-version-conflict diagnoses kept separate:
-    // countDistinct skips null keys, so a null _id/_ver would read as
-    // a phantom duplicate and send the operator hunting the wrong bug
-    val chk = d.agg(count(lit(1)).as("_n"),
-      countDistinct(col("_id"), col("_ver")).as("_nv"),
-      coalesce(sum(when(col("_id").isNull || col("_ver").isNull, 1L)
-        .otherwise(0L)), lit(0L)).as("_nulls"),
-      coalesce(sum(when(col("_score").isNull || col("_toks").isNull,
-        1L).otherwise(0L)), lit(0L)).as("_nullv")).first()
-    if (chk.getLong(2) > 0)
-      throw new IllegalArgumentException(
-        s"budgetSelectCardFromVersioned: ${chk.getLong(2)} partial " +
-          "rows carry a null _id or _ver — every versioned partial " +
-          "must name its doc and version")
-    if (chk.getLong(3) > 0)
-      throw new IllegalArgumentException(
-        s"budgetSelectCardFromVersioned: ${chk.getLong(3)} partial " +
-          "rows carry a null _score or _toks — such rows would count " +
-          "in the totals yet never be selectable; fix the producing " +
-          "projection")
-    if (chk.getLong(0) != chk.getLong(1))
-      throw new IllegalArgumentException(
-        s"budgetSelectCardFromVersioned: " +
-          s"${chk.getLong(0) - chk.getLong(1)} conflicting rows " +
-          "share an (_id, _ver) — a within-version duplicate with " +
-          "changed score/toks has no latest to keep; fix the " +
-          "producing batch")
-    val latest = d
-      .select(col("_id"), struct(col("_ver"), col("_score"),
-        col("_toks")).as("_vst"))
-      .groupBy("_id").agg(max(col("_vst")).as("_vst"))
-      .select(col("_id"), col("_vst._score").as("_score"),
-        col("_vst._toks").as("_toks"))
-    // ids are unique by construction after the fold — go straight to
-    // the bisections, skipping the redundant distinct/conflict jobs
-    cardFromFolded(Reuse.shared(latest), budgetTokens)
-  }
+      budgetTokens: Long): DataFrame =
+    globalCard(foldPartials(counts, "budgetSelectCardFromVersioned",
+      strata = false, versioned = true), budgetTokens)
 
   /**
    * Per-STRATUM token-budget cuts (ext173) — [[budgetSelectCard]]
@@ -664,23 +604,21 @@ object Sampling {
    * id ASC) order until ITS budget — per-stratum prefix semantics,
    * so one over-represented source cannot eat another's allocation).
    *
-   * Scale shape — the [[Sketches.selectionQuantiles]] multi-stratum
-   * discipline applied to budget-select: still NO global sort and
-   * zero data shuffles in the searches; every round evaluates ALL
-   * strata's k-ary probe ladders in ONE aggregate job (the corpus
-   * joins a broadcast ≤|strata|-row probe relation, probes ride as
-   * columns — no row fan-out), so the job count is the SAME as one
-   * ext172 cut (~log₈ score-span + log₈ id-span rounds), not
-   * |strata| of them. Driver state is one bracket per stratum —
-   * requires LOW-CARDINALITY strata (lang/source, the ext24
-   * assumption). `budgets` overrides the default budget per stratum
-   * (keyed by the stratum value's string rendering — the planned
-   * masses a tokenLedger emits); a stratum absent from the map gets
-   * `budgetTokens`. Null strata are rejected loudly (a null key
-   * would silently drop out of the probe join). Output: one
-   * [[budgetSelectCard]] row per stratum, stratum-labelled —
-   * spec-asserted equal to running budgetSelectCard on each stratum
-   * alone.
+   * Scale shape — still NO global sort and zero data shuffles in the
+   * searches: [[budgetCut]] keys one search per stratum, and every
+   * round evaluates ALL strata's probe ladders in ONE single-stage
+   * [[ProbeScan]] pass (each probe keyed to its stratum's group), so
+   * the job count is the SAME as one ext172 cut (~log₆₄ score-span +
+   * log₆₄ id-span rounds), not |strata| of them. Driver state is one
+   * bracket per stratum — requires LOW-CARDINALITY strata
+   * (lang/source, the ext24 assumption). `budgets` overrides the
+   * default budget per stratum (keyed by the stratum value's string
+   * rendering — the planned masses a tokenLedger emits); a stratum
+   * absent from the map gets `budgetTokens`. Null strata are rejected
+   * loudly (a null key would silently drop out of the envelope join).
+   * Output: one [[budgetSelectCard]] row per stratum,
+   * stratum-labelled — spec-asserted equal to running
+   * budgetSelectCard on each stratum alone.
    */
   def budgetSelectCardsByStratum(doc: DataFrame, stratum: String,
       score: Column, budgetTokens: Long,
@@ -725,71 +663,113 @@ object Sampling {
   def budgetSelectCardsByStratumFromCounts(counts: DataFrame,
       stratum: String, budgetTokens: Long,
       budgets: Map[String, Long] = Map.empty): DataFrame = {
-    val e = foldStratified(counts, "budgetSelectCardsByStratumFromCounts")
+    val who = "budgetSelectCardsByStratumFromCounts"
+    val e = foldPartials(counts, who, strata = true, versioned = false)
     cardsByStratumOf(e, stratum, e.schema("_s").dataType,
-      budgetTokens, budgets, "budgetSelectCardsByStratumFromCounts")
+      budgetTokens, budgets, who)
   }
 
-  /** The guarded whole-row-distinct fold of a stored stratified
-    * partials relation — shared by the per-stratum and two-level
-    * serve paths. Rejects, in diagnosis order: null keys, null
-    * score/toks values (r17 ADVICE — they'd count in the totals yet
-    * never be selectable), a re-crawled doc within one stratum
-    * (same (_s, _id), changed payload), and a doc id appearing
-    * under MORE THAN ONE stratum (r16 verdict item 1; the global-id
-    * check rides the same single aggregate). The last class is
-    * ambiguous from the partials alone — a re-ingested doc whose
-    * stratum changed (langid re-run: FromVersioned keep-latest is
-    * the fix) is indistinguishable from per-source id numbering
-    * where the same id names DIFFERENT docs (re-keying is the fix;
-    * keep-latest would silently collapse them) — so the stored-fold
-    * serve contract requires GLOBALLY unique ids and refuses rather
-    * than guess. The DIRECT batch operators carry no such ambiguity
-    * (one snapshot, one row per doc) and stay permissive. */
-  private def foldStratified(counts: DataFrame,
-      who: String): DataFrame = {
-    val e = Reuse.shared(
-      counts.select("_s", "_id", "_score", "_toks").distinct())
-    // separate null-key diagnosis — countDistinct skips null keys, so
-    // a null stratum/_id would otherwise read as a phantom duplicate
-    val chk = e.agg(count(lit(1)).as("_n"),
-      countDistinct(col("_s"), col("_id")).as("_nid"),
-      countDistinct(col("_id")).as("_gid"),
-      coalesce(sum(when(col("_s").isNull || col("_id").isNull, 1L)
-        .otherwise(0L)), lit(0L)).as("_nulls"),
+  /** The guarded fold of stored budget partials into one row per doc —
+    * under every serve path of the family. Its keys come from the
+    * columns the partials carry: `_id`, plus `_s` for the stratified
+    * sink (`strata`) and `_ver` for a versioned one (`versioned`).
+    * Exact replays collapse by whole-row distinct; then ONE check
+    * aggregate rejects, in diagnosis order: null keys (countDistinct
+    * skips them, so they would read as phantom duplicates), null
+    * `_score`/`_toks` values (r17 ADVICE — such a row counts in the
+    * totals yet is never selectable, and an all-null-score stratum
+    * would NPE the domain read), conflicting payloads under one key,
+    * and, on the unversioned stratified path, a doc id under MORE THAN
+    * ONE stratum (r16 verdict item 1).
+    *
+    * Unversioned, the key is (stratum, id): a re-crawled doc (changed
+    * score/toks) is refused, because a keep-latest fold is the
+    * caller's policy. The cross-stratum class is ambiguous from the
+    * partials alone — a re-ingested doc whose stratum changed (langid
+    * re-run: the versioned keep-latest path is the fix) is
+    * indistinguishable from per-source id numbering where the same id
+    * names DIFFERENT docs (re-keying is the fix; keep-latest would
+    * silently collapse them) — so the stored-fold serve contract
+    * requires GLOBALLY unique ids and refuses rather than guess. The
+    * DIRECT batch operators carry no such ambiguity (one snapshot, one
+    * row per doc) and stay permissive.
+    *
+    * Versioned, the key is (id, version): each doc keeps its NEWEST
+    * row, stratum included, via one max-by-struct aggregate, so ids
+    * are globally unique by construction after the fold. The same
+    * (id, version) under two payloads has no latest to keep and is
+    * refused. CONTRACT: an id must name ONE doc globally — the fold
+    * groups by `_id`, so per-source numbering would be silently
+    * collapsed to the newest row; re-key such corpora before versioned
+    * serving. */
+  private def foldPartials(counts: DataFrame, who: String,
+      strata: Boolean, versioned: Boolean): DataFrame = {
+    if (versioned) Guards.requireIntegral(counts, col("_ver"), who,
+      "version")
+    val s = if (strata) Seq("_s") else Nil
+    val v = if (versioned) Seq("_ver") else Nil
+    val d = Reuse.shared(counts.select((v ++ s ++
+      Seq("_id", "_score", "_toks")).map(col): _*).distinct())
+    val conflictKey = if (versioned) Seq("_id", "_ver") else s :+ "_id"
+    val crossStrata = strata && !versioned
+    val chk = d.agg(count(lit(1)).as("_n"),
+      countDistinct(col(conflictKey.head),
+        conflictKey.tail.map(col): _*).as("_nk"),
+      (if (crossStrata) countDistinct(col("_id")) else lit(0L)).as("_gid"),
+      coalesce(sum(when((s ++ Seq("_id") ++ v).map(col(_).isNull)
+        .reduce(_ || _), 1L).otherwise(0L)), lit(0L)).as("_nulls"),
       coalesce(sum(when(col("_score").isNull || col("_toks").isNull,
         1L).otherwise(0L)), lit(0L)).as("_nullv")).first()
-    if (chk.getLong(3) > 0)
+    val Seq(n, nKey, nId, nulls, nullv) = (0 until 5).map(chk.getLong)
+    // each key column with what it names
+    val keys = (if (strata) Seq("stratum" -> "stratum") else Nil) ++
+      Seq("_id" -> "doc") ++ (if (versioned) Seq("_ver" -> "version") else Nil)
+    def listed(xs: Seq[String], conj: String): String =
+      Seq(xs.init.mkString(", "), xs.last).filter(_.nonEmpty)
+        .mkString(s" $conj ")
+    if (nulls > 0)
       throw new IllegalArgumentException(
-        s"$who: ${chk.getLong(3)} " +
-          "partial rows carry a null stratum or _id — every stored " +
-          "partial must name both")
-    if (chk.getLong(4) > 0)
+        s"$who: $nulls partial rows carry a null " +
+          s"${listed(keys.map(_._1), "or")} — every " +
+          s"${if (versioned) "versioned" else "stored"} partial must " +
+          s"name its ${listed(keys.map(_._2), "and")}")
+    if (nullv > 0)
       throw new IllegalArgumentException(
-        s"$who: ${chk.getLong(4)} " +
-          "partial rows carry a null _score or _toks — such rows " +
-          "would count in the totals yet never be selectable; fix " +
-          "the producing projection")
-    if (chk.getLong(0) != chk.getLong(1))
+        s"$who: $nullv partial rows carry a null _score or _toks — " +
+          "such rows would count in n_docs/tokens_total yet never be " +
+          "selectable; fix the producing projection (the library's own " +
+          "sink guards these at write time)")
+    if (n != nKey)
       throw new IllegalArgumentException(
-        s"$who: " +
-          s"${chk.getLong(0) - chk.getLong(1)} conflicting partial " +
-          "rows share a (stratum, _id) (a re-crawled doc with " +
-          "changed score/toks) — apply a keep-latest rule to one " +
-          "row per doc before serving")
-    if (chk.getLong(1) != chk.getLong(2))
+        if (versioned)
+          s"$who: ${n - nKey} conflicting rows share an (_id, _ver) — " +
+            "a within-version duplicate with changed " +
+            s"${if (strata) "stratum/" else ""}score/toks has no latest " +
+            "to keep; fix the producing batch"
+        else
+          s"$who: ${n - nKey} conflicting partial rows share " +
+            s"${if (strata) "a (stratum, _id)" else "an _id"} (a " +
+            "re-crawled doc with changed score/toks) — the fold would " +
+            "double-count its tokens; apply a keep-latest rule to one " +
+            "row per doc before serving")
+    if (crossStrata && nKey != nId)
       throw new IllegalArgumentException(
-        s"$who: " +
-          s"${chk.getLong(1) - chk.getLong(2)} ids appear under " +
-          "more than one stratum — EITHER a re-ingested doc whose " +
-          "stratum changed (a langid re-run reclassification: " +
-          "serve via the FromVersioned keep-latest path) OR " +
-          "per-source id numbering where the same id names " +
-          "DIFFERENT docs in different strata (re-key to globally " +
-          "unique ids — keep-latest would silently collapse " +
+        s"$who: ${nKey - nId} ids appear under more than one stratum " +
+          "— EITHER a re-ingested doc whose stratum changed (a langid " +
+          "re-run reclassification: serve via the FromVersioned " +
+          "keep-latest path) OR per-source id numbering where the same " +
+          "id names DIFFERENT docs in different strata (re-key to " +
+          "globally unique ids — keep-latest would silently collapse " +
           "distinct docs). The fold cannot tell these apart, so it " +
           "refuses rather than double-count or mis-fold")
-    e
+    if (!versioned) d
+    else Reuse.shared(d
+      .select(col("_id"), struct((v ++ s ++ Seq("_score", "_toks"))
+        .map(col): _*).as("_vst"))
+      .groupBy("_id").agg(max(col("_vst")).as("_vst"))
+      .select((s.map(c => col(s"_vst.$c").as(c)) ++ Seq(col("_id"),
+        col("_vst._score").as("_score"),
+        col("_vst._toks").as("_toks"))): _*))
   }
 
   /** The keep-latest fold the stratified re-crawl guard demands,
@@ -807,69 +787,22 @@ object Sampling {
   def budgetSelectCardsByStratumFromVersioned(counts: DataFrame,
       stratum: String, budgetTokens: Long,
       budgets: Map[String, Long] = Map.empty): DataFrame = {
-    val latest = foldStratifiedVersioned(counts,
-      "budgetSelectCardsByStratumFromVersioned")
+    val who = "budgetSelectCardsByStratumFromVersioned"
+    val latest = foldPartials(counts, who, strata = true,
+      versioned = true)
     cardsByStratumOf(latest, stratum, latest.schema("_s").dataType,
-      budgetTokens, budgets, "budgetSelectCardsByStratumFromVersioned")
-  }
-
-  /** The guarded keep-latest fold of a versioned stratified partials
-    * relation — one row per doc carrying its NEWEST (stratum, score,
-    * toks); ids are globally unique by construction after the fold.
-    * Shared by the per-stratum and two-level versioned serve paths.
-    * CONTRACT: an id must name ONE doc globally — the fold groups by
-    * `_id`, so per-source numbering (the same id naming different
-    * docs in different strata) would be silently collapsed to the
-    * newest row; re-key such corpora before versioned serving. */
-  private def foldStratifiedVersioned(counts: DataFrame,
-      who: String): DataFrame = {
-    Guards.requireIntegral(counts, col("_ver"), who, "version")
-    val d = Reuse.shared(
-      counts.select("_ver", "_s", "_id", "_score", "_toks").distinct())
-    val chk = d.agg(count(lit(1)).as("_n"),
-      countDistinct(col("_id"), col("_ver")).as("_nv"),
-      coalesce(sum(when(col("_s").isNull || col("_id").isNull ||
-        col("_ver").isNull, 1L).otherwise(0L)), lit(0L)).as("_nulls"),
-      coalesce(sum(when(col("_score").isNull || col("_toks").isNull,
-        1L).otherwise(0L)), lit(0L)).as("_nullv")).first()
-    if (chk.getLong(2) > 0)
-      throw new IllegalArgumentException(
-        s"$who: ${chk.getLong(2)} partial rows carry a null stratum, " +
-          "_id or _ver — every versioned partial must name all three")
-    if (chk.getLong(3) > 0)
-      throw new IllegalArgumentException(
-        s"$who: ${chk.getLong(3)} partial rows carry a null _score " +
-          "or _toks — such rows would count in the totals yet never " +
-          "be selectable; fix the producing projection")
-    if (chk.getLong(0) != chk.getLong(1))
-      throw new IllegalArgumentException(
-        s"$who: ${chk.getLong(0) - chk.getLong(1)} conflicting rows " +
-          "share an (_id, _ver) — a within-version duplicate with " +
-          "changed stratum/score/toks has no latest to keep; fix " +
-          "the producing batch")
-    Reuse.shared(d
-      .select(col("_id"), struct(col("_ver"), col("_s"), col("_score"),
-        col("_toks")).as("_vst"))
-      .groupBy("_id").agg(max(col("_vst")).as("_vst"))
-      .select(col("_vst._s").as("_s"), col("_id"),
-        col("_vst._score").as("_score"), col("_vst._toks").as("_toks")))
+      budgetTokens, budgets, who)
   }
 
   /** The batched per-stratum searches over a prepared
     * (_s, _id, _score, _toks) projection — shared by the direct and
     * stored-fold paths. */
   private def cardsByStratumOf(e: DataFrame, stratum: String,
-      sType: org.apache.spark.sql.types.DataType, budgetTokens: Long,
-      budgets: Map[String, Long], who: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = e.sparkSession
-    val cardSchema = StructType(StructField(stratum, sType) +:
-      CardCols.map(StructField(_, LongType)))
+      sType: DataType, budgetTokens: Long,
+      budgets: Map[String, Long], who: String): DataFrame =
     stratumEnvelope(e, sType, budgetTokens, budgets, who) match {
-      case None =>
-        spark.createDataFrame(
-          new java.util.ArrayList[Row](), cardSchema)
+      case None => emptyFrame(e.sparkSession,
+        longSchema(Seq(StructField(stratum, sType)), CardCols))
       case Some(env) =>
         val sel = col("_score") > col("_t") ||
           (col("_score") === col("_t") && col("_id") <= col("_i"))
@@ -889,108 +822,25 @@ object Sampling {
             expr("CAST(cast(tokens_selected AS DECIMAL(38,0))" +
               " * 1000000 DIV _b AS BIGINT)").as("fill_ppm"))
     }
-  }
 
   /** The per-stratum (t, id*, B) selection envelope — the batched
-    * bisections' result as a broadcastable ≤|strata|-row relation
+    * searches' result as a broadcastable ≤|strata|-row relation
     * `(_s, _t, _i, _b)`; None on an empty corpus. The card, docs and
     * two-level paths all project off this one envelope. */
-  private def stratumEnvelope(e: DataFrame,
-      sType: org.apache.spark.sql.types.DataType, budgetTokens: Long,
-      budgets: Map[String, Long], who: String): Option[DataFrame] = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
+  private def stratumEnvelope(e: DataFrame, sType: DataType,
+      budgetTokens: Long, budgets: Map[String, Long],
+      who: String): Option[DataFrame] = {
     require(budgetTokens > 0, "token budget must be positive")
     require(budgets.values.forall(_ > 0),
       "every per-stratum budget must be positive")
-    val spark = e.sparkSession
-    val init = e.groupBy("_s").agg(min("_score"), max("_score"),
-      min("_id"), max("_id")).collect()
-    // a `budgets` key matching no observed stratum would silently
-    // fall back to the default budget (r16 verdict item 3) — in a
-    // per-stratum PLAN a misspelled stratum ("en-US" vs "en") is
-    // almost certainly an error; reject it with the key named
-    // (driver-side set difference over the already-collected
-    // domains). Validated BEFORE the empty-corpus return (r17
-    // ADVICE): an empty corpus observes no strata, so a plan keyed
-    // at all is a plan keyed wrong — previously the one case where
-    // a misspelled key drew no signal from any other check.
-    val observed = init.map(r => String.valueOf(r.get(0))).toSet
-    val unmatched = budgets.keySet.diff(observed)
-    require(unmatched.isEmpty,
-      s"$who: budgets/plan keys matching no " +
-        s"observed stratum: ${unmatched.toSeq.sorted.mkString(", ")}" +
-        s" — keys must equal a stratum value's string rendering " +
-        s"(observed: ${observed.toSeq.sorted.take(20).mkString(", ")})")
-    if (init.isEmpty) return None
     def bOf(s: Any): Long =
       budgets.getOrElse(String.valueOf(s), budgetTokens)
-    val doms = init.map { r =>
-      require(!r.isNullAt(0), s"$who: null stratum " +
-        "value — a null key would silently drop out of the probe " +
-        "join; filter or bucket nulls explicitly")
-      val (sLo, iLo) = (r.getLong(1), r.getLong(3))
-      require(sLo > Long.MinValue && iLo > Long.MinValue,
-        "budgetSelect needs score and id domains above Long.MinValue")
-      (r.get(0), sLo, r.getLong(2), iLo, r.getLong(4))
-    }
-    // one single-stage ProbeScan pass per round evaluating every
-    // active stratum's probe ladder (r18: replaces the per-round
-    // broadcast-join + groupBy aggregate — no per-round Catalyst
-    // work, no padding to a fixed column count)
-    val pscan = new ProbeScan(e, Seq("_s"))
-    pscan.setGroups(doms.map(d => Seq(d._1)))
-    val gOf: Map[Any, Int] =
-      doms.map(d => d._1 -> pscan.groupIndex(Seq(d._1))).toMap
-    def roundSums(rows: Seq[(Any, Seq[Long])], tOf: Map[Any, Long])
-        : Map[Any, Seq[Long]] = {
-      val specs = rows.flatMap { case (s, ms) =>
-        ms.map { m =>
-          if (tOf.isEmpty)
-            ProbeScan.Spec(ProbeScan.ScoreGt, 0L, m, -1, -1, gOf(s))
-          else ProbeScan.Spec(ProbeScan.ScoreEqIdLe, tOf(s), m, -1,
-            -1, gOf(s))
-        }
-      }
-      val vs = pscan.sums(specs)
-      var off = 0
-      rows.map { case (s, ms) =>
-        val slice = vs.slice(off, off + ms.size).toSeq
-        off += ms.size
-        s -> slice
-      }.toMap
-    }
-    // threshold phase: per stratum, min t in [sLo-1, sHi] with
-    // tokens(score > t) <= B — all strata per round in one job
-    val tMap = keyedSearch[Any](
-      doms.map(d => d._1 -> (d._2 - 1, d._3)).toMap,
-      minProbes, minUpdate, rows => {
-        val sums = roundSums(rows, Map.empty)
-        rows.map { case (s, ps) =>
-          s -> ps.indices.map(i => sums(s)(i) <= bOf(s)) }.toMap
-      })
-    // base: tokens strictly above each stratum's threshold (one job)
-    val base = roundSums(
-      doms.toSeq.map(d => (d._1, Seq(tMap(d._1)))), Map.empty)
-      .map { case (s, v) => s -> v.head }
-    // boundary phase: per stratum, max id* in [iLo-1, iHi] with
-    // base + tokens(score = t, id <= id*) <= B
-    val iOf = keyedSearch[Any](
-      doms.map(d => d._1 -> (d._4 - 1, d._5)).toMap,
-      maxProbes, maxUpdate, rows => {
-        val sums = roundSums(rows, tMap)
-        rows.map { case (s, ps) =>
-          s -> ps.indices.map(i => base(s) + sums(s)(i) <= bOf(s)) }
-          .toMap
-      })
-    // the per-stratum (t, id*, B) envelope as a broadcastable frame
-    val envSchema = StructType(Seq(StructField("_s", sType),
-      StructField("_t", LongType), StructField("_i", LongType),
-      StructField("_b", LongType)))
-    Some(spark.createDataFrame(doms.toSeq.map(d =>
-      Row.fromSeq(Seq(d._1, tMap(d._1), iOf(d._1), bOf(d._1)))).asJava,
-      envSchema))
+    val cuts = scoreCuts(e, grouped = true, s => Seq(bOf(s)), who,
+      budgets.keySet)
+    if (cuts.isEmpty) None
+    else Some(e.sparkSession.createDataFrame(cuts.map {
+      case (s, Seq((t, i))) => Row(s, t, i, bOf(s)) }.asJava,
+      longSchema(Seq(StructField("_s", sType)), Seq("_t", "_i", "_b"))))
   }
 
   /** Per-doc relation of [[budgetSelectCardsByStratum]]'s selection:
@@ -1007,14 +857,9 @@ object Sampling {
       score, id, text))
     stratumEnvelope(e, sType, budgetTokens, budgets,
         "budgetSelectDocsByStratum") match {
-      case None =>
-        import org.apache.spark.sql.types.{LongType, StructField,
-          StructType}
-        doc.sparkSession.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(StructField(stratum, sType) +:
-            Seq(id, "score", "n_toks", "selected")
-              .map(StructField(_, LongType))))
+      case None => emptyFrame(doc.sparkSession,
+        longSchema(Seq(StructField(stratum, sType)),
+          Seq(id, "score", "n_toks", "selected")))
       case Some(env) =>
         e.join(broadcast(env), "_s")
           .select(col("_s").as(stratum), col("_id").as(id),
@@ -1079,9 +924,10 @@ object Sampling {
   def twoLevelBudgetCardFromCounts(counts: DataFrame,
       stratumCap: Long, globalBudget: Long,
       budgets: Map[String, Long] = Map.empty): DataFrame = {
-    val e = foldStratified(counts, "twoLevelBudgetCardFromCounts")
+    val who = "twoLevelBudgetCardFromCounts"
+    val e = foldPartials(counts, who, strata = true, versioned = false)
     twoLevelOf(e, e.schema("_s").dataType, stratumCap, globalBudget,
-      budgets, "twoLevelBudgetCardFromCounts")
+      budgets, who)
   }
 
   /** [[twoLevelBudgetCard]] from VERSIONED stored partials — the
@@ -1093,75 +939,85 @@ object Sampling {
   def twoLevelBudgetCardFromVersioned(counts: DataFrame,
       stratumCap: Long, globalBudget: Long,
       budgets: Map[String, Long] = Map.empty): DataFrame = {
-    val latest = foldStratifiedVersioned(counts,
-      "twoLevelBudgetCardFromVersioned")
+    val who = "twoLevelBudgetCardFromVersioned"
+    val latest = foldPartials(counts, who, strata = true,
+      versioned = true)
     twoLevelOf(latest, latest.schema("_s").dataType, stratumCap,
-      globalBudget, budgets, "twoLevelBudgetCardFromVersioned")
+      globalBudget, budgets, who)
+  }
+
+  /** Corpus totals (docs, tokens) of a prepared stratified projection,
+    * with the cap-INDEPENDENT global-uniqueness guard riding the same
+    * aggregate: the two-level stage drops the stratum, so it needs
+    * GLOBALLY unique ids over the FULL relation, not the cap
+    * survivors — a duplicate id whose extra copy is capped out must
+    * raise identically at any cap setting (r16 verdict item 2). */
+  private def uniqueIdTotals(e: DataFrame, who: String): (Long, Long) = {
+    val tot = e.agg(count(lit(1)).as("_n"),
+      coalesce(sum("_toks"), lit(0L)).as("_t"),
+      countDistinct(col("_id")).as("_nid")).first()
+    if (tot.getLong(0) != tot.getLong(2))
+      throw new IllegalArgumentException(
+        s"$who: ${tot.getLong(0) - tot.getLong(2)}" +
+          " rows share an id (per-source numbering across strata," +
+          " or a duplicated doc within one) — the global stage" +
+          " needs GLOBALLY unique ids (a shared id would silently" +
+          " double-step the boundary bisection); re-key ids or" +
+          " apply a keep-latest rule (the FromVersioned path)")
+    (tot.getLong(0), tot.getLong(1))
   }
 
   /** The two-level cut over a prepared (_s, _id, _score, _toks)
-    * projection — shared by the direct and stored-fold paths. The
-    * GLOBALLY-unique-ids contract is enforced over the FULL relation
-    * (riding the corpus-totals aggregate — zero extra jobs), not the
-    * cap survivors: a duplicate id whose extra copy is capped out
-    * must raise identically at any cap setting (r16 verdict item 2 —
-    * the survivor-scoped check fired cap-dependently). */
-  private def twoLevelOf(e: DataFrame,
-      sType: org.apache.spark.sql.types.DataType, stratumCap: Long,
-      globalBudget: Long, budgets: Map[String, Long],
+    * projection — shared by the direct and stored-fold paths. */
+  private def twoLevelOf(e: DataFrame, sType: DataType,
+      stratumCap: Long, globalBudget: Long, budgets: Map[String, Long],
       who: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField,
-      StructType}
     require(globalBudget > 0, "global budget must be positive")
-    val outCols = Seq("threshold_score", "boundary_id", "n_selected",
-      "tokens_selected", "n_surv", "tokens_surv", "n_docs",
-      "tokens_total", "cap_tokens", "budget_tokens", "fill_ppm")
-    val outSchema = StructType(outCols.map(StructField(_, LongType)))
+    val outSchema = longSchema(Nil, Seq("threshold_score",
+      "boundary_id", "n_selected", "tokens_selected", "n_surv",
+      "tokens_surv", "n_docs", "tokens_total", "cap_tokens",
+      "budget_tokens", "fill_ppm"))
     stratumEnvelope(e, sType, stratumCap, budgets, who) match {
-      case None =>
-        e.sparkSession.createDataFrame(
-          new java.util.ArrayList[Row](), outSchema)
+      case None => emptyFrame(e.sparkSession, outSchema)
       case Some(env) =>
-        // corpus totals + the cap-INDEPENDENT global-uniqueness guard
-        // ride ONE aggregate; n_surv/tokens_surv come free from the
-        // stage-2 card (its n_docs/tokens_total ARE the survivor
-        // masses), and survivor emptiness falls out of the stage-2
-        // domain probe — no survivor-scoped check job at all
-        val totRow = e.agg(count(lit(1)).as("_n"),
-          coalesce(sum("_toks"), lit(0L)).as("_t"),
-          countDistinct(col("_id")).as("_nid")).first()
-        if (totRow.getLong(0) != totRow.getLong(2))
-          throw new IllegalArgumentException(
-            s"$who: ${totRow.getLong(0) - totRow.getLong(2)}" +
-              " rows share an id (per-source numbering across strata," +
-              " or a duplicated doc within one) — the global stage" +
-              " needs GLOBALLY unique ids (a shared id would silently" +
-              " double-step the boundary bisection); re-key ids or" +
-              " apply a keep-latest rule (the FromVersioned path)")
+        // n_surv/tokens_surv come free from the stage-2 card (its
+        // n_docs/tokens_total ARE the survivor masses), and survivor
+        // emptiness falls out of the stage-2 domain probe — no
+        // survivor-scoped check job at all
+        val (nDocs, tokTot) = uniqueIdTotals(e, who)
         val surv = Reuse.shared(e.join(broadcast(env), "_s")
           .filter(col("_score") > col("_t") ||
             (col("_score") === col("_t") && col("_id") <= col("_i")))
           .select("_id", "_score", "_toks"))
-        val (e2, t, idStar) = budgetBoundaryOf(surv, globalBudget)
-        if (e2 == null)
-          // caps admitted nothing: no stage-2 boundary exists, but
-          // the cap-stage telemetry is the card's point — one row,
-          // null threshold/boundary (the oracle's shape)
-          return e.sparkSession.createDataFrame(
-            java.util.Arrays.asList(Row(null, null, 0L, 0L, 0L, 0L,
-              totRow.getLong(0), totRow.getLong(1), stratumCap,
-              globalBudget, 0L)), outSchema)
-        cardOf(e2, t, idStar, globalBudget)
-          .select(col("threshold_score"), col("boundary_id"),
-            col("n_selected"), col("tokens_selected"),
-            col("n_docs").as("n_surv"),
-            col("tokens_total").as("tokens_surv"),
-            lit(totRow.getLong(0)).as("n_docs"),
-            lit(totRow.getLong(1)).as("tokens_total"),
-            lit(stratumCap).as("cap_tokens"),
-            col("budget_tokens"), col("fill_ppm"))
+        globalCut(surv, globalBudget) match {
+          case None =>
+            // caps admitted nothing: no stage-2 boundary exists, but
+            // the cap-stage telemetry is the card's point — one row,
+            // null threshold/boundary (the oracle's shape)
+            e.sparkSession.createDataFrame(
+              java.util.Arrays.asList(Row(null, null, 0L, 0L, 0L, 0L,
+                nDocs, tokTot, stratumCap, globalBudget, 0L)), outSchema)
+          case Some((t, idStar)) =>
+            cardOf(surv, t, idStar, globalBudget)
+              .select(col("threshold_score"), col("boundary_id"),
+                col("n_selected"), col("tokens_selected"),
+                col("n_docs").as("n_surv"),
+                col("tokens_total").as("tokens_surv"),
+                lit(nDocs).as("n_docs"),
+                lit(tokTot).as("tokens_total"),
+                lit(stratumCap).as("cap_tokens"),
+                col("budget_tokens"), col("fill_ppm"))
+        }
     }
+  }
+
+  /** A budget (or cap) ladder: non-empty, positive and distinct, since
+    * each rung is one output row. */
+  private def requireLadder(budgets: Seq[Long], who: String): Unit = {
+    require(budgets.nonEmpty && budgets.forall(_ > 0),
+      s"$who: budgets must be non-empty and positive")
+    require(budgets.distinct.size == budgets.size,
+      s"$who: budgets must be distinct (each is one output row)")
   }
 
   /**
@@ -1170,13 +1026,13 @@ object Sampling {
    * mass", the curve a curation plan is chosen FROM (the ext110/
    * ext118 probe-curve idiom applied to the cut itself).
    *
-   * Scale shape — K budgets cost ONE cut, not K: the probe sums
-   * tokens(score > m) are BUDGET-INDEPENDENT, so each threshold
-   * round evaluates the union of all budgets' probe ladders once
-   * (distinct probe columns in one aggregate job) and every budget's
-   * bracket advances off the shared sums; only the boundary rounds
-   * carry per-(budget, probe) conditions (each budget may cut a
-   * different score class), still batched as columns in one job per
+   * Scale shape — K budgets cost ONE cut, not K: [[budgetCut]] keys
+   * one search per budget, and the probe sums tokens(score > m) are
+   * BUDGET-INDEPENDENT, so each threshold round sums the union of all
+   * budgets' probe ladders once, in one single-stage [[ProbeScan]]
+   * pass, and every budget's bracket advances off the shared sums;
+   * only the boundary rounds carry per-budget class conditions (each
+   * budget may cut a different score class), still one pass per
    * round. Zero data shuffles anywhere, same as ext172. Output: one
    * card row per budget, spec-asserted equal to running
    * [[budgetSelectCard]] per budget.
@@ -1184,85 +1040,19 @@ object Sampling {
   def budgetFillCurve(doc: DataFrame, score: Column,
       budgets: Seq[Long], id: String = "doc_id",
       text: String = "text"): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    require(budgets.nonEmpty && budgets.forall(_ > 0),
-      "budgets must be non-empty and positive")
-    require(budgets.distinct.size == budgets.size,
-      "budgets must be distinct (each is one output row)")
+    requireLadder(budgets, "budgetFillCurve")
     val spark = doc.sparkSession
-    val curveSchema = StructType((Seq("budget_tokens") ++
-      CardCols.filterNot(_ == "budget_tokens"))
-      .map(StructField(_, LongType)))
+    val curveSchema = longSchema(Nil,
+      "budget_tokens" +: CardCols.filterNot(_ == "budget_tokens"))
     val e = Reuse.shared(budgetSelectPartials(doc, score, id, text))
-    // one single-stage ProbeScan pass per round evaluating a batch of
-    // conditional token sums (r18: no per-round Catalyst work)
-    val pscan = new ProbeScan(e, Nil)
-    def sums(specs: Seq[ProbeScan.Spec]): Seq[Long] =
-      pscan.sums(specs).toSeq
-    val dom = e.agg(min("_score"), max("_score"), min("_id"),
-      max("_id")).first()
-    if (dom.isNullAt(0))
-      return spark.createDataFrame(
-        new java.util.ArrayList[Row](), curveSchema)
-    val (sLo, sHi) = (dom.getLong(0), dom.getLong(1))
-    val (iLo, iHi) = (dom.getLong(2), dom.getLong(3))
-    require(sLo > Long.MinValue && iLo > Long.MinValue,
-      "budgetSelect needs score and id domains above Long.MinValue")
-    // threshold phase: every budget's bracket advances off the SAME
-    // per-probe sums (tokens(score > m) does not depend on B)
-    var minBr: Map[Long, (Long, Long)] =
-      budgets.map(b => b -> (sLo - 1, sHi)).toMap
-    val tOf = scala.collection.mutable.Map.empty[Long, Long]
-    while (minBr.nonEmpty) {
-      val (fin, act) = minBr.partition { case (_, (lo, hi)) => lo >= hi }
-      tOf ++= fin.map { case (b, (lo, _)) => b -> lo }
-      if (act.isEmpty) minBr = Map.empty
-      else {
-        val pb = act.toSeq.map { case (b, (lo, hi)) =>
-          b -> minProbes(lo, hi) }
-        val allPs = pb.flatMap(_._2).distinct.sorted
-        val vOf = allPs.zip(sums(allPs.map(m =>
-          ProbeScan.spec(ProbeScan.ScoreGt, m)))).toMap
-        minBr = pb.map { case (b, ps) =>
-          val (lo, hi) = act(b)
-          b -> minUpdate(lo, hi, ps, ps.map(p => vOf(p) <= b))
-        }.toMap
-      }
-    }
-    // base mass per DISTINCT threshold (budgets often share one)
-    val ts = tOf.values.toSeq.distinct.sorted
-    val baseOf = ts.zip(sums(ts.map(t =>
-      ProbeScan.spec(ProbeScan.ScoreGt, t)))).toMap
-    // boundary phase: per-budget class conditions (score = t_B),
-    // batched as columns per round
-    var maxBr: Map[Long, (Long, Long)] =
-      budgets.map(b => b -> (iLo - 1, iHi)).toMap
-    val iOf = scala.collection.mutable.Map.empty[Long, Long]
-    while (maxBr.nonEmpty) {
-      val (fin, act) = maxBr.partition { case (_, (lo, hi)) => lo >= hi }
-      iOf ++= fin.map { case (b, (lo, _)) => b -> lo }
-      if (act.isEmpty) maxBr = Map.empty
-      else {
-        val pb = act.toSeq.map { case (b, (lo, hi)) =>
-          b -> maxProbes(lo, hi) }
-        val keys = pb.flatMap { case (b, ps) =>
-          ps.map(p => (tOf(b), p)) }.distinct
-        val vOf = keys.zip(sums(keys.map { case (t, m) =>
-          ProbeScan.Spec(ProbeScan.ScoreEqIdLe, t, m, -1, -1, -1)
-        })).toMap
-        maxBr = pb.map { case (b, ps) =>
-          val (lo, hi) = act(b)
-          b -> maxUpdate(lo, hi, ps,
-            ps.map(p => baseOf(tOf(b)) + vOf((tOf(b), p)) <= b))
-        }.toMap
-      }
-    }
+    val cuts = scoreCuts(e, grouped = false, _ => budgets,
+      "budgetFillCurve")
+    if (cuts.isEmpty) return emptyFrame(spark, curveSchema)
+    val cutOf = budgets.zip(cuts.head._2).toMap
     // one final aggregate: shared totals + per-budget selection sums
     val sel = budgets.map { b =>
-      col("_score") > tOf(b) ||
-        (col("_score") === tOf(b) && col("_id") <= iOf(b))
+      val (t, i) = cutOf(b)
+      col("_score") > t || (col("_score") === t && col("_id") <= i)
     }
     val aggs = Seq(count(lit(1)).as("_nd"),
       sum("_toks").as("_tt")) ++
@@ -1277,9 +1067,8 @@ object Sampling {
     val out = budgets.sorted.map { b =>
       val i = budgets.indexOf(b)
       val tokSel = row.getLong(3 + 2 * i)
-      Row(b, tOf(b), iOf(b), row.getLong(2 + 2 * i), tokSel, nDocs,
-        tTot,
-        (BigInt(tokSel) * 1000000 / BigInt(b)).toLong)
+      Row(b, cutOf(b)._1, cutOf(b)._2, row.getLong(2 + 2 * i), tokSel,
+        nDocs, tTot, fillPpm(tokSel, b))
     }
     spark.createDataFrame(out.asJava, curveSchema)
   }
@@ -1294,14 +1083,14 @@ object Sampling {
    * ext174 = one stratum × K budgets, this = strata × K budgets.
    *
    * Scale shape — |strata| × K cards cost the SAME job count as ONE
-   * ext172 cut: threshold probe sums `tokens_s(score > m)` are
-   * budget-independent, so each round evaluates the per-stratum
-   * UNION of all budgets' k-ary probe ladders in one aggregate job
-   * (the corpus joins a broadcast ≤|strata|-row probe relation,
-   * probes ride as columns — no row fan-out); boundary rounds batch
-   * the per-(stratum, threshold-class, probe) conditions the same
-   * way. The final cards are one labelled aggregate over a pivoted
-   * 1:1 envelope join (2K columns per stratum, never K× the rows).
+   * ext172 cut: [[budgetCut]] keys one search per (stratum, budget),
+   * and threshold probe sums `tokens_s(score > m)` are
+   * budget-independent, so each round sums the per-stratum UNION of
+   * all budgets' probe ladders in one single-stage [[ProbeScan]] pass
+   * (~log₆₄ span rounds in all); boundary rounds batch the
+   * per-(stratum, threshold-class, probe) conditions the same way.
+   * The final cards are one labelled aggregate over a pivoted 1:1
+   * envelope join (2K columns per stratum, never K× the rows).
    * Driver state: one bracket per (stratum, budget) — requires
    * low-cardinality strata × a small budget ladder (the ext173/
    * ext174 preconditions, multiplied).
@@ -1324,13 +1113,14 @@ object Sampling {
     * guarded fold). */
   def budgetFillCurveByStratumFromCounts(counts: DataFrame,
       stratum: String, budgets: Seq[Long]): DataFrame = {
-    val e = foldStratified(counts, "budgetFillCurveByStratumFromCounts")
+    val who = "budgetFillCurveByStratumFromCounts"
+    val e = foldPartials(counts, who, strata = true, versioned = false)
     fillCurveByStratumOf(e, stratum, e.schema("_s").dataType, budgets,
-      "budgetFillCurveByStratumFromCounts")
+      who)
   }
 
   /** [[budgetFillCurveByStratum]] from VERSIONED partials — the
-    * keep-latest serve the cross-stratum refusal in [[foldStratified]]
+    * keep-latest serve the cross-stratum refusal in [[foldPartials]]
     * recommends (r17 verdict: the diagnostic previously named a path
     * that did not exist for this caller): each doc's NEWEST
     * (stratum, score, toks) row prices the curve, so a reclassified
@@ -1338,154 +1128,42 @@ object Sampling {
     * batch operator would compute over newest-crawl rows. */
   def budgetFillCurveByStratumFromVersioned(counts: DataFrame,
       stratum: String, budgets: Seq[Long]): DataFrame = {
-    val latest = foldStratifiedVersioned(counts,
-      "budgetFillCurveByStratumFromVersioned")
+    val who = "budgetFillCurveByStratumFromVersioned"
+    val latest = foldPartials(counts, who, strata = true,
+      versioned = true)
     fillCurveByStratumOf(latest, stratum, latest.schema("_s").dataType,
-      budgets, "budgetFillCurveByStratumFromVersioned")
+      budgets, who)
   }
 
-  /** Result of the batched per-(stratum, budget) bisections: the
-    * observed per-stratum domains plus threshold/boundary maps keyed
-    * (stratum value, budget). */
-  private case class StratumBudgetEnvelopes(
-      doms: Seq[(Any, Long, Long, Long, Long)],
-      tOf: Map[(Any, Long), Long], iOf: Map[(Any, Long), Long])
-
-  /** The batched (stratum × budget) threshold/boundary searches over
-    * a prepared (_s, _id, _score, _toks) projection — the engine
-    * under BOTH the per-stratum fill curves (budgets ladder, ext176)
-    * and the two-level cap sweep's stage 1 (caps ladder, ext177).
-    * One bracket per (stratum, budget); every round evaluates the
-    * per-stratum UNION of its active budgets' k-ary probe ladders in
-    * ONE aggregate job (probes as broadcast columns, variable width,
-    * no row fan-out — threshold sums are budget-independent);
-    * boundary rounds batch (stratum, threshold-class, probe)
-    * condition PAIRS as column pairs. None on an empty corpus. */
-  private def stratumBudgetEnvelopes(e: DataFrame,
-      sType: org.apache.spark.sql.types.DataType, budgets: Seq[Long],
-      who: String): Option[StratumBudgetEnvelopes] = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    require(budgets.nonEmpty && budgets.forall(_ > 0),
-      s"$who: budgets must be non-empty and positive")
-    require(budgets.distinct.size == budgets.size,
-      s"$who: budgets must be distinct (each is one output row per " +
-        "stratum)")
-    val spark = e.sparkSession
-    val init = e.groupBy("_s").agg(min("_score"), max("_score"),
-      min("_id"), max("_id")).collect()
-    if (init.isEmpty) return None
-    val doms = init.toSeq.map { r =>
-      require(!r.isNullAt(0), s"$who: null " +
-        "stratum value — a null key would silently drop out of the " +
-        "probe join; filter or bucket nulls explicitly")
-      val (sLo, iLo) = (r.getLong(1), r.getLong(3))
-      require(sLo > Long.MinValue && iLo > Long.MinValue,
-        "budgetSelect needs score and id domains above Long.MinValue")
-      (r.get(0), sLo, r.getLong(2), iLo, r.getLong(4))
-    }
-    // one single-stage ProbeScan pass per round evaluating every
-    // stratum's probe ladder (the per-stratum union of its active
-    // budgets' ladders — exact widths, no padding; r18: replaces the
-    // per-round broadcast-join + groupBy aggregate)
-    val pscan = new ProbeScan(e, Seq("_s"))
-    pscan.setGroups(doms.map(d => Seq(d._1)))
-    val gOf: Map[Any, Int] =
-      doms.map(d => d._1 -> pscan.groupIndex(Seq(d._1))).toMap
-    def scanSums[P](rows: Seq[(Any, Seq[P])],
-        toSpec: (Any, P) => ProbeScan.Spec): Map[Any, Seq[Long]] = {
-      val specs = rows.flatMap { case (s, ps) =>
-        ps.map(p => toSpec(s, p)) }
-      val vs = pscan.sums(specs)
-      var off = 0
-      rows.map { case (s, ps) =>
-        val slice = vs.slice(off, off + ps.size).toSeq
-        off += ps.size
-        s -> slice
-      }.toMap
-    }
-    def sumsAt(rows: Seq[(Any, Seq[Long])]): Map[Any, Seq[Long]] =
-      scanSums[Long](rows, (s, m) =>
-        ProbeScan.Spec(ProbeScan.ScoreGt, 0L, m, -1, -1, gOf(s)))
-    // boundary-phase twin: each probe carries its OWN threshold class
-    // (budgets in one stratum may cut different classes)
-    def pairSumsAt(rows: Seq[(Any, Seq[(Long, Long)])])
-        : Map[Any, Seq[Long]] =
-      scanSums[(Long, Long)](rows, { case (s, (t, m)) =>
-        ProbeScan.Spec(ProbeScan.ScoreEqIdLe, t, m, -1, -1, gOf(s)) })
-    // threshold phase: bracket per (stratum, budget); every budget's
-    // bracket advances off the SHARED per-stratum probe sums
-    val tOf = keyedSearch[(Any, Long)](
-      (for (d <- doms; b <- budgets)
-        yield (d._1, b) -> (d._2 - 1, d._3)).toMap,
-      minProbes, minUpdate, ladders => {
-        val perS = ladders.groupBy(_._1._1).map { case (s, ls) =>
-          s -> ls.flatMap(_._2).distinct.sorted }
-        val sums = sumsAt(perS.toSeq)
-        val vOf = perS.map { case (s, ps) =>
-          s -> ps.zip(sums(s).take(ps.size)).toMap }
-        ladders.map { case (k @ (s, b), ps) =>
-          k -> ps.map(p => vOf(s)(p) <= b) }.toMap
-      })
-    // base mass per DISTINCT (stratum, threshold) — budgets in one
-    // stratum often share a class; one job
-    val tsPerS = tOf.toSeq.groupBy(_._1._1).map { case (s, kv) =>
-      s -> kv.map(_._2).distinct.sorted }.toSeq
-    val baseSums = sumsAt(tsPerS)
-    val baseOf: Map[(Any, Long), Long] = tsPerS.flatMap {
-      case (s, ts) => ts.zip(baseSums(s).take(ts.size))
-        .map { case (t, v) => (s, t) -> v } }.toMap
-    // boundary phase: bracket per (stratum, budget), probe pairs
-    // (threshold class, id) deduped per stratum and batched per round
-    val iOf = keyedSearch[(Any, Long)](
-      (for (d <- doms; b <- budgets)
-        yield (d._1, b) -> (d._4 - 1, d._5)).toMap,
-      maxProbes, maxUpdate, ladders => {
-        val perS = ladders.groupBy(_._1._1).map { case (s, ls) =>
-          s -> ls.flatMap { case ((_, b), ps) =>
-            ps.map(p => (tOf((s, b)), p)) }.distinct.sorted }
-        val sums = pairSumsAt(perS.toSeq)
-        val vOf = perS.map { case (s, ps) =>
-          s -> ps.zip(sums(s).take(ps.size)).toMap }
-        ladders.map { case (k @ (s, b), ps) =>
-          val t = tOf(k)
-          k -> ps.map(p => baseOf((s, t)) + vOf(s)((t, p)) <= b) }
-          .toMap
-      })
-    Some(StratumBudgetEnvelopes(doms, tOf, iOf))
-  }
+  /** The (t, id*) of every (stratum, rung) cut as a ≤|strata|-row
+    * frame, pivoted to columns `_<t>k`/`_<i>k` per rung k (a 1:1
+    * broadcast join — never K× the rows). */
+  private def pivotedEnvelope(spark: SparkSession, sType: DataType,
+      cuts: Seq[(Any, Seq[(Long, Long)])], t: String,
+      i: String): DataFrame =
+    spark.createDataFrame(cuts.map { case (s, tis) =>
+      Row.fromSeq(s +: tis.flatMap { case (tk, ik) => Seq(tk, ik) })
+    }.asJava, longSchema(Seq(StructField("_s", sType)),
+      cuts.head._2.indices.flatMap(k => Seq(s"$t$k", s"$i$k"))))
 
   /** The per-stratum fill-curve cards over a prepared projection —
     * shared by the direct, stored-fold and versioned serve paths
     * (`who` threads the caller's name into the shared guards so
     * errors name what the user called). */
   private def fillCurveByStratumOf(e: DataFrame, stratum: String,
-      sType: org.apache.spark.sql.types.DataType,
-      budgets: Seq[Long], who: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
+      sType: DataType, budgets: Seq[Long], who: String): DataFrame = {
+    requireLadder(budgets, who)
     val spark = e.sparkSession
-    val outSchema = StructType(StructField(stratum, sType) +:
-      (Seq("budget_tokens") ++ CardCols.filterNot(_ == "budget_tokens"))
-        .map(StructField(_, LongType)))
-    val env0 = stratumBudgetEnvelopes(e, sType, budgets, who)
-    if (env0.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[Row](), outSchema)
-    val StratumBudgetEnvelopes(doms, tOf, iOf) = env0.get
-    // final cards: the (t, id*) envelope PIVOTED to 2K columns per
-    // stratum (a 1:1 broadcast join — never K× the rows), one
-    // labelled aggregate, |strata| rows to the driver
+    val outSchema = longSchema(Seq(StructField(stratum, sType)),
+      "budget_tokens" +: CardCols.filterNot(_ == "budget_tokens"))
+    val cuts = scoreCuts(e, grouped = true, _ => budgets, who)
+    if (cuts.isEmpty) return emptyFrame(spark, outSchema)
+    val cutOf = cuts.map { case (s, tis) => s -> budgets.zip(tis).toMap }
+      .toMap
+    // final cards: one labelled aggregate over the pivoted envelope,
+    // |strata| rows to the driver
     val K = budgets.size
-    val envSchema = StructType(StructField("_s", sType) +:
-      (0 until K).flatMap(k => Seq(StructField(s"_t$k", LongType),
-        StructField(s"_i$k", LongType))))
-    val env = spark.createDataFrame(doms.toSeq.map { d =>
-      Row.fromSeq(d._1 +: budgets.flatMap(b =>
-        Seq(tOf((d._1, b)), iOf((d._1, b)))))
-    }.asJava, envSchema)
+    val env = pivotedEnvelope(spark, sType, cuts, "_t", "_i")
     val selAggs = Seq(count(lit(1)).as("_nd"),
       sum("_toks").as("_tt")) ++
       (0 until K).flatMap { k =>
@@ -1505,9 +1183,9 @@ object Sampling {
         budgets.sorted.map { b =>
           val k = budgets.indexOf(b)
           val tokSel = r.getLong(4 + 2 * k)
-          Row.fromSeq(Seq(s, b, tOf((s, b)), iOf((s, b)),
-            r.getLong(3 + 2 * k), tokSel, nd, tt,
-            (BigInt(tokSel) * 1000000 / BigInt(b)).toLong))
+          val (t, i) = cutOf(s)(b)
+          Row.fromSeq(Seq(s, b, t, i, r.getLong(3 + 2 * k), tokSel, nd,
+            tt, fillPpm(tokSel, b)))
         }
       }
     spark.createDataFrame(out.asJava, outSchema)
@@ -1521,13 +1199,15 @@ object Sampling {
    * survivor pool"). One ext175 card row per cap rung, so the cost
    * of each candidate policy is a number before any data moves.
    *
-   * Scale shape: stage 1 is [[stratumBudgetEnvelopes]] with the CAPS
-   * as the budget ladder (|strata| × K searches for one cut's job
-   * count); each cap's survivor set is a scan predicate off ONE
+   * Scale shape: stage 1 is [[budgetCut]] per (stratum, cap) — the
+   * CAPS as the budget ladder, |strata| × K searches for one cut's
+   * job count; each cap's survivor set is a scan predicate off ONE
    * pivoted 1:1 envelope join (2K columns per stratum — never K× the
-   * rows); stage-2 domains, survivor masses, every bisection round
-   * and the final selection sums are each ONE aggregate batching all
-   * K caps as columns. Zero data shuffles in every search; the
+   * rows); stage-2 domains and survivor masses are ONE aggregate,
+   * stage 2 is [[budgetCut]] again, one search per cap over the
+   * survivor predicate (each round one single-stage [[ProbeScan]]
+   * pass for all K caps), and the final selection sums are ONE
+   * aggregate. Zero data shuffles in every search; the
    * global-uniqueness guard rides the corpus-totals aggregate
    * (cap-independent, the ext175 contract). Caps so tight a rung's
    * survivors are empty produce that rung's row with null
@@ -1550,13 +1230,13 @@ object Sampling {
     * global budget are serve-time knobs. */
   def twoLevelCapSweepFromCounts(counts: DataFrame, caps: Seq[Long],
       globalBudget: Long): DataFrame = {
-    val e = foldStratified(counts, "twoLevelCapSweepFromCounts")
-    capSweepOf(e, e.schema("_s").dataType, caps, globalBudget,
-      "twoLevelCapSweepFromCounts")
+    val who = "twoLevelCapSweepFromCounts"
+    val e = foldPartials(counts, who, strata = true, versioned = false)
+    capSweepOf(e, e.schema("_s").dataType, caps, globalBudget, who)
   }
 
   /** [[twoLevelCapSweep]] from VERSIONED partials — the keep-latest
-    * serve the cross-stratum refusal in [[foldStratified]] recommends
+    * serve the cross-stratum refusal in [[foldPartials]] recommends
     * (r17 verdict: previously a dead-end for this caller): each doc's
     * newest (stratum, score, toks) row enters stage 1, so the priced
     * cap policies are the ones the batch sweep would compute over
@@ -1565,56 +1245,32 @@ object Sampling {
     * guard is satisfied structurally on this path. */
   def twoLevelCapSweepFromVersioned(counts: DataFrame, caps: Seq[Long],
       globalBudget: Long): DataFrame = {
-    val latest = foldStratifiedVersioned(counts,
-      "twoLevelCapSweepFromVersioned")
+    val who = "twoLevelCapSweepFromVersioned"
+    val latest = foldPartials(counts, who, strata = true,
+      versioned = true)
     capSweepOf(latest, latest.schema("_s").dataType, caps,
-      globalBudget, "twoLevelCapSweepFromVersioned")
+      globalBudget, who)
   }
 
   /** The cap-sweep cards over a prepared projection — shared by the
     * direct, stored-fold and versioned serve paths (`who` threads the
     * caller's name into the shared guards). */
-  private def capSweepOf(e: DataFrame,
-      sType: org.apache.spark.sql.types.DataType, caps: Seq[Long],
+  private def capSweepOf(e: DataFrame, sType: DataType, caps: Seq[Long],
       globalBudget: Long, who: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
     require(globalBudget > 0, "global budget must be positive")
+    requireLadder(caps, who)
     val spark = e.sparkSession
-    val outCols = Seq("cap_tokens", "threshold_score", "boundary_id",
-      "n_selected", "tokens_selected", "n_surv", "tokens_surv",
-      "n_docs", "tokens_total", "budget_tokens", "fill_ppm")
-    val outSchema = StructType(outCols.map(StructField(_, LongType)))
-    val env0 = stratumBudgetEnvelopes(e, sType, caps, who)
-    if (env0.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[Row](), outSchema)
-    val StratumBudgetEnvelopes(doms, tOf, iOf) = env0.get
+    val outSchema = longSchema(Nil, Seq("cap_tokens", "threshold_score",
+      "boundary_id", "n_selected", "tokens_selected", "n_surv",
+      "tokens_surv", "n_docs", "tokens_total", "budget_tokens",
+      "fill_ppm"))
+    val cuts = scoreCuts(e, grouped = true, _ => caps, who)
+    if (cuts.isEmpty) return emptyFrame(spark, outSchema)
     val K = caps.size
-    // corpus totals + the cap-INDEPENDENT global-uniqueness guard in
-    // one aggregate (the ext175 contract: a duplicate id raises at
-    // any cap setting, so the sweep cannot pass at one rung and
-    // throw at another)
-    val totRow = e.agg(count(lit(1)).as("_n"),
-      coalesce(sum("_toks"), lit(0L)).as("_t"),
-      countDistinct(col("_id")).as("_nid")).first()
-    if (totRow.getLong(0) != totRow.getLong(2))
-      throw new IllegalArgumentException(
-        s"$who: ${totRow.getLong(0) - totRow.getLong(2)}" +
-          " rows share an id (per-source numbering across strata, or" +
-          " a duplicated doc within one) — the global stage needs" +
-          " GLOBALLY unique ids; re-key ids or apply a keep-latest" +
-          " rule (the FromVersioned path)")
+    val (nDocs, tokTot) = uniqueIdTotals(e, who)
     // ONE pivoted envelope join (1:1 on stratum) carries every cap's
     // (t, id*) as columns; each cap's survivor set is the predicate
-    val envSchema = StructType(StructField("_s", sType) +:
-      (0 until K).flatMap(k => Seq(StructField(s"_ct$k", LongType),
-        StructField(s"_ci$k", LongType))))
-    val env = spark.createDataFrame(doms.map { d =>
-      Row.fromSeq(d._1 +: caps.flatMap(c =>
-        Seq(tOf((d._1, c)), iOf((d._1, c)))))
-    }.asJava, envSchema)
+    val env = pivotedEnvelope(spark, sType, cuts, "_ct", "_ci")
     val ej = Reuse.shared(e.join(broadcast(env), "_s")
       .select(col("_id") +: col("_score") +: col("_toks") +:
         (0 until K).flatMap(k =>
@@ -1637,57 +1293,30 @@ object Sampling {
     val nSurv = (0 until K).map(k => domRow.getLong(6 * k + 4))
     val tokSurv = (0 until K).map(k => domRow.getLong(6 * k + 5))
     val active = (0 until K).filter(nSurv(_) > 0L)
-    // batched stage-2 sums: one single-stage ProbeScan pass per
-    // round, one conditional sum per (cap, probe) — the survivor
-    // predicate reads each row's own pivoted (_ct k, _ci k) columns
-    // (r18: replaces the per-round wide aggregate)
+    // stage 2: one search per active cap, its probes reading each
+    // row's own pivoted (_ct k, _ci k) survivor columns. (No
+    // Long.MinValue domain guard needed here: survivor domains are
+    // subsets of the per-stratum corpus domains stage 1 checked.)
     val pscan2 = new ProbeScan(ej, Nil)
     val ctOrd = (0 until K).map(k => ej.schema.fieldIndex(s"_ct$k"))
     val ciOrd = (0 until K).map(k => ej.schema.fieldIndex(s"_ci$k"))
-    def sums2(specs: Seq[ProbeScan.Spec]): Seq[Long] =
-      pscan2.sums(specs).toSeq
-    // stage-2 threshold phase: bracket per active cap, all caps'
-    // probes in one job per round. (No Long.MinValue domain guard
-    // needed here: survivor domains are subsets of the per-stratum
-    // corpus domains stratumBudgetEnvelopes already rejected.)
-    val t2 = keyedSearch[Int](active.map(k =>
-      k -> (domRow.getLong(6 * k) - 1, domRow.getLong(6 * k + 1)))
-      .toMap, minProbes, minUpdate, ladders => {
-        val flat = ladders.flatMap { case (k, ps) =>
-          ps.map(p => (k, p)) }
-        val vOf = flat.zip(sums2(flat.map { case (k, p) =>
-          ProbeScan.Spec(ProbeScan.SurvScoreGt, 0L, p, ctOrd(k),
-            ciOrd(k), -1) })).toMap
-        ladders.map { case (k, ps) =>
-          k -> ps.map(p => vOf((k, p)) <= globalBudget) }.toMap
-      })
-    // base mass above each active cap's stage-2 threshold (one job)
-    val baseVs =
-      if (active.isEmpty) Seq.empty[Long]
-      else sums2(active.map(k =>
-        ProbeScan.Spec(ProbeScan.SurvScoreGt, 0L, t2(k), ctOrd(k),
-          ciOrd(k), -1)))
-    val baseOf = active.zip(baseVs).toMap
-    // stage-2 boundary phase
-    val i2 = keyedSearch[Int](active.map(k =>
-      k -> (domRow.getLong(6 * k + 2) - 1, domRow.getLong(6 * k + 3)))
-      .toMap, maxProbes, maxUpdate, ladders => {
-        val flat = ladders.flatMap { case (k, ps) =>
-          ps.map(p => (k, p)) }
-        val vOf = flat.zip(sums2(flat.map { case (k, p) =>
-          ProbeScan.Spec(ProbeScan.SurvEqIdLe, t2(k), p, ctOrd(k),
-            ciOrd(k), -1) })).toMap
-        ladders.map { case (k, ps) =>
-          k -> ps.map(p => baseOf(k) + vOf((k, p)) <= globalBudget) }
-          .toMap
-      })
+    val cut2 = budgetCut[Int](pscan2, active.map(k =>
+        k -> (domRow.getLong(6 * k), domRow.getLong(6 * k + 1),
+          domRow.getLong(6 * k + 2), domRow.getLong(6 * k + 3))),
+      _ => Seq(globalBudget),
+      (k, m) => ProbeScan.Spec(ProbeScan.SurvScoreGt, 0L, m, ctOrd(k),
+        ciOrd(k), -1),
+      (k, t, m) => ProbeScan.Spec(ProbeScan.SurvEqIdLe, t, m, ctOrd(k),
+        ciOrd(k), -1))
+    def t2i2(k: Int): (Long, Long) = cut2((k, globalBudget))
     // final selection sums for all active caps in one aggregate
     val selVs =
       if (active.isEmpty) Seq.empty[Long]
       else {
         val aggs = active.flatMap { k =>
-          val sel = surv(k) && (col("_score") > t2(k) ||
-            (col("_score") === t2(k) && col("_id") <= i2(k)))
+          val (t, i) = t2i2(k)
+          val sel = surv(k) && (col("_score") > t ||
+            (col("_score") === t && col("_id") <= i))
           Seq(coalesce(sum(when(sel, 1L).otherwise(0L)), lit(0L))
               .as(s"_n$k"),
             coalesce(sum(when(sel, col("_toks")).otherwise(0L)),
@@ -1701,13 +1330,13 @@ object Sampling {
     val out = caps.sorted.map { c =>
       val k = caps.indexOf(c)
       if (nSurv(k) == 0L)
-        Row(c, null, null, 0L, 0L, 0L, 0L, totRow.getLong(0),
-          totRow.getLong(1), globalBudget, 0L)
+        Row(c, null, null, 0L, 0L, 0L, 0L, nDocs, tokTot, globalBudget,
+          0L)
       else {
         val (nSel, tokSel) = selOf(k)
-        Row(c, t2(k), i2(k), nSel, tokSel, nSurv(k), tokSurv(k),
-          totRow.getLong(0), totRow.getLong(1), globalBudget,
-          (BigInt(tokSel) * 1000000 / BigInt(globalBudget)).toLong)
+        val (t, i) = t2i2(k)
+        Row(c, t, i, nSel, tokSel, nSurv(k), tokSurv(k), nDocs, tokTot,
+          globalBudget, fillPpm(tokSel, globalBudget))
       }
     }
     spark.createDataFrame(out.asJava, outSchema)
@@ -1782,7 +1411,7 @@ object Sampling {
     * (r17 verdict item 2): the `batch=N` replay key is the version,
     * so each version id `v` names the corpus snapshot "every doc's
     * newest row among batches ≤ v" — two keep-latest folds
-    * ([[foldStratifiedVersioned]] filtered at `verOld` / `verNew`)
+    * ([[foldPartials]] filtered at `verOld` / `verNew`)
     * diffed by the same core as the direct operator. The lineage
     * audit between any two ingest points becomes a serve-time query
     * over the sink that already serves every card, curve and sweep.
@@ -1812,8 +1441,8 @@ object Sampling {
   def corpusDiffFromVersioned(counts: DataFrame, verOld: Long,
       verNew: Long, stratum: String): DataFrame = {
     def snap(v: Long): DataFrame = {
-      val latest = foldStratifiedVersioned(
-        counts.filter(col("_ver") <= v), "corpusDiffFromVersioned")
+      val latest = foldPartials(counts.filter(col("_ver") <= v),
+        "corpusDiffFromVersioned", strata = true, versioned = true)
       Reuse.shared(latest.select(col("_id"), col("_s"),
         struct(col("_score"), col("_toks")).as("_h"), col("_toks")))
     }
@@ -1865,77 +1494,141 @@ object Sampling {
         col("tokens_new") - col("tokens_old"))
   }
 
-  /** The two bisections over the shared (id, score, toks) projection;
-    * returns (null, _, _) on an empty corpus (no boundary exists —
-    * the temporalSplit empty-card convention). */
-  private def budgetBoundary(doc: DataFrame, score: Column,
-      budgetTokens: Long, id: String, text: String)
-      : (DataFrame, Long, Long) = {
-    require(budgetTokens > 0, "token budget must be positive")
-    budgetBoundaryOf(
-      Reuse.shared(budgetSelectPartials(doc, score, id, text)),
-      budgetTokens)
-  }
-
-  /** Probes per search round: each round is ONE aggregate job
-    * computing `BisectFanout − 1` conditional sums in a single scan,
-    * so the round count drops from log₂(span) to log_F(span) — the
-    * bracket-refinement the ext170 EXPLAINS note promised, realized.
+  /** Probes per search round: each round is ONE single-stage
+    * [[ProbeScan]] pass computing up to `BisectFanout − 1` conditional
+    * sums, so the round count drops from log₂(span) to log_F(span).
     * Job-scheduling overhead (not scan cost) dominates these
     * searches locally, and at 100 TB each round is a full pass over
     * the partials relation, so fewer-but-wider rounds win at every
-    * scale: the per-row cost of F−1 conditional sums is trivially
-    * codegen'd while the pass count falls as 1/log₂F. r18 measured
-    * (sf0.1 local[32]; PerfLab's profile prints these job counts):
-    * fanout 8 → 32 cut the family's
-    * sequential job counts ~40% (ext177 86 → ~52 jobs) with the
-    * identical converged result (64 after the ProbeScan rewrite made probe cost flat) — the searches are exact for ANY
-    * fanout ≥ 2, the ladder only changes how fast brackets narrow. */
+    * scale: the per-row cost of F−1 conditional sums is a short
+    * primitive loop while the pass count falls as 1/log₂F. r18
+    * measured (sf0.1 local[32]; PerfLab's profile prints these job
+    * counts): fanout 8 → 32 cut the family's sequential job counts
+    * ~40% (ext177 86 → ~52 jobs) with the identical converged result
+    * (64 after the ProbeScan rewrite made probe cost flat) — the
+    * searches are exact for ANY fanout ≥ 2, the ladder only changes
+    * how fast brackets narrow. */
   private[graft] val BisectFanout = 64
 
-  private def budgetBoundaryOf(e: DataFrame, budgetTokens: Long)
-      : (DataFrame, Long, Long) = {
+  /** [[budgetSelectCard]]'s one-budget cut of a one-row-per-doc
+    * (_id, _score, _toks) relation: (t, id*), None on an empty
+    * relation (no boundary exists — the temporalSplit empty-card
+    * convention). */
+  private def globalCut(e: DataFrame,
+      budgetTokens: Long): Option[(Long, Long)] = {
     require(budgetTokens > 0, "token budget must be positive")
-    // one single-stage pass per round evaluating a batch of
-    // conditional token sums over the pinned partials (ProbeScan —
-    // no per-round Catalyst work; r18 optimization)
-    val ps = new ProbeScan(e, Nil)
-    def toksWhere(specs: Seq[ProbeScan.Spec]): Seq[Long] =
-      ps.sums(specs).toSeq
-    val dom = e.agg(min("_score"), max("_score"), min("_id"),
-      max("_id")).first()
-    if (dom.isNullAt(0)) return (null, 0L, 0L)
-    val (sLo, sHi) = (dom.getLong(0), dom.getLong(1))
-    val (iLo, iHi) = (dom.getLong(2), dom.getLong(3))
-    // the search domains extend one below the observed minimum ("none
-    // selected" must be representable), so Long.MinValue ids/scores
-    // would wrap — reject loudly (64-bit-hash ids are realistic;
-    // probe arithmetic itself is BigInt-safe for any other span)
-    require(sLo > Long.MinValue && iLo > Long.MinValue,
-      "budgetSelect needs score and id domains above Long.MinValue")
-    // threshold: min t in [sLo-1, sHi] with tokens(score > t) <= B
-    // (predicate monotone non-decreasing in t; t = sLo-1 means the
-    // whole corpus fits)
-    val t = karyMinTrue(sLo - 1, sHi, ms =>
-      toksWhere(ms.map(m => ProbeScan.spec(ProbeScan.ScoreGt, m)))
-        .map(_ <= budgetTokens))
-    val base = toksWhere(Seq(ProbeScan.spec(ProbeScan.ScoreGt, t))).head
-    // boundary: max id* in [iLo-1, iHi] with base + tokens(score = t,
-    // id <= id*) <= B (monotone; iLo-1 always satisfies — base <= B by
-    // t's construction)
-    val idStar = karyMaxTrue(iLo - 1, iHi, ms =>
-      toksWhere(ms.map(m =>
-        ProbeScan.Spec(ProbeScan.ScoreEqIdLe, t, m, -1, -1, -1)))
-        .map(base + _ <= budgetTokens))
-    (e, t, idStar)
+    scoreCuts(e, grouped = false, _ => Seq(budgetTokens), "budgetSelect")
+      .headOption.map(_._2.head)
+  }
+
+  /** [[budgetCut]] over a prepared (_id, _score, _toks) relation, one
+    * group per `_s` value when `grouped`, else the whole relation as
+    * one group: the domain probe (ONE job — each group's score and id
+    * ranges), then the searches over a [[ProbeScan]] of `e`. Returns
+    * each group's (t, id*) per budget, in `budgets` order; empty on an
+    * empty relation. Refuses, naming the cause:
+    *  - a `planKeys` key (a per-stratum budget plan's) matching no
+    *    observed stratum (r16 verdict item 3): in a PLAN a misspelled
+    *    stratum ("en-US" vs "en") is almost certainly an error. Checked
+    *    BEFORE the empty-relation return (r17 ADVICE): an empty corpus
+    *    observes no strata, so a plan keyed at all is keyed wrong;
+    *  - a null stratum, which would silently drop out of the envelope
+    *    join;
+    *  - a score or id domain reaching Long.MinValue: the searches start
+    *    one below the observed minimum ("none selected" must be
+    *    representable), which would wrap (64-bit-hash ids are
+    *    realistic; probe arithmetic itself is BigInt-safe for any other
+    *    span). */
+  private def scoreCuts(e: DataFrame, grouped: Boolean,
+      budgets: Any => Seq[Long], who: String,
+      planKeys: Set[String] = Set.empty): Seq[(Any, Seq[(Long, Long)])] = {
+    val ranges = Seq(min("_score"), max("_score"), min("_id"), max("_id"))
+    val rows =
+      if (grouped)
+        e.groupBy("_s").agg(ranges.head, ranges.tail: _*).collect().toSeq
+      else Seq(e.agg(ranges.head, ranges.tail: _*).first())
+        .filterNot(_.isNullAt(0))
+    val observed = rows.map(r => String.valueOf(r.get(0))).toSet
+    val unmatched = planKeys.diff(observed)
+    require(unmatched.isEmpty,
+      s"$who: budgets/plan keys matching no " +
+        s"observed stratum: ${unmatched.toSeq.sorted.mkString(", ")}" +
+        s" — keys must equal a stratum value's string rendering " +
+        s"(observed: ${observed.toSeq.sorted.take(20).mkString(", ")})")
+    val o = if (grouped) 1 else 0
+    val doms = rows.map { r =>
+      require(!r.isNullAt(0), s"$who: null stratum value — a null key " +
+        "would silently drop out of the probe join; filter or bucket " +
+        "nulls explicitly")
+      val (sLo, iLo) = (r.getLong(o), r.getLong(o + 2))
+      require(sLo > Long.MinValue && iLo > Long.MinValue,
+        "budgetSelect needs score and id domains above Long.MinValue")
+      (if (grouped) r.get(0) else (),
+        (sLo, r.getLong(o + 1), iLo, r.getLong(o + 3)))
+    }
+    val pscan = new ProbeScan(e, if (grouped) Seq("_s") else Nil)
+    if (grouped) pscan.setGroups(doms.map(d => Seq(d._1)))
+    val gOf: Map[Any, Int] = doms.map(d => d._1 ->
+      (if (grouped) pscan.groupIndex(Seq(d._1)) else -1)).toMap
+    val cut = budgetCut[Any](pscan, doms, budgets,
+      (s, m) => ProbeScan.Spec(ProbeScan.ScoreGt, 0L, m, -1, -1, gOf(s)),
+      (s, t, m) =>
+        ProbeScan.Spec(ProbeScan.ScoreEqIdLe, t, m, -1, -1, gOf(s)))
+    doms.map { case (s, _) => s -> budgets(s).map(b => cut((s, b))) }
+  }
+
+  /** The budget cut — the one engine under every search of the
+    * family (ext172-ext177). One search per (group g, budget B) key,
+    * over g's domain (sLo, sHi, iLo, iHi):
+    *  1. threshold: the least t in [sLo − 1, sHi] with
+    *     tokens_g(score > t) ≤ B (monotone; t = sLo − 1 means the
+    *     whole group fits);
+    *  2. base = tokens_g(score > t);
+    *  3. boundary: the greatest id* in [iLo − 1, iHi] with
+    *     base + tokens_g(score = t, id ≤ id*) ≤ B (monotone; iLo − 1
+    *     always holds, as base ≤ B by t's construction).
+    * A group is a stratum, a cap rung of the two-level sweep, or the
+    * whole relation. `gt(g, m)` and `eqLe(g, t, m)` build g's probe
+    * specs for score > m and score = t ∧ id ≤ m; a spec shared by
+    * several keys (budgets of one group share every threshold probe)
+    * is summed once. Each search round, and the base, is one
+    * single-stage `pscan` pass over all keys, so K budgets × |groups|
+    * cost the job count of one cut. */
+  private def budgetCut[G](pscan: ProbeScan,
+      doms: Seq[(G, (Long, Long, Long, Long))], budgets: G => Seq[Long],
+      gt: (G, Long) => ProbeScan.Spec,
+      eqLe: (G, Long, Long) => ProbeScan.Spec): Map[(G, Long), (Long, Long)] = {
+    val dom = doms.toMap
+    val keys = for ((g, _) <- doms; b <- budgets(g)) yield (g, b)
+    val tOf = keyedSearch[(G, Long)](keys.map { case k @ (g, _) =>
+        k -> (dom(g)._1 - 1, dom(g)._2) }.toMap,
+      minProbes, minUpdate, ladders => {
+        val v = pscan.sumsBySpec(ladders.flatMap { case ((g, _), ps) =>
+          ps.map(gt(g, _)) })
+        ladders.map { case (k @ (g, b), ps) =>
+          k -> ps.map(p => v(gt(g, p)) <= b) }.toMap
+      })
+    val base = pscan.sumsBySpec(keys.map { case k @ (g, _) =>
+      gt(g, tOf(k)) })
+    val iOf = keyedSearch[(G, Long)](keys.map { case k @ (g, _) =>
+        k -> (dom(g)._3 - 1, dom(g)._4) }.toMap,
+      maxProbes, maxUpdate, ladders => {
+        val v = pscan.sumsBySpec(ladders.flatMap { case (k @ (g, _), ps) =>
+          ps.map(eqLe(g, tOf(k), _)) })
+        ladders.map { case (k @ (g, b), ps) =>
+          val above = base(gt(g, tOf(k)))
+          k -> ps.map(p => above + v(eqLe(g, tOf(k), p)) <= b) }.toMap
+      })
+    keys.map(k => k -> (tOf(k), iOf(k))).toMap
   }
 
   /** Shared driver for a BATCH of simultaneous monotone bisections,
-    * one bracket per key (stratum, (stratum, budget), cap index, or
-    * Unit for the single search): each round finishes converged
-    * brackets, builds every active key's probe ladder, evaluates ALL
-    * ladders through the caller's `eval` (which owns the batching —
-    * one aggregate job per round), and narrows each bracket via
+    * one bracket per key ((group, budget) in [[budgetCut]], (stratum,
+    * quantile) in [[Sketches.selectionQuantiles]]): each round
+    * finishes converged brackets, builds every active key's probe
+    * ladder, evaluates ALL ladders through the caller's `eval` (which
+    * owns the batching — one single-stage [[ProbeScan]] pass per
+    * round, ~log₆₄(span) rounds), and narrows each bracket via
     * [[minUpdate]]/[[maxUpdate]]. The bracket/ladder bookkeeping and
     * its probe-alignment invariants live HERE, once, instead of in
     * each operator's loop (r17 review). */
@@ -1963,19 +1656,16 @@ object Sampling {
     out.toMap
   }
 
-  /** Probe ladder for one min-true round: strictly increasing probes
-    * in [lo, hi). BigInt width/probe arithmetic: a full-Long id span
-    * (64-bit hash ids) overflows hi − lo, which would silently
-    * corrupt the ladder — the probes themselves always lie in
-    * [lo, hi]. Shared by the single-corpus searches and the
-    * per-stratum batched rounds (ext173). */
+  /** Probe ladder for one min-true round: `BisectFanout − 1` evenly
+    * spaced probes, strictly increasing in [lo, hi) — every point of
+    * [lo, hi) once the bracket is narrower than the fanout, so such a
+    * bracket converges in that round. BigInt width/probe arithmetic:
+    * a full-Long span (64-bit hash ids or values) overflows hi − lo,
+    * which would silently corrupt the ladder. */
   private[graft] def minProbes(lo: Long, hi: Long): Seq[Long] = {
     val width = BigInt(hi) - BigInt(lo)
-    val k = width.min(BigInt(BisectFanout))
-    val probes = (BigInt(1) until k)
-      .map(i => (BigInt(lo) + width * i / k).toLong)
-      .distinct.filter(p => p >= lo && p < hi)
-    if (probes.isEmpty) Seq((BigInt(lo) + width / 2).toLong) else probes
+    (1 until BisectFanout)
+      .map(i => (BigInt(lo) + width * i / BisectFanout).toLong).distinct
   }
 
   /** Bracket update for one min-true round: narrow to the segment
@@ -2006,21 +1696,4 @@ object Sampling {
       (ps(idx), if (idx < ps.size - 1) ps(idx + 1) - 1 else hi)
     else (lo, ps.head - 1)
   }
-
-  /** Min t in [lo0, hi0] with monotone (false…false true…true)
-    * `preds`; the caller guarantees pred(hi0). Each round evaluates up
-    * to BisectFanout−1 evenly spaced probes in ONE batch call and
-    * narrows to the segment between the last-false and first-true
-    * probe — the single-bracket form of [[keyedSearch]]. */
-  private[graft] def karyMinTrue(lo0: Long, hi0: Long,
-      preds: Seq[Long] => Seq[Boolean]): Long =
-    keyedSearch[Unit](Map(() -> (lo0, hi0)), minProbes, minUpdate,
-      ladders => Map(() -> preds(ladders.head._2)))(())
-
-  /** Max t in [lo0, hi0] with monotone (true…true false…false)
-    * `preds`; the caller guarantees pred(lo0). */
-  private[graft] def karyMaxTrue(lo0: Long, hi0: Long,
-      preds: Seq[Long] => Seq[Boolean]): Long =
-    keyedSearch[Unit](Map(() -> (lo0, hi0)), maxProbes, maxUpdate,
-      ladders => Map(() -> preds(ladders.head._2)))(())
 }

@@ -143,27 +143,26 @@ object Sketches {
 
   /**
    * EXACT per-stratum quantiles WITHOUT sorting — distributed
-   * selection by binary search on the VALUE DOMAIN (the classic
+   * selection by search on the VALUE DOMAIN (the classic
    * k-th-order-statistic trick, Munro/Paterson lineage): the q-th
    * quantile is the k-th smallest with k = ⌈q·n/100⌉, and the smallest
-   * v with count(≤ v) ≥ k is found by halving an integer [lo, hi]
-   * interval, ONE map-side-combined conditional count per round and
-   * ZERO data shuffles anywhere — each round's job moves
-   * |strata|·|qs| count rows, nothing else. This completes the
-   * quantile family's trade square: exact `percentile` (ext24) pays a
-   * per-stratum sort — at 100 TB an O(n log n) range-shuffle;
-   * [[logHistogramQuantiles]] is one pass but only 2×-bounded; the
-   * hash-rank sample (ext33) is one pass but approximate; THIS is
-   * exact at ⌈log₂(max−min)⌉ corpus scans (≤ ~20 for length-like
-   * values, and in production the histogram's octave brackets the
-   * interval first, leaving `b` rounds for a 2^b-wide octave).
+   * v with count(≤ v) ≥ k is found by narrowing an integer [lo, hi]
+   * interval ([[Sampling.keyedSearch]], one bracket per (stratum, q)),
+   * ZERO data shuffles anywhere. This completes the quantile family's
+   * trade square: exact `percentile` (ext24) pays a per-stratum sort —
+   * at 100 TB an O(n log n) range-shuffle; [[logHistogramQuantiles]]
+   * is one pass but only 2×-bounded; the hash-rank sample (ext33) is
+   * one pass but approximate; THIS is exact at ~log₆₄(max−min) rounds
+   * (~8 for a year of microseconds), each ONE single-stage
+   * [[ProbeScan]] pass evaluating every active (stratum, q) probe
+   * ladder (each probe keyed to its stratum's group — no join, no
+   * row fan-out).
    *
-   * Driver state: one (stratum, q, lo, hi, k) row per active probe —
+   * Driver state: one (stratum, q) bracket per active search —
    * requires LOW-CARDINALITY strata (lang/source — the ext24
-   * assumption); each round all active probes ride ONE pass (the
-   * corpus joins the broadcast probe relation, ≤ |qs| rows per
-   * stratum). Ties: converges to the smallest value whose cumulative
-   * count reaches k — exactly the k-th element of the sorted multiset.
+   * assumption). Ties: converges to the smallest value whose
+   * cumulative count reaches k — exactly the k-th element of the
+   * sorted multiset.
    */
   def selectionQuantiles(df: DataFrame, strata: Seq[String],
       value: Column, qs: Seq[Int] = Seq(50, 90)): DataFrame = {
@@ -176,12 +175,11 @@ object Sketches {
     Guards.requireIntegral(df, value, "selectionQuantiles", "value")
     val spark = df.sparkSession
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType,
-      StructField, StructType}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import scala.jdk.CollectionConverters._
     // NULL values must not count toward n: they'd inflate k past the
-    // reachable cumulative count (no NULL ever satisfies _v <= _mid) and
-    // the bisection would silently converge to the stratum max.
+    // reachable cumulative count (no NULL ever satisfies _v <= m) and
+    // the search would silently converge to the stratum max.
     // Strata ride as FLAT columns (r18: the probe rounds read them
     // through ProbeScan's internal-row group lookup, which keys on
     // field values — no struct build needed).
@@ -191,82 +189,40 @@ object Sketches {
         value.cast("long").as("_v"): _*).where(col("_v").isNotNull))
     val init = base.groupBy(sNames.map(col): _*)
       .agg(count(lit(1)).as("n"), min("_v").as("lo"), max("_v").as("hi"))
-      .collect()
+      .collect().toSeq
     val nS = strata.size
-    // (stratum key values, q, k, lo, hi):
-    // invariant count(< lo) < k <= count(<= hi)
-    var probes = init.flatMap { r =>
+    val pscan = new ProbeScan(base, sNames, countRows = true)
+    pscan.setGroups(init.map(r => (0 until nS).map(r.get)))
+    // per (stratum key values, q): the bracket [lo, hi] and k, with
+    // the invariant count(< lo) < k <= count(<= hi) — the predicate
+    // count(<= v) >= k holds at the stratum max
+    val searches = init.flatMap { r =>
       val s = (0 until nS).map(r.get).toList
       val (n, lo, hi) =
         (r.getLong(nS), r.getLong(nS + 1), r.getLong(nS + 2))
-      qs.map(q => (s, q, (q.toLong * n + 99L) / 100L, lo, hi))
+      qs.map(q => (s, q) -> ((q.toLong * n + 99L) / 100L, (lo, hi)))
     }
-    var done = Map.empty[(List[Any], Int), Long]
-    val pscan = new ProbeScan(base, sNames, countRows = true)
-    pscan.setGroups(init.map(r => (0 until nS).map(r.get)).toSeq)
-    val gOf: Map[List[Any], Int] = init.map { r =>
+    val kOf = searches.map { case (sq, (k, _)) => sq -> k }.toMap
+    val gOf = init.map { r =>
       val s = (0 until nS).map(r.get).toList
       s -> pscan.groupIndex(s)
     }.toMap
-    // K-ARY rounds (r15): each round carries fanout−1 evenly spaced
-    // probe COLUMNS per (stratum, q) — one conditional sum each, no
-    // row fan-out, still one job per round — so the round count drops
-    // log₂(span) → log_F(span) (~45 → ~8 at F=64 for a year of
-    // microseconds). Fanout shared with the budget-select bisections
-    // (Sampling.BisectFanout, r18: 8 → 64 — each extra probe is one
-    // more codegen'd conditional sum on the same pass, so wider
-    // rounds cut the sequential-pass count at every scale).
-    // Probe arithmetic is BigInt: a full-Long value domain (64-bit
-    // hashes) overflows hi − lo. The converged value is unchanged:
-    // the smallest v with cumulative count ≥ k, any probe ladder.
-    val ProbeCols = Sampling.BisectFanout - 1
-    // strictly increasing distinct probes within [lo, hi)
-    def midsOf(lo: Long, hi: Long): Seq[Long] = {
-      val w = BigInt(hi) - BigInt(lo)
-      (1 to ProbeCols)
-        .map(i => (BigInt(lo) + w * i / (ProbeCols + 1)).toLong)
-        .distinct
-    }
-    while (probes.nonEmpty) {
-      val (fin, active) = probes.partition(p => p._4 >= p._5)
-      done ++= fin.map(p => (p._1, p._2) -> p._4)
-      if (active.nonEmpty) {
-        // every active (stratum, q) ladder rides ONE single-stage
-        // ProbeScan pass (r18: replaces the per-round broadcast-join
-        // + groupBy aggregate; exact ladder widths, no padding)
-        val ladders = active.map { case (s, q, _, lo, hi) =>
-          (s, q, midsOf(lo, hi)) }
-        val specs = ladders.flatMap { case (s, _, ms) =>
-          ms.map(m =>
-            graft.ops.ProbeScan.Spec(graft.ops.ProbeScan.ValueLe, 0L,
-              m, -1, -1, gOf(s)))
-        }
-        val vs = pscan.sums(specs.toSeq)
-        var off = 0
-        val cnts = ladders.map { case (s, q, ms) =>
-          val slice = vs.slice(off, off + ms.size).toSeq
-          off += ms.size
-          (s, q) -> slice
-        }.toMap
-        probes = active.map { case (s, q, k, lo, hi) =>
-          val ms = midsOf(lo, hi)
-          val cs = cnts((s, q))
-          // counts are monotone in the probe value: the answer lies in
-          // the segment between the last probe below k and the first
-          // probe reaching it (invariant count(< lo') < k <= count(<= hi'))
-          val idx = cs.indexWhere(_ >= k)
-          if (idx >= 0)
-            (s, q, k, if (idx > 0) ms(idx - 1) + 1 else lo, ms(idx))
-          else (s, q, k, ms.last + 1, hi)
-        }
-      } else probes = Array.empty
-    }
+    def le(s: List[Any], m: Long): ProbeScan.Spec =
+      ProbeScan.Spec(ProbeScan.ValueLe, 0L, m, -1, -1, gOf(s))
+    val found = Sampling.keyedSearch[(List[Any], Int)](
+      searches.map { case (sq, (_, br)) => sq -> br }.toMap,
+      Sampling.minProbes, Sampling.minUpdate, ladders => {
+        val cnt = pscan.sumsBySpec(ladders.flatMap { case ((s, _), ms) =>
+          ms.map(le(s, _)) })
+        ladders.map { case (sq @ (s, _), ms) =>
+          sq -> ms.map(m => cnt(le(s, m)) >= kOf(sq)) }.toMap
+      })
     val outSchema = StructType(
       strata.map(c => StructField(c, df.schema(c).dataType)) ++ Seq(
         StructField("q", LongType), StructField("value", LongType)))
     spark.createDataFrame(
-      done.toSeq.map { case ((s, q), v) =>
-        Row.fromSeq(s ++ Seq(q.toLong, v))
+      searches.map { case (sq @ (s, q), _) =>
+        Row.fromSeq(s ++ Seq(q.toLong, found(sq)))
       }.asJava, outSchema)
   }
 

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
  * Deterministic dataset splitting — the train/val/test assignment step of
@@ -184,9 +185,10 @@ object Splits {
    * into train (the classic temporal-leakage mistake a hash split
    * cannot prevent). Cutoff = the exact (100−testPct) selection
    * quantile of event time — [[Sketches.selectionQuantiles]]' domain
-   * bisection (zero data shuffles, ~⌈log₂(span_µs)⌉ ≈ 45 counting
-   * rounds for a year of microseconds — the scale-exact path, where
-   * a count-rank over per-µs value counts would be corpus-sized);
+   * search (zero data shuffles, ~log₆₄(span_µs) ≈ 8 rounds for a
+   * year of microseconds, each one single-stage [[ProbeScan]] pass —
+   * the scale-exact path, where a count-rank over per-µs value counts
+   * would be corpus-sized);
    * train = ts ≤ cutoff, gap = (cutoff, cutoff+gap], test = beyond.
    *
    * The card reports segment row/user masses plus `users_both` — how
@@ -202,23 +204,29 @@ object Splits {
     require(gapUs >= 0, "gap must be non-negative")
     val e = Reuse.shared(events.select(user.as("_u"),
       unix_micros(col(ts)).as("_us")))
-    val cutRows = Sketches.selectionQuantiles(
+    temporalCard(e, lit(1L), Sketches.selectionQuantiles(
       e.withColumn("_s", lit(0)), Seq("_s"), col("_us"),
-      Seq(100 - testPct)).collect()
+      Seq(100 - testPct)).collect(), gapUs)
+  }
+
+  /** The temporal split card over a (_u, _us) relation whose rows each
+    * weigh `w` events, at the cutoff in `cutRows` (a selection-quantile
+    * result: one row, or none on empty input — then the card is empty,
+    * as no cutoff exists). The batch card weighs each event 1, the
+    * stored-partials fold its `cnt`. */
+  private def temporalCard(e: DataFrame, w: Column, cutRows: Array[Row],
+      gapUs: Long): DataFrame = {
     if (cutRows.isEmpty)
-      return e.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(
-          Seq("cutoff_us", "n_train", "n_gap", "n_test", "users_train",
-            "users_test", "users_both", "users_both_ppm").map(
-            org.apache.spark.sql.types.StructField(_,
-              org.apache.spark.sql.types.LongType))))
+      return e.sparkSession.createDataFrame(new java.util.ArrayList[Row](),
+        StructType(Seq("cutoff_us", "n_train", "n_gap", "n_test",
+          "users_train", "users_test", "users_both", "users_both_ppm")
+          .map(StructField(_, LongType))))
     val cut = cutRows.head.getAs[Long]("value")
     val perUser = e.groupBy("_u").agg(
-      sum(when(col("_us") <= cut, 1L).otherwise(0L)).as("tr"),
-      sum(when(col("_us") > cut && col("_us") <= cut + gapUs, 1L)
+      sum(when(col("_us") <= cut, w).otherwise(0L)).as("tr"),
+      sum(when(col("_us") > cut && col("_us") <= cut + gapUs, w)
         .otherwise(0L)).as("gp"),
-      sum(when(col("_us") > cut + gapUs, 1L).otherwise(0L)).as("te"))
+      sum(when(col("_us") > cut + gapUs, w).otherwise(0L)).as("te"))
     perUser.agg(
         sum("tr").as("n_train"), sum("gp").as("n_gap"),
         sum("te").as("n_test"),
@@ -265,35 +273,9 @@ object Splits {
     require(gapUs >= 0, "gap must be non-negative")
     val folded = Reuse.shared(counts.groupBy("_u", "_us")
       .agg(sum("cnt").as("cnt")))
-    val cutRows = Sketches.selectionQuantilesFromCounts(
-      folded.select(lit(0).as("_s"), col("_us").as("_v"), col("cnt")),
-      Seq("_s"), Seq((100 - testPct).toInt)).collect()
-    if (cutRows.isEmpty)
-      return folded.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(
-          Seq("cutoff_us", "n_train", "n_gap", "n_test", "users_train",
-            "users_test", "users_both", "users_both_ppm").map(
-            org.apache.spark.sql.types.StructField(_,
-              org.apache.spark.sql.types.LongType))))
-    val cut = cutRows.head.getAs[Long]("value")
-    val perUser = folded.groupBy("_u").agg(
-      sum(when(col("_us") <= cut, col("cnt")).otherwise(0L)).as("tr"),
-      sum(when(col("_us") > cut && col("_us") <= cut + gapUs,
-        col("cnt")).otherwise(0L)).as("gp"),
-      sum(when(col("_us") > cut + gapUs, col("cnt")).otherwise(0L))
-        .as("te"))
-    perUser.agg(
-        sum("tr").as("n_train"), sum("gp").as("n_gap"),
-        sum("te").as("n_test"),
-        sum(when(col("tr") > 0, 1L).otherwise(0L)).as("users_train"),
-        sum(when(col("te") > 0, 1L).otherwise(0L)).as("users_test"),
-        sum(when(col("tr") > 0 && col("te") > 0, 1L).otherwise(0L))
-          .as("users_both"))
-      .select(lit(cut).as("cutoff_us"), col("n_train"), col("n_gap"),
-        col("n_test"), col("users_train"), col("users_test"),
-        col("users_both"),
-        expr("(1000000 * users_both) DIV greatest(users_train, 1)")
-          .as("users_both_ppm"))
+    temporalCard(folded, col("cnt"),
+      Sketches.selectionQuantilesFromCounts(
+        folded.select(lit(0).as("_s"), col("_us").as("_v"), col("cnt")),
+        Seq("_s"), Seq((100 - testPct).toInt)).collect(), gapUs)
   }
 }

@@ -1052,7 +1052,7 @@ private[graft] object SamplingQueries {
     // under the ORACLE gate — ext178 diffs two materialized
     // snapshots; this serves the SAME audit from the family's
     // versioned partials (batch=N is the version, the one-sink
-    // discipline), putting foldStratifiedVersioned's max_by-struct
+    // discipline), putting foldPartials' versioned max_by-struct
     // arbitration itself under DuckDB replay. Version 1 re-ingests
     // %17 docs under stratum 'xx' (moved), bumps %7-not-%17 docs'
     // score (changed — the sink's (score, toks) fingerprint, text

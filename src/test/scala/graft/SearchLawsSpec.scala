@@ -7,16 +7,31 @@ import graft.ops.Sampling
 
 /**
  * Direct scalacheck laws for the keyed-bracket bisection driver —
- * since r17 the ONE home of the probe/bracket bookkeeping under
- * every budget-select search (stratumEnvelope,
- * stratumBudgetEnvelopes, the cap sweep's stage 2, karyMin/MaxTrue).
- * The operators' specs pin end-to-end results; these laws pin the
- * driver itself against a linear-scan reference on arbitrary
+ * the ONE home of the probe/bracket bookkeeping under every
+ * search in `ops/`: the budget cut (`Sampling.budgetCut`: ext172-ext177,
+ * the global, per-stratum and per-cap-rung cuts alike) and the
+ * selection quantiles (`Sketches.selectionQuantiles`: ext151, ext170's
+ * cutoff). The operators' specs pin end-to-end results; these laws pin
+ * the driver itself against a linear-scan reference on arbitrary
  * monotone predicates, including the domain edges the operators
  * construct ([lo−1, hi] brackets, one-point and empty widths, spans
  * near Long bounds where probe arithmetic must be BigInt-safe).
  */
 class SearchLawsSpec extends AnyFunSuite {
+
+  /** Min t in [lo, hi] with monotone (false…false true…true) `preds`,
+    * pred(hi) given: [[Sampling.keyedSearch]] with one key. */
+  private def karyMinTrue(lo: Long, hi: Long,
+      preds: Seq[Long] => Seq[Boolean]): Long =
+    Sampling.keyedSearch[Unit](Map(() -> (lo, hi)), Sampling.minProbes,
+      Sampling.minUpdate, ladders => Map(() -> preds(ladders.head._2)))(())
+
+  /** Max t in [lo, hi] with monotone (true…true false…false) `preds`,
+    * pred(lo) given. */
+  private def karyMaxTrue(lo: Long, hi: Long,
+      preds: Seq[Long] => Seq[Boolean]): Long =
+    Sampling.keyedSearch[Unit](Map(() -> (lo, hi)), Sampling.maxProbes,
+      Sampling.maxUpdate, ladders => Map(() -> preds(ladders.head._2)))(())
 
   private def checkProp(p: Prop): Unit = {
     val res = SCTest.check(
@@ -35,14 +50,14 @@ class SearchLawsSpec extends AnyFunSuite {
 
   test("karyMinTrue finds the exact smallest true point") {
     checkProp(Prop.forAll(bracketGen) { case (lo, hi, t) =>
-      Sampling.karyMinTrue(lo, hi, ps => ps.map(_ >= t)) == t
+      karyMinTrue(lo, hi, ps => ps.map(_ >= t)) == t
     })
   }
 
   test("karyMaxTrue finds the exact largest true point") {
     // pred(m) = m <= T is monotone true…false and pred(lo) holds
     checkProp(Prop.forAll(bracketGen) { case (lo, hi, t) =>
-      Sampling.karyMaxTrue(lo, hi, ps => ps.map(_ <= t)) == t
+      karyMaxTrue(lo, hi, ps => ps.map(_ <= t)) == t
     })
   }
 
@@ -86,9 +101,9 @@ class SearchLawsSpec extends AnyFunSuite {
         maxs == maxs.distinct.sorted
     })
     // and the searches still land exactly on targets near the bounds
-    assert(Sampling.karyMinTrue(Long.MaxValue - 100, Long.MaxValue,
+    assert(karyMinTrue(Long.MaxValue - 100, Long.MaxValue,
       ps => ps.map(_ >= Long.MaxValue - 3)) == Long.MaxValue - 3)
-    assert(Sampling.karyMaxTrue(Long.MinValue + 1, Long.MinValue + 90,
+    assert(karyMaxTrue(Long.MinValue + 1, Long.MinValue + 90,
       ps => ps.map(_ <= Long.MinValue + 7)) == Long.MinValue + 7)
   }
 
@@ -102,7 +117,33 @@ class SearchLawsSpec extends AnyFunSuite {
         k -> ps.map(_ => true) }.toMap })
     assert(got == Map(1 -> 5L) && evals == 0)
     // width-1 bracket resolves in one round either way
-    assert(Sampling.karyMinTrue(3L, 4L, ps => ps.map(_ >= 4L)) == 4L)
-    assert(Sampling.karyMinTrue(3L, 4L, ps => ps.map(_ >= 3L)) == 3L)
+    assert(karyMinTrue(3L, 4L, ps => ps.map(_ >= 4L)) == 4L)
+    assert(karyMinTrue(3L, 4L, ps => ps.map(_ >= 3L)) == 3L)
+  }
+
+  test("one budget-cut engine: no bracket loop outside keyedSearch, " +
+      "one Long.MinValue domain refusal and one guarded fold in ops/") {
+    val ops = MainSources.all.filter(_._1.startsWith(
+      MainSources.root.resolve("graft/ops")))
+    def count(pattern: String): Int =
+      ops.map { case (_, src) => pattern.r.findAllIn(src).size }.sum
+    val loops = Seq("""while \(minBr""", """while \(maxBr""",
+      """while \(probes\.nonEmpty\)""").map(p => p -> count(p))
+    assert(loops.forall(_._2 == 0), s"bracket loops left: $loops")
+    assert(count("""\bmidsOf\b""") == 0, "midsOf is back")
+    assert(count("""above Long\.MinValue""") == 1,
+      "the Long.MinValue domain refusal is not in one place")
+    // each guarded fold checks for null _score/_toks partials once
+    val folds =
+      count("""col\("_score"\)\.isNull \|\| col\("_toks"\)\.isNull""")
+    assert(folds == 1, s"$folds guarded partial folds in ops/")
+    val gone = Seq("budgetBoundaryOf", "stratumBudgetEnvelopes",
+      "StratumBudgetEnvelopes", "foldStratified",
+      "foldStratifiedVersioned", "cardFromFolded", "karyMinTrue",
+      "karyMaxTrue", "emptyLongs")
+    val found = for ((p, src) <- ops; name <- gone
+      if ("\\b" + name + "\\b").r.findFirstIn(src).isDefined)
+      yield s"$p: $name"
+    assert(found.isEmpty, found.mkString("; "))
   }
 }

@@ -1,12 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.graftbridge.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.functions._
@@ -229,27 +226,6 @@ class ServeJobsSpec extends TestBase {
       assert(rows == want, s"$line: rows or order differ")
       assert(jobsOk(ran), s"$line ran $ran jobs")
     }
-  }
-
-  /** `body`'s result and the number of Spark jobs it started. */
-  private def countingJobs[T](label: String)(body: => T): (T, Int) = {
-    val group = "serve-jobs-spec"
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      ListenerDrain(sc)
-      sc.setJobGroup(group, label)
-      val out = try body finally sc.clearJobGroup()
-      ListenerDrain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("a shown REPL command runs its plan once: as many jobs as " +
